@@ -274,9 +274,13 @@ def cmd_check_intervals(args) -> int:
     for name in sorted(ctx.models):
         snap = snaps[name]
         if snap.model.kind not in _INCREMENTAL:
-            # Wholesale kinds (FULL/VIEW/SEED/...) re-run each tick and
-            # record no intervals — interval accounting doesn't apply.
-            print(f"{name}: wholesale kind ({snap.model.kind.value}), re-runs each tick")
+            # Wholesale kinds (FULL/VIEW/SEED/...) rebuild the whole table
+            # in one batch whenever their window gains a cron interval, so
+            # there is no per-interval backlog to list.
+            print(
+                f"{name}: wholesale kind ({snap.model.kind.value}), "
+                "re-runs once per missing cron interval"
+            )
             continue
         processed = ctx.state.get_intervals(name, snap.version)
         missing = missing_intervals(

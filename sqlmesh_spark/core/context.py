@@ -746,9 +746,10 @@ class Context:
     def janitor(self) -> list[str]:
         """Drop (1) environments that are invalidated or past their TTL —
         their view schemas go too — then (2) physical snapshot tables no
-        remaining environment references (the reference's cleanup of
-        expired environments and snapshots — virtual envs keep old
-        versions alive only while some environment points at them).
+        remaining environment references, with their recorded intervals
+        (the reference's cleanup of expired environments and snapshots —
+        virtual envs keep old versions alive only while some environment
+        points at them).
         Returns the dropped object names (views schemas and tables)."""
         import time
 
@@ -774,6 +775,7 @@ class Context:
                 view = name.rsplit(".", 1)[-1]
                 live.add(f"sqlmesh__{schema}.{view}__{version}")
         dropped = []
+        forgotten: list[tuple[str, str]] = []
         for key in snaps_meta:
             name, _, version = key.rpartition("@")
             schema = name.rsplit(".", 1)[0] if "." in name else "default"
@@ -782,6 +784,10 @@ class Context:
             if table not in live and self._evaluator.adapter.table_exists(table):
                 self._evaluator.adapter.drop_table(table)
                 dropped.append(table)
+                forgotten.append((name, version))
+        # Intervals go with their table: kept, they would read as processed
+        # for an environment that later points back at this version.
+        self.state.forget_snapshots(forgotten)
         return dropped_envs + dropped
 
     def generate_test(

@@ -22,7 +22,7 @@ from pyspark.sql import SparkSession
 
 from sqlmesh_spark.adapter import SparkAdapter
 from sqlmesh_spark.core.model import Model
-from sqlmesh_spark.core.scheduler import Scheduler
+from sqlmesh_spark.core.scheduler import WHOLESALE_KINDS, Scheduler
 from sqlmesh_spark.core.snapshot import Snapshot, fingerprint_model, snapshots_to_dag
 from sqlmesh_spark.core.state import StateStore
 
@@ -384,8 +384,8 @@ class PlanEvaluator:
                 del out[name]
                 continue
             # Restore the QUERY TEXT to the applied state — wholesale kinds
-            # re-evaluate every run, and the deferred change must not leak
-            # into the old table.
+            # rebuild whenever their window grows, and the deferred change
+            # must not leak into the old table.
             old = self.state.get_snapshot(name, env_state[name]) or {}
             old_query = old.get("query")
             if old_query is None:
@@ -696,11 +696,13 @@ class PlanEvaluator:
             old_version = env_state.get(name)
             if old_version is None or old_version == snap.version:
                 continue
+            if snap.model.kind in WHOLESALE_KINDS:
+                continue  # each rebuild covers the whole table
             old_iv = self._merge_intervals(
                 self.state.get_intervals(name, old_version)
             )
             if not old_iv:
-                continue  # wholesale kinds record no intervals
+                continue
             new_iv = self._merge_intervals(
                 self.state.get_intervals(name, snap.version)
             )
@@ -762,6 +764,17 @@ class PlanEvaluator:
             self.adapter.alter_table(table, stmts)
         if plan.forward_only and plan.effective_from:
             self._apply_effective_from(plan.snapshots, plan.diff, plan.effective_from)
+        if plan.forward_only:
+            # A pinned wholesale snapshot keeps its version and table but
+            # carries the new query: forget what the old query built so
+            # this apply rebuilds the table with the new one.
+            self.state.forget_snapshots(
+                [
+                    (name, plan.snapshots[name].version)
+                    for name in plan.diff.modified
+                    if plan.snapshots[name].model.kind in WHOLESALE_KINDS
+                ]
+            )
         if plan.skip_backfill:
             executed = {}
         elif plan.empty_backfill:
@@ -781,22 +794,68 @@ class PlanEvaluator:
         env_schema = (
             "prod_views" if plan.environment == "prod" else f"{plan.environment}_views"
         )
-        self.adapter.create_schema(env_schema)
+        modified = set(plan.diff.modified)
         modified_or_added = (
-            set(plan.diff.added)
-            | set(plan.diff.modified)
-            | set(plan.diff.indirectly_modified)
+            set(plan.diff.added) | modified | set(plan.diff.indirectly_modified)
         )
-        def _promote_one(name: str, snap) -> None:
-            if snap.model.kind.value in ("EMBEDDED", "EXTERNAL"):
-                return
-            if not plan.include_unmodified and name not in modified_or_added:
-                return
+        candidates = [
+            (name, snap)
+            for name, snap in plan.snapshots.items()
+            if snap.model.kind.value not in ("EMBEDDED", "EXTERNAL")
+            and (plan.include_unmodified or name in modified_or_added)
+        ]
+        # An env view already serving this version stays as it is, unless
+        # a forward-only change altered its table (plan.diff.modified under
+        # a pinned version) or the model has a comment or on_virtual_update
+        # statements to apply. Existence comes from one listing of the env
+        # schema rather than one probe per model; SHOW VIEWS is a catalog
+        # command, where catalog.listTables launches Spark jobs. A pointer
+        # an earlier apply moved without a table to promote (signals gated
+        # every interval, backfill_models left the model out) is recorded
+        # as unpromoted: its view still serves the previous version.
+        env_state = self.state.get_environment(plan.environment)
+        unpromoted = set(
+            self.state.get_environment_meta(plan.environment).get("unpromoted", ())
+        )
+        existing_views: set[str] = set()
+        if any(env_state.get(name) == snap.version for name, snap in candidates):
+            from pyspark.errors import AnalysisException
+
+            try:
+                existing_views = {
+                    r.viewName.lower()
+                    for r in self.spark.sql(f"SHOW VIEWS IN {env_schema}").collect()
+                    if not r.isTemporary
+                }
+            except AnalysisException:  # env schema dropped outside of plans
+                pass
+
+        def _view_is_current(name: str, snap) -> bool:
+            model = snap.model
+            return (
+                env_state.get(name) == snap.version
+                and model.view_name.lower() in existing_views
+                and name not in modified
+                and name not in unpromoted
+                and not (
+                    model.description
+                    or model.column_descriptions
+                    or model.on_virtual_update
+                )
+            )
+
+        to_promote = [(n, s) for n, s in candidates if not _view_is_current(n, s)]
+        if to_promote:
+            self.adapter.create_schema(env_schema)
+
+        def _promote_one(name: str, snap) -> Optional[str]:
+            """Repoint one env view; returns its name, or None when the
+            snapshot has no physical data to point at."""
             if not self.adapter.table_exists(snap.table_name):
                 # Signals may have gated every interval — the snapshot has
                 # no physical data yet; leave the env view where it was
                 # (possibly absent) rather than pointing at nothing.
-                return
+                return None
             # Comment registration (reference base.py COMMENT creation;
             # spark.py:545-554 ALTER COLUMN ... COMMENT) happens HERE in
             # the apply stage — once per model per apply, not per backfill
@@ -831,38 +890,49 @@ class PlanEvaluator:
             self.adapter.create_view(
                 env_view, f"SELECT {', '.join(cols)} FROM {snap.table_name}"
             )
-            # on_virtual_update statements (definition.py:158; rendered
-            # with @this_model bound to the ENV VIEW — :452) run right
-            # after the view repoints: grants, invalidations, notifies.
-            from sqlmesh_spark.core.scheduler import SnapshotEvaluator
-
-            for stmt in snap.model.on_virtual_update:
-                sql = SnapshotEvaluator(
-                    self.spark, self.adapter, execution_time=plan.execution_time
-                ).render_statement(
-                    stmt,
-                    snap,
-                    plan.start,
-                    plan.end,
-                    self._mapping(plan.snapshots),
-                    this_model=env_view,
-                )
-                self.spark.sql(sql)
+            return env_view
 
         # Promotion is per-model independent (each snapshot repoints its
         # own env view; ordering only matters versus stage 2, which is
-        # complete) — run it level-parallel like the scheduler does, so
-        # the N× (table_exists + schema read + CREATE VIEW) catalog
-        # round-trips overlap instead of serializing (measured: the
-        # serial loop was ~40% of a 1,000-model apply,
-        # tools/scale_orchestration.py). Exceptions propagate on
-        # iteration, same as the sequential loop.
+        # complete) — run it on the scheduler's worker pool, so the N×
+        # (table_exists + schema read + CREATE VIEW) catalog round-trips
+        # overlap instead of serializing (measured: the serial loop was
+        # ~40% of a 1,000-model apply, tools/scale_orchestration.py).
+        # Exceptions propagate on iteration, same as the sequential loop.
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            list(pool.map(lambda kv: _promote_one(*kv), plan.snapshots.items()))
+        with ThreadPoolExecutor(max_workers=scheduler.max_workers) as pool:
+            promoted = list(pool.map(lambda kv: _promote_one(*kv), to_promote))
+        # on_virtual_update statements (definition.py:158; rendered with
+        # @this_model bound to the ENV VIEW — :452) run after every view
+        # has repointed, one after another in DAG-dict order: grants,
+        # invalidations, notifies.
+        from sqlmesh_spark.core.scheduler import SnapshotEvaluator
+
+        evaluator = SnapshotEvaluator(
+            self.spark, self.adapter, execution_time=plan.execution_time
+        )
+        mapping = self._mapping(plan.snapshots)
+        for (_, snap), env_view in zip(to_promote, promoted):
+            if env_view is None:
+                continue
+            for stmt in snap.model.on_virtual_update:
+                self.spark.sql(
+                    evaluator.render_statement(
+                        stmt, snap, plan.start, plan.end, mapping, this_model=env_view
+                    )
+                )
         # Stage 4: finalize environment pointers.
         self.state.put_environment(
             plan.environment, {n: s.version for n, s in plan.snapshots.items()}
         )
+        attempted = {name for name, _ in to_promote}
+        still_unpromoted = sorted(
+            {name for name in unpromoted - attempted if name in plan.snapshots}
+            | {name for (name, _), view in zip(to_promote, promoted) if view is None}
+        )
+        if still_unpromoted != sorted(unpromoted):
+            self.state.put_environment_meta(
+                plan.environment, unpromoted=still_unpromoted
+            )
         return executed

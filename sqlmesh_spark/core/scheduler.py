@@ -27,6 +27,7 @@ from sqlmesh_spark.core.snapshot import (
     floor_to,
     from_epoch,
     interval_unit,
+    merge_intervals,
     missing_intervals,
     model_interval_unit,
     prev_unit,
@@ -64,6 +65,13 @@ CUSTOM_MATERIALIZATIONS: dict[str, "t_CustomFn"] = {}
 
 def register_custom_materialization(name: str, fn) -> None:
     CUSTOM_MATERIALIZATIONS[name.lower()] = fn
+
+
+# Kinds that rebuild the whole table in one batch per run (FULL-refresh
+# semantics); they still record the cron intervals a rebuild covered.
+WHOLESALE_KINDS = frozenset(
+    {ModelKind.FULL, ModelKind.VIEW, ModelKind.SEED, ModelKind.CUSTOM, ModelKind.MANAGED}
+)
 
 
 # Render cache (reference model/cache.py:1-234 caches optimized renders
@@ -199,12 +207,11 @@ class SnapshotEvaluator:
     ) -> None:
         """Core of evaluator.py:677 _evaluate_snapshot."""
         model = snapshot.model
-        adapter = self.adapter
-        table = snapshot.table_name
-        adapter.create_schema(snapshot.physical_schema)
-
         if model.kind in (ModelKind.EMBEDDED, ModelKind.EXTERNAL):
             return
+        if is_first_insert:
+            # The physical schema can only be missing when the table may be.
+            self.adapter.create_schema(snapshot.physical_schema)
         # Pre-statements (evaluator runs them in the same transaction
         # scope as the evaluation — definition.py:156 pre_statements_).
         for stmt in model.pre_statements:
@@ -370,8 +377,8 @@ class SnapshotEvaluator:
                 return
             if model.kind == ModelKind.MANAGED:
                 # EngineManagedStrategy (evaluator.py:3089): create a
-                # managed table from the defining query; each scheduled
-                # tick performs the refresh the managing engine would.
+                # managed table from the defining query; each missing cron
+                # interval performs the refresh the managing engine would.
                 if not adapter.table_exists(table):
                     adapter.create_managed_table(
                         table, sql, partitioned_by=model.partitioned_by
@@ -392,16 +399,23 @@ class SnapshotEvaluator:
                 "partition_by_time_column", "true"
             ).strip("'\"").lower() != "false"
             if part_by_time:
-                if is_first_insert and not adapter.table_exists(table):
-                    # Partition on a derived day column so interval
-                    # overwrites prune to exactly the touched partitions.
-                    with_ds = df.withColumn("_ds", F.date_format(F.col(time_col), "yyyy-MM-dd"))
-                    adapter.ctas(table, with_ds.limit(0), partitioned_by=("_ds",))
+                # Partition on a derived day column so interval overwrites
+                # prune to exactly the touched partitions.
                 batch = df.withColumn("_ds", F.date_format(F.col(time_col), "yyyy-MM-dd"))
+                partitioned_by: tuple[str, ...] = ("_ds",)
             else:
-                if is_first_insert and not adapter.table_exists(table):
-                    adapter.ctas(table, df.limit(0))
-                batch = df
+                batch, partitioned_by = df, ()
+            if is_first_insert and not adapter.table_exists(table):
+                # Catalog DDL from the analyzed schema, not a zero-row CTAS
+                # (a full write job). Files left at the location by a crash
+                # would make CREATE TABLE fail, so reclaim them first, as
+                # ctas does.
+                adapter._clear_orphan_location(table)
+                adapter.create_table(
+                    table,
+                    {f"`{f.name}`": f.dataType.simpleString() for f in batch.schema},
+                    partitioned_by=partitioned_by,
+                )
             adapter.insert_overwrite_by_time_partition(table, batch, time_col, start, end)
         elif model.kind == ModelKind.INCREMENTAL_BY_UNIQUE_KEY:
             if is_first_insert and not adapter.table_exists(table):
@@ -692,6 +706,10 @@ class Scheduler:
         order = snapshots_to_dag(self.snapshots)
         mapping = self.table_mapping()
         executed: dict[str, int] = {}
+        # Models whose data this run rewrote: a wholesale child rebuilds
+        # over them even when its own window is processed. An EMBEDDED
+        # model passes its parents' changes on (it is inlined, not built).
+        changed: set[str] = set()
         # Level-parallel execution: models whose parents are all done run
         # concurrently (concurrent_apply_to_dag analog). In-DAG parent
         # sets are computed once — rebuilding set(self.snapshots) per
@@ -706,20 +724,38 @@ class Scheduler:
             level = [n for n in remaining if in_dag_parents[n] <= done]
             with ThreadPoolExecutor(max_workers=self.max_workers) as pool:
                 counts = pool.map(
-                    lambda n: self._run_snapshot(self.snapshots[n], start, end, mapping),
+                    lambda n: self._run_snapshot(
+                        self.snapshots[n],
+                        start,
+                        end,
+                        mapping,
+                        upstream_changed=bool(in_dag_parents[n] & changed),
+                    ),
                     level,
                 )
             for n, c in zip(level, counts):
                 executed[n] = c
                 done.add(n)
+                if c or (
+                    self.snapshots[n].model.kind == ModelKind.EMBEDDED
+                    and in_dag_parents[n] & changed
+                ):
+                    changed.add(n)
             remaining = [n for n in remaining if n not in done]
         return executed
 
     def _run_snapshot(
-        self, snapshot: Snapshot, start: str, end: str, mapping: Mapping[str, str]
+        self,
+        snapshot: Snapshot,
+        start: str,
+        end: str,
+        mapping: Mapping[str, str],
+        upstream_changed: bool = False,
     ) -> int:
         model = snapshot.model
         if self.backfill_models is not None and model.name not in self.backfill_models:
+            return 0
+        if model.kind in (ModelKind.EMBEDDED, ModelKind.EXTERNAL):
             return 0
         unit = model_interval_unit(model)
         eff_start = model.start or start
@@ -760,65 +796,60 @@ class Scheduler:
                 self.state.put_auto_restatement(model.name, snapshot.version, boundary)
                 processed = self.state.get_intervals(model.name, snapshot.version)
 
-        if model.kind in (
-            ModelKind.INCREMENTAL_BY_TIME_RANGE,
-            ModelKind.INCREMENTAL_BY_UNIQUE_KEY,
-            ModelKind.INCREMENTAL_BY_PARTITION,
-            ModelKind.INCREMENTAL_UNMANAGED,
-            ModelKind.SCD_TYPE_2_BY_TIME,
-            ModelKind.SCD_TYPE_2_BY_COLUMN,
-        ):
+        allow_partials = model.allow_partials or self.ignore_cron
+        if model.kind in WHOLESALE_KINDS:
+            # Wholesale kinds rebuild the whole table in one batch over the
+            # requested window, but only when the window holds a cron
+            # interval this version has not processed (or none is recorded
+            # yet), or when an upstream model rewrote data in this run: a
+            # rerun over a processed window does no work, while a longer
+            # window, a restatement, a new version or a parent that ran
+            # (late signal, auto-restatement, catch-up) rebuilds.
             chunks = missing_intervals(
-                eff_start,
-                end,
-                processed,
-                unit=unit,
-                lookback=model.lookback,
-                allow_partials=model.allow_partials or self.ignore_cron,
+                eff_start, end, processed, unit=unit, allow_partials=allow_partials
             )
-            if model.signals:
-                # Signal gating (scheduler.py:950 _check_ready_intervals):
-                # only admitted intervals run; the rest stay missing.
-                from sqlmesh_spark.core.signal import check_ready_intervals
+            if processed and not chunks and not upstream_changed:
+                return 0
+            self.evaluator.evaluate(snapshot, eff_start, end, mapping, not processed)
+            failures = self.evaluator.run_audits(snapshot)
+            if failures:
+                raise AuditError(f"audits failed on {model.name}: {failures}")
+            for bs, be in merge_intervals(chunks):
+                self.state.add_interval(model.name, snapshot.version, bs, be)
+            return 1
 
-                chunks = check_ready_intervals(model.signals, chunks)
-            batches = batch_intervals(chunks, model.batch_size)
-        else:
-            # Non-incremental kinds re-run wholesale each scheduled tick
-            # (FULL-refresh semantics); the single sentinel batch carries
-            # no interval.
-            batches = [(0, 0)]
-            batches = [] if model.kind in (ModelKind.EMBEDDED, ModelKind.EXTERNAL) else batches
-        first = not processed
-        n = 0
-        wholesale = (
-            ModelKind.FULL,
-            ModelKind.VIEW,
-            ModelKind.SEED,
-            ModelKind.CUSTOM,
-            ModelKind.MANAGED,
+        chunks = missing_intervals(
+            eff_start,
+            end,
+            processed,
+            unit=unit,
+            lookback=model.lookback,
+            allow_partials=allow_partials,
         )
+        if model.signals:
+            # Signal gating (scheduler.py:950 _check_ready_intervals):
+            # only admitted intervals run; the rest stay missing.
+            from sqlmesh_spark.core.signal import check_ready_intervals
+
+            chunks = check_ready_intervals(model.signals, chunks)
+        batches = batch_intervals(chunks, model.batch_size)
+        first = not processed
         done: list[tuple[int, int]] = []
-        for bs, be in batches:
-            if model.kind in wholesale:
-                # Wholesale kinds re-run over the full requested window.
-                self.evaluator.evaluate(snapshot, eff_start, end, mapping, first)
+        for n, (bs, be) in enumerate(batches):
+            self.evaluator.evaluate(
+                snapshot, from_epoch(bs), from_epoch(be), mapping, first and n == 0
+            )
+            if model.kind == ModelKind.INCREMENTAL_UNMANAGED:
+                # Unmanaged appends are NOT idempotent: a written-but-
+                # unrecorded batch would re-append on the next run and
+                # duplicate rows forever. Record immediately after the
+                # write; a blocking-audit failure still raises below
+                # (alerting), it just can't trigger a reprocess of an
+                # append-only target (the reference likewise exempts
+                # unmanaged models from restatement).
+                self.state.add_interval(model.name, snapshot.version, bs, be)
             else:
-                self.evaluator.evaluate(
-                    snapshot, from_epoch(bs), from_epoch(be), mapping, first and n == 0
-                )
-                if model.kind == ModelKind.INCREMENTAL_UNMANAGED:
-                    # Unmanaged appends are NOT idempotent: a written-but-
-                    # unrecorded batch would re-append on the next run and
-                    # duplicate rows forever. Record immediately after the
-                    # write; a blocking-audit failure still raises below
-                    # (alerting), it just can't trigger a reprocess of an
-                    # append-only target (the reference likewise exempts
-                    # unmanaged models from restatement).
-                    self.state.add_interval(model.name, snapshot.version, bs, be)
-                else:
-                    done.append((bs, be))
-            n += 1
+                done.append((bs, be))
         # Audits gate interval recording (reference scheduler.py:191→:254:
         # evaluate → audits → add_interval): a blocking-audit failure leaves
         # the batch UNRECORDED, so the next run reprocesses it — safe because
@@ -837,4 +868,4 @@ class Scheduler:
                 raise AuditError(f"audits failed on {model.name}: {failures}")
         for bs, be in done:
             self.state.add_interval(model.name, snapshot.version, bs, be)
-        return n
+        return len(batches)

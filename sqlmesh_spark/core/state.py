@@ -105,6 +105,22 @@ class StateStore:
             data[key] = out
             self._write("intervals", data)
 
+    def forget_snapshots(self, keys: list[tuple[str, str]]) -> None:
+        """Drop every processed interval and auto-restatement record of
+        these (name, version) snapshots, for when their tables are
+        dropped: a later plan that points back at such a version sees it
+        unprocessed and rebuilds it."""
+        if not keys:
+            return
+        with self._lock:
+            for table in ("intervals", "auto_restatements"):
+                data = self._read(table)
+                gone = [k for k in (f"{n}@{v}" for n, v in keys) if k in data]
+                for k in gone:
+                    del data[k]
+                if gone:
+                    self._write(table, data)
+
     # -- auto restatements (state_sync/db/snapshot.py _auto_restatements) ---
 
     def put_auto_restatement(self, name: str, version: str, ts: int) -> None:
@@ -147,7 +163,10 @@ class StateStore:
         env: str,
         expiration_ts: Optional[int] = None,
         invalidated: Optional[bool] = None,
+        unpromoted: Optional[list[str]] = None,
     ) -> None:
+        """unpromoted: models whose pointer moved to a version that had no
+        table to promote, so their view still serves the previous one."""
         with self._lock:
             meta = self._read("environment_meta")
             entry = meta.get(env, {})
@@ -155,6 +174,8 @@ class StateStore:
                 entry["expiration_ts"] = expiration_ts
             if invalidated is not None:
                 entry["invalidated"] = invalidated
+            if unpromoted is not None:
+                entry["unpromoted"] = unpromoted
             meta[env] = entry
             self._write("environment_meta", meta)
 

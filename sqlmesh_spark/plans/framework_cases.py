@@ -1066,9 +1066,8 @@ MODEL (
 SELECT c_custkey, c_mktsegment, c_acctbal{extra}
 FROM {src}{where}
 """
-    # Child is INCREMENTAL so "no rebuild" is observable: a reverted
-    # version keeps its processed intervals → zero missing batches. (FULL
-    # kinds re-run wholesale every tick by design, so they can't show it.)
+    # A reverted child version keeps its processed intervals → zero
+    # missing batches, so "no rebuild" is observable.
     child = """
 MODEL (
   name demo_nb.seg_rollup,

@@ -359,9 +359,11 @@ def test_subhour_interval_units():
 
 
 def test_render_cache_skips_unchanged_models(spark):
-    """Render/fingerprint cache (reference model/cache.py:1-234): two plans
-    of an UNCHANGED project must not re-render — the snapshot version hash
-    covers query + kind + parents, so the cached SQL is exact."""
+    """Render/fingerprint cache (reference model/cache.py:1-234): a second
+    run of an UNCHANGED project over the same window finds every interval
+    processed and renders nothing at all; re-rendering the same interval
+    (a restatement) hits the cache — the snapshot version hash covers
+    query + kind + parents, so the cached SQL is exact."""
     import tempfile
 
     from sqlmesh_spark.core.context import Context
@@ -374,8 +376,10 @@ def test_render_cache_skips_unchanged_models(spark):
     mid = dict(RENDER_STATS)
     assert mid["misses"] > before["misses"]
     ctx.run(environment="env_rc", start="1995-01-01", end="1995-01-02")
+    assert dict(RENDER_STATS) == mid, "unchanged project re-rendered"
+    ctx.restate(["demo_rc.m"], "1995-01-01", "1995-01-02", environment="env_rc")
     after = dict(RENDER_STATS)
-    assert after["misses"] == mid["misses"], "unchanged project re-rendered"
+    assert after["misses"] == mid["misses"]
     assert after["hits"] > mid["hits"]
 
 
