@@ -275,7 +275,7 @@ class TableFormatBackend:
         closed_now = changes.filter(~cur).withColumn(self.CURRENT_COL, F.lit(0))
         new_current = changes.filter(cur).withColumn(self.CURRENT_COL, F.lit(1))
         adapter.insert_append(table, closed_now)
-        if new_current.limit(1).count() > 0:
+        if not new_current.isEmpty():
             adapter._insert_overwrite_partitions(table, new_current)
         else:
             # every key deleted: dynamic overwrite can't write an empty

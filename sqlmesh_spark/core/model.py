@@ -145,6 +145,13 @@ class Model:
         raw = self.kind_args.get("unique_key", "")
         return tuple(k.strip() for k in raw.split(",") if k.strip())
 
+    @property
+    def partition_by_current(self) -> bool:
+        """SCD2 opt-in to the copy-on-write tail: the table partitions on
+        the engine-managed ``_is_current`` flag (backends.py
+        scd2_apply_cow)."""
+        return self.kind_args.get("partition_by_current", "").lower() in ("true", "1")
+
 
 _MODEL_RE = re.compile(r"\bMODEL\s*\(", re.IGNORECASE)
 

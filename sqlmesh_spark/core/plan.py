@@ -309,34 +309,39 @@ class PlanEvaluator:
             pending_migrations=pending_migrations,
         )
 
-    _MERGE_KINDS = frozenset(
-        {"INCREMENTAL_BY_UNIQUE_KEY", "SCD_TYPE_2_BY_TIME", "SCD_TYPE_2_BY_COLUMN"}
-    )
-
     def _warn_unpartitioned_merges(self, models: Mapping[str, Model]) -> None:
-        """Plan-time scale guard: a MERGE/SCD2 model with no partition
-        layout gets the parquet backend's full-rewrite tail — every apply
-        is O(table) (backends.py _merge_full_rewrite). With
-        ``partitioned_by``/``clustered_by`` declared, the copy-on-write
-        path rewrites only touched partitions (SCALE.md). Warn once per
-        plan so the cost is a choice, not a surprise."""
+        """Plan-time scale guard: a MERGE/SCD2 model whose layout leaves
+        the parquet backend on its full-rewrite tail is O(table) on every
+        apply. Warn once per plan, with the setting that moves that kind
+        onto its copy-on-write path, so the cost is a choice, not a
+        surprise (SCALE.md):
+
+        - INCREMENTAL_BY_UNIQUE_KEY: ``partitioned_by`` — the merge then
+          rewrites only touched partitions (backends.py merge);
+        - SCD2: ``partition_by_current true`` — closed history becomes
+          append-only (backends.py scd2_apply_cow). ``partitioned_by``
+          alone keeps the full rewrite."""
         import logging
 
         log = logging.getLogger("sqlmesh_spark.plan")
         for name, model in models.items():
-            if (
-                model.kind.value in self._MERGE_KINDS
-                and not model.partitioned_by
-                and not model.clustered_by
-            ):
-                log.warning(
-                    "model %s has kind %s but no partitioned_by/clustered_by: "
-                    "every apply rewrites the whole table (O(table)); declare a "
-                    "partition layout to enable the partition-scoped "
-                    "copy-on-write merge path",
-                    name,
-                    model.kind.value,
+            kind = model.kind.value
+            if kind == "INCREMENTAL_BY_UNIQUE_KEY" and not model.partitioned_by:
+                advice = "declare partitioned_by to enable the partition-scoped merge"
+            elif kind.startswith("SCD_TYPE_2") and not model.partition_by_current:
+                advice = (
+                    "set partition_by_current true to enable the append-only "
+                    "history tail"
                 )
+            else:
+                continue
+            log.warning(
+                "model %s has kind %s without a copy-on-write layout: every "
+                "apply rewrites the whole table (O(table)); %s",
+                name,
+                kind,
+                advice,
+            )
 
     def _select_models(
         self,

@@ -419,7 +419,7 @@ class SnapshotEvaluator:
             adapter.insert_overwrite_by_time_partition(table, batch, time_col, start, end)
         elif model.kind == ModelKind.INCREMENTAL_BY_UNIQUE_KEY:
             if is_first_insert and not adapter.table_exists(table):
-                adapter.ctas(table, df)
+                adapter.ctas(table, df, partitioned_by=model.partitioned_by)
             else:
                 adapter.merge(table, df, unique_key=model.unique_key)
         elif model.kind == ModelKind.INCREMENTAL_BY_PARTITION:
@@ -453,10 +453,12 @@ class SnapshotEvaluator:
         model = snapshot.model
         adapter = self.adapter
         table = snapshot.table_name
-        source_cols = list(self.spark.sql(source_sql).columns)
+        # Analyze the source once: against a parquet.`path` source every
+        # analysis launches a schema-inference job.
+        types = dict(self.spark.sql(source_sql).dtypes)
+        source_cols = list(types)
         first = not adapter.table_exists(table)
         if first:
-            types = dict(self.spark.sql(source_sql).dtypes)
             typed = ", ".join(
                 f"CAST(NULL AS {types[c]}) AS {c}" for c in source_cols
             )
@@ -487,13 +489,15 @@ class SnapshotEvaluator:
         # and each apply rewrites O(|current| + |batch|), never O(history).
         # The _is_current column stays physical-only: the virtual layer
         # view hides `_`-prefixed engine columns (plan.py promote).
-        cow = model.kind_args.get("partition_by_current", "").lower() in ("true", "1")
-        if not cow:
-            adapter.replace_query(table, self.spark.sql(scd_type_2_query(**kwargs)))
+        if not model.partition_by_current:
+            adapter.replace_query(
+                table,
+                self.spark.sql(scd_type_2_query(**kwargs)),
+                partitioned_by=model.partitioned_by,
+            )
             return
         if first:
-            types = dict(self.spark.sql(source_sql).dtypes)
-            schema = {c: types[c] for c in source_cols}
+            schema = dict(types)
             schema["valid_from"] = "TIMESTAMP"
             schema["valid_to"] = "TIMESTAMP"
             schema[adapter.backend.CURRENT_COL] = "INT"
@@ -574,8 +578,10 @@ class SnapshotEvaluator:
                     for k, v in kwargs.items()
                 }
                 sql = fn(table=relation, dialect=audit_lib.SPARK, **kwargs)
-            n_bad = self.spark.sql(sql).limit(1).count()
-            if n_bad > 0:
+            # isEmpty, not limit(1).count(): a LIMIT's generated code
+            # carries a per-query counter name, so it never hits the
+            # codegen cache and every audit would recompile.
+            if not self.spark.sql(sql).isEmpty():
                 if blocking:
                     failures.append(name)
                 else:

@@ -71,16 +71,28 @@ def build_session(
         # interleaved A/B on the write-path bench cases (scd2 −5%/−19%
         # min/med, merge −24%/−28%) and the at-scale argument favor v2.
         # Caveat: a mid-job failure can leave partial task output visible
-        # in the destination directory. Every adapter write path tolerates
-        # that — CTAS/stage→swap targets are fresh temp dirs never swapped
-        # in on failure, and insert/overwrite paths go through Spark's
-        # dynamic-partition staging commit — but set
-        # SPARK_GRAFT_COMMITTER_ALGO=1 to restore the slow-safe default on
-        # stores without atomic task-level rename.
+        # in the destination directory. CTAS/stage→swap targets tolerate
+        # that (fresh temp dirs, never swapped in on failure), and dynamic
+        # partition overwrites go through Spark's staging commit. The
+        # adapter's insert_append does NOT: it writes straight into the
+        # live table, so a failed job's committed task files stay and the
+        # interval retry appends them again (ROADMAP item 3 owns the fix).
+        # Set SPARK_GRAFT_COMMITTER_ALGO=1 to restore the slow-safe
+        # default on stores without atomic task-level rename.
         .config(
             "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
             os.environ.get("SPARK_GRAFT_COMMITTER_ALGO", "2"),
         )
+        # Generated-code cache (a static conf: only a fresh JVM session
+        # picks it up). The default of 100 entries is below the working
+        # set: one pass over the 15 headline queries compiles about 250
+        # classes and a lifecycle rep about 125, since local mode compiles
+        # each source twice, once per classloader (when the plan is
+        # prepared, and again in the executor task).
+        # The LRU then never hits and every rerun recompiles every query
+        # with Janino. At 1000 a second identical pass compiles nothing,
+        # for about 1 MB more metaspace. See SCALE.md "Codegen cache".
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")

@@ -362,43 +362,51 @@ def test_merge_partition_cap_falls_back_to_full_rewrite(spark, monkeypatch, capl
 
 
 def test_plan_warns_on_unpartitioned_merge_model(spark, caplog):
-    """Directive: MERGE/SCD2 kinds without a partition layout warn at plan
-    time that every apply is O(table) (backends.py _merge_full_rewrite)."""
+    """MERGE/SCD2 kinds left on the full-rewrite tail warn at plan time
+    that every apply is O(table), with the setting that moves THAT kind
+    onto its copy-on-write path: partitioned_by for a unique-key merge,
+    partition_by_current for SCD2 (a declared partitioned_by alone keeps
+    the SCD2 full rewrite, and is kept as the rewritten table's layout)."""
     import logging
     import tempfile
 
     from sqlmesh_spark.core.context import Context
+    from sqlmesh_spark.core.plan import build_snapshots
 
     ctx = Context(spark, state_dir=tempfile.mkdtemp(prefix="sqlmesh_state_"))
-    ctx.add_model(
-        """
+    scd2 = "SCD_TYPE_2_BY_TIME (unique_key id, updated_at_name updated_at{})"
+    kinds = {
+        "keys": ("INCREMENTAL_BY_UNIQUE_KEY (unique_key id)", ""),
+        "keys_part": ("INCREMENTAL_BY_UNIQUE_KEY (unique_key id)", "partitioned_by (v)"),
+        "scd_part": (scd2.format(""), "partitioned_by (v)"),
+        "scd_cow": (scd2.format(", partition_by_current true"), ""),
+    }
+    for name, (kind, layout) in kinds.items():
+        ctx.add_model(
+            f"""
 MODEL (
-  name warnme.keys,
-  kind INCREMENTAL_BY_UNIQUE_KEY (unique_key id)
+  name warnme.{name},
+  kind {kind}{"," if layout else ""}
+  {layout}
 );
-SELECT 1 AS id, 'a' AS v
+SELECT 1 AS id, 'a' AS v, CAST('2024-01-01' AS TIMESTAMP) AS updated_at
 """
-    )
+        )
     with caplog.at_level(logging.WARNING, logger="sqlmesh_spark.plan"):
-        ctx.plan(environment="env_warn_test")
-    assert any("copy-on-write" in r.message for r in caplog.records)
+        ctx.run(environment="env_warn_test", start="2024-01-01", end="2024-01-02")
+    warned = {
+        r.args[0]: r.message for r in caplog.records if "copy-on-write" in r.message
+    }
+    assert set(warned) == {"warnme.keys", "warnme.scd_part"}
+    assert "declare partitioned_by" in warned["warnme.keys"]
+    assert "partition_by_current true" in warned["warnme.scd_part"]
 
-    # With a partition layout declared: silent.
-    ctx2 = Context(spark, state_dir=tempfile.mkdtemp(prefix="sqlmesh_state_"))
-    ctx2.add_model(
-        """
-MODEL (
-  name warnme.keys2,
-  kind INCREMENTAL_BY_UNIQUE_KEY (unique_key id),
-  partitioned_by (v)
-);
-SELECT 1 AS id, 'a' AS v
-"""
-    )
-    caplog.clear()
-    with caplog.at_level(logging.WARNING, logger="sqlmesh_spark.plan"):
-        ctx2.plan(environment="env_warn_test2")
-    assert not [r for r in caplog.records if "copy-on-write" in r.message]
+    # The declared layout survives: the unique-key first insert and the
+    # SCD2 full rewrite both partition on v.
+    adapter = SparkAdapter(spark)
+    snaps = build_snapshots(ctx.models)
+    for name in ("warnme.keys_part", "warnme.scd_part"):
+        assert adapter._partition_columns(snaps[name].table_name) == ["v"]
 
 
 class TestGoldenStatements:
