@@ -133,17 +133,7 @@ class TableFormatBackend:
         if not touched:
             return
         in_touched = self._partition_predicate(part_cols, touched)
-        scoped = tgt.filter(in_touched)
-        if merge_filter:
-            mf = self._filter_for_dataframe(merge_filter)
-            eligible = scoped.filter(mf)
-            frozen = scoped.filter(f"NOT ({mf})")
-        else:
-            eligible, frozen = scoped, None
-        kept = eligible.join(src, on=keys, how="left_anti")
-        out = kept.unionByName(src.select(*[c for c in tgt.columns]))
-        if frozen is not None:
-            out = frozen.unionByName(out)
+        out = self._merged(tgt.filter(in_touched), src, keys, merge_filter)
         adapter._insert_overwrite_partitions(target, out)
         # Drop touched partitions that ended up empty (stale-file guard).
         # This collect is bounded by the SAME MAX_COW_PARTITIONS cap as the
@@ -165,19 +155,29 @@ class TableFormatBackend:
         keys: list[str],
         merge_filter: Optional[str],
     ) -> None:
-        adapter = self.adapter
-        tgt = self.spark.table(target)
+        out = self._merged(self.spark.table(target), src, keys, merge_filter)
+        self.adapter._atomic_rewrite(target, out)
+
+    def _merged(
+        self,
+        base: DataFrame,
+        src: DataFrame,
+        keys: list[str],
+        merge_filter: Optional[str],
+    ) -> DataFrame:
+        """``base`` with its key-matched rows replaced by ``src``. Rows
+        outside ``merge_filter`` are frozen: kept even when matched."""
         if merge_filter:
             mf = self._filter_for_dataframe(merge_filter)
-            eligible = tgt.filter(mf)
-            frozen = tgt.filter(f"NOT ({mf})")
+            eligible = base.filter(mf)
+            frozen = base.filter(f"NOT ({mf})")
         else:
-            eligible, frozen = tgt, None
+            eligible, frozen = base, None
         kept = eligible.join(src, on=keys, how="left_anti")
-        out = kept.unionByName(src.select(*[c for c in tgt.columns]))
+        out = kept.unionByName(src.select(*base.columns))
         if frozen is not None:
             out = frozen.unionByName(out)
-        adapter._atomic_rewrite(target, out)
+        return out
 
     @staticmethod
     def _partition_predicate(part_cols: Sequence[str], values: list[tuple]):

@@ -299,102 +299,6 @@ FROM (SELECT doc_id, {", ".join(bkeys)}
 """
 
 
-def minhash_bands_arrow(
-    docsets_df: DataFrame,
-    num_hashes: int = 32,
-    band_size: int = 4,
-):
-    """(doc_id, band, bkey) rows from per-doc shingle-hash arrays via
-    Arrow batches — bit-identical to minhash_bands_sql (minus its
-    NULL-bkey rows for NULL/empty-text docs, which no bkey equality
-    can ever join — see the filter below) but vectorized:
-    the SQL form runs num_hashes interpreted ARRAY_MIN(TRANSFORM(...))
-    lambda folds per doc (~0.8 ms/doc measured), here the signature
-    mins are numpy segment-reductions over the batch's concatenated
-    shingle hashes (int64 (a·x+b) mod p — exact: a < 2³⁰, x < 2³², no
-    overflow, order-insensitive); the per-doc band-key md5 folds run
-    as codegen'd JVM expressions over the mins relation (see the bkey
-    note below). The shingle-set relation itself stays in SQL: its
-    per-shingle md5 is faster JVM-side, and the verify join reuses the
-    same cached docsets."""
-    import numpy as np
-
-    p = 4294967311
-    consts = np.array(
-        [
-            ((_hash60_py(f"a{i}") % 1073741823) + 1,
-             _hash60_py(f"b{i}") % 4294967296)
-            for i in range(num_hashes)
-        ],
-        dtype=np.int64,
-    )
-    n_bands = num_hashes // band_size
-
-    def _mins(batches):  # closure: workers cannot import this module
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrs = pdf["hs"].to_numpy()
-            lens = _np.fromiter(
-                (len(a) for a in arrs), dtype=_np.int64, count=len(arrs)
-            )
-            flat = _np.concatenate(
-                [_np.asarray(a, dtype=_np.int64) for a in arrs]
-            )
-            offsets = _np.zeros(len(arrs), dtype=_np.int64)
-            _np.cumsum(lens[:-1], out=offsets[1:])
-            x = flat % 4294967296
-            out = {"doc_id": pdf["doc_id"].to_numpy()}
-            for i, (a, b) in enumerate(consts):
-                out[f"mh{i}"] = _np.minimum.reduceat((a * x + b) % p, offsets)
-            yield _pd.DataFrame(out)
-
-    # NULL-text / empty-text docs: docset_sql yields hs = [NULL] / []
-    # there, and minhash_bands_sql produces NULL band keys for them —
-    # rows the candidate self-join's bkey equality can never match. The
-    # numpy path cannot carry NULLs (asarray raises on a null-bearing
-    # list; reduceat misreads empty segments), so drop those docs here:
-    # the emitted relation is bit-identical to the SQL form MINUS its
-    # never-joinable NULL-bkey rows — downstream-equal by construction.
-    # The guard is O(1) per row (NULL / empty / leading-NULL), which is
-    # COMPLETE for docset_sql's output: its md5-fold can only produce a
-    # null element from NULL text, and that shape is exactly [NULL] —
-    # an interpreted per-element filter() here cost ~3.5× wall on the
-    # whole minhash pipeline at the 100× scale run. A hand-fed docset
-    # with an interior NULL still fails LOUDLY in the worker (numpy
-    # refuses the NaN→int64 cast), never silently.
-    fed = docsets_df.select("doc_id", "hs").where(
-        "hs IS NOT NULL AND size(hs) > 0 "
-        "AND try_element_at(hs, 1) IS NOT NULL"
-    )
-    mins_schema = "doc_id bigint, " + ", ".join(
-        f"mh{i} bigint" for i in range(num_hashes)
-    )
-    mins = fed.mapInPandas(_mins, schema=mins_schema)
-    # Band keys fold in the JVM (codegen'd md5 over the mins relation),
-    # not per doc in the Python worker: the earlier form ran
-    # num_hashes (=32) hashlib.md5 calls per doc inside the batch loop —
-    # ~60% of the bands stage's wall at sf0.1 (guide §4.2: keep the
-    # Python side to the vectorized numpy reductions, finish scalar
-    # hashing where codegen runs it). Seed strings are identical
-    # (CONCAT('{i}_', mh) == f"{i}_{row[i]}"), so bkeys are bit-equal —
-    # pinned by test_minhash_arrow_bands_bit_identical.
-    bkeys = []
-    for band in range(n_bands):
-        terms = [
-            _hash60(f"CONCAT('{i}_', CAST(mh{i} AS STRING))", "spark")
-            for i in range(band * band_size, (band + 1) * band_size)
-        ]
-        bkeys.append(" ^ ".join(f"({t})" for t in terms) + f" AS bkey{band}")
-    stack_args = ", ".join(f"{band}, bkey{band}" for band in range(n_bands))
-    return mins.selectExpr("doc_id", *bkeys).selectExpr(
-        "doc_id", f"STACK({n_bands}, {stack_args}) AS (band, bkey)"
-    )
-
-
 def minhash_lsh_wide_sql(
     table: str,
     k: int = 5,
@@ -602,79 +506,6 @@ def spread_scan(spark: SparkSession, table: str, view: str) -> str:
     return view
 
 
-def minhash_verify_arrow(
-    spark: SparkSession,
-    bands_relation: str,
-    docsets_relation: str,
-    threshold: float = 0.6,
-) -> DataFrame:
-    """Candidate generation + exact-Jaccard verification, with the
-    per-pair set intersection vectorized in Arrow batches — value-
-    identical to minhash_lsh_wide_sql's tail but without the interpreted
-    per-pair ARRAY_INTERSECT: at sf0.1 the ~21.6k candidate pairs ×
-    ~204-element sets spent the bulk of the final stage inside the
-    interpreted array intrinsic (guide §4.2 — hand whole batches to
-    numpy instead). Each pair's ``common`` is np.intersect1d
-    (assume_unique: the docsets are ARRAY_DISTINCT by construction) —
-    an exact integer, so the cross-multiplied threshold filter and the
-    ROUND(...,4) jaccard (both still SQL-side) are bit-identical to the
-    oracle. Only (d1, d2, hs1, hs2) cross the Python boundary."""
-    from fractions import Fraction
-
-    frac = Fraction(str(threshold))
-    num, den = frac.numerator, frac.denominator
-    pairs = spark.sql(f"""
-SELECT c.d1, c.d2, s1.hs AS hs1, s2.hs AS hs2
-FROM (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-      FROM {bands_relation} a JOIN {bands_relation} b
-        ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id) c
-JOIN {docsets_relation} s1 ON s1.doc_id = c.d1
-JOIN {docsets_relation} s2 ON s2.doc_id = c.d2
-""")
-
-    def _common(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            h1 = pdf["hs1"].to_numpy()
-            h2 = pdf["hs2"].to_numpy()
-            common = _np.fromiter(
-                (
-                    _np.intersect1d(
-                        _np.asarray(a, dtype=_np.int64),
-                        _np.asarray(b, dtype=_np.int64),
-                        assume_unique=True,
-                    ).size
-                    for a, b in zip(h1, h2)
-                ),
-                dtype=_np.int64,
-                count=len(pdf),
-            )
-            n1 = _np.fromiter((len(a) for a in h1), dtype=_np.int64, count=len(pdf))
-            n2 = _np.fromiter((len(b) for b in h2), dtype=_np.int64, count=len(pdf))
-            yield _pd.DataFrame(
-                {
-                    "d1": pdf["d1"].to_numpy(),
-                    "d2": pdf["d2"].to_numpy(),
-                    "common": common,
-                    "n1": n1,
-                    "n2": n2,
-                }
-            )
-
-    sized = pairs.mapInPandas(
-        _common, schema="d1 bigint, d2 bigint, common bigint, n1 bigint, n2 bigint"
-    )
-    return sized.where(f"common * {den + num} > {num} * (n1 + n2)").selectExpr(
-        "d1",
-        "d2",
-        "ROUND(CAST(common AS DOUBLE) / (n1 + n2 - common), 4) AS jaccard",
-    )
-
-
 def _minhash_case(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("documents",))
     docs = spread_scan(spark, "documents", "mh_docs")
@@ -686,28 +517,12 @@ def _minhash_case(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (~0.4 s at sf0.1; at corpus scale, a full second signature pass).
     ds = spark.sql(docset_sql(docs, 5))
     ds.cache().createOrReplaceTempView("mh_docsets")
-    # SQL bands (interpreted ARRAY_MIN(TRANSFORM) folds + codegen'd md5
-    # band keys), re-adopted in r13 after settling the r12 Arrow-mins
-    # question with phase-isolated interleaves: at sf0.1 the bands stage
-    # reads 0.29 s (SQL) vs 0.42 s (Arrow) min-of-8 alternating, and at
-    # 20× perturbed docs 4.67 vs 4.78 s min-of-3 — the mapInPandas
-    # boundary (an extra Python worker stage whose Arrow transpose cost
-    # scales with the shingle bytes) never crosses under the interpreted
-    # folds at any measured scale. minhash_bands_arrow stays in-tree,
-    # bit-identity-pinned (test_minhash_arrow_bands_bit_identical), as
-    # the documented swap-in if a wider-signature profile ever makes the
-    # per-doc fold cost dominate the boundary cost.
+    # SQL bands and the SQL ARRAY_INTERSECT verify tail both won their
+    # interleaved A/Bs against Arrow mapInPandas forms at sf0.1 (bands
+    # 0.290 vs 0.415 s min-of-8, OPTIMIZATION_r13.md §2; tail 1.57/1.88 vs
+    # 1.70/1.93 s min/median, OPTIMIZATION_r12.md).
     bands = spark.sql(minhash_bands_sql("mh_docsets"))
     bands.cache().createOrReplaceTempView("mh_bands")
-    # Verify tail: SQL ARRAY_INTERSECT, kept after an interleaved A/B
-    # against the Arrow tail (minhash_verify_arrow, bit-identical —
-    # 8 alternating full-pipeline reps, min 1.57/med 1.88 s SQL vs
-    # 1.70/1.93 s Arrow at sf0.1): at ~21.6k candidate pairs the Python
-    # boundary round-trip of the hs arrays costs what the interpreted
-    # intersect costs, and the SQL tail is one fewer worker stage under
-    # the driver's low-core scaling run. The Arrow tail stays available
-    # (and test-pinned) as the swap-in if candidate volume per pair ever
-    # dwarfs the boundary cost.
     return spark.sql(
         minhash_lsh_wide_sql(
             docs, docsets_relation="mh_docsets", bands_relation="mh_bands"

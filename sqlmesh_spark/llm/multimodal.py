@@ -3,13 +3,9 @@
 Image/audio/video content is modeled as a ``binary`` column plus a typed
 metadata struct. The Spark-side plumbing — schema, partition-friendly
 batch shapes, Arrow-batched pandas UDF signatures over ``mapInPandas`` —
-is real and tested; the actual media decode is stubbed (no image/audio
-libraries in this environment) behind a clearly-marked gate:
-
-- ``decode_image`` raises NotImplementedError unless PIL is importable;
-- ``fake_features`` is the deterministic stand-in the tests/oracle use
-  (byte length + first/last byte), exercising the exact same mapInPandas
-  path a real decoder would.
+is real and tested; there is no media decode. ``extract_features`` is the
+deterministic stand-in the tests and oracle use (byte length + first/last
+byte), exercising the exact same mapInPandas path a real decoder would.
 
 At scale the mapInPandas stage is the pattern that matters: media bytes
 stay in executor-side Arrow batches; nothing ever collects to the driver,
@@ -27,13 +23,6 @@ from pyspark.sql import functions as F
 from sqlmesh_spark.registry import register
 from sqlmesh_spark.sources.tables import load_table, register_views
 
-try:  # pragma: no cover - decode libs absent in this environment by design
-    from PIL import Image  # noqa: F401
-
-    _HAS_PIL = True
-except Exception:
-    _HAS_PIL = False
-
 FEATURE_SCHEMA = "doc_id bigint, n_bytes int, first_byte int, last_byte int"
 
 
@@ -49,20 +38,6 @@ def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
             F.col("source").alias("origin"),
         ).alias("media_meta"),
     )
-
-
-def decode_image(payload: bytes):
-    """REAL-DECODE STUB: requires an image library not present in this
-    environment. The Spark plumbing around it (attach → mapInPandas →
-    features) is fully exercised with fake_features instead."""
-    if not _HAS_PIL:
-        raise NotImplementedError(
-            "image decode requires PIL; environment ships none — "
-            "use fake_features for the plumbing path"
-        )
-    import io
-
-    return Image.open(io.BytesIO(payload))  # pragma: no cover
 
 
 def extract_features(df: DataFrame) -> DataFrame:
@@ -201,11 +176,11 @@ RESIZE_SCHEMA = "doc_id bigint, orig_len int, resized_len int, resized_md5 strin
 def resize_payloads(df: DataFrame, target: int = 64) -> DataFrame:
     """Image-resize plumbing: nearest-neighbor downsample of each payload
     to ≤``target`` bytes (stride = ceil(len/target), keep every stride-th
-    byte) — the 1-D analog of nearest-neighbor image resampling, with the
-    real pixel decode stubbed per environment (decode_image raises). The
-    shape is exactly what a real thumbnailer needs: per-payload bounded
-    output inside the executor's Arrow batch, no shuffle, memory bounded
-    by batch_size × payload size at any corpus scale."""
+    byte) — the 1-D analog of nearest-neighbor image resampling, with no
+    pixel decode. The shape is exactly what a real thumbnailer needs:
+    per-payload bounded output inside the executor's Arrow batch, no
+    shuffle, memory bounded by batch_size × payload size at any corpus
+    scale."""
 
     def resize_batches(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         import hashlib

@@ -19,7 +19,6 @@ same bucket-join shape with learned centroids.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from sqlmesh_spark.llm.dedup import _hash60, _seq
 from sqlmesh_spark.registry import register
@@ -180,90 +179,6 @@ ranked AS (
 )
 SELECT query_id, neighbor_id, cosine, rnk FROM ranked WHERE rnk <= {k}
 """
-
-
-def ann_topk_arrow(
-    spark: SparkSession, table: str, n_queries: int = 10, k: int = 5
-) -> DataFrame:
-    """The VECTORIZED-ARROW rung of the exact top-k ladder: corpus
-    partitions stream through mapInPandas as Arrow batches, and each
-    batch computes all query×row scaled-int dot products as one numpy
-    tensor op — the Pandas-UDF path the engine reaches for when built-in
-    array folds (interpreted, never codegen'd) become the bottleneck.
-
-    Bit-identical to the SQL oracle: per-element products round HALF-UP
-    at 1e6 exactly like Spark/DuckDB ROUND (sign·floor(|x|+0.5), numpy's
-    own round is half-to-even and would drift), sums are int64, and the
-    final cosine rounds the same way at 1e-6. Queries (n_queries rows)
-    ship inside the closure — the broadcast-small-side discipline; the
-    corpus is never collected. Ranking reuses the identical SQL window.
-    """
-    import numpy as np
-
-    qrows = (
-        spark.table(table)
-        .filter(F.col("vec_id") < n_queries)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    q_ids = [int(r.vec_id) for r in qrows]
-    q_mat = np.array([[float(v) for v in r.embedding] for r in qrows], dtype=np.float64)
-
-    def _round_half_up(x):
-        import numpy as _np
-
-        return _np.sign(x) * _np.floor(_np.abs(x) + 0.5)
-
-    def score_batches(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        q_norm = _round_half_up(q_mat * q_mat * 1e6).sum(axis=1).astype(_np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            c_mat = _np.array(list(pdf["embedding"]), dtype=_np.float64)
-            c_ids = pdf["vec_id"].to_numpy()
-            # per-element rounded products, THEN the sum — the oracle's
-            # scaled-int contract (pre-rounded matmul would differ)
-            prods = _round_half_up(q_mat[:, None, :] * c_mat[None, :, :] * 1e6)
-            dots = prods.sum(axis=2).astype(_np.int64)
-            c_norm = _round_half_up(c_mat * c_mat * 1e6).sum(axis=1).astype(_np.int64)
-            cos = dots / _np.sqrt(q_norm[:, None].astype(_np.float64) * c_norm[None, :])
-            cos = _round_half_up(cos * 1e6) / 1e6
-            qq, cc = _np.meshgrid(_np.array(q_ids), c_ids, indexing="ij")
-            keep = qq != cc
-            yield _pd.DataFrame(
-                {
-                    "query_id": qq[keep].astype("int64"),
-                    "neighbor_id": cc[keep].astype("int64"),
-                    "cosine": cos[keep],
-                }
-            )
-
-    sims = spark.table(table).select("vec_id", "embedding").mapInPandas(
-        score_batches, schema="query_id bigint, neighbor_id bigint, cosine double"
-    )
-    w = "ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id)"
-    return (
-        sims.selectExpr("query_id", "neighbor_id", "cosine", f"{w} AS rnk")
-        .filter(F.col("rnk") <= k)
-    )
-
-
-def _ann_arrow_case(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sqlmesh_spark.llm.dedup import spread_scan
-
-    register_views(spark, sf_dir, ("embeddings",))
-    corpus = spread_scan(spark, "embeddings", "ann_arrow_corpus")
-    return ann_topk_arrow(spark, corpus)
-
-
-register(
-    "ann_topk_arrow",
-    oracle=ann_topk_bruteforce_sql("embeddings", dialect="duckdb"),
-    tags=("similarity", "llm"),
-)(_ann_arrow_case)
 
 
 def _case(sql_fn):

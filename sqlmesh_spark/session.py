@@ -36,6 +36,7 @@ def build_session(
     """
     cpus = str(cpus or _DEFAULT_CPUS)
     shuffle = str(shuffle_partitions or max(int(cpus) if cpus.isdigit() else 32, 8))
+    prefer_smj = os.environ.get("SPARK_GRAFT_PREFER_SMJ") == "1"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -53,16 +54,17 @@ def build_session(
         # independent. Rollback knob for operators: an SHJ build side does
         # NOT spill, so a skewed or size-underestimated build partition
         # can OOM where sort-merge would have spilled — set
-        # SPARK_GRAFT_PREFER_SMJ=1 (and/or SPARK_GRAFT_SHJ_THRESHOLD=0
-        # for the AQE rewrite) to restore spill-safe sort-merge
-        # everywhere. See SCALE.md "Shuffled-hash join and spill".
+        # SPARK_GRAFT_PREFER_SMJ=1 to restore spill-safe sort-merge
+        # everywhere: it turns off both the planner's shuffled-hash
+        # preference and the AQE rewrite. See SCALE.md "Shuffled-hash
+        # join and spill".
         .config(
             "spark.sql.join.preferSortMergeJoin",
-            "true" if os.environ.get("SPARK_GRAFT_PREFER_SMJ") == "1" else "false",
+            "true" if prefer_smj else "false",
         )
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "128m"),
+            "0" if prefer_smj else "128m",
         )
         # File-commit algorithm v2: task output moves to the destination at
         # task commit instead of being re-renamed sequentially by the

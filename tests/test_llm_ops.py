@@ -39,13 +39,6 @@ def test_minhash_lsh_recall_vs_bruteforce(spark, sf_dir):
         assert len(lsh) / len(truth) >= 0.9
 
 
-def test_decode_stub_raises(spark):
-    from sqlmesh_spark.llm.multimodal import decode_image
-
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG...")
-
-
 def test_multimodal_schema(spark, sf_dir):
     from sqlmesh_spark.llm.multimodal import attach_binary_payload
     from sqlmesh_spark.sources.tables import load_table
@@ -235,58 +228,3 @@ def test_embedding_lsh_arrow_bands_bit_identical(spark, sf_dir):
     assert sql_b.exceptAll(arrow_b).count() == 0
     assert arrow_b.exceptAll(sql_b).count() == 0
     assert arrow_b.count() == sql_b.count() > 0
-
-
-def test_minhash_arrow_bands_bit_identical(spark, sf_dir):
-    """The Arrow segment-min bands producer must emit EXACTLY the rows
-    of the SQL ARRAY_MIN(TRANSFORM) formulation — same universal-hash
-    constants, same int64 arithmetic (no overflow: a < 2^30, x < 2^32),
-    same md5-derived XOR band keys."""
-    from sqlmesh_spark.llm.dedup import (
-        docset_sql,
-        minhash_bands_arrow,
-        minhash_bands_sql,
-    )
-    from sqlmesh_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir, ("documents",))
-    ds = spark.sql(docset_sql("documents", 5))
-    ds.cache().createOrReplaceTempView("mh_arrow_test_ds")
-    sql_b = spark.sql(minhash_bands_sql("mh_arrow_test_ds"))
-    arrow_b = minhash_bands_arrow(ds)
-    assert sql_b.exceptAll(arrow_b).count() == 0
-    assert arrow_b.exceptAll(sql_b).count() == 0
-    assert arrow_b.count() == sql_b.count() > 0
-
-
-def test_minhash_verify_arrow_matches_wide_sql(spark, sf_dir):
-    """The Arrow-vectorized candidate verification (np.intersect1d per
-    pair, threshold + ROUND still SQL-side) must emit EXACTLY the rows
-    of the minhash_lsh_wide_sql tail it replaced in the runtime case —
-    same candidates, same integer common counts, same rounded jaccard."""
-    from sqlmesh_spark.llm.dedup import (
-        docset_sql,
-        minhash_bands_arrow,
-        minhash_lsh_wide_sql,
-        minhash_verify_arrow,
-    )
-    from sqlmesh_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir, ("documents",))
-    ds = spark.sql(docset_sql("documents", 5))
-    ds.cache().createOrReplaceTempView("mh_verify_test_ds")
-    bands = minhash_bands_arrow(ds)
-    bands.cache().createOrReplaceTempView("mh_verify_test_bands")
-    sql_form = spark.sql(
-        minhash_lsh_wide_sql(
-            "documents",
-            docsets_relation="mh_verify_test_ds",
-            bands_relation="mh_verify_test_bands",
-        )
-    )
-    arrow_form = minhash_verify_arrow(
-        spark, "mh_verify_test_bands", "mh_verify_test_ds"
-    )
-    assert sql_form.exceptAll(arrow_form).count() == 0
-    assert arrow_form.exceptAll(sql_form).count() == 0
-    assert arrow_form.count() == sql_form.count() > 0

@@ -1,0 +1,76 @@
+"""Static gate: every public operator function has a production caller.
+
+ROADMAP aim 2 keeps one production path per operator; a variant that
+lost its A/B leaves the package (git keeps it) instead of staying behind
+as a test-only swap-in. This gate parses the package with ``ast``, so
+comments and docstrings never count as references. A public top-level
+function in ``llm/`` or ``operators/`` passes when package code calls,
+imports or otherwise names it outside its own body, or when it carries
+a ``@register(...)`` decorator.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+PACKAGE = Path(__file__).resolve().parents[1] / "sqlmesh_spark"
+GATED = ("llm", "operators")
+
+
+def _is_register(decorator: ast.expr) -> bool:
+    target = decorator.func if isinstance(decorator, ast.Call) else decorator
+    if isinstance(target, ast.Attribute):
+        return target.attr == "register"
+    return isinstance(target, ast.Name) and target.id == "register"
+
+
+def _collect(node: ast.AST, names: set[str], owner: str = "") -> None:
+    """Add every name ``node`` loads, reads as an attribute or imports,
+    except the name of the function whose body encloses it: a function
+    naming itself is not a caller."""
+    if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+        found = {node.id}
+    elif isinstance(node, ast.Attribute):
+        found = {node.attr}
+    elif isinstance(node, ast.ImportFrom):
+        found = {alias.name for alias in node.names}
+    else:
+        found = set()
+    names.update(found - {owner})
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        for outer in node.decorator_list + node.args.defaults:
+            _collect(outer, names, owner)
+        for inner in node.body:
+            _collect(inner, names, node.name)
+        return
+    for child in ast.iter_child_nodes(node):
+        _collect(child, names, owner)
+
+
+def test_every_public_operator_function_has_a_production_reference():
+    trees = {
+        path: ast.parse(path.read_text(), filename=str(path))
+        for path in sorted(PACKAGE.rglob("*.py"))
+    }
+    public = [
+        (f"{path.relative_to(PACKAGE.parent)}:{node.lineno}", node)
+        for path, tree in trees.items()
+        if path.parent.parent == PACKAGE and path.parent.name in GATED
+        for node in tree.body
+        if isinstance(node, ast.FunctionDef) and not node.name.startswith("_")
+    ]
+    referenced: set[str] = set()
+    for tree in trees.values():
+        _collect(tree, referenced)
+    orphans = sorted(
+        f"{node.name} ({where})"
+        for where, node in public
+        if node.name not in referenced
+        and not any(_is_register(d) for d in node.decorator_list)
+    )
+    assert not orphans, (
+        "ROADMAP aim 2 keeps one production path per operator; these public "
+        "functions have no call, import or @register from package code, so "
+        "only tests reach them and they leave the package: " + ", ".join(orphans)
+    )
