@@ -191,26 +191,6 @@ class SparkAdapter:
         SHALLOW CLONE (zero-copy)."""
         self.backend.clone(target, source)
 
-    def create_managed_table(
-        self,
-        table: str,
-        query_or_df: QueryOrDF,
-        partitioned_by: Sequence[str] = (),
-    ) -> None:
-        """MANAGED-kind physical creation (engine_adapter/base.py
-        create_managed_table; Snowflake dynamic tables / BigQuery
-        materialized views in the reference). OSS Spark has no
-        self-refreshing table, so the emulation is a CTAS here and an
-        engine-refresh performed by the scheduler on each tick
-        (refresh_managed_table) — on an engine with native support both
-        calls become metadata operations."""
-        self.ctas(table, query_or_df, partitioned_by=partitioned_by)
-
-    def refresh_managed_table(self, table: str, query_or_df: QueryOrDF) -> None:
-        """The scheduled refresh the managing engine would perform itself:
-        atomic stage+rename rewrite from the defining query."""
-        self.replace_query(table, query_or_df)
-
     def alter_table(self, table: str, alter_expressions: Iterable[str]) -> None:
         """Apply SchemaDiffer operations (base.py:1183)."""
         for expr in alter_expressions:
@@ -407,7 +387,7 @@ class SparkAdapter:
 
         When the caller doesn't pass a layout and the target already
         exists, its partition columns are INHERITED: delete_from /
-        update_table / optimize / managed refresh must never silently
+        update_table / optimize must never silently
         flatten a partitioned table into an unpartitioned one (that would
         lock every later interval write into full-table rewrites)."""
         if not partitioned_by and self.table_exists(table):
@@ -473,12 +453,14 @@ class SparkAdapter:
         columns_to_types: Mapping[str, str],
     ) -> None:
         """CSV seed → typed table. Parsed driver-side (seeds are small by
-        definition); schema declared, never inferred."""
+        definition); schema declared, never inferred: columns declared
+        STRING are read as text, so '1' stays '1'."""
         import io
 
         import pandas as pd
 
-        pdf = pd.read_csv(io.StringIO(csv_text))
+        text_cols = {c: str for c, t in columns_to_types.items() if t.upper() == "STRING"}
+        pdf = pd.read_csv(io.StringIO(csv_text), dtype=text_cols)
         schema = ", ".join(f"{c} {t}" for c, t in columns_to_types.items())
         sdf = self.spark.createDataFrame(pdf[[c for c in columns_to_types]], schema=schema)
         self.replace_query(table, sdf)

@@ -171,7 +171,7 @@ def cmd_environments(args) -> int:
     """List environments with their model→version pointer sets —
     reference `sqlmesh environments`."""
     ctx = _context(args)
-    envs = ctx.state._read("environments")
+    envs = ctx.state.get_environments()
     if not envs:
         print("no environments")
         return 0
@@ -332,7 +332,7 @@ def cmd_info(args) -> int:
     for kind, n in sorted(kinds.items()):
         print(f"  {kind}: {n}")
     print(f"audits: {len(ctx.custom_audits)} custom, {len(ctx.standalone_audits)} standalone")
-    envs = ctx.state._read("environments")
+    envs = ctx.state.get_environments()
     print(f"environments: {len(envs)}" + (f" ({', '.join(sorted(envs))})" if envs else ""))
     return 0
 

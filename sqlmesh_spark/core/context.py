@@ -15,7 +15,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from sqlmesh_spark.core.model import Model, ModelKind, extract_depends_on
 from sqlmesh_spark.core.plan import Plan, PlanEvaluator
-from sqlmesh_spark.core.scheduler import SnapshotEvaluator
+from sqlmesh_spark.core.scheduler import (
+    SnapshotEvaluator,
+    model_relations,
+    render_model_sql,
+)
+from sqlmesh_spark.core.snapshot import env_schema, physical_table
 from sqlmesh_spark.core.state import StateStore
 
 
@@ -433,7 +438,7 @@ class Context:
         for stmt in self.before_all:
             self.spark.sql(ev.render(stmt))
         executed = self._evaluator.apply(plan)
-        self._run_standalone_audits(plan, ev)
+        self._run_standalone_audits(plan, variables["this_env"])
         for stmt in self.after_all:
             self.spark.sql(ev.render(stmt))
         if self.environment_ttl is not None and plan.environment != "prod":
@@ -455,19 +460,19 @@ class Context:
             raise KeyError(f"unknown environment {name!r}")
         self.state.put_environment_meta(name, invalidated=True)
 
-    def _run_standalone_audits(self, plan: Plan, ev) -> None:
+    def _run_standalone_audits(self, plan: Plan, this_env: str) -> None:
         """Render each audit's query against the plan's physical tables;
         violation counts are recorded and warned about, never blocking
         (audit/definition.py:189)."""
         import logging
 
-        from sqlmesh_spark.core.scheduler import _replace_table_ref
-
-        mapping = {n: s.table_name for n, s in plan.snapshots.items()}
+        relations = model_relations(plan.snapshots)
         for audit in self.standalone_audits.values():
-            sql = ev.render(audit.query)
-            for logical, physical in sorted(mapping.items(), key=lambda kv: -len(kv[0])):
-                sql = _replace_table_ref(sql, logical, physical)
+            sql = render_model_sql(
+                self.spark, audit.query, plan.start, plan.end, relations,
+                execution_time=plan.execution_time,
+                variables={"this_env": this_env},
+            )
             n_bad = self.spark.sql(sql).count()
             self.state.put_audit_result(plan.environment, audit.name, n_bad)
             if n_bad:
@@ -534,9 +539,8 @@ class Context:
         from sqlmesh_spark.core.plan import build_snapshots
 
         snaps = build_snapshots(self.models)
-        mapping = {n: s.table_name for n, s in snaps.items()}
         return SnapshotEvaluator(self.spark).render(
-            snaps[model_name.lower()], start, end, mapping
+            snaps[model_name.lower()], start, end, model_relations(snaps)
         )
 
     def evaluate(self, model_name: str, start: str = "1992-01-01", end: str = "1998-12-31") -> DataFrame:
@@ -565,8 +569,7 @@ class Context:
             )
 
         def env_view(env: str) -> str:
-            schema = "prod_views" if env == "prod" else f"{env}_views"
-            return f"{schema}.{model.view_name}"
+            return f"{env_schema(env)}.{model.view_name}"
 
         src, tgt = env_view(source_env), env_view(target_env)
         value_cols = [c for c in self.spark.table(src).columns if c not in keys]
@@ -650,11 +653,11 @@ class Context:
                 for name in self.metrics:
                     if name != n and name in m.expr and self.metrics[name] not in requested:
                         frontier.append(name)
-        env_schema = "prod_views" if environment == "prod" else f"{environment}_views"
+        views = env_schema(environment)
 
         def resolve(rel: str) -> str:
             if rel in self.models:
-                return f"{env_schema}.{self.models[rel].view_name}"
+                return f"{views}.{self.models[rel].view_name}"
             return rel
 
         sources: dict[str, str] = {}
@@ -753,34 +756,27 @@ class Context:
         Returns the dropped object names (views schemas and tables)."""
         import time
 
-        from sqlmesh_spark.core.plan import build_snapshots
-
         dropped_envs: list[str] = []
         now = int(time.time())
-        for env in list(self.state._read("environments")):
+        for env in list(self.state.get_environments()):
             meta = self.state.get_environment_meta(env)
             expired = meta.get("expiration_ts") is not None and meta["expiration_ts"] <= now
             if meta.get("invalidated") or expired:
-                env_schema = "prod_views" if env == "prod" else f"{env}_views"
-                self.spark.sql(f"DROP DATABASE IF EXISTS {env_schema} CASCADE")
+                views = env_schema(env)
+                self.spark.sql(f"DROP DATABASE IF EXISTS {views} CASCADE")
                 self.state.delete_environment(env)
-                dropped_envs.append(env_schema)
+                dropped_envs.append(views)
 
-        live: set[str] = set()
-        envs = self.state._read("environments")
-        snaps_meta = self.state._read("snapshots")
-        for env_pointers in envs.values():
-            for name, version in env_pointers.items():
-                schema = name.rsplit(".", 1)[0] if "." in name else "default"
-                view = name.rsplit(".", 1)[-1]
-                live.add(f"sqlmesh__{schema}.{view}__{version}")
+        live = {
+            physical_table(name, version)
+            for env_pointers in self.state.get_environments().values()
+            for name, version in env_pointers.items()
+        }
         dropped = []
         forgotten: list[tuple[str, str]] = []
-        for key in snaps_meta:
+        for key in self.state._read("snapshots"):
             name, _, version = key.rpartition("@")
-            schema = name.rsplit(".", 1)[0] if "." in name else "default"
-            view = name.rsplit(".", 1)[-1]
-            table = f"sqlmesh__{schema}.{view}__{version}"
+            table = physical_table(name, version)
             if table not in live and self._evaluator.adapter.table_exists(table):
                 self._evaluator.adapter.drop_table(table)
                 dropped.append(table)
@@ -804,38 +800,24 @@ class Context:
 
         model = self.models[model_name.lower()]
         inputs: dict[str, dict] = {}
-        mapping: dict[str, str] = {}
         for dep in sorted(model.depends_on):
             if dep in self.models or not _re.match(r"[\w.]+$", dep):
                 continue  # only external leaf tables become fixtures
             rows = [r.asDict() for r in self.spark.table(dep).limit(input_limits).collect()]
             inputs[dep] = {"rows": rows}
-        # Run the model query against the sampled fixtures.
         from sqlmesh_spark.core.model_test import ModelTestRunner
 
         runner = ModelTestRunner(self.spark)
-        spec = {
-            f"test_{model.view_name}": {
-                "model": model.name,
-                "inputs": inputs,
-                "vars": {"start": start, "end": end},
-                "outputs": {},
-            }
+        body = {
+            "model": model.name,
+            "inputs": inputs,
+            "vars": {"start": start, "end": end},
+            "outputs": {},
         }
-        # Execute once to capture the golden output.
-        body = spec[f"test_{model.view_name}"]
-        from sqlmesh_spark.core.scheduler import _replace_table_ref
-        from sqlmesh_spark.macros import MacroEvaluator, temporal_variables
-
-        sql = MacroEvaluator(variables=temporal_variables(start, end)).render(model.query)
-        for upstream, data in inputs.items():
-            view = "gen_" + upstream.replace(".", "__")
-            import pandas as pd
-
-            self.spark.createDataFrame(pd.DataFrame(data["rows"])).createOrReplaceTempView(view)
-            sql = _replace_table_ref(sql, upstream, view)
-        out_rows = [r.asDict() for r in self.spark.sql(sql).collect()]
-        body["outputs"]["query"] = {"rows": out_rows}
+        # The golden output: the model rendered over the sampled fixtures.
+        sql = runner.render(body, self.models)
+        body["outputs"]["query"] = {"rows": [r.asDict() for r in self.spark.sql(sql).collect()]}
+        spec = {f"test_{model.view_name}": body}
         # The generated spec must round-trip through the runner.
         results = runner.run_spec(spec, self.models)
         assert all(r.passed for r in results), [r.failures for r in results]

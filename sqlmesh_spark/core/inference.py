@@ -16,13 +16,12 @@ without executing, so they fall back to declared columns or None.
 
 from __future__ import annotations
 
-import re
 from typing import Mapping, Optional
 
 from pyspark.sql import SparkSession
 
 from sqlmesh_spark.core.model import Model, ModelKind
-from sqlmesh_spark.macros import MacroEvaluator, temporal_variables
+from sqlmesh_spark.core.scheduler import render_model_sql
 
 _DUMMY_START, _DUMMY_END = "1970-01-01", "1970-01-02"
 
@@ -58,10 +57,9 @@ def infer_columns_to_types(
     spark: SparkSession,
     models: Mapping[str, Model],
     name: str,
-    variables: Optional[Mapping[str, str]] = None,
 ) -> Optional[dict[str, str]]:
     """column -> Spark type string for ``name``'s query, or None when the
-    model is Python-backed with no declared columns.
+    model is Python-backed or EXTERNAL with no declared columns.
 
     External (non-model) references resolve through the live catalog, so
     leaf tables must exist; model references never need physical tables —
@@ -74,12 +72,12 @@ def infer_columns_to_types(
     schemas: dict[str, dict[str, str]] = {}
     mapping: dict[str, str] = {}
     for mname in _dep_closure(models, target):
-        schema = _infer_one(spark, models[mname], schemas, mapping, variables)
+        schema = _infer_one(spark, models[mname], mapping)
         if schema is None:
             if mname == target:
                 return None
-            # An un-inferable upstream (python model, no declared columns)
-            # poisons nothing unless the target actually reads from it —
+            # An un-inferable upstream (python or EXTERNAL model, no
+            # declared columns) poisons nothing unless the target actually reads from it —
             # Spark's analyzer will raise then, surfaced as ValueError below.
             continue
         schemas[mname] = schema
@@ -92,54 +90,22 @@ def infer_columns_to_types(
 def _infer_one(
     spark: SparkSession,
     model: Model,
-    schemas: Mapping[str, Mapping[str, str]],
     mapping: Mapping[str, str],
-    variables: Optional[Mapping[str, str]],
 ) -> Optional[dict[str, str]]:
     if model.columns:
         return {c: t.lower() for c, t in model.columns.items()}
     if model.kind == ModelKind.SEED:
         header = (model.seed_csv or "").splitlines()
         return {c: "string" for c in header[0].split(",")} if header else None
-    if model.python_fn is not None:
+    if model.python_fn is not None or model.kind == ModelKind.EXTERNAL:
+        # An EXTERNAL model without declared columns has no query: its
+        # dependents read the live table itself.
         return None
-    vars_ = temporal_variables(_DUMMY_START, _DUMMY_END)
-    vars_["this_model"] = _infer_view_name(model.name)
-    vars_["model_kind_name"] = f"'{model.kind.value}'"
-    if variables:
-        vars_.update(variables)
-    sql = MacroEvaluator(variables=vars_, schemas=schemas).render(model.query)
-    from sqlmesh_spark.core.scheduler import _replace_table_ref
-
-    for logical, view in sorted(mapping.items(), key=lambda kv: -len(kv[0])):
-        sql = _replace_table_ref(sql, logical, view)
+    sql = render_model_sql(
+        spark, model.query, _DUMMY_START, _DUMMY_END, mapping,
+        model=model, this_model=_infer_view_name(model.name),
+    )
     try:
         return dict(spark.sql(sql).limit(0).dtypes)
     except Exception as exc:
         raise ValueError(f"cannot infer schema for {model.name}: {exc}") from exc
-
-
-def upstream_schemas(
-    spark: SparkSession,
-    model: Model,
-    table_mapping: Mapping[str, str],
-) -> dict[str, dict[str, str]]:
-    """Schemas of a model's dependencies resolved through their PHYSICAL
-    relations — the evaluation-time counterpart of inference (parents are
-    materialized before children in DAG order, so their tables exist).
-    Used to feed @STAR/@UNION during real renders."""
-    out: dict[str, dict[str, str]] = {}
-    for dep in model.depends_on:
-        rel = table_mapping.get(dep, dep)
-        try:
-            out[dep] = dict(spark.sql(f"SELECT * FROM {rel}").limit(0).dtypes)
-        except Exception:  # noqa: BLE001 — macro raises if actually needed
-            continue
-    return out
-
-
-_STAR_RE = re.compile(r"@(STAR|UNION)\s*\(", re.IGNORECASE)
-
-
-def needs_schemas(query: str) -> bool:
-    return bool(_STAR_RE.search(query))

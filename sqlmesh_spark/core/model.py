@@ -152,6 +152,16 @@ class Model:
         scd2_apply_cow)."""
         return self.kind_args.get("partition_by_current", "").lower() in ("true", "1")
 
+    @property
+    def partition_by_time(self) -> bool:
+        """kind.py:471 partition_by_time_column (default true): a time-range
+        table partitions on a derived day column, so interval overwrites
+        prune to the touched partitions. False keeps it unpartitioned, and
+        interval overwrites take the adapter's DELETE_INSERT fallback
+        (for models partitioned by something else entirely)."""
+        flag = self.kind_args.get("partition_by_time_column", "true")
+        return flag.strip("'\"").lower() != "false"
+
 
 _MODEL_RE = re.compile(r"\bMODEL\s*\(", re.IGNORECASE)
 

@@ -18,8 +18,7 @@ import yaml
 from pyspark.sql import SparkSession
 
 from sqlmesh_spark.core.model import Model
-from sqlmesh_spark.core.scheduler import _replace_table_ref
-from sqlmesh_spark.macros import MacroEvaluator, temporal_variables
+from sqlmesh_spark.core.scheduler import render_model_sql
 
 
 @dataclass
@@ -138,10 +137,10 @@ class ModelTestRunner:
     def run_yaml(self, text: str, models: Mapping[str, Model]) -> list[ModelTestResult]:
         return self.run_spec(yaml.safe_load(text), models)
 
-    def _run_one(self, name: str, body: Mapping[str, Any], models: Mapping[str, Model]) -> ModelTestResult:
+    def render(self, body: Mapping[str, Any], models: Mapping[str, Model]) -> str:
+        """Register the test's input fixtures as temp views and return the
+        model query rendered over them."""
         model = models[body["model"].lower()]
-        failures: list[str] = []
-
         # Fixture views for upstreams (definition.py:112-117 uses a
         # randomized schema; temp views are the Spark-local equivalent).
         # Input shapes match the reference's _normalize_rows
@@ -152,8 +151,8 @@ class ModelTestRunner:
         test_dialect = body.get("dialect") or model.dialect
 
         def _to_spark_sql(sql_text: str) -> str:
-            """The ONE dialect pipeline for test SQL — fixture queries
-            and the model query must render identically."""
+            """Fixture queries transpile from the dialect the model
+            query renders in (render_model_sql's ``dialect``)."""
             if test_dialect and test_dialect != "spark":
                 from sqlmesh_spark.core.transpile import transpile
 
@@ -217,34 +216,28 @@ class ModelTestRunner:
             mapping[upstream.lower()] = view
 
         test_vars = body.get("vars", {}) or {}
-        variables = temporal_variables(
+        # The production render over the FIXTURE views: @STAR/@UNION read
+        # their schemas, and a test may declare its own `dialect:`
+        # (reference test/runner.py:43-77 runs model tests on the test
+        # connection in the model's dialect), which wins over the model's.
+        # vars.execution_time freezes @execution_* like the reference
+        # runner (test/definition.py:120 _execution_time).
+        execution_time = test_vars.get("execution_time")
+        return render_model_sql(
+            self.spark,
+            model.query,
             str(test_vars.get("start", "1970-01-01")),
             str(test_vars.get("end", "2100-01-01")),
-            # vars.execution_time freezes @execution_* like the reference
-            # runner (test/definition.py:120 _execution_time)
-            str(test_vars["execution_time"])
-            if test_vars.get("execution_time") is not None
-            else None,
+            mapping,
+            model=model,
+            this_model=model.name,
+            execution_time=None if execution_time is None else str(execution_time),
+            dialect=test_dialect,
         )
-        # Render parity with the production scheduler (core/scheduler.py
-        # render): model/blueprint variables bind, and schema-consuming
-        # macros (@STAR/@UNION) resolve against the FIXTURE views.
-        variables.update(model.variables)
-        schemas = {
-            upstream: dict(self.spark.table(view).dtypes)
-            for upstream, view in mapping.items()
-        }
-        sql = MacroEvaluator(variables=variables, schemas=schemas).render(model.query)
-        # YAML tests run the same dialect pipeline as real evaluation
-        # (scheduler render): a duckdb-dialect model's golden test must
-        # exercise the transpiled SQL, not the raw text. A test may also
-        # declare its own `dialect:` (reference test/runner.py:43-77 runs
-        # model tests on the test connection in the model's dialect) —
-        # the body-level key wins over the model's.
-        sql = _to_spark_sql(sql)
-        for logical, view in sorted(mapping.items(), key=lambda kv: -len(kv[0])):
-            sql = _replace_table_ref(sql, logical, view)
 
+    def _run_one(self, name: str, body: Mapping[str, Any], models: Mapping[str, Model]) -> ModelTestResult:
+        sql = self.render(body, models)
+        failures: list[str] = []
         outputs = body.get("outputs") or {}
         # outputs.partial: true compares only the columns the expected
         # rows spell out (reference test/definition.py:228-235, 456-510);

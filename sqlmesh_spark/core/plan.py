@@ -22,8 +22,20 @@ from pyspark.sql import SparkSession
 
 from sqlmesh_spark.adapter import SparkAdapter
 from sqlmesh_spark.core.model import Model
-from sqlmesh_spark.core.scheduler import WHOLESALE_KINDS, Scheduler
-from sqlmesh_spark.core.snapshot import Snapshot, fingerprint_model, snapshots_to_dag
+from sqlmesh_spark.core.scheduler import (
+    WHOLESALE_KINDS,
+    Scheduler,
+    SnapshotEvaluator,
+    model_relations,
+    render_model_sql,
+)
+from sqlmesh_spark.core.snapshot import (
+    Snapshot,
+    env_schema,
+    fingerprint_model,
+    merge_intervals,
+    snapshots_to_dag,
+)
 from sqlmesh_spark.core.state import StateStore
 
 
@@ -472,7 +484,7 @@ class PlanEvaluator:
             if self.adapter.table_exists(pinned.table_name):
                 current_cols = self.adapter.columns(pinned.table_name)
                 target_cols = self._query_schema(
-                    pinned, self._mapping(snapshots), snapshots
+                    pinned, model_relations(snapshots), snapshots
                 )
                 if target_cols is not None:
                     deltas = differ.compare(current_cols, target_cols)
@@ -544,7 +556,7 @@ class PlanEvaluator:
         an empty table would poison every later apply."""
         from sqlmesh_spark.core.snapshot import to_epoch
 
-        mapping = self._mapping(plan.snapshots)
+        relations = model_relations(plan.snapshots)
         executed: dict[str, int] = {}
         for name, snap in plan.snapshots.items():
             model = snap.model
@@ -558,15 +570,12 @@ class PlanEvaluator:
                     f"({name}): SCD2 history columns require a real evaluation"
                 )
             if not self.adapter.table_exists(snap.table_name):
-                cols = self._query_schema(snap, mapping, plan.snapshots)
+                cols = self._query_schema(snap, relations, plan.snapshots)
                 if cols is None:
                     continue
                 partitioned_by = model.partitioned_by
                 if model.kind.value == "INCREMENTAL_BY_TIME_RANGE":
-                    part_by_time = model.kind_args.get(
-                        "partition_by_time_column", "true"
-                    ).strip("'\"").lower() != "false"
-                    if part_by_time:
+                    if model.partition_by_time:
                         partitioned_by = ("_ds",)
                     else:
                         cols.pop("_ds", None)
@@ -606,20 +615,15 @@ class PlanEvaluator:
             snap = snapshots[name]
             self.state.remove_intervals(name, snap.version, efrom, horizon)
 
-    def _mapping(self, snapshots: Mapping[str, Snapshot]) -> dict[str, str]:
-        return {n: s.table_name for n, s in snapshots.items()}
-
     def _query_schema(
-        self, snapshot: Snapshot, mapping=None, snapshots=None
+        self, snapshot: Snapshot, relations, snapshots: Mapping[str, Snapshot]
     ) -> dict[str, str] | None:
         """Analyze (don't execute) the rendered query for its schema."""
-        from sqlmesh_spark.core.scheduler import SnapshotEvaluator
-
         if snapshot.model.python_fn is not None:
             return None
         try:
             sql = SnapshotEvaluator(self.spark, self.adapter).render(
-                snapshot, "1970-01-01", "1970-01-02", mapping or {}
+                snapshot, "1970-01-01", "1970-01-02", relations
             )
             cols = dict(self.spark.sql(sql).dtypes)
         except Exception:
@@ -628,7 +632,7 @@ class PlanEvaluator:
             try:
                 from sqlmesh_spark.core.inference import infer_columns_to_types
 
-                models = {n: s.model for n, s in (snapshots or {}).items()}
+                models = {n: s.model for n, s in snapshots.items()}
                 cols = infer_columns_to_types(self.spark, models, snapshot.model.name)
             except Exception:
                 return None
@@ -679,16 +683,6 @@ class PlanEvaluator:
                     )
         return tuple(sorted(selected))
 
-    @staticmethod
-    def _merge_intervals(raw: list) -> list[tuple[int, int]]:
-        out: list[tuple[int, int]] = []
-        for s, e in sorted(tuple(p) for p in raw):
-            if out and s <= out[-1][1]:
-                out[-1] = (out[-1][0], max(out[-1][1], e))
-            else:
-                out.append((s, e))
-        return out
-
     def _ensure_no_gaps(self, plan: Plan) -> None:
         """For each model whose version CHANGES in this environment and
         whose kind records intervals, the new version's processed set must
@@ -703,14 +697,10 @@ class PlanEvaluator:
                 continue
             if snap.model.kind in WHOLESALE_KINDS:
                 continue  # each rebuild covers the whole table
-            old_iv = self._merge_intervals(
-                self.state.get_intervals(name, old_version)
-            )
+            old_iv = merge_intervals(self.state.get_intervals(name, old_version))
             if not old_iv:
                 continue
-            new_iv = self._merge_intervals(
-                self.state.get_intervals(name, snap.version)
-            )
+            new_iv = merge_intervals(self.state.get_intervals(name, snap.version))
             gaps: list[tuple[int, int]] = []
             for s, e in old_iv:
                 pos = s
@@ -796,9 +786,7 @@ class PlanEvaluator:
             self._ensure_no_gaps(plan)
         # Stage 3: virtual layer swap — views repoint atomically after data
         # exists (plan/stages.py:165).
-        env_schema = (
-            "prod_views" if plan.environment == "prod" else f"{plan.environment}_views"
-        )
+        views = env_schema(plan.environment)
         modified = set(plan.diff.modified)
         modified_or_added = (
             set(plan.diff.added) | modified | set(plan.diff.indirectly_modified)
@@ -829,7 +817,7 @@ class PlanEvaluator:
             try:
                 existing_views = {
                     r.viewName.lower()
-                    for r in self.spark.sql(f"SHOW VIEWS IN {env_schema}").collect()
+                    for r in self.spark.sql(f"SHOW VIEWS IN {views}").collect()
                     if not r.isTemporary
                 }
             except AnalysisException:  # env schema dropped outside of plans
@@ -851,7 +839,7 @@ class PlanEvaluator:
 
         to_promote = [(n, s) for n, s in candidates if not _view_is_current(n, s)]
         if to_promote:
-            self.adapter.create_schema(env_schema)
+            self.adapter.create_schema(views)
 
         def _promote_one(name: str, snap) -> Optional[str]:
             """Repoint one env view; returns its name, or None when the
@@ -885,7 +873,7 @@ class PlanEvaluator:
                     self.spark.sql(
                         f"ALTER TABLE {tbl} ALTER COLUMN {col} COMMENT '{c}'"
                     )
-            env_view = f"{env_schema}.{snap.model.view_name}"
+            env_view = f"{views}.{snap.model.view_name}"
             # The virtual layer exposes the MODEL's schema exactly: engine-
             # managed physical columns (the derived `_ds` time partition,
             # the SCD2-COW `_is_current` partition — always `_`-prefixed)
@@ -912,19 +900,16 @@ class PlanEvaluator:
         # @this_model bound to the ENV VIEW — :452) run after every view
         # has repointed, one after another in DAG-dict order: grants,
         # invalidations, notifies.
-        from sqlmesh_spark.core.scheduler import SnapshotEvaluator
-
-        evaluator = SnapshotEvaluator(
-            self.spark, self.adapter, execution_time=plan.execution_time
-        )
-        mapping = self._mapping(plan.snapshots)
+        relations = model_relations(plan.snapshots)
         for (_, snap), env_view in zip(to_promote, promoted):
             if env_view is None:
                 continue
             for stmt in snap.model.on_virtual_update:
                 self.spark.sql(
-                    evaluator.render_statement(
-                        stmt, snap, plan.start, plan.end, mapping, this_model=env_view
+                    render_model_sql(
+                        self.spark, stmt, plan.start, plan.end, relations,
+                        model=snap.model, this_model=env_view,
+                        execution_time=plan.execution_time,
                     )
                 )
         # Stage 4: finalize environment pointers.

@@ -17,11 +17,14 @@ from __future__ import annotations
 import hashlib
 import inspect
 from dataclasses import dataclass
-from typing import Callable, Mapping, Optional
+from typing import TYPE_CHECKING, Callable, Mapping, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
 from sqlmesh_spark.core.model import Model, ModelKind
+
+if TYPE_CHECKING:
+    from sqlmesh_spark.core.scheduler import Relation
 
 
 @dataclass
@@ -32,13 +35,20 @@ class ExecutionContext:
     spark: SparkSession
     start: str
     end: str
-    _table_mapping: Mapping[str, str]
+    _table_mapping: Mapping[str, Relation]
 
     def table(self, name: str) -> DataFrame:
-        """Resolve a logical model/table name to a DataFrame over its
-        physical snapshot relation."""
-        physical = self._table_mapping.get(name.lower(), name)
-        return self.spark.sql(f"SELECT * FROM {physical}")
+        """Resolve a logical model/table name to a DataFrame over what a
+        SQL model's reference to it reads (an EMBEDDED model's query
+        renders for this interval)."""
+        from sqlmesh_spark.core.scheduler import render_model_sql
+
+        return self.spark.sql(
+            render_model_sql(
+                self.spark, f"SELECT * FROM {name}", self.start, self.end,
+                self._table_mapping,
+            )
+        )
 
 
 def python_model(

@@ -13,8 +13,9 @@ scheduler is thread-safe and local[N]/FAIR pools overlap their stages
 
 from __future__ import annotations
 
+import hashlib
 from concurrent.futures import ThreadPoolExecutor
-from typing import Mapping, Optional
+from typing import Mapping, Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -73,6 +74,10 @@ WHOLESALE_KINDS = frozenset(
     {ModelKind.FULL, ModelKind.VIEW, ModelKind.SEED, ModelKind.CUSTOM, ModelKind.MANAGED}
 )
 
+# What a reference to a model reads (model_relations): a relation name, or
+# the EMBEDDED Model whose query renders inline for the interval at hand.
+Relation = Union[str, Model]
+
 
 # Render cache (reference model/cache.py:1-234 caches optimized renders
 # keyed by fingerprint): a snapshot's version hash covers its query, kind
@@ -107,102 +112,64 @@ class SnapshotEvaluator:
         snapshot: Snapshot,
         start: str,
         end: str,
-        table_mapping: Mapping[str, str],
+        relations: Mapping[str, Relation],
     ) -> str:
-        """Macro-render the model query and resolve model references to
-        physical snapshot tables (renderer.py:527 + _resolve_tables)."""
-        from sqlmesh_spark.core.inference import needs_schemas
-
-        cacheable = not needs_schemas(snapshot.model.query)
+        """The snapshot's query as executable Spark SQL for [start, end)
+        (render_model_sql), cached."""
+        model = snapshot.model
+        embedded = [r for r in relations.values() if isinstance(r, Model)]
+        cacheable = not any(needs_schemas(m.query) for m in [model, *embedded])
         key = ()
         if cacheable:
             # The key carries a hash of the RAW QUERY TEXT in addition to
             # the version: a forward-only plan pins a snapshot to its OLD
             # version while carrying NEW query text, so version alone no
             # longer determines the rendered SQL (a stale hit would
-            # evaluate the old logic and silently drop the change).
-            import hashlib as _hashlib
-
+            # evaluate the old logic and silently drop the change). The
+            # same holds for an EMBEDDED parent, whose text is inlined.
             key = (
                 snapshot.version,
-                _hashlib.md5(snapshot.model.query.encode()).hexdigest()[:12],
-                snapshot.model.name,
+                _text_hash(model.query),
+                model.name,
                 start,
                 end,
                 self.execution_time,
-                tuple(sorted(table_mapping.items())),
+                tuple(sorted((n, _relation_key(r)) for n, r in relations.items())),
             )
             cached = _RENDER_CACHE.get(key)
             if cached is not None:
                 RENDER_STATS["hits"] += 1
                 return cached
             RENDER_STATS["misses"] += 1
-        variables = temporal_variables(start, end, execution=self.execution_time)
-        variables["this_model"] = snapshot.table_name
-        # Evaluation-context vars (renderer.py:140-151).
-        variables["model_kind_name"] = f"'{snapshot.model.kind.value}'"
-        # Blueprint-bound variables (definition.py:2035) — @VAR lookups.
-        variables.update(snapshot.model.variables)
-        # Schema-consuming macros (@STAR/@UNION) resolve upstream schemas
-        # from the live physical relations (parents materialize first in
-        # DAG order) — render-time type inference, definition.py:1449-1482.
-        schemas: Mapping[str, Mapping[str, str]] = {}
-        from sqlmesh_spark.core.inference import needs_schemas, upstream_schemas
-
-        if needs_schemas(snapshot.model.query):
-            schemas = upstream_schemas(self.spark, snapshot.model, table_mapping)
-        sql = MacroEvaluator(variables=variables, schemas=schemas).render(snapshot.model.query)
-        # Read-dialect transpilation AFTER macro expansion (macros emit
-        # Spark SQL; the model author's text is what carries the dialect —
-        # reference renderer.py:517 normalizes through model.dialect) and
-        # BEFORE physical-name resolution (transpile never touches tables).
-        if snapshot.model.dialect and snapshot.model.dialect != "spark":
-            from sqlmesh_spark.core.transpile import transpile
-
-            sql = transpile(sql, snapshot.model.dialect)
-        # Physical-name resolution: longest names first so db.a.b wins.
-        for logical, physical in sorted(table_mapping.items(), key=lambda kv: -len(kv[0])):
-            sql = _replace_table_ref(sql, logical, physical)
+        sql = render_model_sql(
+            self.spark, model.query, start, end, relations,
+            model=model, this_model=snapshot.table_name,
+            execution_time=self.execution_time,
+        )
         if cacheable:
             if len(_RENDER_CACHE) >= _RENDER_CACHE_MAX:
                 _RENDER_CACHE.clear()
             _RENDER_CACHE[key] = sql
         return sql
 
-    def render_statement(
-        self,
-        stmt: str,
-        snapshot: Snapshot,
-        start: str,
-        end: str,
-        table_mapping: Mapping[str, str],
-        this_model: Optional[str] = None,
-    ) -> str:
-        """Render a pre/post/on_virtual_update statement (definition.py:357
-        render_pre_statements): same macro + table-resolution pipeline as
-        the query, uncached."""
-        variables = temporal_variables(start, end, execution=self.execution_time)
-        variables["this_model"] = this_model or snapshot.table_name
-        # Pre-quoted literal form, for statements that need the resolved
-        # name as a STRING (logs, messages) rather than a table ref.
-        variables["this_model_name"] = f"'{this_model or snapshot.table_name}'"
-        variables["model_kind_name"] = f"'{snapshot.model.kind.value}'"
-        variables.update(snapshot.model.variables)
-        sql = MacroEvaluator(variables=variables).render(stmt)
-        if snapshot.model.dialect and snapshot.model.dialect != "spark":
-            from sqlmesh_spark.core.transpile import transpile
-
-            sql = transpile(sql, snapshot.model.dialect)
-        for logical, physical in sorted(table_mapping.items(), key=lambda kv: -len(kv[0])):
-            sql = _replace_table_ref(sql, logical, physical)
-        return sql
+    def _run_statements(self, stmts, snapshot, start, end, relations) -> None:
+        """Pre/post statements (definition.py:357 render_pre_statements):
+        the query's render pipeline, uncached."""
+        for stmt in stmts:
+            self.spark.sql(
+                render_model_sql(
+                    self.spark, stmt, start, end, relations,
+                    model=snapshot.model, this_model=snapshot.table_name,
+                    execution_time=self.execution_time,
+                )
+            )
 
     def evaluate(
         self,
         snapshot: Snapshot,
         start: str,
         end: str,
-        table_mapping: Mapping[str, str],
+        table_mapping: Mapping[str, Relation],
         is_first_insert: bool,
     ) -> None:
         """Core of evaluator.py:677 _evaluate_snapshot."""
@@ -214,8 +181,7 @@ class SnapshotEvaluator:
             self.adapter.create_schema(snapshot.physical_schema)
         # Pre-statements (evaluator runs them in the same transaction
         # scope as the evaluation — definition.py:156 pre_statements_).
-        for stmt in model.pre_statements:
-            self.spark.sql(self.render_statement(stmt, snapshot, start, end, table_mapping))
+        self._run_statements(model.pre_statements, snapshot, start, end, table_mapping)
         # session_properties (meta.py:109): per-model Spark confs for the
         # duration of this evaluation (shuffle partitions, AQE knobs, ...),
         # restored afterward so models can't leak tuning into each other.
@@ -271,10 +237,9 @@ class SnapshotEvaluator:
             # evaluation exception is logged, never allowed to MASK it; a
             # post failure after a SUCCESSFUL evaluation propagates.
             try:
-                for stmt in model.post_statements:
-                    self.spark.sql(
-                        self.render_statement(stmt, snapshot, start, end, table_mapping)
-                    )
+                self._run_statements(
+                    model.post_statements, snapshot, start, end, table_mapping
+                )
             except Exception:  # noqa: BLE001
                 import logging as _logging
 
@@ -295,7 +260,7 @@ class SnapshotEvaluator:
         snapshot: Snapshot,
         start: str,
         end: str,
-        table_mapping: Mapping[str, str],
+        table_mapping: Mapping[str, Relation],
         is_first_insert: bool,
     ) -> None:
         model = snapshot.model
@@ -324,12 +289,7 @@ class SnapshotEvaluator:
                 if not frames:
                     raise ValueError(f"python model {model.name} yielded no frames")
                 df = reduce(lambda a, b: a.unionByName(b), frames)
-            if model.kind in (ModelKind.FULL, ModelKind.VIEW, ModelKind.MANAGED):
-                # VIEW-with-python materializes (a view cannot capture a
-                # DataFrame); FULL semantics are identical. MANAGED python
-                # models refresh like FULL (emulated engine refresh).
-                adapter.replace_query(table, df)
-                return
+            query = df
         else:
             if (
                 "@this_model" in model.query
@@ -362,43 +322,27 @@ class SnapshotEvaluator:
                     adapter.ctas(table, empty, partitioned_by=("_ds",))
                 else:
                     adapter.ctas(table, empty)
-            sql = self.render(snapshot, start, end, table_mapping)
+            query = self.render(snapshot, start, end, table_mapping)
             if model.kind == ModelKind.VIEW:
-                adapter.create_view(table, sql)
+                adapter.create_view(table, query)
                 return
-            if model.kind == ModelKind.FULL:
-                adapter.replace_query(
-                    table, sql,
-                    partitioned_by=model.partitioned_by,
-                    clustered_by=model.clustered_by,
-                    buckets=model.buckets,
-                    storage_format=model.storage_format,
-                )
-                return
-            if model.kind == ModelKind.MANAGED:
-                # EngineManagedStrategy (evaluator.py:3089): create a
-                # managed table from the defining query; each missing cron
-                # interval performs the refresh the managing engine would.
-                if not adapter.table_exists(table):
-                    adapter.create_managed_table(
-                        table, sql, partitioned_by=model.partitioned_by
-                    )
-                else:
-                    adapter.refresh_managed_table(table, sql)
-                return
-            df = self.spark.sql(sql)
+        if model.kind in (ModelKind.FULL, ModelKind.VIEW, ModelKind.MANAGED):
+            # VIEW-with-python materializes (a view cannot capture a
+            # DataFrame). MANAGED (EngineManagedStrategy, evaluator.py:3089)
+            # has no self-refreshing table on OSS Spark, so each missing
+            # cron interval performs the engine's refresh as a FULL rebuild.
+            adapter.replace_query(
+                table, query,
+                partitioned_by=model.partitioned_by,
+                clustered_by=model.clustered_by,
+                buckets=model.buckets,
+                storage_format=model.storage_format,
+            )
+            return
+        df = query if isinstance(query, DataFrame) else self.spark.sql(query)
         if model.kind == ModelKind.INCREMENTAL_BY_TIME_RANGE:
             time_col = model.time_column or "ds"
-            # kind.py:471 partition_by_time_column (default true): false
-            # opts out of the derived-day partitioning — the table stays
-            # unpartitioned and interval overwrites take the adapter's
-            # DELETE_INSERT fallback (engines/layouts where partitioning
-            # on time is wrong, e.g. when the model partitions by
-            # something else entirely).
-            part_by_time = model.kind_args.get(
-                "partition_by_time_column", "true"
-            ).strip("'\"").lower() != "false"
-            if part_by_time:
+            if model.partition_by_time:
                 # Partition on a derived day column so interval overwrites
                 # prune to exactly the touched partitions.
                 batch = df.withColumn("_ds", F.date_format(F.col(time_col), "yyyy-MM-dd"))
@@ -445,7 +389,7 @@ class SnapshotEvaluator:
                 df.createOrReplaceTempView(view)
                 self._evaluate_scd2(snapshot, f"SELECT * FROM {view}", end)
             else:
-                self._evaluate_scd2(snapshot, sql, end)
+                self._evaluate_scd2(snapshot, query, end)
         else:  # pragma: no cover
             raise NotImplementedError(model.kind)
 
@@ -591,18 +535,125 @@ class SnapshotEvaluator:
         return failures
 
 
-def _replace_table_ref(sql: str, logical: str, physical: str) -> str:
-    import re
+def model_relations(snapshots: Mapping[str, Snapshot]) -> dict[str, Relation]:
+    """Logical model name → what a reference to it reads: the snapshot's
+    physical table; EXTERNAL models read themselves; EMBEDDED models map
+    to their Model, whose query render_model_sql inlines per interval."""
+    out: dict[str, Relation] = {}
+    for name, s in snapshots.items():
+        if s.model.kind == ModelKind.EMBEDDED:
+            out[name] = s.model
+        elif s.model.kind == ModelKind.EXTERNAL:
+            out[name] = name
+        else:
+            out[name] = s.table_name
+    return out
 
-    # The replacement is a CALLABLE: `physical` may be an EMBEDDED model's
-    # inlined query text containing backslashes (regexp_extract patterns)
-    # that a template-string re.sub would reinterpret ('bad escape \d').
-    return re.sub(
-        rf"(?<![\w.]){re.escape(logical)}(?![\w.])",
-        lambda _m: physical,
+
+def render_model_sql(
+    spark: SparkSession,
+    text: str,
+    start: str,
+    end: str,
+    relations: Mapping[str, Relation],
+    model: Optional[Model] = None,
+    this_model: str = "",
+    execution_time: Optional[str] = None,
+    dialect: Optional[str] = None,
+    variables: Optional[Mapping[str, str]] = None,
+) -> str:
+    """Model text (a query or a pre/post/on_virtual_update statement) as
+    executable Spark SQL for [start, end) — renderer.py:527 +
+    _resolve_tables, the one render path every surface shares:
+
+    1. bind variables: temporal, then ``this_model``/``model_kind_name``
+       (renderer.py:140-151), then ``model.variables`` (blueprint and
+       config values, definition.py:2035), then ``variables``;
+    2. expand macros, feeding @STAR/@UNION the schemas of the relations
+       the text reads (render-time type inference, definition.py:1449);
+    3. transpile the read dialect (``dialect`` overrides the model's)
+       after macros, which emit Spark SQL, and before resolution, since
+       transpile never touches table names (renderer.py:517);
+    4. resolve model references through ``relations``.
+    """
+    bound = temporal_variables(start, end, execution=execution_time)
+    if model is not None:
+        bound["this_model"] = this_model
+        # Pre-quoted literal form, for statements that need the resolved
+        # name as a STRING (logs, messages) rather than a table ref.
+        bound["this_model_name"] = f"'{this_model}'"
+        bound["model_kind_name"] = f"'{model.kind.value}'"
+        bound.update(model.variables)
+        if dialect is None:
+            dialect = model.dialect
+    bound.update(variables or {})
+    resolved: dict[str, str] = {}
+
+    def resolve(name: str) -> str:
+        if name not in resolved:
+            rel = relations.get(name, name)
+            resolved[name] = rel if isinstance(rel, str) else "(" + render_model_sql(
+                spark, rel.query, start, end, relations, model=rel,
+                this_model=rel.name, execution_time=execution_time,
+            ) + ")"
+        return resolved[name]
+
+    schemas: dict[str, dict[str, str]] = {}
+    if model is not None and needs_schemas(text):
+        lowered = text.lower()
+        named = {n for n in relations if n in lowered}
+        for dep in sorted(set(model.depends_on) | named):
+            try:
+                schemas[dep] = dict(
+                    spark.sql(f"SELECT * FROM {resolve(dep)}").limit(0).dtypes
+                )
+            except Exception:  # noqa: BLE001 — the macro raises if needed
+                continue
+    sql = MacroEvaluator(variables=bound, schemas=schemas).render(text)
+    if dialect and dialect != "spark":
+        from sqlmesh_spark.core.transpile import transpile
+
+        sql = transpile(sql, dialect)
+    return _replace_table_refs(sql, relations, resolve)
+
+
+def _replace_table_refs(sql: str, relations: Mapping[str, Relation], resolve) -> str:
+    """One pass over ``sql`` replacing each whole-name reference to a key
+    of ``relations`` (longest first, so db.a.b wins over db.a) by
+    ``resolve(name)``. Replaced text is never rescanned, and the
+    replacement is a callable: an inlined EMBEDDED query may carry
+    backslashes (regexp_extract patterns) that a template string would
+    reinterpret ('bad escape \\d')."""
+    lowered = sql.lower()
+    names = sorted((n for n in relations if n in lowered), key=len, reverse=True)
+    if not names:
+        return sql
+    pattern = "|".join(_re.escape(n) for n in names)
+    return _re.sub(
+        rf"(?<![\w.])(?:{pattern})(?![\w.])",
+        lambda m: resolve(m.group(0).lower()),
         sql,
-        flags=re.IGNORECASE,
+        flags=_re.IGNORECASE,
     )
+
+
+_STAR_RE = _re.compile(r"@(STAR|UNION)\s*\(", _re.IGNORECASE)
+
+
+def needs_schemas(text: str) -> bool:
+    return bool(_STAR_RE.search(text))
+
+
+def _text_hash(text: str) -> str:
+    return hashlib.md5(text.encode()).hexdigest()[:12]
+
+
+def _relation_key(rel: Relation):
+    """Render-cache key part of one relation: its name, or everything of
+    an EMBEDDED model that reaches the inlined text."""
+    if isinstance(rel, str):
+        return rel
+    return (_text_hash(rel.query), rel.dialect, tuple(sorted(rel.variables.items())))
 
 
 def _weekly_cron_boundary(epoch: int, dow_field: str) -> int:
@@ -665,52 +716,11 @@ class Scheduler:
         self.evaluator.custom_audits = dict(custom_audits or {})
         self.max_workers = max_workers
 
-    def table_mapping(self) -> dict[str, str]:
-        """Logical model name → physical relation. EMBEDDED models inline
-        their (macro-rendered) query text into dependents (the reference's
-        embedded semantics); EXTERNAL models reference themselves."""
-        from sqlmesh_spark.macros import MacroEvaluator
-
-        out: dict[str, str] = {}
-        for name, s in self.snapshots.items():
-            if s.model.kind == ModelKind.EMBEDDED:
-                inlined = MacroEvaluator().render(s.model.query)
-                if s.model.dialect and s.model.dialect != "spark":
-                    from sqlmesh_spark.core.transpile import transpile
-
-                    inlined = transpile(inlined, s.model.dialect)
-                out[name] = "(" + inlined + ")"
-            elif s.model.kind == ModelKind.EXTERNAL:
-                out[name] = name
-            else:
-                out[name] = s.table_name
-        # Resolve model refs INSIDE embedded inlined text here (to a
-        # fixpoint, for embedded-of-embedded): render()'s single
-        # longest-first pass over the final SQL cannot reach a parent name
-        # that only appears after the embedded text is substituted in.
-        for _ in range(5):
-            changed = False
-            for name, s in self.snapshots.items():
-                if s.model.kind != ModelKind.EMBEDDED:
-                    continue
-                text = out[name]
-                for logical, physical in sorted(out.items(), key=lambda kv: -len(kv[0])):
-                    if logical == name:
-                        continue
-                    new_text = _replace_table_ref(text, logical, physical)
-                    if new_text != text:
-                        text = new_text
-                        changed = True
-                out[name] = text
-            if not changed:
-                break
-        return out
-
     def run(self, start: str, end: str) -> dict[str, int]:
         """Backfill every snapshot's missing intervals in DAG order.
         Returns {model: n_batches_executed}."""
         order = snapshots_to_dag(self.snapshots)
-        mapping = self.table_mapping()
+        mapping = model_relations(self.snapshots)
         executed: dict[str, int] = {}
         # Models whose data this run rewrote: a wholesale child rebuilds
         # over them even when its own window is processed. An EMBEDDED
@@ -755,7 +765,7 @@ class Scheduler:
         snapshot: Snapshot,
         start: str,
         end: str,
-        mapping: Mapping[str, str],
+        mapping: Mapping[str, Relation],
         upstream_changed: bool = False,
     ) -> int:
         model = snapshot.model

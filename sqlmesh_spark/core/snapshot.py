@@ -109,12 +109,23 @@ class Snapshot:
 
     @property
     def physical_schema(self) -> str:
-        return f"sqlmesh__{self.model.schema_name}"
+        return self.table_name.rsplit(".", 1)[0]
 
     @property
     def table_name(self) -> str:
-        """snapshot/definition.py:1761 naming discipline."""
-        return f"{self.physical_schema}.{self.model.view_name}__{self.version}"
+        return physical_table(self.model.name, self.version)
+
+
+def physical_table(name: str, version: str) -> str:
+    """snapshot/definition.py:1761 naming discipline: model ``db.t`` at
+    ``version`` lives in ``sqlmesh__db.t__<version>``."""
+    schema, _, view = name.rpartition(".")
+    return f"sqlmesh__{schema or 'default'}.{view}__{version}"
+
+
+def env_schema(environment: str) -> str:
+    """The schema holding an environment's views (the virtual layer)."""
+    return "prod_views" if environment == "prod" else f"{environment}_views"
 
 
 # ---------------------------------------------------------------------------

@@ -146,6 +146,10 @@ class StateStore:
     def get_environment(self, env: str) -> dict[str, str]:
         return self._read("environments").get(env, {})
 
+    def get_environments(self) -> dict[str, dict[str, str]]:
+        """Every environment's pointer set, by environment name."""
+        return self._read("environments")
+
     def delete_environment(self, env: str) -> None:
         with self._lock:
             envs = self._read("environments")

@@ -1701,13 +1701,12 @@ FROM customer GROUP BY 1
 @register("framework_managed_kind", oracle=MANAGED_ORACLE, tags=("framework",))
 def framework_managed_kind(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MANAGED kind (model/kind.py:1033-1051 ManagedKind;
-    evaluator.py:3089 EngineManagedStrategy): the engine owns freshness —
-    create_managed_table on deploy, then engine-side refresh each tick.
-    OSS Spark has no self-refreshing tables, so the scheduler performs the
-    refresh the managing engine would (adapter.refresh_managed_table);
-    on Snowflake/BigQuery both calls are metadata-only. Two runs against a
-    mutating source prove the refresh path: run 2 must see rows run 1
-    could not."""
+    evaluator.py:3089 EngineManagedStrategy): the engine owns freshness,
+    refreshing the table each tick. OSS Spark has no self-refreshing
+    tables, so the scheduler performs the refresh the managing engine
+    would as a FULL rebuild (adapter.replace_query, with the model's
+    declared layout). Two runs against a mutating source prove the
+    refresh path: run 2 must see rows run 1 could not."""
     _clean_dbs(spark, "demo_mg_src", "sqlmesh__demo_mg", "env_mg_views")
     customer = f"parquet.`{sf_dir}/customer.parquet`"
     spark.sql("CREATE DATABASE demo_mg_src")

@@ -201,3 +201,59 @@ WHERE o_orderdate >= CAST(@start_ts AS TIMESTAMP)
     executed = ctx.run(environment="env_unm2", start="1995-01-01", end="1995-01-31")
     assert executed["demo_unm2.log"] == 0
     assert spark.table(snap.table_name).count() == n1
+
+
+def _describe(spark, table: str) -> dict[str, str]:
+    return {
+        r.col_name.strip(): (r.data_type or "").strip()
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+    }
+
+
+def test_managed_model_keeps_its_declared_layout(spark):
+    """MANAGED writes the way FULL does: the declared storage format and
+    bucketing (both in the fingerprint) hold on the first build and on
+    every refresh."""
+    import tempfile
+
+    from sqlmesh_spark.core.context import Context
+
+    for db in ("sqlmesh__demo_mgl", "env_mgl_views"):
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    ctx = Context(spark, state_dir=tempfile.mkdtemp(prefix="sqlmesh_state_"))
+    ctx.add_model(
+        "MODEL (name demo_mgl.t, kind MANAGED, storage_format orc,"
+        " clustered_by (a), buckets 4);\n"
+        "SELECT 1 AS a, 'x' AS b"
+    )
+    table = ctx.plan(skip_tests=True).snapshots["demo_mgl.t"].table_name
+    for end in ("1995-01-02", "1995-01-03"):  # first build, then a refresh
+        ctx.run(environment="env_mgl", start="1995-01-01", end=end)
+        desc = _describe(spark, table)
+        assert desc["Provider"].lower() == "orc", desc
+        assert desc["Num Buckets"] == "4", desc
+    assert spark.table("env_mgl_views.t").collect()[0].a == 1
+
+
+def test_discovered_seed_loads_string_columns_as_text(spark):
+    """A seeds/*.csv without a model file declares every column STRING;
+    the load reads those columns as text, so '1' lands as '1' with no
+    Arrow fallback warning."""
+    import os
+    import tempfile
+    import warnings
+
+    from sqlmesh_spark.core.context import Context
+
+    for db in ("sqlmesh__seed", "env_sdt_views"):
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    root = tempfile.mkdtemp(prefix="seed_types_")
+    os.makedirs(os.path.join(root, "seeds"))
+    with open(os.path.join(root, "seeds", "sdt_rows.csv"), "w") as f:
+        f.write("id,name\n1,a\n2,b\n")
+    ctx = Context(spark, project_dir=root)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        ctx.run(environment="env_sdt", start="1995-01-01", end="1995-01-02")
+    rows = spark.table("env_sdt_views.sdt_rows").orderBy("name").collect()
+    assert [(r.id, r.name) for r in rows] == [("1", "a"), ("2", "b")]

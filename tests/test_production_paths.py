@@ -74,3 +74,37 @@ def test_every_public_operator_function_has_a_production_reference():
         "functions have no call, import or @register from package code, so "
         "only tests reach them and they leave the package: " + ", ".join(orphans)
     )
+
+
+# The reference resolver, under every name it has had: model references
+# in rendered text become relations in exactly one place.
+RESOLVERS = ("_replace_table_ref", "_replace_table_refs")
+
+
+def _callers(node: ast.AST, where: str, out: set[str]) -> None:
+    """Add ``where`` (module:function) for every resolver call under
+    ``node``; a nested def or class starts a new ``where``."""
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            sep = "." if ":" in where else ":"
+            _callers(child, f"{where}{sep}{child.name}", out)
+            continue
+        if isinstance(child, ast.Call):
+            func = child.func
+            name = func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", "")
+            if name in RESOLVERS:
+                out.add(where)
+        _callers(child, where, out)
+
+
+def test_model_references_resolve_in_one_function():
+    callers: set[str] = set()
+    for path in sorted(PACKAGE.rglob("*.py")):
+        module = str(path.relative_to(PACKAGE.parent))
+        _callers(ast.parse(path.read_text(), filename=str(path)), module, callers)
+    assert len(callers) == 1, (
+        "ROADMAP aim 2 keeps one render path: model text becomes Spark SQL "
+        "in core/scheduler.render_model_sql, so the reference resolver "
+        f"({' / '.join(RESOLVERS)}) has exactly one calling function; "
+        f"found {len(callers)}: " + ", ".join(sorted(callers))
+    )
