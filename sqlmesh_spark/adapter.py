@@ -17,6 +17,10 @@ parquet-backed managed tables:
 - ``replace_query`` / table swaps emulate CREATE OR REPLACE atomicity by
   staging to a temp table and renaming — the same immutable-table+pointer
   discipline the reference uses for its virtual layer.
+- A table is created in a ``TableLayout`` (format, partitions, buckets,
+  engine-managed columns), and every rewrite keeps the table's whole
+  layout, read once per write. Creation reclaims files a crash left at
+  the new table's location.
 
 All DDL goes through ``spark.sql`` so the catalog (in-memory here,
 Hive/Glue/Unity in production) stays the source of truth.
@@ -24,11 +28,14 @@ Hive/Glue/Unity in production) stays the source of truth.
 
 from __future__ import annotations
 
+import re
 import uuid
 from contextlib import contextmanager
-from typing import Iterable, Mapping, Optional, Sequence, Union
+from dataclasses import dataclass, field
+from typing import Callable, Iterable, Mapping, Optional, Sequence, Union
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import SparkRuntimeException
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -60,6 +67,24 @@ def _subday_touched_days(start: str, end: str) -> Optional[list[str]]:
     return out
 
 QueryOrDF = Union[str, DataFrame]
+
+
+@dataclass(frozen=True)
+class TableLayout:
+    """A table's physical layout (base.py:619 create_table arguments):
+    what creating the table fixes and every rewrite of it keeps.
+    ``managed_columns`` (name → type) are the engine-managed columns a
+    created table carries beyond its query's output; a layout read back
+    from the catalog leaves them empty."""
+
+    partitioned_by: tuple[str, ...] = ()
+    clustered_by: tuple[str, ...] = ()
+    buckets: int = 0
+    storage_format: str = "parquet"
+    managed_columns: Mapping[str, str] = field(default_factory=dict)
+
+
+PARQUET = TableLayout()
 
 
 class SparkAdapter:
@@ -114,55 +139,61 @@ class SparkAdapter:
         self,
         table: str,
         columns_to_types: Mapping[str, str],
-        partitioned_by: Sequence[str] = (),
-        clustered_by: Sequence[str] = (),
-        buckets: int = 0,
-        storage_format: str = "parquet",
+        layout: TableLayout = PARQUET,
     ) -> None:
-        cols = ", ".join(f"{c} {t}" for c, t in columns_to_types.items())
-        ddl = f"CREATE TABLE IF NOT EXISTS {table} ({cols}) USING {storage_format}"
-        if partitioned_by:
-            ddl += f" PARTITIONED BY ({', '.join(partitioned_by)})"
-        if clustered_by and buckets:
+        """CREATE TABLE from ``columns_to_types`` plus the layout's
+        engine-managed columns, in the layout."""
+        columns = {**columns_to_types, **layout.managed_columns}
+        cols = ", ".join(f"`{c}` {t}" for c, t in columns.items())
+        ddl = f"CREATE TABLE IF NOT EXISTS {table} ({cols}) USING {layout.storage_format}"
+        if layout.partitioned_by:
+            ddl += f" PARTITIONED BY ({', '.join(layout.partitioned_by)})"
+        if layout.clustered_by and layout.buckets:
             # Bucketing co-locates later joins/aggs on these keys without a
             # shuffle — the parquet-era answer to Delta CLUSTER BY.
-            ddl += f" CLUSTERED BY ({', '.join(clustered_by)}) INTO {buckets} BUCKETS"
-        self.spark.sql(ddl)
+            keys = ", ".join(layout.clustered_by)
+            ddl += f" CLUSTERED BY ({keys}) SORTED BY ({keys}) INTO {layout.buckets} BUCKETS"
+        self._create(lambda: self.spark.sql(ddl))
 
-    def ctas(
-        self,
-        table: str,
-        query_or_df: QueryOrDF,
-        partitioned_by: Sequence[str] = (),
-        storage_format: str = "parquet",
-        clustered_by: Sequence[str] = (),
-        buckets: int = 0,
-    ) -> None:
-        df = self._df(query_or_df)
-        if not self.table_exists(table):
-            # Orphan-location recovery: a crash or catalog restart can
-            # leave files at the managed location without a catalog entry
-            # (content-addressed snapshot names make re-collision routine).
-            # The catalog is the source of truth — reclaim the location.
-            self._clear_orphan_location(table)
-        writer = df.write.format(storage_format).mode("errorifexists")
-        if partitioned_by:
-            writer = writer.partitionBy(*partitioned_by)
-        if clustered_by and buckets:
+    def ctas(self, table: str, query_or_df: QueryOrDF, layout: TableLayout = PARQUET) -> None:
+        writer = self._writer(self._df(query_or_df), layout).mode("errorifexists")
+        self._create(lambda: writer.saveAsTable(table))
+
+    @staticmethod
+    def _writer(df: DataFrame, layout: TableLayout) -> DataFrameWriter:
+        writer = df.write.format(layout.storage_format)
+        if layout.partitioned_by:
+            writer = writer.partitionBy(*layout.partitioned_by)
+        if layout.clustered_by and layout.buckets:
             # Hash-bucketed layout: later joins/aggs on these keys read
             # co-located buckets with no exchange (bucketed_join_colocated
             # plan-asserts the zero-shuffle property).
-            writer = writer.bucketBy(buckets, *clustered_by).sortBy(*clustered_by)
-        writer.saveAsTable(table)
+            writer = writer.bucketBy(layout.buckets, *layout.clustered_by).sortBy(
+                *layout.clustered_by
+            )
+        return writer
 
-    def _clear_orphan_location(self, table: str) -> None:
+    @staticmethod
+    def _create(create: Callable[[], object]) -> None:
+        """Run a table-creating statement. A crash or a catalog restart
+        can leave files at a managed table's location without a catalog
+        entry (content-addressed snapshot names make re-collision
+        routine); the catalog is the source of truth, so the location the
+        creation names — wherever its database lives — is reclaimed and
+        the creation runs once more."""
         import shutil
         from urllib.parse import urlparse
 
-        warehouse = urlparse(self.spark.conf.get("spark.sql.warehouse.dir")).path
-        parts = table.split(".")
-        if len(parts) == 2:
-            shutil.rmtree(f"{warehouse}/{parts[0]}.db/{parts[1]}", ignore_errors=True)
+        try:
+            create()
+        except SparkRuntimeException as e:
+            if e.getCondition() != "LOCATION_ALREADY_EXISTS":
+                raise
+            location = urlparse(e.getMessageParameters()["location"].strip("'"))
+            if location.scheme not in ("", "file"):
+                raise
+            shutil.rmtree(location.path, ignore_errors=True)
+            create()
 
     def create_view(self, name: str, query_or_df: QueryOrDF, replace: bool = True) -> None:
         if isinstance(query_or_df, str):
@@ -256,10 +287,10 @@ class SparkAdapter:
             F.col(time_column) < F.lit(end).cast("timestamp")
         )
         df = df.filter(in_interval)
-        part_cols = self._partition_columns(table)
-        if part_cols:
+        layout = self.table_layout(table)
+        if layout.partitioned_by:
             days = _subday_touched_days(start, end)
-            if days is not None and "_ds" in part_cols:
+            if days is not None and "_ds" in layout.partitioned_by:
                 # Sub-daily interval inside day partitions: a plain dynamic
                 # overwrite would clobber sibling sub-day batches in the
                 # same day partition. Partition-scoped DELETE_INSERT: read
@@ -276,23 +307,31 @@ class SparkAdapter:
                 self._insert_overwrite_partitions(table, df)
         else:
             kept = self.spark.table(table).filter(~in_interval)
-            self._atomic_rewrite(table, kept.unionByName(self._project_to_table(df, table)))
+            self._atomic_rewrite(
+                table, kept.unionByName(self._project_to_table(df, table)), layout
+            )
 
-    def _partition_columns(self, table: str) -> list[str]:
-        # DESCRIBE TABLE, deliberately NOT spark.catalog.listColumns: the
-        # PySpark catalog API re-analyzes the table per call and measures
-        # 107-182 ms on this host vs 22-47 ms for the DESCRIBE command
-        # (20-rep min/med, same session, /tmp/phase_partcols.py r13). This
-        # runs on every atomic rewrite/merge, so the cheaper command wins.
-        rows = self.spark.sql(f"DESCRIBE TABLE {table}").collect()
-        cols, in_part = [], False
-        for r in rows:
-            if r.col_name.strip().startswith("# Partition"):
-                in_part = True
-                continue
-            if in_part and r.col_name and not r.col_name.startswith("#"):
-                cols.append(r.col_name)
-        return cols
+    def table_layout(self, table: str) -> TableLayout:
+        """The existing table's layout, read once per write by whatever
+        rewrites the table. DESCRIBE TABLE, deliberately NOT
+        spark.catalog.listColumns: the PySpark catalog API re-analyzes the
+        table per call and measured 107-182 ms vs 22-47 ms for the
+        DESCRIBE command (20-rep min/median, both in one Spark session)."""
+        rows = self.spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+        names = [r.col_name for r in rows]
+        info = dict(zip(names, (r.data_type for r in rows)))
+        partitioned_by: list[str] = []
+        if "# Partition Information" in info:
+            # the section header, a "# col_name" row, then the columns up
+            # to the blank row before "# Detailed Table Information"
+            partitioned_by = names[names.index("# Partition Information") + 2 :]
+            partitioned_by = partitioned_by[: partitioned_by.index("")]
+        return TableLayout(
+            partitioned_by=tuple(partitioned_by),
+            clustered_by=tuple(re.findall(r"`([^`]*)`", info.get("Bucket Columns", ""))),
+            buckets=int(info.get("Num Buckets", 0)),
+            storage_format=info.get("Provider", "parquet").lower(),
+        )
 
     def insert_overwrite_by_partition(self, table: str, query_or_df: QueryOrDF) -> None:
         """base.py:1551 — INCREMENTAL_BY_PARTITION: replace whole partitions
@@ -351,60 +390,38 @@ class SparkAdapter:
         self,
         table: str,
         query_or_df: QueryOrDF,
-        partitioned_by: Sequence[str] = (),
-        clustered_by: Sequence[str] = (),
-        buckets: int = 0,
-        storage_format: str = "parquet",
+        layout: Optional[TableLayout] = None,
     ) -> None:
-        """base.py:459 — atomic full refresh (CREATE OR REPLACE TABLE),
-        preserving the declared physical layout on every rewrite."""
+        """base.py:459 — atomic full refresh (CREATE OR REPLACE TABLE) in
+        ``layout``; without one, an existing table keeps its own."""
         df = self._df(query_or_df)
         if self.table_exists(table):
-            self._atomic_rewrite(
-                table, df, partitioned_by=partitioned_by,
-                clustered_by=clustered_by, buckets=buckets,
-                storage_format=storage_format,
-            )
+            self._atomic_rewrite(table, df, layout)
         else:
-            self.ctas(
-                table, df, partitioned_by=partitioned_by,
-                clustered_by=clustered_by, buckets=buckets,
-                storage_format=storage_format,
-            )
+            self.ctas(table, df, layout or PARQUET)
 
     def _atomic_rewrite(
-        self,
-        table: str,
-        df: DataFrame,
-        partitioned_by: Sequence[str] = (),
-        clustered_by: Sequence[str] = (),
-        buckets: int = 0,
-        storage_format: str = "parquet",
+        self, table: str, df: DataFrame, layout: Optional[TableLayout] = None
     ) -> None:
         """Stage to a temp table, then swap via rename — the no-transaction
         atomicity discipline (immutable tables + pointer swap) the
         reference's virtual layer uses (plan/stages.py:165).
 
-        When the caller doesn't pass a layout and the target already
-        exists, its partition columns are INHERITED: delete_from /
-        update_table / optimize must never silently
-        flatten a partitioned table into an unpartitioned one (that would
-        lock every later interval write into full-table rewrites)."""
-        if not partitioned_by and self.table_exists(table):
-            inherited = self._partition_columns(table)
-            # engine-managed partition columns (_ds, _is_current) live in
-            # df too — inherit only columns the frame actually carries
-            partitioned_by = tuple(c for c in inherited if c in df.columns)
+        The rewrite keeps the table's whole layout — read here unless the
+        caller already holds it — so delete_from / update_table /
+        optimize / merge never silently flatten a partitioned, bucketed or
+        non-parquet table (a lost partition would lock every later
+        interval write into full-table rewrites)."""
+        layout = layout or self.table_layout(table)
         tmp = self._tmp_name(table)
-        writer = df.write.format(storage_format)
-        if partitioned_by:
-            writer = writer.partitionBy(*partitioned_by)
-        if clustered_by and buckets:
-            writer = writer.bucketBy(buckets, *clustered_by).sortBy(*clustered_by)
-        writer.saveAsTable(tmp)
+        self._writer(df, layout).saveAsTable(tmp)
+        self._swap(table, tmp, layout)
+
+    def _swap(self, table: str, staged: str, layout: TableLayout) -> None:
+        """Replace ``table`` by ``staged``, a table written in ``layout``."""
         self.drop_table(table)
-        self.rename_table(tmp, table)
-        if partitioned_by:
+        self.rename_table(staged, table)
+        if layout.partitioned_by:
             # RENAME moves a managed table's directory but leaves the
             # catalog's per-partition locations pointing at the OLD path
             # (the table reads empty) — re-register partitions from the
@@ -446,13 +463,8 @@ class SparkAdapter:
 
     # -- seeds (model/seed.py:91, evaluator.py:2421) -----------------------
 
-    def load_seed(
-        self,
-        table: str,
-        csv_text: str,
-        columns_to_types: Mapping[str, str],
-    ) -> None:
-        """CSV seed → typed table. Parsed driver-side (seeds are small by
+    def seed_frame(self, csv_text: str, columns_to_types: Mapping[str, str]) -> DataFrame:
+        """CSV seed → typed frame. Parsed driver-side (seeds are small by
         definition); schema declared, never inferred: columns declared
         STRING are read as text, so '1' stays '1'."""
         import io
@@ -462,8 +474,7 @@ class SparkAdapter:
         text_cols = {c: str for c, t in columns_to_types.items() if t.upper() == "STRING"}
         pdf = pd.read_csv(io.StringIO(csv_text), dtype=text_cols)
         schema = ", ".join(f"{c} {t}" for c, t in columns_to_types.items())
-        sdf = self.spark.createDataFrame(pdf[[c for c in columns_to_types]], schema=schema)
-        self.replace_query(table, sdf)
+        return self.spark.createDataFrame(pdf[[c for c in columns_to_types]], schema=schema)
 
     # -- fetch (base.py:2381-2450, spark.py:342-352) -----------------------
 

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 if TYPE_CHECKING:  # pragma: no cover
-    from sqlmesh_spark.adapter import SparkAdapter
+    from sqlmesh_spark.adapter import SparkAdapter, TableLayout
 
 _log = __import__("logging").getLogger("sqlmesh_spark.backends")
 
@@ -100,9 +100,10 @@ class TableFormatBackend:
         keys = list(unique_key)
         src = source.dropDuplicates(keys)
         tgt = self.spark.table(target)
-        part_cols = adapter._partition_columns(target)
+        layout = adapter.table_layout(target)
+        part_cols = layout.partitioned_by
         if not part_cols:
-            self._merge_full_rewrite(target, src, keys, merge_filter)
+            self._merge_full_rewrite(target, src, keys, merge_filter, layout)
             return
         # -- copy-on-write path --
         key_rows = src.select(*keys).dropDuplicates(keys)
@@ -127,7 +128,7 @@ class TableFormatBackend:
                 target,
                 MAX_COW_PARTITIONS,
             )
-            self._merge_full_rewrite(target, src, keys, merge_filter)
+            self._merge_full_rewrite(target, src, keys, merge_filter, layout)
             return
         touched = [tuple(r) for r in touched_rows]
         if not touched:
@@ -154,9 +155,10 @@ class TableFormatBackend:
         src: DataFrame,
         keys: list[str],
         merge_filter: Optional[str],
+        layout: "TableLayout",
     ) -> None:
         out = self._merged(self.spark.table(target), src, keys, merge_filter)
-        self.adapter._atomic_rewrite(target, out)
+        self.adapter._atomic_rewrite(target, out, layout)
 
     def _merged(
         self,
@@ -226,9 +228,10 @@ class TableFormatBackend:
     # -- clone (base.py:1059; Delta SHALLOW CLONE) --------------------------
 
     def clone(self, target: str, source: str) -> None:
-        """Parquet has no zero-copy clone; a CTAS copy preserves the
-        semantics (isolated writable copy) at the cost of a data copy."""
-        self.adapter.ctas(target, self.spark.table(source))
+        """Parquet has no zero-copy clone; a CTAS copy in the source's
+        layout preserves the semantics (isolated writable copy) at the
+        cost of a data copy."""
+        self.adapter.ctas(target, self.spark.table(source), self.adapter.table_layout(source))
 
     # -- write-audit-publish (base.py:2452-2492; spark.py:492-534) ----------
 
@@ -237,12 +240,12 @@ class TableFormatBackend:
         same contract as an Iceberg branch (audit before publish, publish
         atomic), emulated with a clone."""
         staging = self.adapter._tmp_name(f"{table}__wap")
-        self.adapter.ctas(staging, self.spark.table(table))
+        layout = self.adapter.table_layout(table)
+        self.adapter.ctas(staging, self.spark.table(table), layout)
         return staging
 
     def wap_publish(self, table: str, staging: str) -> None:
-        self.adapter.drop_table(table)
-        self.adapter.rename_table(staging, table)
+        self.adapter._swap(table, staging, self.adapter.table_layout(staging))
 
     # -- SCD2 copy-on-write tail (kills the O(table) replace) --------------
 

@@ -24,6 +24,7 @@ from dataclasses import dataclass, field
 from enum import Enum
 from typing import Optional
 
+from sqlmesh_spark.adapter import TableLayout
 from sqlmesh_spark.macros import split_top_level
 
 
@@ -161,6 +162,36 @@ class Model:
         (for models partitioned by something else entirely)."""
         flag = self.kind_args.get("partition_by_time_column", "true")
         return flag.strip("'\"").lower() != "false"
+
+    @property
+    def layout(self) -> TableLayout:
+        """The physical table a snapshot of this model owns — the one
+        place it is decided (evaluator.py:677 create stage →
+        engine_adapter/base.py:619 create_table): engine-managed columns,
+        partitions, buckets and storage format. A time-range table
+        partitions on the derived day ``_ds`` (or on nothing, see
+        partition_by_time); an SCD2 table carries its validity columns and
+        partitions on ``_is_current`` under partition_by_current; every
+        other kind partitions as declared."""
+        managed: dict[str, str] = {}
+        partitioned_by = self.partitioned_by
+        if self.kind == ModelKind.INCREMENTAL_BY_TIME_RANGE:
+            partitioned_by = ()
+            if self.partition_by_time:
+                managed["_ds"] = "string"
+                partitioned_by = ("_ds",)
+        elif self.kind in (ModelKind.SCD_TYPE_2_BY_TIME, ModelKind.SCD_TYPE_2_BY_COLUMN):
+            managed = {"valid_from": "timestamp", "valid_to": "timestamp"}
+            if self.partition_by_current:
+                managed["_is_current"] = "int"
+                partitioned_by = ("_is_current",)
+        return TableLayout(
+            partitioned_by=partitioned_by,
+            clustered_by=self.clustered_by,
+            buckets=self.buckets,
+            storage_format=self.storage_format,
+            managed_columns=managed,
+        )
 
 
 _MODEL_RE = re.compile(r"\bMODEL\s*\(", re.IGNORECASE)

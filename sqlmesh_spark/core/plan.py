@@ -487,6 +487,7 @@ class PlanEvaluator:
                     pinned, model_relations(snapshots), snapshots
                 )
                 if target_cols is not None:
+                    target_cols.update(new.model.layout.managed_columns)
                     deltas = differ.compare(current_cols, target_cols)
                     destructive = [d for d in deltas if differ.is_destructive(d)]
                     additive = [d for d in deltas if d.op == "add"]
@@ -546,17 +547,15 @@ class PlanEvaluator:
         interval-recording kinds — the scheduler will never revisit it
         (backfill-later models use restatement to fill real data).
 
-        The physical LAYOUT mirrors what the evaluator's first insert
-        would build: time-range incrementals get the derived ``_ds``
-        partition (scheduler first-insert path) so later writes stay
-        partition-pruned instead of falling into the unpartitioned
-        full-rewrite tail forever. SCD2 kinds are REFUSED: their
-        engine-managed history columns (valid_from/valid_to, the COW
-        ``_is_current`` partition) only exist through a real evaluation —
-        an empty table would poison every later apply."""
+        Tables are created by the evaluator's one creation point, so they
+        have the layout an evaluation builds (time-range incrementals get
+        the derived ``_ds`` partition, and later writes stay
+        partition-pruned). SCD2 kinds are REFUSED: their history only
+        starts with a real evaluation, whose first batch truncates."""
         from sqlmesh_spark.core.snapshot import to_epoch
 
         relations = model_relations(plan.snapshots)
+        evaluator = SnapshotEvaluator(self.spark, self.adapter)
         executed: dict[str, int] = {}
         for name, snap in plan.snapshots.items():
             model = snap.model
@@ -573,21 +572,8 @@ class PlanEvaluator:
                 cols = self._query_schema(snap, relations, plan.snapshots)
                 if cols is None:
                     continue
-                partitioned_by = model.partitioned_by
-                if model.kind.value == "INCREMENTAL_BY_TIME_RANGE":
-                    if model.partition_by_time:
-                        partitioned_by = ("_ds",)
-                    else:
-                        cols.pop("_ds", None)
                 self.adapter.create_schema(snap.physical_schema)
-                self.adapter.create_table(
-                    snap.table_name,
-                    cols,
-                    partitioned_by=partitioned_by,
-                    clustered_by=model.clustered_by,
-                    buckets=model.buckets,
-                    storage_format=model.storage_format,
-                )
+                evaluator.create_table(snap, cols)
             if model.kind.value.startswith("INCREMENTAL"):
                 self.state.add_interval(
                     name, snap.version, to_epoch(plan.start), to_epoch(plan.end)
@@ -625,7 +611,7 @@ class PlanEvaluator:
             sql = SnapshotEvaluator(self.spark, self.adapter).render(
                 snapshot, "1970-01-01", "1970-01-02", relations
             )
-            cols = dict(self.spark.sql(sql).dtypes)
+            return dict(self.spark.sql(sql).dtypes)
         except Exception:
             # Upstream physical tables may not exist yet (plan precedes
             # backfill) — fall back to pure inference over empty views.
@@ -633,14 +619,9 @@ class PlanEvaluator:
                 from sqlmesh_spark.core.inference import infer_columns_to_types
 
                 models = {n: s.model for n, s in snapshots.items()}
-                cols = infer_columns_to_types(self.spark, models, snapshot.model.name)
+                return infer_columns_to_types(self.spark, models, snapshot.model.name)
             except Exception:
                 return None
-            if cols is None:
-                return None
-        if snapshot.model.kind.value == "INCREMENTAL_BY_TIME_RANGE":
-            cols["_ds"] = "string"
-        return cols
 
     def _resolve_backfill_models(
         self,

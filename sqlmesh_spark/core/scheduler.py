@@ -36,7 +36,7 @@ from sqlmesh_spark.core.snapshot import (
     to_epoch,
 )
 from sqlmesh_spark.core.state import StateStore
-from sqlmesh_spark.macros import MacroEvaluator, temporal_variables
+from sqlmesh_spark.macros import MacroEvaluator, expand_jinja, temporal_variables
 from sqlmesh_spark.operators.scd2 import scd_type_2_query
 
 
@@ -255,6 +255,14 @@ class SnapshotEvaluator:
                     else:
                         self.spark.conf.set(k, v)
 
+    def create_table(self, snapshot: Snapshot, columns: Mapping[str, str]) -> None:
+        """Create the snapshot's physical table: the query's output
+        ``columns`` in the model's layout (Model.layout), engine-managed
+        columns included. The one creation point of every snapshot table;
+        evaluation and empty_backfill share it (evaluator.py:677 create
+        stage)."""
+        self.adapter.create_table(snapshot.table_name, columns, snapshot.model.layout)
+
     def _evaluate_inner(
         self,
         snapshot: Snapshot,
@@ -267,10 +275,8 @@ class SnapshotEvaluator:
         adapter = self.adapter
         table = snapshot.table_name
         if model.kind == ModelKind.SEED:
-            adapter.load_seed(table, model.seed_csv or "", model.columns)
-            return
-
-        if model.python_fn is not None:
+            df = adapter.seed_frame(model.seed_csv or "", model.columns)
+        elif model.python_fn is not None:
             # Python model: call the function with an execution context
             # (model/definition.py:1896-1941 render path; DataFrames are
             # first-class returns per spark.py:224-231).
@@ -289,10 +295,10 @@ class SnapshotEvaluator:
                 if not frames:
                     raise ValueError(f"python model {model.name} yielded no frames")
                 df = reduce(lambda a, b: a.unionByName(b), frames)
-            query = df
         else:
             if (
-                "@this_model" in model.query
+                is_first_insert
+                and "@this_model" in model.query
                 and model.kind
                 in (
                     ModelKind.INCREMENTAL_BY_TIME_RANGE,
@@ -313,107 +319,67 @@ class SnapshotEvaluator:
                         "columns (...) — the table is created from them "
                         "before the first batch"
                     )
-                casts = ", ".join(
-                    f"CAST(NULL AS {t}) AS {c}" for c, t in model.columns.items()
-                )
-                empty = self.spark.sql(f"SELECT {casts} WHERE FALSE")
-                if model.kind == ModelKind.INCREMENTAL_BY_TIME_RANGE:
-                    empty = empty.withColumn("_ds", F.lit(None).cast("string"))
-                    adapter.ctas(table, empty, partitioned_by=("_ds",))
-                else:
-                    adapter.ctas(table, empty)
+                self.create_table(snapshot, model.columns)
             query = self.render(snapshot, start, end, table_mapping)
             if model.kind == ModelKind.VIEW:
                 adapter.create_view(table, query)
                 return
-        if model.kind in (ModelKind.FULL, ModelKind.VIEW, ModelKind.MANAGED):
+            df = self.spark.sql(query)
+        if model.kind == ModelKind.CUSTOM:
+            # Custom materialization plugin point (evaluator.py:2812
+            # CustomMaterialization): a registered strategy owns the table.
+            name = model.kind_args.get("materialization", "")
+            CUSTOM_MATERIALIZATIONS[name](self, snapshot, df, start, end)
+            return
+        # Create table if absent, then the kind's write: a first write into
+        # the fresh, empty table is an append for every kind.
+        first = is_first_insert and not adapter.table_exists(table)
+        if first:
+            self.create_table(snapshot, dict(df.dtypes))
+        if model.kind in WHOLESALE_KINDS:
             # VIEW-with-python materializes (a view cannot capture a
             # DataFrame). MANAGED (EngineManagedStrategy, evaluator.py:3089)
             # has no self-refreshing table on OSS Spark, so each missing
             # cron interval performs the engine's refresh as a FULL rebuild.
-            adapter.replace_query(
-                table, query,
-                partitioned_by=model.partitioned_by,
-                clustered_by=model.clustered_by,
-                buckets=model.buckets,
-                storage_format=model.storage_format,
-            )
-            return
-        df = query if isinstance(query, DataFrame) else self.spark.sql(query)
-        if model.kind == ModelKind.INCREMENTAL_BY_TIME_RANGE:
+            if first:
+                adapter.insert_append(table, df)
+            else:
+                adapter.replace_query(table, df, model.layout)
+        elif model.kind == ModelKind.INCREMENTAL_BY_TIME_RANGE:
             time_col = model.time_column or "ds"
             if model.partition_by_time:
-                # Partition on a derived day column so interval overwrites
-                # prune to exactly the touched partitions.
-                batch = df.withColumn("_ds", F.date_format(F.col(time_col), "yyyy-MM-dd"))
-                partitioned_by: tuple[str, ...] = ("_ds",)
-            else:
-                batch, partitioned_by = df, ()
-            if is_first_insert and not adapter.table_exists(table):
-                # Catalog DDL from the analyzed schema, not a zero-row CTAS
-                # (a full write job). Files left at the location by a crash
-                # would make CREATE TABLE fail, so reclaim them first, as
-                # ctas does.
-                adapter._clear_orphan_location(table)
-                adapter.create_table(
-                    table,
-                    {f"`{f.name}`": f.dataType.simpleString() for f in batch.schema},
-                    partitioned_by=partitioned_by,
-                )
-            adapter.insert_overwrite_by_time_partition(table, batch, time_col, start, end)
+                # The derived day column the layout partitions on, so
+                # interval overwrites prune to exactly the touched partitions.
+                df = df.withColumn("_ds", F.date_format(F.col(time_col), "yyyy-MM-dd"))
+            adapter.insert_overwrite_by_time_partition(table, df, time_col, start, end)
         elif model.kind == ModelKind.INCREMENTAL_BY_UNIQUE_KEY:
-            if is_first_insert and not adapter.table_exists(table):
-                adapter.ctas(table, df, partitioned_by=model.partitioned_by)
+            if first:
+                adapter.insert_append(table, df)
             else:
                 adapter.merge(table, df, unique_key=model.unique_key)
         elif model.kind == ModelKind.INCREMENTAL_BY_PARTITION:
-            if is_first_insert and not adapter.table_exists(table):
-                adapter.ctas(table, df, partitioned_by=model.partitioned_by)
-            else:
-                adapter.insert_overwrite_by_partition(table, df)
+            adapter.insert_overwrite_by_partition(table, df)
         elif model.kind == ModelKind.INCREMENTAL_UNMANAGED:
-            if is_first_insert and not adapter.table_exists(table):
-                adapter.ctas(table, df)
-            else:
-                adapter.insert_append(table, df)
-        elif model.kind == ModelKind.CUSTOM:
-            # Custom materialization plugin point (evaluator.py:2812
-            # CustomMaterialization): a registered strategy owns the write.
-            name = model.kind_args.get("materialization", "")
-            CUSTOM_MATERIALIZATIONS[name](self, snapshot, df, start, end)
+            adapter.insert_append(table, df)
         elif model.kind in (ModelKind.SCD_TYPE_2_BY_TIME, ModelKind.SCD_TYPE_2_BY_COLUMN):
             # SCD2 consumes the source as SQL text; a python model's frame
             # goes through a temp view handle.
             if model.python_fn is not None:
                 view = f"_py_src_{snapshot.version}"
                 df.createOrReplaceTempView(view)
-                self._evaluate_scd2(snapshot, f"SELECT * FROM {view}", end)
-            else:
-                self._evaluate_scd2(snapshot, query, end)
+                query = f"SELECT * FROM {view}"
+            self._evaluate_scd2(snapshot, query, df.columns, end, first)
         else:  # pragma: no cover
             raise NotImplementedError(model.kind)
 
-    def _evaluate_scd2(self, snapshot: Snapshot, source_sql: str, end: str) -> None:
+    def _evaluate_scd2(
+        self, snapshot: Snapshot, source_sql: str, source_cols: list[str], end: str, first: bool
+    ) -> None:
         model = snapshot.model
         adapter = self.adapter
         table = snapshot.table_name
-        # Analyze the source once: against a parquet.`path` source every
-        # analysis launches a schema-inference job.
-        types = dict(self.spark.sql(source_sql).dtypes)
-        source_cols = list(types)
-        first = not adapter.table_exists(table)
-        if first:
-            typed = ", ".join(
-                f"CAST(NULL AS {types[c]}) AS {c}" for c in source_cols
-            )
-            target_sql = (
-                f"SELECT {typed}, CAST(NULL AS TIMESTAMP) AS valid_from,"
-                f" CAST(NULL AS TIMESTAMP) AS valid_to WHERE FALSE"
-            )
-        else:
-            target_sql = f"SELECT * FROM {table}"
         kwargs: dict = dict(
-            target_sql=target_sql,
+            target_sql=f"SELECT * FROM {table}",
             source_sql=source_sql,
             unique_key=model.unique_key,
             columns=source_cols,
@@ -433,26 +399,15 @@ class SnapshotEvaluator:
         # and each apply rewrites O(|current| + |batch|), never O(history).
         # The _is_current column stays physical-only: the virtual layer
         # view hides `_`-prefixed engine columns (plan.py promote).
-        if not model.partition_by_current:
-            adapter.replace_query(
-                table,
-                self.spark.sql(scd_type_2_query(**kwargs)),
-                partitioned_by=model.partitioned_by,
-            )
-            return
-        if first:
-            schema = dict(types)
-            schema["valid_from"] = "TIMESTAMP"
-            schema["valid_to"] = "TIMESTAMP"
-            schema[adapter.backend.CURRENT_COL] = "INT"
-            adapter.create_table(
-                table, schema, partitioned_by=(adapter.backend.CURRENT_COL,)
-            )
+        if model.partition_by_current:
+            changes = self.spark.sql(scd_type_2_query(changes_only=True, **kwargs))
+            adapter.backend.scd2_apply_cow(table, changes)
+        elif first:
+            adapter.insert_append(table, self.spark.sql(scd_type_2_query(**kwargs)))
         else:
-            managed = ", ".join(source_cols + ["valid_from", "valid_to"])
-            kwargs["target_sql"] = f"SELECT {managed} FROM {table}"
-        changes = self.spark.sql(scd_type_2_query(changes_only=True, **kwargs))
-        adapter.backend.scd2_apply_cow(table, changes)
+            adapter.replace_query(
+                table, self.spark.sql(scd_type_2_query(**kwargs)), model.layout
+            )
 
     # -- audits (evaluator.py:547; scheduler.py:887) ------------------------
 
@@ -569,8 +524,9 @@ def render_model_sql(
     1. bind variables: temporal, then ``this_model``/``model_kind_name``
        (renderer.py:140-151), then ``model.variables`` (blueprint and
        config values, definition.py:2035), then ``variables``;
-    2. expand macros, feeding @STAR/@UNION the schemas of the relations
-       the text reads (render-time type inference, definition.py:1449);
+    2. expand the Jinja block, then macros, feeding @STAR/@UNION the
+       schemas of the relations the text reads (render-time type
+       inference, definition.py:1449);
     3. transpile the read dialect (``dialect`` overrides the model's)
        after macros, which emit Spark SQL, and before resolution, since
        transpile never touches table names (renderer.py:517);
@@ -609,7 +565,7 @@ def render_model_sql(
                 )
             except Exception:  # noqa: BLE001 — the macro raises if needed
                 continue
-    sql = MacroEvaluator(variables=bound, schemas=schemas).render(text)
+    sql = MacroEvaluator(variables=bound, schemas=schemas).render(expand_jinja(text, bound))
     if dialect and dialect != "spark":
         from sqlmesh_spark.core.transpile import transpile
 

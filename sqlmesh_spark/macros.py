@@ -517,6 +517,21 @@ def render_jinja(text: str, variables: Optional[Mapping] = None) -> str:
     )
 
 
+def expand_jinja(sql: str, variables: Mapping) -> str:
+    """``sql`` with its Jinja-marked block (JINJA_QUERY_BEGIN ...
+    JINJA_END) rendered to SQL text — loops/macros/{{ vars }} expand —
+    so the @macro layer runs over the result afterwards and both
+    templating systems compose exactly as in the reference."""
+    begin = _JINJA_BEGIN.search(sql)
+    if not begin:
+        return sql
+    end_m = _JINJA_END.search(sql, begin.end())
+    if not end_m:
+        raise ValueError("JINJA_QUERY_BEGIN without JINJA_END")
+    body = sql[begin.end() : end_m.start()]
+    return sql[: begin.start()] + render_jinja(body, variables) + sql[end_m.end() :]
+
+
 def render_sql(
     sql: str,
     variables: Optional[Mapping] = None,
@@ -524,22 +539,12 @@ def render_sql(
     start: Optional[str] = None,
     end: Optional[str] = None,
 ) -> str:
-    """One-shot convenience: render model SQL with interval variables.
-
-    Jinja-marked blocks (JINJA_QUERY_BEGIN ... JINJA_END) render first —
-    loops/macros/{{ vars }} expand to SQL text — then the @macro layer
-    runs over the result, so both templating systems compose exactly as
-    in the reference."""
+    """One-shot convenience: render model SQL with interval variables,
+    Jinja first (expand_jinja), then macros."""
     vars_ = dict(variables or {})
     if start and end:
         vars_.update(temporal_variables(start, end))
-    begin = _JINJA_BEGIN.search(sql)
-    if begin:
-        end_m = _JINJA_END.search(sql, begin.end())
-        if not end_m:
-            raise ValueError("JINJA_QUERY_BEGIN without JINJA_END")
-        body = sql[begin.end() : end_m.start()]
-        sql = sql[: begin.start()] + render_jinja(body, vars_) + sql[end_m.end() :]
+    sql = expand_jinja(sql, vars_)
     return MacroEvaluator(variables=vars_, schemas=schemas or {}).render(sql)
 
 

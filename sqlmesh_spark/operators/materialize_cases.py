@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sqlmesh_spark.adapter import SparkAdapter
+from sqlmesh_spark.adapter import SparkAdapter, TableLayout
 from sqlmesh_spark.registry import register
 from sqlmesh_spark.sources.tables import load_table, register_views
 
@@ -73,7 +73,7 @@ def mat_insert_overwrite_by_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     initial = project(orders.filter(F.col("o_orderdate") < "1997-01-01"), 1).repartition(
         n_part, "ds"
     )
-    adapter.ctas(table, initial, partitioned_by=("ds",))
+    adapter.ctas(table, initial, TableLayout(partitioned_by=("ds",)))
 
     batch = project(
         orders.filter(
@@ -108,7 +108,7 @@ def mat_insert_overwrite_by_partition(spark: SparkSession, sf_dir: str) -> DataF
     db = _scratch_db(spark, "iop")
     table = f"{db}.parts_by_brand"
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_size", "p_brand")
-    adapter.ctas(table, part, partitioned_by=("p_brand",))
+    adapter.ctas(table, part, TableLayout(partitioned_by=("p_brand",)))
 
     batch = part.filter(F.col("p_brand").isin("Brand#11", "Brand#22") & (F.col("p_size") > 25))
     adapter.insert_overwrite_by_partition(table, batch)
@@ -257,7 +257,8 @@ def mat_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
     adapter = SparkAdapter(spark)
     db = _scratch_db(spark, "seed")
     table = f"{db}.waiter_names"
-    adapter.load_seed(table, SEED_CSV, {"id": "INT", "name": "STRING", "active": "BOOLEAN"})
+    seed = adapter.seed_frame(SEED_CSV, {"id": "INT", "name": "STRING", "active": "BOOLEAN"})
+    adapter.ctas(table, seed)
     return spark.table(table)
 
 

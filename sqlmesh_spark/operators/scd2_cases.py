@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sqlmesh_spark.adapter import SparkAdapter
+from sqlmesh_spark.adapter import SparkAdapter, TableLayout
 from sqlmesh_spark.operators.materialize_cases import _scratch_db
 from sqlmesh_spark.operators.scd2 import empty_target_sql, scd_type_2_query
 from sqlmesh_spark.registry import register
@@ -151,7 +151,7 @@ def scd2_cow_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             "valid_to": "TIMESTAMP",
             "_is_current": "INT",
         },
-        partitioned_by=("_is_current",),
+        TableLayout(partitioned_by=("_is_current",)),
     )
     common = dict(
         unique_key=("customer_id",),

@@ -14,7 +14,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from sqlmesh_spark.adapter import SparkAdapter
+from sqlmesh_spark.adapter import SparkAdapter, TableLayout
 from sqlmesh_spark.backends import (
     DeltaBackend,
     IcebergBackend,
@@ -106,7 +106,7 @@ class TestCopyOnWriteMerge:
             ],
             "id int, v string, ds string",
         )
-        a.ctas(t, df, partitioned_by=("ds",))
+        a.ctas(t, df, TableLayout(partitioned_by=("ds",)))
 
     def test_untouched_partitions_not_rewritten(self, spark):
         a = SparkAdapter(spark)
@@ -203,7 +203,7 @@ class TestScd2CopyOnWrite:
             {"id": "INT", "status": "STRING", "updated_at": "TIMESTAMP",
              "valid_from": "TIMESTAMP", "valid_to": "TIMESTAMP",
              "_is_current": "INT"},
-            partitioned_by=("_is_current",),
+            TableLayout(partitioned_by=("_is_current",)),
         )
         a.backend.scd2_apply_cow(t, ch1)
         assert spark.table(t).filter("_is_current = 1").count() == 2
@@ -295,7 +295,7 @@ class TestScd2CopyOnWrite:
             {"id": "INT", "status": "STRING", "updated_at": "TIMESTAMP",
              "valid_from": "TIMESTAMP", "valid_to": "TIMESTAMP",
              "_is_current": "INT"},
-            partitioned_by=("_is_current",),
+            TableLayout(partitioned_by=("_is_current",)),
         )
         tgt_sql = f"SELECT id, status, updated_at, valid_from, valid_to FROM {t}"
         ch1 = spark.sql(scd_type_2_query(empty, "SELECT * FROM cmp_b1",
@@ -324,7 +324,7 @@ def test_cow_merge_null_partition_value(spark):
         [(1, "a", "2024-01-01"), (2, "b", None), (3, "c", "2024-01-02")],
         "id int, v string, ds string",
     )
-    a.ctas(t, df, partitioned_by=("ds",))
+    a.ctas(t, df, TableLayout(partitioned_by=("ds",)))
     src = spark.createDataFrame([(2, "B2", None)], "id int, v string, ds string")
     a.merge(t, src, unique_key=("id",))
     rows = {r.id: (r.v, r.ds) for r in spark.table(t).collect()}
@@ -339,7 +339,7 @@ def test_merge_partition_cap_falls_back_to_full_rewrite(spark, monkeypatch, capl
     import logging
 
     import sqlmesh_spark.backends as B
-    from sqlmesh_spark.adapter import SparkAdapter
+    from sqlmesh_spark.adapter import SparkAdapter, TableLayout
 
     a = SparkAdapter(spark)
     t = _tbl()
@@ -347,7 +347,7 @@ def test_merge_partition_cap_falls_back_to_full_rewrite(spark, monkeypatch, capl
         [(i, f"v{i}", f"2024-01-{i+1:02d}") for i in range(4)],
         "id int, v string, ds string",
     )
-    a.ctas(t, df, partitioned_by=("ds",))
+    a.ctas(t, df, TableLayout(partitioned_by=("ds",)))
     monkeypatch.setattr(B, "MAX_COW_PARTITIONS", 2)
     src = spark.createDataFrame(
         [(i, f"u{i}", f"2024-01-{i+1:02d}") for i in range(4)],
@@ -406,7 +406,7 @@ SELECT 1 AS id, 'a' AS v, CAST('2024-01-01' AS TIMESTAMP) AS updated_at
     adapter = SparkAdapter(spark)
     snaps = build_snapshots(ctx.models)
     for name in ("warnme.keys_part", "warnme.scd_part"):
-        assert adapter._partition_columns(snaps[name].table_name) == ["v"]
+        assert adapter.table_layout(snaps[name].table_name).partitioned_by == ("v",)
 
 
 class TestGoldenStatements:
@@ -492,7 +492,7 @@ class TestGoldenStatements:
 def test_merge_filter_alias_accepted_by_parquet_path(spark):
     """A __MERGE_TARGET__-qualified merge_filter works on the parquet COW
     path too (alias stripped before DataFrame.filter)."""
-    from sqlmesh_spark.adapter import SparkAdapter
+    from sqlmesh_spark.adapter import SparkAdapter, TableLayout
 
     a = SparkAdapter(spark)
     t = _tbl()
@@ -500,7 +500,7 @@ def test_merge_filter_alias_accepted_by_parquet_path(spark):
         [(1, "a", "2024-01-01"), (2, "b", "2024-01-02")],
         "id int, v string, ds string",
     )
-    a.ctas(t, df, partitioned_by=("ds",))
+    a.ctas(t, df, TableLayout(partitioned_by=("ds",)))
     src = spark.createDataFrame(
         [(1, "A", "2024-01-01"), (2, "B", "2024-01-02")],
         "id int, v string, ds string",

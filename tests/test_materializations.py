@@ -147,7 +147,7 @@ def test_delete_from_preserves_partition_layout(spark):
     """delete_from (and every _atomic_rewrite caller) must keep the
     table's partition columns — flattening would lock later interval
     writes into full-table rewrites."""
-    from sqlmesh_spark.adapter import SparkAdapter
+    from sqlmesh_spark.adapter import SparkAdapter, TableLayout
 
     a = SparkAdapter(spark)
     t = "default.part_preserve_test"
@@ -155,12 +155,39 @@ def test_delete_from_preserves_partition_layout(spark):
     df = spark.createDataFrame(
         [(1, "2024-01-01"), (2, "2024-01-02")], "id int, ds string"
     )
-    a.ctas(t, df, partitioned_by=("ds",))
+    a.ctas(t, df, TableLayout(partitioned_by=("ds",)))
     a.delete_from(t, "id = 1")
-    part_cols = a._partition_columns(t)
-    assert part_cols == ["ds"], part_cols
+    part_cols = a.table_layout(t).partitioned_by
+    assert part_cols == ("ds",), part_cols
     assert {r.id for r in spark.table(t).collect()} == {2}
     a.drop_table(t)
+
+
+def test_creation_reclaims_orphan_files_in_a_located_database(spark, tmp_path):
+    """Files a crash left at a managed table's location, in a database
+    created with LOCATION, are reclaimed by both creation forms: the
+    location comes from the catalog's error, not from the warehouse dir."""
+    import os
+
+    from sqlmesh_spark.adapter import SparkAdapter
+
+    a = SparkAdapter(spark)
+    spark.sql("DROP DATABASE IF EXISTS orphan_loc CASCADE")
+    spark.sql(f"CREATE DATABASE orphan_loc LOCATION '{tmp_path}/orphan_loc.db'")
+    df = spark.createDataFrame([(1, "x")], "id int, v string")
+    for create in (
+        lambda t: a.ctas(t, df),
+        lambda t: a.create_table(t, {"id": "int", "v": "string"}),
+    ):
+        t = "orphan_loc.t"
+        location = os.path.join(str(tmp_path), "orphan_loc.db", "t")
+        os.makedirs(location)
+        with open(os.path.join(location, "part-orphan.parquet"), "w") as f:
+            f.write("left by a crash")
+        create(t)
+        assert a.table_exists(t)
+        a.drop_table(t)
+    spark.sql("DROP DATABASE orphan_loc CASCADE")
 
 
 def test_unmanaged_records_intervals_despite_audit_failure(spark, tmp_path):
@@ -210,29 +237,80 @@ def _describe(spark, table: str) -> dict[str, str]:
     }
 
 
-def test_managed_model_keeps_its_declared_layout(spark):
-    """MANAGED writes the way FULL does: the declared storage format and
-    bucketing (both in the fingerprint) hold on the first build and on
-    every refresh."""
+# Every table-building kind: (kind clause, extra header, partition columns
+# the snapshot table must carry). Each model also declares orc storage and
+# 4 buckets on k, which every table must keep through every write.
+LAYOUT_KINDS = {
+    "full": ("FULL", "", []),
+    "managed": ("MANAGED", "", []),
+    "seed": ("SEED", ", columns (k INT, v STRING)", []),
+    "time_range": ("INCREMENTAL_BY_TIME_RANGE (time_column ts)", "", ["_ds"]),
+    "time_range_unpartitioned": (
+        "INCREMENTAL_BY_TIME_RANGE (time_column ts, partition_by_time_column false)", "", [],
+    ),
+    "unique_key": ("INCREMENTAL_BY_UNIQUE_KEY (unique_key k)", "", []),
+    "unique_key_partitioned": (
+        "INCREMENTAL_BY_UNIQUE_KEY (unique_key k)", ", partitioned_by (v)", ["v"],
+    ),
+    "by_partition": ("INCREMENTAL_BY_PARTITION", ", partitioned_by (v)", ["v"]),
+    "unmanaged": ("INCREMENTAL_UNMANAGED", "", []),
+    "scd2": ("SCD_TYPE_2_BY_TIME (unique_key k, updated_at_name ts)", "", []),
+    "scd2_current": (
+        "SCD_TYPE_2_BY_TIME (unique_key k, updated_at_name ts, partition_by_current true)",
+        "", ["_is_current"],
+    ),
+}
+
+
+def _assert_layout(spark, table: str, partitions: list[str]) -> None:
+    desc = _describe(spark, table)
+    assert desc["Provider"].lower() == "orc", desc
+    assert desc["Num Buckets"] == "4", desc
+    assert desc["Bucket Columns"] == "[`k`]", desc
+    rows = spark.sql(f"DESCRIBE TABLE {table}").collect()
+    names = [r.col_name for r in rows]
+    got = []
+    if "# Partition Information" in names:
+        got = [n for n in names[names.index("# Partition Information") + 2 :] if n]
+    assert got == partitions, rows
+
+
+@pytest.mark.parametrize("case", list(LAYOUT_KINDS))
+def test_model_keeps_its_declared_layout(spark, case):
+    """Every kind builds the table its model declares (format, buckets and
+    partitions, all in the fingerprint) on the first build, keeps it on a
+    later write, and empty_backfill builds the same table."""
     import tempfile
 
     from sqlmesh_spark.core.context import Context
 
-    for db in ("sqlmesh__demo_mgl", "env_mgl_views"):
-        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    ctx = Context(spark, state_dir=tempfile.mkdtemp(prefix="sqlmesh_state_"))
-    ctx.add_model(
-        "MODEL (name demo_mgl.t, kind MANAGED, storage_format orc,"
-        " clustered_by (a), buckets 4);\n"
-        "SELECT 1 AS a, 'x' AS b"
+    kind, extra, partitions = LAYOUT_KINDS[case]
+    text = (
+        f"MODEL (name demo_lay.{case}, kind {kind}, cron '@daily',"
+        f" storage_format orc, clustered_by (k), buckets 4{extra});\n"
+        "SELECT 1 AS k, 'x' AS v, CAST(@start_ds AS TIMESTAMP) AS ts"
     )
-    table = ctx.plan(skip_tests=True).snapshots["demo_mgl.t"].table_name
-    for end in ("1995-01-02", "1995-01-03"):  # first build, then a refresh
-        ctx.run(environment="env_mgl", start="1995-01-01", end=end)
-        desc = _describe(spark, table)
-        assert desc["Provider"].lower() == "orc", desc
-        assert desc["Num Buckets"] == "4", desc
-    assert spark.table("env_mgl_views.t").collect()[0].a == 1
+    seed_csv = "k,v\n1,x\n" if kind == "SEED" else None
+
+    def context() -> Context:
+        for db in ("sqlmesh__demo_lay", "env_lay_views"):
+            spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+        ctx = Context(spark, state_dir=tempfile.mkdtemp(prefix="sqlmesh_state_"))
+        ctx.add_model(text, seed_csv=seed_csv)
+        return ctx
+
+    ctx = context()
+    table = ctx.plan(skip_tests=True).snapshots[f"demo_lay.{case}"].table_name
+    for end in ("1995-01-02", "1995-01-03"):  # first build, then a later write
+        ctx.run(environment="env_lay", start="1995-01-01", end=end)
+        _assert_layout(spark, table, partitions)
+    assert spark.table(f"env_lay_views.{case}").collect()[0].k == 1
+    if kind.startswith("SCD") or kind == "SEED":
+        return  # empty_backfill refuses SCD2 and skips seeds
+    ctx = context()
+    ctx.apply(ctx.plan(environment="env_lay", start="1995-01-01",
+                       end="1995-01-02", empty_backfill=True))
+    _assert_layout(spark, table, partitions)
 
 
 def test_discovered_seed_loads_string_columns_as_text(spark):

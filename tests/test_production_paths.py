@@ -81,30 +81,66 @@ def test_every_public_operator_function_has_a_production_reference():
 RESOLVERS = ("_replace_table_ref", "_replace_table_refs")
 
 
-def _callers(node: ast.AST, where: str, out: set[str]) -> None:
-    """Add ``where`` (module:function) for every resolver call under
-    ``node``; a nested def or class starts a new ``where``."""
+def _sites(node: ast.AST, where: str, match, out: set[str]) -> None:
+    """Add ``where`` (module:function) for every node under ``node`` that
+    ``match`` accepts; a nested def or class starts a new ``where``."""
     for child in ast.iter_child_nodes(node):
         if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
             sep = "." if ":" in where else ":"
-            _callers(child, f"{where}{sep}{child.name}", out)
+            _sites(child, f"{where}{sep}{child.name}", match, out)
             continue
-        if isinstance(child, ast.Call):
-            func = child.func
-            name = func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", "")
-            if name in RESOLVERS:
-                out.add(where)
-        _callers(child, where, out)
+        if match(child):
+            out.add(where)
+        _sites(child, where, match, out)
+
+
+def _calls_resolver(node: ast.AST) -> bool:
+    if not isinstance(node, ast.Call):
+        return False
+    func = node.func
+    return (func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", "")) in RESOLVERS
 
 
 def test_model_references_resolve_in_one_function():
     callers: set[str] = set()
     for path in sorted(PACKAGE.rglob("*.py")):
         module = str(path.relative_to(PACKAGE.parent))
-        _callers(ast.parse(path.read_text(), filename=str(path)), module, callers)
+        _sites(ast.parse(path.read_text(), filename=str(path)), module, _calls_resolver, callers)
     assert len(callers) == 1, (
         "ROADMAP aim 2 keeps one render path: model text becomes Spark SQL "
         "in core/scheduler.render_model_sql, so the reference resolver "
         f"({' / '.join(RESOLVERS)}) has exactly one calling function; "
         f"found {len(callers)}: " + ", ".join(sorted(callers))
+    )
+
+
+# The model fields that fix a snapshot table's physical layout, and the
+# functions that may read them: the layout decision and the fingerprint.
+LAYOUT_FIELDS = ("storage_format", "clustered_by", "buckets")
+LAYOUT_READERS = {
+    "sqlmesh_spark/core/model.py:Model.layout",
+    "sqlmesh_spark/core/snapshot.py:fingerprint_model",
+}
+
+
+def _reads_layout_field(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Attribute)
+        and isinstance(node.ctx, ast.Load)
+        and node.attr in LAYOUT_FIELDS
+    )
+
+
+def test_table_layout_is_decided_in_one_function():
+    readers: set[str] = set()
+    for path in sorted((PACKAGE / "core").rglob("*.py")):
+        module = str(path.relative_to(PACKAGE.parent))
+        tree = ast.parse(path.read_text(), filename=str(path))
+        _sites(tree, module, _reads_layout_field, readers)
+    stray = sorted(readers - LAYOUT_READERS)
+    assert not stray, (
+        "ROADMAP aim 2 keeps one decision per fact: a snapshot table's "
+        "layout comes from Model.layout, and only it and the fingerprint "
+        f"read a model's {' / '.join(LAYOUT_FIELDS)}; also read in: "
+        + ", ".join(stray)
     )

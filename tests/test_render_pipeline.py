@@ -127,3 +127,16 @@ def test_references_built_by_variables_resolve(spark):
         variables={"src": "rp_ref.a"},
     )
     assert sql == "SELECT * FROM sqlmesh__rp_ref.a__1 JOIN sqlmesh__rp_ref.b__2"
+
+
+def test_jinja_bodied_model_renders(spark):
+    """A JINJA_QUERY_BEGIN … JINJA_END body expands before macros run, so
+    the scheduler executes the rendered SQL, not the template text."""
+    _drop(spark, "sqlmesh__rp_jinja", "rp_jinja_views")
+    ctx = Context(spark, state_dir=tempfile.mkdtemp(prefix="sqlmesh_state_"))
+    ctx.add_model(
+        "MODEL (name rp_jinja.m, kind FULL);\n"
+        "JINJA_QUERY_BEGIN;\nSELECT {{ 1 + 1 }} AS v\nJINJA_END;"
+    )
+    ctx.run(environment="rp_jinja", start="1995-01-01", end="1995-01-02")
+    assert [r.v for r in spark.table("rp_jinja_views.m").collect()] == [2]

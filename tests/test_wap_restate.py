@@ -25,6 +25,31 @@ def test_wap_write_audit_publish(spark):
     adapter.drop_table("default.t_wap")
 
 
+def test_wap_and_clone_keep_the_table_layout(spark):
+    """A published WAP branch and a clone are tables in the source's
+    layout (format, partitions, buckets), and the published partitions
+    read back."""
+    from sqlmesh_spark.adapter import TableLayout
+
+    adapter = SparkAdapter(spark)
+    layout = TableLayout(("v",), ("id",), 2, "orc")
+    for t in ("default.t_wap_layout", "default.t_wap_layout_clone"):
+        adapter.drop_table(t)
+    adapter.ctas(
+        "default.t_wap_layout",
+        spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string"),
+        layout,
+    )
+    staging = adapter.wap_prepare("default.t_wap_layout")
+    adapter.insert_append(staging, spark.createDataFrame([(3, "c")], "id int, v string"))
+    adapter.wap_publish("default.t_wap_layout", staging)
+    adapter.clone_table("default.t_wap_layout_clone", "default.t_wap_layout")
+    for t in ("default.t_wap_layout", "default.t_wap_layout_clone"):
+        assert adapter.table_layout(t) == layout
+        assert sorted(r.id for r in spark.table(t).collect()) == [1, 2, 3]
+        adapter.drop_table(t)
+
+
 def test_wap_abandon_on_audit_failure(spark):
     adapter = SparkAdapter(spark)
     spark.sql("DROP TABLE IF EXISTS default.t_wap2")
