@@ -255,48 +255,28 @@ def cmd_audit(args) -> int:
 
 def cmd_check_intervals(args) -> int:
     """Show missing (unprocessed) intervals per model over [start, end) —
-    reference `sqlmesh check_intervals`."""
-    from sqlmesh_spark.core.model import ModelKind
-    from sqlmesh_spark.core.plan import build_snapshots
-    from sqlmesh_spark.core.snapshot import interval_unit, missing_intervals, to_epoch
+    reference `sqlmesh check_intervals`: the versions a prod run's plan
+    serves, and what the scheduler's own missing_chunks says they owe."""
+    import datetime as dt
 
-    _INCREMENTAL = (
-        ModelKind.INCREMENTAL_BY_TIME_RANGE,
-        ModelKind.INCREMENTAL_BY_UNIQUE_KEY,
-        ModelKind.INCREMENTAL_BY_PARTITION,
-        ModelKind.INCREMENTAL_UNMANAGED,
-        ModelKind.SCD_TYPE_2_BY_TIME,
-        ModelKind.SCD_TYPE_2_BY_COLUMN,
-    )
+    from sqlmesh_spark.core.scheduler import WHOLESALE_KINDS, missing_chunks
+
+    def iso(ts: int) -> str:
+        return dt.datetime.fromtimestamp(ts, dt.timezone.utc).strftime("%Y-%m-%d %H:%M")
+
     ctx = _context(args)
-    snaps = build_snapshots(ctx.models)
+    snaps = ctx.plan("prod", args.start, args.end, skip_tests=True, skip_linter=True).snapshots
     any_missing = False
-    for name in sorted(ctx.models):
+    for name in sorted(snaps):
         snap = snaps[name]
-        if snap.model.kind not in _INCREMENTAL:
-            # Wholesale kinds (FULL/VIEW/SEED/...) rebuild the whole table
-            # in one batch whenever their window gains a cron interval, so
-            # there is no per-interval backlog to list.
-            print(
-                f"{name}: wholesale kind ({snap.model.kind.value}), "
-                "re-runs once per missing cron interval"
-            )
-            continue
         processed = ctx.state.get_intervals(name, snap.version)
-        missing = missing_intervals(
-            to_epoch(args.start),
-            to_epoch(args.end),
-            processed,
-            interval_unit(snap.model.cron),
-        )
-        if missing:
-            import datetime as dt
-
-            def iso(ts: int) -> str:
-                return dt.datetime.fromtimestamp(ts, dt.timezone.utc).strftime(
-                    "%Y-%m-%d %H:%M"
-                )
-
+        missing = missing_chunks(snap.model, args.start, args.end, processed)
+        if snap.model.kind in WHOLESALE_KINDS:
+            # Wholesale kinds rebuild the whole table in one batch whenever
+            # their window gains a cron interval: no backlog to list.
+            due = "rebuilds on the next run" if missing else "up to date"
+            print(f"{name}: wholesale kind ({snap.model.kind.value}), {due}")
+        elif missing:
             any_missing = True
             print(f"{name}: {len(missing)} missing interval(s)")
             for s, e in missing[:5]:

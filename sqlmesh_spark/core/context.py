@@ -512,26 +512,21 @@ class Context:
         """Restatement (plan/builder.py:369): clear processed intervals of
         the named models AND their downstream dependents for [start, end),
         then re-run — late-arriving/corrected source data reprocesses
-        exactly that window."""
-        from sqlmesh_spark.core.plan import build_snapshots
-        from sqlmesh_spark.core.snapshot import to_epoch
+        exactly that window, at the versions the run's own plan serves (a
+        child that categorization reverted keeps its old version)."""
+        from sqlmesh_spark.core.snapshot import snapshots_to_dag, to_epoch
 
-        snaps = build_snapshots(self.models)
+        plan = self.plan(environment, start, end, skip_tests=True, skip_linter=True)
         targets = {n.lower() for n in model_names}
-        # Downstream closure: anything depending (transitively) on a target.
-        changed = True
-        while changed:
-            changed = False
-            for name, m in self.models.items():
-                if name not in targets and m.depends_on & targets:
-                    targets.add(name)
-                    changed = True
+        # Downstream closure, in one pass since parents come first.
+        for name in snapshots_to_dag(plan.snapshots):
+            if targets.intersection(plan.snapshots[name].parents):
+                targets.add(name)
         for name in targets:
-            snap = snaps[name]
             self.state.remove_intervals(
-                name, snap.version, to_epoch(start), to_epoch(end)
+                name, plan.snapshots[name].version, to_epoch(start), to_epoch(end)
             )
-        return self.run(environment, start, end)
+        return self.apply(plan)
 
     # -- render / evaluate (context.py:1099/1168) ---------------------------
 
@@ -774,8 +769,7 @@ class Context:
         }
         dropped = []
         forgotten: list[tuple[str, str]] = []
-        for key in self.state._read("snapshots"):
-            name, _, version = key.rpartition("@")
+        for name, version in self.state.get_snapshots():
             table = physical_table(name, version)
             if table not in live and self._evaluator.adapter.table_exists(table):
                 self._evaluator.adapter.drop_table(table)

@@ -35,6 +35,7 @@ from sqlmesh_spark.core.snapshot import (
     fingerprint_model,
     merge_intervals,
     snapshots_to_dag,
+    subtract_intervals,
 )
 from sqlmesh_spark.core.state import StateStore
 
@@ -322,22 +323,32 @@ class PlanEvaluator:
         )
 
     def _warn_unpartitioned_merges(self, models: Mapping[str, Model]) -> None:
-        """Plan-time scale guard: a MERGE/SCD2 model whose layout leaves
-        the parquet backend on its full-rewrite tail is O(table) on every
-        apply. Warn once per plan, with the setting that moves that kind
-        onto its copy-on-write path, so the cost is a choice, not a
-        surprise (SCALE.md):
+        """Plan-time layout warnings, once per plan. A MERGE/SCD2 model
+        whose layout leaves the parquet backend on its full-rewrite tail is
+        O(table) on every apply; the warning names the setting that moves
+        that kind onto its copy-on-write path, so the cost is a choice, not
+        a surprise (SCALE.md):
 
         - INCREMENTAL_BY_UNIQUE_KEY: ``partitioned_by`` — the merge then
           rewrites only touched partitions (backends.py merge);
         - SCD2: ``partition_by_current true`` — closed history becomes
           append-only (backends.py scd2_apply_cow). ``partitioned_by``
-          alone keeps the full rewrite."""
+          alone keeps the full rewrite.
+
+        A declared ``partitioned_by`` that Model.layout drops is named too."""
         import logging
 
         log = logging.getLogger("sqlmesh_spark.plan")
         for name, model in models.items():
             kind = model.kind.value
+            kept = model.layout.partitioned_by
+            dropped = [c for c in model.partitioned_by if c not in kept]
+            if dropped:
+                log.warning(
+                    "model %s declares partitioned_by %s, which kind %s does "
+                    "not keep: the table partitions on (%s)",
+                    name, ", ".join(dropped), kind, ", ".join(kept),
+                )
             if kind == "INCREMENTAL_BY_UNIQUE_KEY" and not model.partitioned_by:
                 advice = "declare partitioned_by to enable the partition-scoped merge"
             elif kind.startswith("SCD_TYPE_2") and not model.partition_by_current:
@@ -679,22 +690,7 @@ class PlanEvaluator:
             if snap.model.kind in WHOLESALE_KINDS:
                 continue  # each rebuild covers the whole table
             old_iv = merge_intervals(self.state.get_intervals(name, old_version))
-            if not old_iv:
-                continue
-            new_iv = merge_intervals(self.state.get_intervals(name, snap.version))
-            gaps: list[tuple[int, int]] = []
-            for s, e in old_iv:
-                pos = s
-                for ns, ne in new_iv:
-                    if ne <= pos or ns >= e:
-                        continue
-                    if ns > pos:
-                        gaps.append((pos, ns))
-                    pos = max(pos, ne)
-                    if pos >= e:
-                        break
-                if pos < e:
-                    gaps.append((pos, e))
+            gaps = subtract_intervals(old_iv, self.state.get_intervals(name, snap.version))
             if gaps:
                 problems.append(f"{name}: {len(gaps)} gap(s) vs previous version")
         if problems:

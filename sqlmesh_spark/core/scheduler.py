@@ -643,6 +643,26 @@ def _weekly_cron_boundary(epoch: int, dow_field: str) -> int:
     return (epoch - off) // week * week + off
 
 
+def missing_chunks(
+    model: Model, start: str, end: str, processed: list, ignore_cron: bool = False
+) -> list[tuple[int, int]]:
+    """The unit chunks of [start, end) a run still owes ``model`` after its
+    ``processed`` intervals, before signal gating — the one answer the
+    scheduler and ``check_intervals`` share. The window opens at the
+    model's own ``start``; lookback applies to incremental kinds only;
+    EMBEDDED and EXTERNAL models are never built."""
+    if model.kind in (ModelKind.EMBEDDED, ModelKind.EXTERNAL):
+        return []
+    return missing_intervals(
+        model.start or start,
+        end,
+        processed,
+        unit=model_interval_unit(model),
+        lookback=0 if model.kind in WHOLESALE_KINDS else model.lookback,
+        allow_partials=model.allow_partials or ignore_cron,
+    )
+
+
 class Scheduler:
     """Missing-interval computation + ordered (parallel) evaluation
     (scheduler.py:259 run)."""
@@ -729,8 +749,6 @@ class Scheduler:
             return 0
         if model.kind in (ModelKind.EMBEDDED, ModelKind.EXTERNAL):
             return 0
-        unit = model_interval_unit(model)
-        eff_start = model.start or start
         processed = self.state.get_intervals(model.name, snapshot.version)
 
         # Periodic auto-restatement (kind.py auto_restatement_cron /
@@ -763,12 +781,12 @@ class Scheduler:
                 hi = max(e for _, e in processed)
                 lo = hi
                 for _ in range(ar_n):
-                    lo = prev_unit(lo, unit)
+                    lo = prev_unit(lo, model_interval_unit(model))
                 self.state.remove_intervals(model.name, snapshot.version, lo, hi)
                 self.state.put_auto_restatement(model.name, snapshot.version, boundary)
                 processed = self.state.get_intervals(model.name, snapshot.version)
 
-        allow_partials = model.allow_partials or self.ignore_cron
+        chunks = missing_chunks(model, start, end, processed, self.ignore_cron)
         if model.kind in WHOLESALE_KINDS:
             # Wholesale kinds rebuild the whole table in one batch over the
             # requested window, but only when the window holds a cron
@@ -777,12 +795,11 @@ class Scheduler:
             # rerun over a processed window does no work, while a longer
             # window, a restatement, a new version or a parent that ran
             # (late signal, auto-restatement, catch-up) rebuilds.
-            chunks = missing_intervals(
-                eff_start, end, processed, unit=unit, allow_partials=allow_partials
-            )
             if processed and not chunks and not upstream_changed:
                 return 0
-            self.evaluator.evaluate(snapshot, eff_start, end, mapping, not processed)
+            self.evaluator.evaluate(
+                snapshot, model.start or start, end, mapping, not processed
+            )
             failures = self.evaluator.run_audits(snapshot)
             if failures:
                 raise AuditError(f"audits failed on {model.name}: {failures}")
@@ -790,14 +807,6 @@ class Scheduler:
                 self.state.add_interval(model.name, snapshot.version, bs, be)
             return 1
 
-        chunks = missing_intervals(
-            eff_start,
-            end,
-            processed,
-            unit=unit,
-            lookback=model.lookback,
-            allow_partials=allow_partials,
-        )
         if model.signals:
             # Signal gating (scheduler.py:950 _check_ready_intervals):
             # only admitted intervals run; the rest stay missing.

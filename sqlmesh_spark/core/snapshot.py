@@ -278,6 +278,28 @@ def merge_intervals(intervals: Iterable[tuple[int, int]]) -> list[tuple[int, int
     return out
 
 
+def subtract_intervals(
+    intervals: Iterable[Sequence[int]], removed: Iterable[tuple[int, int]]
+) -> list[tuple[int, int]]:
+    """The parts of each [s, e) in ``intervals`` that ``removed`` does not
+    cover, in input order."""
+    cut = merge_intervals(removed)
+    out: list[tuple[int, int]] = []
+    for s, e in intervals:
+        pos = s
+        for cs, ce in cut:
+            if cs >= e:
+                break
+            if ce <= pos:
+                continue
+            if cs > pos:
+                out.append((pos, cs))
+            pos = ce
+        if pos < e:
+            out.append((pos, e))
+    return out
+
+
 def missing_intervals(
     start: str | int,
     end: str | int,
@@ -306,22 +328,8 @@ def missing_intervals(
         reopen_from = hi
         for _ in range(lookback):
             reopen_from = prev_unit(reopen_from, unit)
-        covered = [
-            (s, min(e, reopen_from)) for s, e in covered if s < reopen_from
-        ]
-        covered = merge_intervals(c for c in covered if c[0] < c[1])
-    missing: list[tuple[int, int]] = []
-    cursor = s0
-    for cs, ce in covered:
-        if ce <= cursor:
-            continue
-        if cs > cursor:
-            missing.append((cursor, min(cs, e0)))
-        cursor = max(cursor, ce)
-        if cursor >= e0:
-            break
-    if cursor < e0:
-        missing.append((cursor, e0))
+        covered = subtract_intervals(covered, [(reopen_from, hi)])
+    missing = subtract_intervals([(s0, e0)], covered)
     # Split to unit chunks so batches are bounded and restartable.
     chunks: list[tuple[int, int]] = []
     for s, e in missing:

@@ -409,6 +409,44 @@ SELECT 1 AS id, 'a' AS v, CAST('2024-01-01' AS TIMESTAMP) AS updated_at
         assert adapter.table_layout(snaps[name].table_name).partitioned_by == ("v",)
 
 
+def test_plan_warns_when_a_declared_partitioned_by_is_dropped(spark, caplog):
+    """Time-range tables partition on _ds (or nothing) and SCD2 tables
+    under partition_by_current on _is_current, whatever partitioned_by
+    says; the plan names the dropped columns instead of losing them
+    silently. The layout itself is unchanged."""
+    import logging
+    import tempfile
+
+    from sqlmesh_spark.core.context import Context
+
+    ctx = Context(spark, state_dir=tempfile.mkdtemp(prefix="sqlmesh_state_"))
+    kinds = {
+        "by_time": ("INCREMENTAL_BY_TIME_RANGE (time_column updated_at)", ("_ds",)),
+        "by_time_flat": (
+            "INCREMENTAL_BY_TIME_RANGE (time_column updated_at, "
+            "partition_by_time_column false)",
+            (),
+        ),
+        "scd_cow": (
+            "SCD_TYPE_2_BY_TIME (unique_key id, updated_at_name updated_at, "
+            "partition_by_current true)",
+            ("_is_current",),
+        ),
+        "keys": ("INCREMENTAL_BY_UNIQUE_KEY (unique_key id)", ("v",)),
+    }
+    for name, (kind, _) in kinds.items():
+        ctx.add_model(
+            f"MODEL (name dropme.{name}, kind {kind}, partitioned_by (v));\n"
+            "SELECT 1 AS id, 'a' AS v, CAST('2024-01-01' AS TIMESTAMP) AS updated_at"
+        )
+    with caplog.at_level(logging.WARNING, logger="sqlmesh_spark.plan"):
+        ctx.plan("env_dropme", start="2024-01-01", end="2024-01-02", skip_tests=True)
+    dropped = {r.args[0] for r in caplog.records if "declares partitioned_by" in r.message}
+    assert dropped == {"dropme.by_time", "dropme.by_time_flat", "dropme.scd_cow"}
+    for name, (_, partitions) in kinds.items():
+        assert ctx.models[f"dropme.{name}"].layout.partitioned_by == partitions
+
+
 class TestGoldenStatements:
     """Byte-exact native-format statement forms, pinned against the
     reference's acceptance spec — the jars are absent in this sandbox, so

@@ -185,6 +185,30 @@ def test_cli_dag_info_check_intervals(project, capsys):
     assert "up to date" in capsys.readouterr().out
 
 
+def test_cli_check_intervals_agrees_with_run_on_model_start(project, capsys):
+    """A model whose own start is after the window's start: once a run
+    has nothing left to do, check_intervals reports nothing missing (it
+    used to list the pre-start day forever, which no run processes)."""
+    proj, schema = project
+    with open(os.path.join(proj, "models", "late.sql"), "w") as f:
+        f.write(
+            f"MODEL (name {schema}.late, kind INCREMENTAL_BY_TIME_RANGE "
+            "(time_column ts), cron '@daily', start '1995-01-02');\n"
+            "SELECT CAST(@start_ts AS TIMESTAMP) AS ts, 1 AS v\n"
+        )
+    window = ["--start", "1995-01-01", "--end", "1995-01-04"]
+    assert main(["-p", proj, "check_intervals", *window]) == 2
+    out = capsys.readouterr().out
+    assert f"{schema}.late: 2 missing interval(s)" in out
+    assert "[1995-01-02 00:00 .. 1995-01-03 00:00)" in out
+    assert main(["-p", proj, "run", *window]) == 0
+    assert f"ran {schema}.late: 1 interval(s)" in capsys.readouterr().out
+    assert main(["-p", proj, "run", *window]) == 0
+    assert f"ran {schema}.late: 0 interval(s)" in capsys.readouterr().out
+    assert main(["-p", proj, "check_intervals", *window]) == 0
+    assert f"{schema}.late: up to date" in capsys.readouterr().out
+
+
 def test_cli_state_export_import_and_destroy(project, capsys, tmp_path):
     proj, schema = project
     assert main(["-p", proj, "plan"]) == 0

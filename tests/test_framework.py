@@ -227,38 +227,87 @@ def test_linter_extra_rules():
     assert no_missing_unit_test(ok, tested_models={"s.ok"}) is None
 
 
+# One writer process of the cross-process arm below: waits for the go
+# file, then alternates add_interval and put_environment calls.
+_STATE_WRITER = """
+import os, sys, time
+from sqlmesh_spark.core.state import StateStore
+path, worker, calls = sys.argv[1], int(sys.argv[2]), int(sys.argv[3])
+store = StateStore(path)
+while not os.path.exists(os.path.join(path, "go")):
+    time.sleep(0.002)
+for i in range(calls):
+    if i % 2:
+        store.put_environment(f"w{worker}_{i}", {"m": str(i)})
+    else:
+        store.add_interval("m", "v", worker * calls + i, worker * calls + i + 1)
+"""
+
+
 def test_state_store_concurrent_add_interval(tmp_path):
-    """Parallel add_interval calls must not lose updates (the scheduler
-    writes from DAG-level-parallel threads)."""
+    """Parallel writers lose no update: threads of one process (the
+    scheduler writes from DAG-level-parallel threads) and separate
+    processes on one state directory (a run overlapping a plan)."""
+    import os
+    import subprocess
+    import sys
     from concurrent.futures import ThreadPoolExecutor
 
     from sqlmesh_spark.core.state import StateStore
 
     store = StateStore(str(tmp_path / "state"))
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        list(pool.map(lambda i: store.add_interval("m", "v", i, i + 1), range(64)))
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            list(pool.map(lambda i: store.add_interval("m", "v", i, i + 1), range(64)))
+    finally:
+        sys.setswitchinterval(switch)
     got = sorted(store.get_intervals("m", "v"))
     assert got == [(i, i + 1) for i in range(64)]
+    assert (store.writes, store.reads) == (64, 65)  # the store counts its own I/O
+
+    path, workers, calls = str(tmp_path / "shared"), 3, 300
+    os.makedirs(path)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", _STATE_WRITER, path, str(w), str(calls)], cwd=repo
+        )
+        for w in range(workers)
+    ]
+    try:
+        open(os.path.join(path, "go"), "w").close()
+        assert [p.wait(timeout=300) for p in procs] == [0] * workers
+    finally:
+        for p in procs:
+            p.kill()
+    shared = StateStore(path)
+    assert sorted(shared.get_intervals("m", "v")) == [
+        (w * calls + i, w * calls + i + 1)
+        for w in range(workers)
+        for i in range(0, calls, 2)
+    ]
+    assert set(shared.get_environments()) == {
+        f"w{w}_{i}" for w in range(workers) for i in range(1, calls, 2)
+    }
 
 
 def test_state_store_bulk_put_snapshots(tmp_path):
-    """put_snapshots (the r13 one-write bulk form plan application uses)
-    must be observationally identical to N put_snapshot calls: same file,
-    same payloads, merging over existing entries."""
+    """put_snapshots (the one-write bulk form plan application uses)
+    round-trips its payloads, merges over existing entries, and an empty
+    put writes nothing."""
     from sqlmesh_spark.core.state import StateStore
 
-    a = StateStore(str(tmp_path / "a"))
-    b = StateStore(str(tmp_path / "b"))
-    a.put_snapshot("pre", "v0", {"kind": "VIEW"})
-    b.put_snapshot("pre", "v0", {"kind": "VIEW"})
+    store = StateStore(str(tmp_path / "state"))
+    store.put_snapshots({("pre", "v0"): {"kind": "VIEW"}})
     entries = {(f"m{i}", "v1"): {"kind": "FULL", "i": i} for i in range(20)}
-    for (n, v), p in entries.items():
-        a.put_snapshot(n, v, p)
-    b.put_snapshots(entries)
-    b.put_snapshots({})  # no-op, never touches the file
-    assert a._read("snapshots") == b._read("snapshots")
-    assert b.get_snapshot("m7", "v1") == {"kind": "FULL", "i": 7}
-    assert b.get_snapshot("pre", "v0") == {"kind": "VIEW"}
+    store.put_snapshots(entries)
+    assert store.get_snapshots() == {("pre", "v0"): {"kind": "VIEW"}, **entries}
+    assert store.get_snapshot("m7", "v1") == {"kind": "FULL", "i": 7}
+    writes = store.writes
+    store.put_snapshots({})
+    assert store.writes == writes
 
 
 def test_dep_candidates_memo_tracks_known_set():

@@ -144,3 +144,38 @@ def test_table_layout_is_decided_in_one_function():
         f"read a model's {' / '.join(LAYOUT_FIELDS)}; also read in: "
         + ", ".join(stray)
     )
+
+
+# The state store's private file access: every other module goes through
+# its public methods, and every mutation through its one locked
+# read-modify-write (StateStore._update).
+STATE_MODULE = "sqlmesh_spark/core/state.py"
+STATE_FILE_IO = ("_read", "_write")
+
+
+def _touches(names):
+    """Matches any use of an attribute in ``names``: a call, or a
+    reference taken to patch or pass it on."""
+    return lambda node: isinstance(node, ast.Attribute) and node.attr in names
+
+
+def test_state_is_written_through_one_locked_path():
+    root = PACKAGE.parent
+    outside: set[str] = set()
+    for path in sorted([*PACKAGE.rglob("*.py"), *(root / "tools").rglob("*.py")]):
+        module = str(path.relative_to(root))
+        if module != STATE_MODULE:
+            tree = ast.parse(path.read_text(), filename=str(path))
+            _sites(tree, module, _touches(STATE_FILE_IO), outside)
+    writers: set[str] = set()
+    state = root / STATE_MODULE
+    _sites(ast.parse(state.read_text(), filename=str(state)), STATE_MODULE,
+           _touches(("_write",)), writers)
+    assert not outside and len(writers) == 1, (
+        "ROADMAP aim 2 keeps one path per decision: state files are read "
+        "and written only inside core/state.py (found outside: "
+        + (", ".join(sorted(outside)) or "none")
+        + "), and every mutation takes the one locked read-modify-write, "
+        "the only caller of StateStore._write (callers: "
+        + ", ".join(sorted(writers)) + ")"
+    )

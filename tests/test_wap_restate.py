@@ -119,3 +119,49 @@ SELECT COUNT(*) AS n FROM restate.daily
         "WHERE o_orderdate >= '1995-01-01' AND o_orderdate < '1995-01-10'"
     ).collect()[0].n
     assert n == expected
+
+
+def test_restatement_reaches_a_child_that_categorization_reverted(spark):
+    """A NON_BREAKING parent change leaves its child on the child's old
+    version. Restating the parent must clear and recompute that served
+    version, not the child's new fingerprint, which no environment serves."""
+    import uuid
+
+    from sqlmesh_spark.core.context import Context
+
+    db = f"rs{uuid.uuid4().hex[:6]}"
+    src = f"default.{db}_src"
+
+    def load_source(values):
+        spark.createDataFrame(
+            [(f"1995-01-0{i + 1} 00:00:00", v) for i, v in enumerate(values)],
+            "ts string, v int",
+        ).selectExpr("CAST(ts AS TIMESTAMP) AS ts", "v").write.mode(
+            "overwrite"
+        ).saveAsTable(src)
+
+    window = " WHERE ts >= CAST(@start_ts AS TIMESTAMP) AND ts < CAST(@end_ts AS TIMESTAMP)"
+    parent = (
+        f"MODEL (name {db}.p, kind INCREMENTAL_BY_TIME_RANGE (time_column ts));\n"
+        "SELECT ts, v{extra} FROM " + src + window
+    )
+    load_source([1, 2])
+    ctx = Context(spark, state_dir=tempfile.mkdtemp())
+    ctx.add_model(parent.format(extra=""))
+    ctx.add_model(
+        f"MODEL (name {db}.c, kind INCREMENTAL_BY_TIME_RANGE (time_column ts));\n"
+        f"SELECT ts, v FROM {db}.p" + window
+    )
+    span = {"start": "1995-01-01", "end": "1995-01-03"}
+    ctx.run(environment=db, **span)
+    ctx.add_model(parent.format(extra=", v * 2 AS w"))
+    plan = ctx.plan(db, skip_tests=True, **span)
+    assert plan.diff.indirectly_modified == [f"{db}.c"]
+    ctx.apply(plan)
+
+    load_source([10, 20])
+    ctx.restate([f"{db}.p"], environment=db, **span)
+    for model in ("p", "c"):
+        rows = spark.table(f"{db}_views.{model}").collect()
+        assert sorted(r.v for r in rows) == [10, 20], model
+    spark.sql(f"DROP TABLE IF EXISTS {src}")

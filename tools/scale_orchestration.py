@@ -3,7 +3,7 @@ N-model DAG, 1× vs 10× model count (r12 verdict #7 / carried r11 #8).
 
 What it measures — the ORCHESTRATION plane, not the data plane: model
 parsing, fingerprinting/snapshot building, plan categorization, state
-store traffic (every StateStore._read/_write is counted with bytes),
+store traffic (the StateStore's own file read/write/byte counters),
 DAG scheduling, and the per-model DDL the virtual layer needs. Models
 are trivial (layer-0 SELECTs of literals; upper layers reference 1-2
 parents) so the engine work per model is a catalog op, not a job.
@@ -32,24 +32,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from sqlmesh_spark.core.state import StateStore
 from sqlmesh_spark.session import build_session
-
-
-def _instrument(store: StateStore, counters: dict) -> None:
-    orig_read, orig_write = store._read, store._write
-
-    def read(name: str) -> dict:
-        counters["reads"] += 1
-        out = orig_read(name)
-        return out
-
-    def write(name: str, data: dict) -> None:
-        counters["writes"] += 1
-        counters["write_bytes"] += len(json.dumps(data))
-        orig_write(name, data)
-
-    store._read, store._write = read, write
 
 
 def model_text(layer: int, idx: int, parents: list[str]) -> str:
@@ -91,8 +74,17 @@ def profile(spark, n: int, layers: int) -> dict:
     spark.sql("DROP DATABASE IF EXISTS orch_env_views CASCADE")
     state_dir = tempfile.mkdtemp(prefix="sqlmesh_orch_state_")
     ctx = Context(spark, state_dir=state_dir)
-    counters = {"reads": 0, "writes": 0, "write_bytes": 0}
-    _instrument(ctx.state, counters)
+    st = ctx.state
+    base = (st.reads, st.writes, st.bytes_written)
+
+    def counters() -> dict:
+        """State file traffic since the context opened, as the store
+        counts it."""
+        return {
+            "reads": st.reads - base[0],
+            "writes": st.writes - base[1],
+            "write_bytes": st.bytes_written - base[2],
+        }
 
     out: dict = {"models": n, "layers": layers}
 
@@ -105,25 +97,23 @@ def profile(spark, n: int, layers: int) -> dict:
     plan = ctx.plan("orch_env", start="1995-01-01", end="1995-01-02",
                     skip_tests=True, skip_linter=True)
     out["plan_sec"] = round(time.perf_counter() - t0, 3)
-    out["plan_state_ops"] = dict(counters)
+    out["plan_state_ops"] = counters()
 
     t0 = time.perf_counter()
     ctx.apply(plan)
     out["apply_sec"] = round(time.perf_counter() - t0, 3)
     out["apply_state_ops"] = {
-        k: counters[k] - out["plan_state_ops"][k] for k in counters
+        k: v - out["plan_state_ops"][k] for k, v in counters().items()
     }
 
     t0 = time.perf_counter()
     ctx.run(environment="orch_env", start="1995-01-01", end="1995-01-02")
     out["rerun_sec"] = round(time.perf_counter() - t0, 3)
+    out["total_state_ops"] = counters()
     out["rerun_state_ops"] = {
-        k: counters[k]
-        - out["plan_state_ops"][k]
-        - out["apply_state_ops"][k]
-        for k in counters
+        k: v - out["plan_state_ops"][k] - out["apply_state_ops"][k]
+        for k, v in out["total_state_ops"].items()
     }
-    out["total_state_ops"] = dict(counters)
     out["total_sec"] = round(
         out["build_sec"] + out["plan_sec"] + out["apply_sec"] + out["rerun_sec"], 3
     )
@@ -153,7 +143,7 @@ def main() -> None:
         "what": (
             "orchestration plane at scale: plan->apply->run over a "
             "synthetic layered VIEW DAG; wall per phase + state-store op "
-            "counts (every StateStore._read/_write with bytes written)"
+            "counts (the StateStore's file reads, writes and bytes written)"
         ),
         "sizes": results,
     }
