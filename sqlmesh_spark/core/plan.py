@@ -23,6 +23,7 @@ from pyspark.sql import SparkSession
 from sqlmesh_spark.adapter import SparkAdapter
 from sqlmesh_spark.core.model import Model
 from sqlmesh_spark.core.scheduler import (
+    MAX_WORKERS,
     WHOLESALE_KINDS,
     Scheduler,
     SnapshotEvaluator,
@@ -864,14 +865,14 @@ class PlanEvaluator:
 
         # Promotion is per-model independent (each snapshot repoints its
         # own env view; ordering only matters versus stage 2, which is
-        # complete) — run it on the scheduler's worker pool, so the N×
+        # complete) — run it on a pool as wide as the scheduler's, so the N×
         # (table_exists + schema read + CREATE VIEW) catalog round-trips
         # overlap instead of serializing (measured: the serial loop was
         # ~40% of a 1,000-model apply, tools/scale_orchestration.py).
         # Exceptions propagate on iteration, same as the sequential loop.
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=scheduler.max_workers) as pool:
+        with ThreadPoolExecutor(max_workers=MAX_WORKERS) as pool:
             promoted = list(pool.map(lambda kv: _promote_one(*kv), to_promote))
         # on_virtual_update statements (definition.py:158; rendered with
         # @this_model bound to the ENV VIEW — :452) run after every view

@@ -6,7 +6,8 @@ Reference: Scheduler.run (scheduler.py:259) → merged_missing_intervals
 (snapshot/evaluator.py:150, strategies :1693-3200) → audits (:547) →
 state_sync.add_interval (:254).
 
-Parallelism: independent DAG branches execute on a thread pool — the Spark
+Parallelism: one thread pool per run starts each snapshot as soon as its
+in-DAG parents finish, and a failure skips only its descendants — the Spark
 scheduler is thread-safe and local[N]/FAIR pools overlap their stages
 (utils/concurrency.py:178 concurrent_apply_to_dag equivalent).
 """
@@ -14,7 +15,7 @@ scheduler is thread-safe and local[N]/FAIR pools overlap their stages
 from __future__ import annotations
 
 import hashlib
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from typing import Mapping, Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -22,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from sqlmesh_spark import audits as audit_lib
 from sqlmesh_spark.adapter import SparkAdapter
 from sqlmesh_spark.core.model import Model, ModelKind, _unquote
+from sqlmesh_spark.core.signal import check_ready_intervals
 from sqlmesh_spark.core.snapshot import (
     Snapshot,
     batch_intervals,
@@ -55,8 +57,6 @@ _NULL_LOCK = _contextlib.nullcontext()
 
 import re as _re
 
-_NUMERIC_RE = _re.compile(r"^-?\d+(\.\d+)?$")
-
 
 # Custom materialization registry (reference evaluator.py:2812): name →
 # fn(evaluator, snapshot, df, start, end). Users register via
@@ -67,6 +67,9 @@ CUSTOM_MATERIALIZATIONS: dict[str, "t_CustomFn"] = {}
 def register_custom_materialization(name: str, fn) -> None:
     CUSTOM_MATERIALIZATIONS[name.lower()] = fn
 
+
+# Worker threads of a run's snapshot pool and of an apply's promotion pool.
+MAX_WORKERS = 4
 
 # Kinds that rebuild the whole table in one batch per run (FULL-refresh
 # semantics); they still record the cron intervals a rebuild covered.
@@ -174,8 +177,6 @@ class SnapshotEvaluator:
     ) -> None:
         """Core of evaluator.py:677 _evaluate_snapshot."""
         model = snapshot.model
-        if model.kind in (ModelKind.EMBEDDED, ModelKind.EXTERNAL):
-            return
         if is_first_insert:
             # The physical schema can only be missing when the table may be.
             self.adapter.create_schema(snapshot.physical_schema)
@@ -185,7 +186,7 @@ class SnapshotEvaluator:
         # session_properties (meta.py:109): per-model Spark confs for the
         # duration of this evaluation (shuffle partitions, AQE knobs, ...),
         # restored afterward so models can't leak tuning into each other.
-        # Spark confs are SESSION-GLOBAL and the scheduler runs DAG levels
+        # Spark confs are SESSION-GLOBAL and the scheduler runs snapshots
         # on a thread pool, so models that declare session_properties
         # serialize behind a lock — otherwise a concurrent model's
         # save/restore interleaving can permanently clobber a conf (and
@@ -664,7 +665,7 @@ def missing_chunks(
 
 
 class Scheduler:
-    """Missing-interval computation + ordered (parallel) evaluation
+    """Missing-interval computation + DAG-ordered (parallel) evaluation
     (scheduler.py:259 run)."""
 
     def __init__(
@@ -672,13 +673,11 @@ class Scheduler:
         spark: SparkSession,
         state: StateStore,
         snapshots: Mapping[str, Snapshot],
-        max_workers: int = 4,
         custom_audits: Optional[Mapping[str, object]] = None,
         execution_time: Optional[str] = None,
         ignore_cron: bool = False,
         backfill_models: Optional[set] = None,
     ):
-        self.spark = spark
         self.state = state
         self.snapshots = dict(snapshots)
         # reference run arg ignore_cron: process the trailing partial unit
@@ -690,50 +689,56 @@ class Scheduler:
         self.backfill_models = backfill_models
         self.evaluator = SnapshotEvaluator(spark, execution_time=execution_time)
         self.evaluator.custom_audits = dict(custom_audits or {})
-        self.max_workers = max_workers
 
     def run(self, start: str, end: str) -> dict[str, int]:
-        """Backfill every snapshot's missing intervals in DAG order.
-        Returns {model: n_batches_executed}."""
+        """Backfill every snapshot's missing intervals, each as soon as its
+        in-DAG parents finish (concurrent_apply_to_dag analog). A failure
+        skips only its descendants; once the pool drains, the first failure
+        in DAG order re-raises with a note naming the failed and skipped
+        models. Returns {model: n_batches_executed}."""
         order = snapshots_to_dag(self.snapshots)
         mapping = model_relations(self.snapshots)
+        known = set(order)
+        parents = {n: set(self.snapshots[n].parents) & known for n in order}
+        children: dict[str, list[str]] = {n: [] for n in order}
+        for n in order:
+            for p in parents[n]:
+                children[p].append(n)
         executed: dict[str, int] = {}
+        failed: dict[str, Exception] = {}
         # Models whose data this run rewrote: a wholesale child rebuilds
         # over them even when its own window is processed. An EMBEDDED
         # model passes its parents' changes on (it is inlined, not built).
         changed: set[str] = set()
-        # Level-parallel execution: models whose parents are all done run
-        # concurrently (concurrent_apply_to_dag analog). In-DAG parent
-        # sets are computed once — rebuilding set(self.snapshots) per
-        # candidate per level made level selection O(levels × N²).
-        known = set(self.snapshots)
-        in_dag_parents = {
-            n: set(self.snapshots[n].parents) & known for n in order
-        }
-        done: set[str] = set()
-        remaining = list(order)
-        while remaining:
-            level = [n for n in remaining if in_dag_parents[n] <= done]
-            with ThreadPoolExecutor(max_workers=self.max_workers) as pool:
-                counts = pool.map(
-                    lambda n: self._run_snapshot(
-                        self.snapshots[n],
-                        start,
-                        end,
-                        mapping,
-                        upstream_changed=bool(in_dag_parents[n] & changed),
-                    ),
-                    level,
-                )
-            for n, c in zip(level, counts):
-                executed[n] = c
-                done.add(n)
-                if c or (
-                    self.snapshots[n].model.kind == ModelKind.EMBEDDED
-                    and in_dag_parents[n] & changed
-                ):
-                    changed.add(n)
-            remaining = [n for n in remaining if n not in done]
+        ready = [n for n in order if not parents[n]]
+        running: dict[Future, str] = {}
+        with ThreadPoolExecutor(max_workers=MAX_WORKERS) as pool:
+            while ready or running:
+                for n in ready:
+                    running[pool.submit(
+                        self._run_snapshot, self.snapshots[n], start, end, mapping,
+                        upstream_changed=bool(parents[n] & changed),
+                    )] = n
+                finished, _ = wait(running, return_when=FIRST_COMPLETED)
+                ready = []
+                for future in finished:
+                    n = running.pop(future)
+                    try:
+                        executed[n] = future.result()
+                    except Exception as exc:
+                        failed[n] = exc  # its descendants never become ready
+                        continue
+                    if executed[n] or (
+                        self.snapshots[n].model.kind == ModelKind.EMBEDDED
+                        and parents[n] & changed
+                    ):
+                        changed.add(n)
+                    ready += [c for c in children[n] if parents[c] <= executed.keys()]
+        if failed:
+            names = [n for n in order if n in failed]
+            skipped = [n for n in order if n not in executed and n not in failed]
+            failed[names[0]].add_note(f"failed: {names}; skipped descendants: {skipped}")
+            raise failed[names[0]]
         return executed
 
     def _run_snapshot(
@@ -787,6 +792,14 @@ class Scheduler:
                 processed = self.state.get_intervals(model.name, snapshot.version)
 
         chunks = missing_chunks(model, start, end, processed, self.ignore_cron)
+        if model.signals and chunks:
+            # Signal gating (scheduler.py:950 _check_ready_intervals): only
+            # admitted chunks run; the rest stay missing. A model whose
+            # signals veto every missing chunk does no work this run.
+            chunks = check_ready_intervals(model.signals, chunks)
+            if not chunks:
+                return 0
+        # A batch is (start, end, the intervals it records).
         if model.kind in WHOLESALE_KINDS:
             # Wholesale kinds rebuild the whole table in one batch over the
             # requested window, but only when the window holds a cron
@@ -797,56 +810,40 @@ class Scheduler:
             # (late signal, auto-restatement, catch-up) rebuilds.
             if processed and not chunks and not upstream_changed:
                 return 0
-            self.evaluator.evaluate(
-                snapshot, model.start or start, end, mapping, not processed
-            )
-            failures = self.evaluator.run_audits(snapshot)
-            if failures:
-                raise AuditError(f"audits failed on {model.name}: {failures}")
-            for bs, be in merge_intervals(chunks):
-                self.state.add_interval(model.name, snapshot.version, bs, be)
-            return 1
-
-        if model.signals:
-            # Signal gating (scheduler.py:950 _check_ready_intervals):
-            # only admitted intervals run; the rest stay missing.
-            from sqlmesh_spark.core.signal import check_ready_intervals
-
-            chunks = check_ready_intervals(model.signals, chunks)
-        batches = batch_intervals(chunks, model.batch_size)
-        first = not processed
-        done: list[tuple[int, int]] = []
-        for n, (bs, be) in enumerate(batches):
-            self.evaluator.evaluate(
-                snapshot, from_epoch(bs), from_epoch(be), mapping, first and n == 0
-            )
-            if model.kind == ModelKind.INCREMENTAL_UNMANAGED:
-                # Unmanaged appends are NOT idempotent: a written-but-
-                # unrecorded batch would re-append on the next run and
-                # duplicate rows forever. Record immediately after the
-                # write; a blocking-audit failure still raises below
-                # (alerting), it just can't trigger a reprocess of an
-                # append-only target (the reference likewise exempts
-                # unmanaged models from restatement).
-                self.state.add_interval(model.name, snapshot.version, bs, be)
-            else:
-                done.append((bs, be))
+            batches = [(model.start or start, end, merge_intervals(chunks))]
+            audit_window: tuple = ()  # the whole table
+        else:
+            batches = [
+                (from_epoch(bs), from_epoch(be), [(bs, be)])
+                for bs, be in batch_intervals(chunks, model.batch_size)
+            ]
+            if not batches:
+                return 0
+            audit_window = (batches[0][0], batches[-1][1])
         # Audits gate interval recording (reference scheduler.py:191→:254:
-        # evaluate → audits → add_interval): a blocking-audit failure leaves
-        # the batch UNRECORDED, so the next run reprocesses it — safe because
-        # every REMAINING incremental write path is idempotent per interval
-        # (time-range overwrite, keyed merge, partition overwrite, SCD2;
-        # unmanaged recorded above).
-        if batches:
-            a_start = a_end = None
-            if done:
-                # Scope audits to the union of just-written batches so the
-                # audit scan is O(batch), not O(table), at scale.
-                a_start = from_epoch(min(bs for bs, _ in done))
-                a_end = from_epoch(max(be for _, be in done))
-            failures = self.evaluator.run_audits(snapshot, a_start, a_end)
-            if failures:
-                raise AuditError(f"audits failed on {model.name}: {failures}")
-        for bs, be in done:
-            self.state.add_interval(model.name, snapshot.version, bs, be)
+        # evaluate → audits → add_interval): an audited model records its
+        # batches after one audit over them all passes, so a blocking-audit
+        # failure leaves them UNRECORDED and the next run redoes them (those
+        # writes are idempotent per interval). Anything no audit can veto
+        # records each batch once written, so a failure at batch k keeps
+        # 1..k-1 — including INCREMENTAL_UNMANAGED, whose appends are NOT
+        # idempotent: its audit runs last and only alerts. An incremental
+        # audit scans just the written union, O(batch) rather than O(table).
+        vetoable = bool(model.audits) and model.kind != ModelKind.INCREMENTAL_UNMANAGED
+        failures: list[str] = []
+        owed: list[tuple[int, int]] = []
+        for n, (b_start, b_end, intervals) in enumerate(batches):
+            self.evaluator.evaluate(snapshot, b_start, b_end, mapping, not processed and n == 0)
+            owed += intervals
+            if vetoable and n + 1 < len(batches):
+                continue
+            if vetoable and (failures := self.evaluator.run_audits(snapshot, *audit_window)):
+                break
+            for i_start, i_end in owed:
+                self.state.add_interval(model.name, snapshot.version, i_start, i_end)
+            owed = []
+        if model.audits and not vetoable:
+            failures = self.evaluator.run_audits(snapshot)
+        if failures:
+            raise AuditError(f"audits failed on {model.name}: {failures}")
         return len(batches)

@@ -4106,7 +4106,7 @@ def framework_dag_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A multi-layer fan-out/fan-in DAG through one plan→apply→run: two
     source VIEWs feed a FULL join model, three per-segment VIEWs fan out
     from it, and a FULL summary fans them back in. Exercises the
-    level-parallel scheduler (layer 2's three segment models are
+    DAG scheduler's pool (layer 2's three segment models are
     dependency-free siblings), snapshot bulk-registration, and the
     parallel virtual-layer promotion over 7 models in one apply —
     the orchestration plane the round-13 scale profile

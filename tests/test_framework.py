@@ -1630,6 +1630,89 @@ DROP VIEW also_missing_post_xyz
     assert "no_such_col" in str(exc_info.value)
 
 
+def test_failure_skips_only_its_descendants(spark, tmp_path):
+    """A failing model costs only its descendants: an independent branch,
+    its child included, still builds and records, and the original
+    AuditError re-raises with a note naming the failed and skipped models."""
+    from sqlmesh_spark.core.context import Context
+    from sqlmesh_spark.core.plan import build_snapshots
+    from sqlmesh_spark.core.scheduler import AuditError
+
+    for db in ("sqlmesh__iso", "env_iso_views"):
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    ctx = Context(spark, state_dir=str(tmp_path / "state"))
+    ctx.add_model(
+        "MODEL (name iso.bad, kind FULL, audits (number_of_rows(threshold = 5)));\n"
+        "SELECT 1 AS a"
+    )
+    ctx.add_model("MODEL (name iso.bad_child, kind FULL);\nSELECT a FROM iso.bad")
+    ctx.add_model("MODEL (name iso.good, kind FULL);\nSELECT 1 AS a")
+    ctx.add_model("MODEL (name iso.good_child, kind FULL);\nSELECT a FROM iso.good")
+    with pytest.raises(AuditError, match="audits failed on iso.bad") as exc_info:
+        ctx.run(environment="env_iso", start="1995-01-01", end="1995-01-03")
+    snaps = build_snapshots(ctx.models)
+    for name in ("iso.good", "iso.good_child"):
+        assert spark.table(snaps[name].table_name).count() == 1
+        assert ctx.state.get_intervals(name, snaps[name].version)
+    assert not spark.catalog.tableExists(snaps["iso.bad_child"].table_name)
+    note = "\n".join(exc_info.value.__notes__)
+    assert "failed: ['iso.bad']; skipped descendants: ['iso.bad_child']" in note
+
+
+def test_batch_failure_keeps_earlier_batches_recorded(spark, tmp_path, monkeypatch):
+    """An unaudited model records each batch as soon as it is written: a
+    failure at batch 3 of 4 keeps batches 1-2, the rerun executes only the
+    other two, and the result equals a clean one-shot run."""
+    from sqlmesh_spark.core.context import Context
+    from sqlmesh_spark.core.plan import build_snapshots
+    from sqlmesh_spark.core.scheduler import SnapshotEvaluator
+
+    for db in ("sqlmesh__resume", "sqlmesh__resume_ref", "env_resume_views",
+               "env_resume_ref_views"):
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    hour = f"timestamp_seconds({to_epoch('1995-01-01')} + id * 3600)"
+    text = f"""
+MODEL (
+  name {{name}},
+  kind INCREMENTAL_BY_TIME_RANGE (time_column event_ts),
+  cron '@daily',
+  batch_size 1
+);
+SELECT id, {hour} AS event_ts FROM range(96)
+WHERE {hour} >= CAST(@start_ts AS TIMESTAMP) AND {hour} < CAST(@end_ts AS TIMESTAMP)
+"""
+    window = {"start": "1995-01-01", "end": "1995-01-05"}
+    ctx = Context(spark, state_dir=str(tmp_path / "state"))
+    ctx.add_model(text.format(name="resume.daily"))
+    evaluate = SnapshotEvaluator.evaluate
+    calls = []
+
+    def fail_third_batch(self, *args, **kwargs):
+        calls.append(args)
+        if len(calls) == 3:
+            raise RuntimeError("injected failure at batch 3")
+        return evaluate(self, *args, **kwargs)
+
+    monkeypatch.setattr(SnapshotEvaluator, "evaluate", fail_third_batch)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        ctx.run(environment="env_resume", **window)
+    monkeypatch.undo()
+    snap = build_snapshots(ctx.models)["resume.daily"]
+    assert len(ctx.state.get_intervals("resume.daily", snap.version)) == 2
+    assert ctx.run(environment="env_resume", **window) == {"resume.daily": 2}
+    days = [to_epoch(d) for d in ("1995-01-01", "1995-01-02", "1995-01-03", "1995-01-04")]
+    recorded = ctx.state.get_intervals("resume.daily", snap.version)
+    assert sorted(recorded) == [(d, d + DAY) for d in days]
+
+    ref = Context(spark, state_dir=str(tmp_path / "ref_state"))
+    ref.add_model(text.format(name="resume_ref.daily"))
+    ref.run(environment="env_resume_ref", **window)
+    ref_table = build_snapshots(ref.models)["resume_ref.daily"].table_name
+    rows = sorted(spark.table(snap.table_name).select("id", "event_ts").collect())
+    expected = sorted(spark.table(ref_table).select("id", "event_ts").collect())
+    assert rows == expected and len(rows) == 96
+
+
 def test_weekly_cron_boundary_anchored_to_dow():
     """Round-5 advice: epoch//7d floors to a Thursday grid; the weekly
     auto-restatement boundary must land on the cron's declared day."""

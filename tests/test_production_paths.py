@@ -179,3 +179,39 @@ def test_state_is_written_through_one_locked_path():
         "the only caller of StateStore._write (callers: "
         + ", ".join(sorted(writers)) + ")"
     )
+
+
+# Where processed intervals are recorded: the scheduler's one evaluate →
+# audit → record tail, and the empty backfill that marks a window done
+# without evaluating it.
+SCHEDULER_MODULE = "sqlmesh_spark/core/scheduler.py"
+INTERVAL_RECORDERS = {
+    f"{SCHEDULER_MODULE}:Scheduler._run_snapshot",
+    "sqlmesh_spark/core/plan.py:PlanEvaluator._empty_backfill",
+}
+
+
+def _calls_add_interval(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "add_interval"
+    )
+
+
+def test_intervals_are_recorded_in_one_place():
+    root = PACKAGE.parent
+    recorders: set[str] = set()
+    for path in sorted(PACKAGE.rglob("*.py")):
+        module = str(path.relative_to(root))
+        _sites(ast.parse(path.read_text(), filename=str(path)), module,
+               _calls_add_interval, recorders)
+    scheduler = ast.parse((root / SCHEDULER_MODULE).read_text())
+    calls = sum(_calls_add_interval(node) for node in ast.walk(scheduler))
+    assert recorders == INTERVAL_RECORDERS and calls == 1, (
+        "ROADMAP aim 2 keeps one path per decision: every snapshot kind "
+        "records its intervals through the scheduler's one evaluate → audit "
+        "→ record tail, so StateStore.add_interval has one call in "
+        f"core/scheduler.py (found {calls}) and no other caller but the "
+        "empty backfill (callers: " + ", ".join(sorted(recorders)) + ")"
+    )

@@ -46,6 +46,42 @@ WHERE o_orderdate >= CAST(@start_ts AS TIMESTAMP) AND o_orderdate < CAST(@end_ts
     assert executed["sig.daily"] == 0  # every interval gated out
 
 
+def test_signal_gates_wholesale_kinds(spark, sf_dir):
+    """A FULL model's signals gate its rebuild as they gate an incremental
+    model's batches: nothing is built or promoted until they admit."""
+    from sqlmesh_spark.core.context import Context
+    from sqlmesh_spark.core.plan import build_snapshots
+
+    ready = {"value": False}
+
+    @signal("sigf_ready")
+    def sigf_ready(batch):
+        return ready["value"]
+
+    for db in ("sqlmesh__sigf", "sigf_env_views"):
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    nation = f"parquet.`{sf_dir}/nation.parquet`"
+    ctx = Context(spark, state_dir=tempfile.mkdtemp())
+    ctx.add_model(
+        f"""
+MODEL (name sigf.m, kind FULL, cron '@daily', signals (sigf_ready));
+SELECT n_nationkey, n_name FROM {nation}
+"""
+    )
+    snap = build_snapshots(ctx.models)["sigf.m"]
+    executed = ctx.run(environment="sigf_env", start="1995-01-01", end="1995-01-05")
+    assert executed["sigf.m"] == 0
+    assert not spark.catalog.tableExists(snap.table_name)
+    assert not spark.catalog.tableExists("sigf_env_views.m")
+    assert ctx.state.get_environment_meta("sigf_env")["unpromoted"] == ["sigf.m"]
+
+    ready["value"] = True
+    executed = ctx.run(environment="sigf_env", start="1995-01-01", end="1995-01-05")
+    assert executed["sigf.m"] == 1
+    assert spark.table("sigf_env_views.m").count() == 25
+    assert ctx.state.get_environment_meta("sigf_env")["unpromoted"] == []
+
+
 def test_custom_materialization(spark, sf_dir):
     from sqlmesh_spark.core.context import Context
     from sqlmesh_spark.core.scheduler import register_custom_materialization
