@@ -7,9 +7,14 @@ parquet-backed managed tables:
 
 - ``insert_overwrite_by_time_partition`` — the core incremental op — uses
   dynamic partition overwrite (the same InsertOverwriteStrategy the
-  reference picks for Spark, spark.py:52), so only partitions present in
-  the incoming batch are replaced. At 100 TB this is what keeps a daily
+  reference picks for Spark, spark.py:52), so only the day partitions the
+  interval owns are replaced. At 100 TB this is what keeps a daily
   backfill from rewriting the table.
+- Every partition-scoped write (time-range, by-partition, copy-on-write
+  merge, SCD2 current slice) goes through ``_replace_partitions``: it
+  replaces the partitions the new rows produce and drops the partitions
+  the write owns but leaves empty, so an emptied interval or slice keeps
+  no old rows.
 - ``merge`` — no Delta in this environment, so upserts use the reference's
   own logical-merge fallback (mixins.py:35 LogicalMergeMixin →
   base.py:2910 _replace_by_key): anti-join out matched keys, append the
@@ -35,36 +40,32 @@ from dataclasses import dataclass, field
 from typing import Callable, Iterable, Mapping, Optional, Sequence, Union
 
 from pyspark.errors import SparkRuntimeException
-from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
-def _subday_touched_days(start: str, end: str) -> Optional[list[str]]:
-    """For a NON-day-aligned [start, end) interval, the 'yyyy-MM-dd' day
-    partitions it touches; None when both bounds sit on day boundaries
-    (the fast dynamic-overwrite path handles that)."""
+def _touched_days(start: str, end: str) -> tuple[list[str], bool]:
+    """The 'yyyy-MM-dd' days [start, end) touches, and whether both bounds
+    sit on day boundaries."""
     import datetime as dt
 
-    def parse(s: str) -> Optional[dt.datetime]:
-        for fmt in ("%Y-%m-%d %H:%M:%S", "%Y-%m-%d"):
-            try:
-                return dt.datetime.strptime(s, fmt)
-            except ValueError:
-                continue
-        return None
+    s, e = dt.datetime.fromisoformat(start), dt.datetime.fromisoformat(end)
+    aligned = s.time() == e.time() == dt.time()
+    if e <= s:
+        return [], aligned
+    first, last = s.date(), (e - dt.timedelta(microseconds=1)).date()
+    return [str(first + dt.timedelta(days=i)) for i in range((last - first).days + 1)], aligned
 
-    s_dt, e_dt = parse(start), parse(end)
-    if s_dt is None or e_dt is None or e_dt <= s_dt:
-        return None
-    midnight = dt.time(0, 0, 0)
-    if s_dt.time() == midnight and e_dt.time() == midnight:
-        return None
-    last = (e_dt - dt.timedelta(microseconds=1)).date()
-    out, d = [], s_dt.date()
-    while d <= last:
-        out.append(d.strftime("%Y-%m-%d"))
-        d += dt.timedelta(days=1)
-    return out
+
+def _sql_literal(v) -> str:
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, (int, float)):
+        return str(v)
+    return "'" + str(v).replace("'", "''") + "'"
+
 
 QueryOrDF = Union[str, DataFrame]
 
@@ -271,40 +272,42 @@ class SparkAdapter:
         end: str,
     ) -> None:
         """base.py:1580 — THE incremental op: replace exactly the rows of
-        [start, end) in time_column.
+        [start, end) in time_column; an interval whose batch is empty
+        keeps none of its old rows.
 
-        Partitioned tables (partition_by_time_column, kind.py:471): dynamic
-        partition overwrite replaces only partitions the batch touches — no
-        full rewrite. Unpartitioned tables fall back to the reference's
-        DELETE_INSERT strategy (shared.py:235-247): keep the complement of
-        the interval, union the batch, swap atomically — because a dynamic
-        overwrite on an unpartitioned table would clobber ALL history.
-        The incoming frame is defensively re-filtered to the interval, the
-        same WHERE the reference injects (base.py:1609).
+        A table partitioned on the derived day ``_ds``
+        (partition_by_time_column, kind.py:471) owns the day partitions
+        [start, end) touches: ``_replace_partitions`` overwrites the days
+        the batch fills and drops the owned days it leaves empty — no full
+        rewrite. A table partitioned on its own columns replaces only the
+        partitions the batch produces. Unpartitioned tables fall back to
+        the reference's DELETE_INSERT strategy (shared.py:235-247): keep
+        the complement of the interval, union the batch, swap atomically —
+        because a dynamic overwrite on an unpartitioned table would
+        clobber ALL history. The incoming frame is defensively re-filtered
+        to the interval, the same WHERE the reference injects
+        (base.py:1609).
         """
-        df = self._df(query_or_df)
         in_interval = (F.col(time_column) >= F.lit(start).cast("timestamp")) & (
             F.col(time_column) < F.lit(end).cast("timestamp")
         )
-        df = df.filter(in_interval)
+        df = self._df(query_or_df).filter(in_interval)
         layout = self.table_layout(table)
-        if layout.partitioned_by:
-            days = _subday_touched_days(start, end)
-            if days is not None and "_ds" in layout.partitioned_by:
-                # Sub-daily interval inside day partitions: a plain dynamic
-                # overwrite would clobber sibling sub-day batches in the
-                # same day partition. Partition-scoped DELETE_INSERT: read
-                # ONLY the touched day partitions (pruned scan), drop the
-                # interval, union the batch, dynamic-overwrite those
-                # partitions — cost is O(touched days), never O(table).
+        if "_ds" in layout.partitioned_by:
+            days, aligned = _touched_days(start, end)
+            if not aligned:
+                # Sub-daily interval inside day partitions: the touched days
+                # also hold sibling sub-day batches. Partition-scoped
+                # DELETE_INSERT: read ONLY the touched day partitions
+                # (pruned scan) and keep their rows outside the interval —
+                # cost is O(touched days), never O(table).
                 kept = self.spark.table(table).filter(
                     F.col("_ds").isin(days) & ~in_interval
                 )
-                self._insert_overwrite_partitions(
-                    table, kept.unionByName(self._project_to_table(df, table))
-                )
-            else:
-                self._insert_overwrite_partitions(table, df)
+                df = kept.unionByName(self._project_to_table(df, table))
+            self._replace_partitions(table, df, [{"_ds": d} for d in days])
+        elif layout.partitioned_by:
+            self._replace_partitions(table, df)
         else:
             kept = self.spark.table(table).filter(~in_interval)
             self._atomic_rewrite(
@@ -336,12 +339,36 @@ class SparkAdapter:
     def insert_overwrite_by_partition(self, table: str, query_or_df: QueryOrDF) -> None:
         """base.py:1551 — INCREMENTAL_BY_PARTITION: replace whole partitions
         present in the incoming data."""
-        self._insert_overwrite_partitions(table, self._df(query_or_df))
+        self._replace_partitions(table, self._df(query_or_df))
 
-    def _insert_overwrite_partitions(self, table: str, df: DataFrame) -> None:
-        # With partitionOverwriteMode=dynamic (set in __init__), an
-        # overwrite insertInto replaces only the partitions present in df.
-        self._project_to_table(df, table).write.insertInto(table, overwrite=True)
+    def _replace_partitions(
+        self, table: str, df: DataFrame, owned: Sequence[Mapping[str, object]] = ()
+    ) -> None:
+        """The one partition overwrite: replace the partitions ``df``
+        produces, then drop the ``owned`` partitions (each a partition
+        column → value spec) that ``df`` left empty, in one DDL statement
+        and only when one needs dropping. With partitionOverwriteMode=
+        dynamic (set in __init__) the overwrite cannot write an empty
+        partition, so without the drop an emptied partition would keep its
+        old rows. Which partitions ``df`` produced comes from an
+        Observation on the same write: no second job."""
+        df = self._project_to_table(df, table)
+        seen = Observation()
+        if owned:
+            df = df.observe(seen, F.collect_set(F.struct(*owned[0])).alias("produced"))
+        df.write.insertInto(table, overwrite=True)
+        produced = {tuple(r) for r in seen.get["produced"]} if owned else set()
+        empty = [spec for spec in owned if tuple(spec.values()) not in produced]
+        if empty:
+            self.spark.sql(
+                f"ALTER TABLE {table} DROP IF EXISTS "
+                + ", ".join(
+                    "PARTITION ("
+                    + ", ".join(f"{c} = {_sql_literal(v)}" for c, v in spec.items())
+                    + ")"
+                    for spec in empty
+                )
+            )
 
     def delete_from(self, table: str, where: str) -> None:
         """base.py:1497 — parquet path: rewrite keeping the complement."""

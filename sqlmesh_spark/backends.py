@@ -84,14 +84,10 @@ class TableFormatBackend:
            join, read-only probe) ∪ partitions incoming rows land in;
         2. within touched partitions only: anti-join out matched keys
            (honoring ``merge_filter``'s frozen rows), union the source;
-        3. dynamic partition overwrite — untouched partitions' files are
-           never read for rewrite, never rewritten.
-
-        A touched partition whose rows are ALL claimed by the source and
-        whose replacement rows land elsewhere would vanish from the
-        overwrite output (dynamic overwrite can't write an empty
-        partition), silently leaving stale files — those partitions are
-        dropped explicitly.
+        3. replace the touched partitions (adapter._replace_partitions) —
+           untouched partitions' files are never read for rewrite, never
+           rewritten, and a touched partition the merge empties (every row
+           claimed by a source row landing elsewhere) is dropped.
 
         Unpartitioned targets keep the reference's logical-merge full
         rewrite (anti join + union + atomic swap).
@@ -130,24 +126,13 @@ class TableFormatBackend:
             )
             self._merge_full_rewrite(target, src, keys, merge_filter, layout)
             return
-        touched = [tuple(r) for r in touched_rows]
+        touched = [r.asDict() for r in touched_rows]
         if not touched:
             return
-        in_touched = self._partition_predicate(part_cols, touched)
-        out = self._merged(tgt.filter(in_touched), src, keys, merge_filter)
-        adapter._insert_overwrite_partitions(target, out)
-        # Drop touched partitions that ended up empty (stale-file guard).
-        # This collect is bounded by the SAME MAX_COW_PARTITIONS cap as the
-        # touched-partition list above: `out` only contains rows from
-        # partitions in `touched` (plus frozen rows from those partitions),
-        # so its distinct partition values are a subset of the capped list.
-        produced = {tuple(r) for r in out.select(*part_cols).distinct().collect()}
-        for values in touched:
-            if values not in produced:
-                spec = ", ".join(
-                    f"{c} = {self._sql_literal(v)}" for c, v in zip(part_cols, values)
-                )
-                self.spark.sql(f"ALTER TABLE {target} DROP IF EXISTS PARTITION ({spec})")
+        out = self._merged(
+            tgt.filter(self._partition_predicate(touched)), src, keys, merge_filter
+        )
+        adapter._replace_partitions(target, out, touched)
 
     def _merge_full_rewrite(
         self,
@@ -182,11 +167,11 @@ class TableFormatBackend:
         return out
 
     @staticmethod
-    def _partition_predicate(part_cols: Sequence[str], values: list[tuple]):
+    def _partition_predicate(specs: list[dict]):
         preds = None
-        for row in values:
+        for spec in specs:
             p = None
-            for c, v in zip(part_cols, row):
+            for c, v in spec.items():
                 cond = F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
                 p = cond if p is None else (p & cond)
             preds = p if preds is None else (preds | p)
@@ -214,16 +199,6 @@ class TableFormatBackend:
         for idx in range(0, len(parts), 2):
             parts[idx] = pattern.sub(r"__MERGE_TARGET__.\1", parts[idx])
         return "".join(parts)
-
-    @staticmethod
-    def _sql_literal(v) -> str:
-        if v is None:
-            return "NULL"
-        if isinstance(v, bool):
-            return "TRUE" if v else "FALSE"
-        if isinstance(v, (int, float)):
-            return str(v)
-        return "'" + str(v).replace("'", "''") + "'"
 
     # -- clone (base.py:1059; Delta SHALLOW CLONE) --------------------------
 
@@ -265,7 +240,8 @@ class TableFormatBackend:
           the _is_current=0 partition (closed history is APPEND-ONLY:
           its existing files are never read for rewrite, never touched);
         - rows with NULL valid_to are the complete next current slice →
-          dynamic-overwrite the _is_current=1 partition.
+          replace the _is_current=1 partition, which the apply owns: with
+          every key deleted the slice is dropped.
 
         Per-apply cost is O(|current| + |batch|), independent of history
         size — the copy-on-write discipline a Delta/Iceberg MERGE gets
@@ -278,14 +254,7 @@ class TableFormatBackend:
         closed_now = changes.filter(~cur).withColumn(self.CURRENT_COL, F.lit(0))
         new_current = changes.filter(cur).withColumn(self.CURRENT_COL, F.lit(1))
         adapter.insert_append(table, closed_now)
-        if not new_current.isEmpty():
-            adapter._insert_overwrite_partitions(table, new_current)
-        else:
-            # every key deleted: dynamic overwrite can't write an empty
-            # partition — drop the current slice explicitly
-            self.spark.sql(
-                f"ALTER TABLE {table} DROP IF EXISTS PARTITION ({self.CURRENT_COL} = 1)"
-            )
+        adapter._replace_partitions(table, new_current, [{self.CURRENT_COL: 1}])
 
 
 class DeltaBackend(TableFormatBackend):

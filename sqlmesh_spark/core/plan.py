@@ -277,6 +277,7 @@ class PlanEvaluator:
             # applying the parent would then see the child's fingerprint
             # unchanged and never rebuild it (permanently stale).
             models = self._select_models(models, env_state, select_models)
+        self._check_view_names(models)
         snapshots = build_snapshots(models)
         self._warn_unpartitioned_merges(models)
         diff = context_diff(snapshots, env_state)
@@ -322,6 +323,22 @@ class PlanEvaluator:
             ignore_cron=ignore_cron,
             pending_migrations=pending_migrations,
         )
+
+    @staticmethod
+    def _check_view_names(models: Mapping[str, Model]) -> None:
+        """An environment view is named by the last part of its model's
+        name (``<env>_views.<view_name>``), so two models that share it
+        would promote to one view: refuse the plan before any write."""
+        owners: dict[str, str] = {}
+        for name, model in sorted(models.items()):
+            if model.kind.value in ("EMBEDDED", "EXTERNAL"):
+                continue
+            other = owners.setdefault(model.view_name.lower(), name)
+            if other != name:
+                raise PlanError(
+                    f"models {other} and {name} would both promote to the "
+                    f"environment view {model.view_name.lower()}; rename one"
+                )
 
     def _warn_unpartitioned_merges(self, models: Mapping[str, Model]) -> None:
         """Plan-time layout warnings, once per plan. A MERGE/SCD2 model
@@ -584,7 +601,7 @@ class PlanEvaluator:
                 cols = self._query_schema(snap, relations, plan.snapshots)
                 if cols is None:
                     continue
-                self.adapter.create_schema(snap.physical_schema)
+                evaluator.create_schema(snap.physical_schema)
                 evaluator.create_table(snap, cols)
             if model.kind.value.startswith("INCREMENTAL"):
                 self.state.add_interval(
@@ -852,12 +869,14 @@ class PlanEvaluator:
                         f"ALTER TABLE {tbl} ALTER COLUMN {col} COMMENT '{c}'"
                     )
             env_view = f"{views}.{snap.model.view_name}"
-            # The virtual layer exposes the MODEL's schema exactly: engine-
-            # managed physical columns (the derived `_ds` time partition,
-            # the SCD2-COW `_is_current` partition — always `_`-prefixed)
+            # The virtual layer exposes the MODEL's schema exactly: the
+            # engine-managed columns the layout partitions on (the derived
+            # `_ds` time partition, the SCD2-COW `_is_current` partition)
             # stay behind the view, matching the reference where
             # Iceberg/Delta partitioning is table metadata, not columns.
-            cols = [c for c in self.adapter.columns(snap.table_name) if not c.startswith("_")]
+            layout = snap.model.layout
+            hidden = set(layout.managed_columns) & set(layout.partitioned_by)
+            cols = [c for c in self.adapter.columns(snap.table_name) if c not in hidden]
             self.adapter.create_view(
                 env_view, f"SELECT {', '.join(cols)} FROM {snap.table_name}"
             )

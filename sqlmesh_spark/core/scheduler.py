@@ -109,6 +109,17 @@ class SnapshotEvaluator:
         # reference plan/run arg execution_time: pins @execution_ts/_ds
         # (defaults to the interval end) — reproducible re-renders.
         self.execution_time = execution_time
+        self._schemas: set[str] = set()
+        self._schemas_lock = _threading.Lock()
+
+    def create_schema(self, schema: str) -> None:
+        """Create a physical schema at most once per evaluator — one per
+        run — so first builds running concurrently share one CREATE
+        DATABASE instead of each racing its own."""
+        with self._schemas_lock:
+            if schema not in self._schemas:
+                self.adapter.create_schema(schema)
+                self._schemas.add(schema)
 
     def render(
         self,
@@ -179,7 +190,7 @@ class SnapshotEvaluator:
         model = snapshot.model
         if is_first_insert:
             # The physical schema can only be missing when the table may be.
-            self.adapter.create_schema(snapshot.physical_schema)
+            self.create_schema(snapshot.physical_schema)
         # Pre-statements (evaluator runs them in the same transaction
         # scope as the evaluation — definition.py:156 pre_statements_).
         self._run_statements(model.pre_statements, snapshot, start, end, table_mapping)
@@ -399,7 +410,8 @@ class SnapshotEvaluator:
         # engine-managed _is_current flag, closed history is APPEND-ONLY,
         # and each apply rewrites O(|current| + |batch|), never O(history).
         # The _is_current column stays physical-only: the virtual layer
-        # view hides `_`-prefixed engine columns (plan.py promote).
+        # view hides the layout's engine-managed partition columns (plan.py
+        # promote).
         if model.partition_by_current:
             changes = self.spark.sql(scd_type_2_query(changes_only=True, **kwargs))
             adapter.backend.scd2_apply_cow(table, changes)

@@ -549,3 +549,57 @@ def test_merge_filter_alias_accepted_by_parquet_path(spark):
     rows = {r.id: r.v for r in spark.table(t).filter("ds = '2024-01-02'").collect()}
     assert rows[2] == "B"
     a.drop_table(t)
+
+
+def _jobs(spark, write) -> int:
+    """Spark jobs ``write`` launches, counted by job group with AQE off,
+    so each action is its own jobs and no re-plan adds any."""
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup(group, "count jobs")
+    try:
+        write()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cow_writes_read_the_partitions_they_produced_from_the_write(spark):
+    """A copy-on-write merge and an SCD2 apply learn which partitions they
+    wrote from the write itself (an Observation), not from a job that
+    evaluates the new rows once more: the merge runs its touched-partition
+    collect and one write, the SCD2 apply one append and one overwrite."""
+    a = SparkAdapter(spark)
+    t = _tbl()
+    a.ctas(
+        t,
+        spark.createDataFrame(
+            [(1, "a", "2024-01-01"), (2, "b", "2024-01-02"), (4, "d", "2024-01-03")],
+            "id int, v string, ds string",
+        ),
+        TableLayout(partitioned_by=("ds",)),
+    )
+    src = spark.createDataFrame(
+        [(4, "D2", "2024-01-05"), (2, "B", "2024-01-02")], "id int, v string, ds string"
+    )
+    assert _jobs(spark, lambda: a.merge(t, src, unique_key=("id",))) == 5
+    assert sorted(spark.table(t).collect()) == [
+        (1, "a", "2024-01-01"), (2, "B", "2024-01-02"), (4, "D2", "2024-01-05"),
+    ]
+    a.drop_table(t)
+
+    a.create_table(
+        t,
+        {"id": "INT", "valid_to": "TIMESTAMP", "_is_current": "INT"},
+        TableLayout(partitioned_by=("_is_current",)),
+    )
+    changes = spark.createDataFrame([(1, None), (2, None)], "id int, valid_to timestamp")
+    assert _jobs(spark, lambda: a.backend.scd2_apply_cow(t, changes)) == 2
+    assert spark.table(t).filter("_is_current = 1").count() == 2
+    # every key deleted: the owned current slice is dropped
+    a.backend.scd2_apply_cow(t, changes.limit(0))
+    assert spark.table(t).count() == 0
+    a.drop_table(t)

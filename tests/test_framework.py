@@ -2184,3 +2184,90 @@ def test_from_first_model_query_round11():
         "VALUES (1, 'a'), (2, 'b')"
     )
     assert m2.query.startswith("VALUES")
+
+
+def test_env_view_hides_only_the_managed_partition_columns(spark, tmp_path):
+    """An environment view hides exactly the engine-managed columns its
+    table's layout partitions on: a model's own `_`-prefixed columns stay
+    visible, also when every column of the model starts with `_`."""
+    from sqlmesh_spark.core.context import Context
+
+    for db in ("sqlmesh__uv", "env_uv_views"):
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    ctx = Context(spark, state_dir=str(tmp_path / "state"))
+    ctx.add_model("MODEL (name uv.mixed, kind FULL);\nSELECT 1 AS _row_id, 2 AS y")
+    ctx.add_model("MODEL (name uv.hidden_only, kind FULL);\nSELECT 1 AS _a, 2 AS _b")
+    ctx.add_model(
+        "MODEL (name uv.daily, kind INCREMENTAL_BY_TIME_RANGE (time_column ts));\n"
+        "SELECT CAST(@start_ts AS TIMESTAMP) AS ts, 1 AS _n"
+    )
+    ctx.run(environment="env_uv", start="1995-01-01", end="1995-01-02")
+    views = {v: spark.table(f"env_uv_views.{v}").columns for v in ("mixed", "hidden_only", "daily")}
+    assert views == {"mixed": ["_row_id", "y"], "hidden_only": ["_a", "_b"], "daily": ["ts", "_n"]}
+    for db in ("sqlmesh__uv", "env_uv_views"):
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
+def test_models_sharing_an_env_view_are_refused_at_plan_time(spark, tmp_path):
+    """raw.orders and sales.orders would both promote to
+    <env>_views.orders: the plan names both and nothing is written."""
+    from sqlmesh_spark.core.context import Context
+    from sqlmesh_spark.core.plan import PlanError
+
+    for db in ("sqlmesh__raw", "sqlmesh__sales", "env_dup_views"):
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    ctx = Context(spark, state_dir=str(tmp_path / "state"))
+    ctx.add_model("MODEL (name raw.orders, kind FULL);\nSELECT 1 AS id")
+    ctx.add_model("MODEL (name sales.orders, kind FULL);\nSELECT id FROM raw.orders")
+    with pytest.raises(PlanError, match="raw.orders and sales.orders"):
+        ctx.run(environment="env_dup", start="1995-01-01", end="1995-01-02")
+    assert not any(
+        spark.catalog.databaseExists(db)
+        for db in ("sqlmesh__raw", "sqlmesh__sales", "env_dup_views")
+    )
+    assert not ctx.state.get_environment("env_dup")
+
+
+def test_whole_table_rewrites_leave_no_staging_table(spark, tmp_path):
+    """Every whole-table rewrite stages to a `<table>__sqlmesh_tmp_<hex>`
+    table and renames it over the target; a second run rebuilds a FULL
+    model, merges into an unpartitioned unique-key model and replaces an
+    SCD2 table, a WAP branch is published, and no staging table is left
+    in the catalog."""
+    from sqlmesh_spark.adapter import SparkAdapter
+    from sqlmesh_spark.core.context import Context
+    from sqlmesh_spark.core.plan import build_snapshots
+
+    schemas = ("sqlmesh__tmpchk", "env_tmpchk_views")
+    for db in schemas:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    ctx = Context(spark, state_dir=str(tmp_path / "state"))
+    ctx.add_model("MODEL (name tmpchk.full, kind FULL);\nSELECT 1 AS id, @end_ds AS v")
+    ctx.add_model(
+        "MODEL (name tmpchk.keyed, kind INCREMENTAL_BY_UNIQUE_KEY (unique_key id));\n"
+        "SELECT 1 AS id, @end_ds AS v"
+    )
+    ctx.add_model(
+        "MODEL (name tmpchk.dim, kind SCD_TYPE_2_BY_TIME (unique_key id));\n"
+        "SELECT 1 AS id, @end_ds AS v, CAST(@end_ds AS TIMESTAMP) AS updated_at"
+    )
+    for end in ("1995-01-02", "1995-01-03"):
+        ctx.run(environment="env_tmpchk", start="1995-01-01", end=end)
+    snaps = build_snapshots(ctx.models)
+    assert {r.v for r in spark.table(snaps["tmpchk.full"].table_name).collect()} == {"1995-01-03"}
+    assert spark.table(snaps["tmpchk.dim"].table_name).count() == 2
+    adapter = SparkAdapter(spark)
+    keyed = snaps["tmpchk.keyed"].table_name
+    staging = adapter.wap_prepare(keyed)
+    adapter.insert_append(staging, spark.createDataFrame([(2, "x")], "id int, v string"))
+    adapter.wap_publish(keyed, staging)
+    assert spark.table(keyed).count() == 2
+    leaked = [
+        f"{db}.{t.name}"
+        for db in schemas
+        for t in spark.catalog.listTables(db)
+        if "__sqlmesh_tmp_" in t.name
+    ]
+    assert not leaked
+    for db in schemas:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")

@@ -99,6 +99,12 @@ def test_noop_rerun_runs_no_ddl_jobs_or_renders(spark, ctx, calls):
     assert ctx.state._read("intervals") == intervals_before
 
 
+def test_first_build_creates_each_schema_once(calls, ctx):
+    """The first run's three models share one physical schema: it is
+    created once, and the environment's view schema once."""
+    assert calls["create_schema"] == 2
+
+
 def test_full_model_reruns_on_longer_window_and_restatement(spark, sf_dir, ctx):
     assert _total(spark) == _orders(spark, sf_dir, START, END)
     longer = "1995-01-05"

@@ -12,6 +12,7 @@ a ``@register(...)`` decorator.
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 PACKAGE = Path(__file__).resolve().parents[1] / "sqlmesh_spark"
@@ -214,4 +215,45 @@ def test_intervals_are_recorded_in_one_place():
         "→ record tail, so StateStore.add_interval has one call in "
         f"core/scheduler.py (found {calls}) and no other caller but the "
         "empty backfill (callers: " + ", ".join(sorted(recorders)) + ")"
+    )
+
+
+# The one partition overwrite: every partition-scoped write replaces the
+# partitions it owns through SparkAdapter._replace_partitions.
+PARTITION_WRITER = "sqlmesh_spark/adapter.py:SparkAdapter._replace_partitions"
+_DROPS_PARTITION = re.compile(r"\bDROP\b.*\bPARTITION\b", re.DOTALL)
+
+
+def _overwrites_partitions(node: ast.AST) -> bool:
+    """An ``insertInto(..., overwrite=True)``, or a ``.sql(...)`` call whose
+    statement text drops a partition."""
+    if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+        return False
+    if node.func.attr == "insertInto":
+        overwrite = [k.value for k in node.keywords if k.arg == "overwrite"]
+        overwrite += node.args[1:2]
+        return any(isinstance(v, ast.Constant) and v.value is True for v in overwrite)
+    if node.func.attr == "sql":
+        text = " ".join(
+            n.value
+            for arg in node.args
+            for n in ast.walk(arg)
+            if isinstance(n, ast.Constant) and isinstance(n.value, str)
+        )
+        return bool(_DROPS_PARTITION.search(text))
+    return False
+
+
+def test_partitions_are_overwritten_in_one_function():
+    root = PACKAGE.parent
+    writers: set[str] = set()
+    for path in sorted(PACKAGE.rglob("*.py")):
+        module = str(path.relative_to(root))
+        _sites(ast.parse(path.read_text(), filename=str(path)), module,
+               _overwrites_partitions, writers)
+    assert writers == {PARTITION_WRITER}, (
+        "ROADMAP aim 2 keeps one production path per operator: a dynamic "
+        "partition overwrite and a partition drop happen only in "
+        f"{PARTITION_WRITER}, which drops the partitions a write owns but "
+        "leaves empty (found in: " + ", ".join(sorted(writers)) + ")"
     )

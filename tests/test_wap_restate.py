@@ -1,9 +1,10 @@
-"""WAP, unpartitioned delete-insert fallback, restatements."""
+"""WAP, the interval overwrite on every layout, restatements."""
 
 from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from sqlmesh_spark.adapter import SparkAdapter
@@ -63,25 +64,47 @@ def test_wap_abandon_on_audit_failure(spark):
     adapter.drop_table("default.t_wap2")
 
 
-def test_unpartitioned_insert_overwrite_falls_back_to_delete_insert(spark):
-    adapter = SparkAdapter(spark)
-    spark.sql("DROP TABLE IF EXISTS default.t_di")
-    base = spark.createDataFrame(
-        [(1, "2024-01-01 00:00:00"), (2, "2024-01-02 00:00:00"), (3, "2024-01-03 00:00:00")],
-        "id int, ts string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    adapter.ctas("default.t_di", base)  # NOT partitioned
+# Batch shapes: (interval start, interval end, batch rows, ids left).
+# The table holds id 1/2/3 at midnight of 2024-01-01/02/03.
+SHAPES = {
+    "replacing_row": ("2024-01-02", "2024-01-03", [(99, "2024-01-02 12:00:00")], [1, 3, 99]),
+    "empty_batch": ("2024-01-02", "2024-01-03", [], [1, 3]),
+    "batch_covers_one_of_two_days": (
+        "2024-01-02", "2024-01-04", [(99, "2024-01-02 12:00:00")], [1, 99],
+    ),
+    "subday_interval_empties_its_day": (
+        "2024-01-02 00:00:00", "2024-01-02 12:00:00", [], [1, 3],
+    ),
+    "subday_interval_keeps_its_day_siblings": (
+        "2024-01-02 12:00:00", "2024-01-03 00:00:00", [], [1, 2, 3],
+    ),
+}
 
-    batch = spark.createDataFrame([(99, "2024-01-02 12:00:00")], "id int, ts string").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    adapter.insert_overwrite_by_time_partition(
-        "default.t_di", batch, "ts", "2024-01-02 00:00:00", "2024-01-03 00:00:00"
-    )
-    got = sorted(r.id for r in spark.table("default.t_di").collect())
-    # id=2 (inside interval) replaced by 99; 1 and 3 survive.
-    assert got == [1, 3, 99]
-    adapter.drop_table("default.t_di")
+
+@pytest.mark.parametrize("shape", SHAPES)
+@pytest.mark.parametrize("partitioned", [False, True], ids=["unpartitioned", "_ds"])
+def test_insert_overwrite_by_time_leaves_exactly_the_interval_batch(spark, partitioned, shape):
+    """The interval's old rows go and its batch lands, whatever the batch
+    covers: on an unpartitioned table by the delete-insert fallback, on a
+    ``_ds``-partitioned one by replacing the day partitions the interval
+    owns, which drops the days the batch leaves empty."""
+    from sqlmesh_spark.adapter import TableLayout
+
+    start, end, rows, expected = SHAPES[shape]
+    adapter = SparkAdapter(spark)
+    table = "default.t_di"
+    adapter.drop_table(table)
+
+    def frame(data):
+        df = spark.createDataFrame(data, "id int, ts string")
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        return df.withColumn("_ds", F.date_format("ts", "yyyy-MM-dd")) if partitioned else df
+
+    base = [(1, "2024-01-01 00:00:00"), (2, "2024-01-02 00:00:00"), (3, "2024-01-03 00:00:00")]
+    adapter.ctas(table, frame(base), TableLayout(("_ds",) if partitioned else ()))
+    adapter.insert_overwrite_by_time_partition(table, frame(rows), "ts", start, end)
+    assert sorted(r.id for r in spark.table(table).collect()) == expected
+    adapter.drop_table(table)
 
 
 def test_restatement_recomputes_window_and_downstream(spark, sf_dir):
