@@ -109,13 +109,15 @@ class TableFormatBackend:
             .distinct()
         )
         touched_src = src.select(*part_cols).distinct()
-        # limit(cap+1) bounds the driver-side list BEFORE collecting — the
-        # executors never ship more than cap+1 partition-value rows.
+        # limit(cap+1) bounds the driver-side list before collecting, and
+        # under an aggregate it runs as one job, not a root limit's
+        # incremental take over the distinct's shuffle partitions.
         touched_rows = (
             touched_tgt.union(touched_src)
             .distinct()
             .limit(MAX_COW_PARTITIONS + 1)
-            .collect()
+            .agg(F.collect_list(F.struct(*part_cols)))
+            .collect()[0][0]
         )
         if len(touched_rows) > MAX_COW_PARTITIONS:
             _log.warning(

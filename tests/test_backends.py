@@ -585,7 +585,7 @@ def test_cow_writes_read_the_partitions_they_produced_from_the_write(spark):
     src = spark.createDataFrame(
         [(4, "D2", "2024-01-05"), (2, "B", "2024-01-02")], "id int, v string, ds string"
     )
-    assert _jobs(spark, lambda: a.merge(t, src, unique_key=("id",))) == 5
+    assert _jobs(spark, lambda: a.merge(t, src, unique_key=("id",))) == 3
     assert sorted(spark.table(t).collect()) == [
         (1, "a", "2024-01-01"), (2, "B", "2024-01-02"), (4, "D2", "2024-01-05"),
     ]

@@ -356,20 +356,18 @@ def test_config_variables_render_in_models(project, capsys):
 
 def test_state_migrate_and_rollback(tmp_path):
     """migrate() is a no-op at the current schema, runs hooks + backup when
-    behind, and rollback() restores the pre-migration files byte-for-byte."""
-    import json
-    import os
-
+    behind, and rollback() restores the pre-migration data and version."""
     from sqlmesh_spark.core.state import StateStore
 
     s = StateStore(str(tmp_path / "state"))
     s.put_environment("prod", {"m": "v1"})
     assert s.migrate() is False  # already current
 
-    # Simulate an old store: version 0 on disk + a hook for version 1.
-    meta_file = s._file("meta")
-    with open(meta_file, "w") as f:
-        json.dump({"schema_version": 0}, f)
+    # Simulate an old store: version 0 stored + a hook for version 1.
+    blob = s.export_state()
+    blob["tables"]["meta"] = {"schema_version": 0}
+    s.import_state(blob)
+    assert s.current_version() == 0
     called = []
     StateStore._MIGRATIONS[1] = lambda store: called.append(True)
     try:

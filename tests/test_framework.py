@@ -265,7 +265,9 @@ def test_state_store_concurrent_add_interval(tmp_path):
         sys.setswitchinterval(switch)
     got = sorted(store.get_intervals("m", "v"))
     assert got == [(i, i + 1) for i in range(64)]
-    assert (store.writes, store.reads) == (64, 65)  # the store counts its own I/O
+    # the store counts its own traffic: one transaction per add_interval,
+    # and the one read is get_intervals
+    assert (store.writes, store.reads) == (64, 1)
 
     path, workers, calls = str(tmp_path / "shared"), 3, 300
     os.makedirs(path)
@@ -291,6 +293,66 @@ def test_state_store_concurrent_add_interval(tmp_path):
     assert set(shared.get_environments()) == {
         f"w{w}_{i}" for w in range(workers) for i in range(1, calls, 2)
     }
+
+
+def test_state_store_opens_a_json_file_directory_once(tmp_path):
+    """A state directory written before the SQLite store (one JSON file
+    per table) is imported on first open, and only then."""
+    import json
+
+    from sqlmesh_spark.core.state import StateStore
+
+    tables = {
+        "snapshots": {"m@v1": {"kind": "FULL", "fingerprint": "f1"}},
+        "intervals": {"m@v1": [[0, 86400], [86400, 172800]]},
+        "environments": {"prod": {"m": "v1"}},
+        "environment_meta": {"prod": {"expiration_ts": 5, "unpromoted": []}},
+        "meta": {"schema_version": 1},
+    }
+    path = tmp_path / "state"
+    path.mkdir()
+    for name, data in tables.items():
+        (path / f"_{name}.json").write_text(json.dumps(data, indent=1))
+    want = {"schema_version": 1, "tables": tables}
+    store = StateStore(str(path))
+    assert store.export_state() == want
+    assert store.get_intervals("m", "v1") == [(0, 86400), (86400, 172800)]
+    store.add_interval("m", "v1", 172800, 259200)
+    reopened = StateStore(str(path))
+    assert reopened.writes == 0  # nothing imported again
+    assert reopened.get_intervals("m", "v1")[-1] == (172800, 259200)
+    assert len(reopened.get_intervals("m", "v1")) == 3
+
+
+_STATE_CRASH = """
+import os, sys
+from sqlmesh_spark.core.state import StateStore
+store = StateStore(sys.argv[1])
+with store._write() as db:
+    db.execute("INSERT INTO intervals VALUES ('m@v', 0, 1)")
+    os._exit(1)
+"""
+
+
+def test_state_store_crash_inside_a_transaction_leaves_no_row_or_lock(tmp_path):
+    """A writer process that dies before COMMIT leaves neither its row nor
+    the writer lock: another process writes promptly afterwards."""
+    import os
+    import subprocess
+    import sys
+    import time
+
+    from sqlmesh_spark.core.state import StateStore
+
+    path = str(tmp_path / "state")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    crash = subprocess.run([sys.executable, "-c", _STATE_CRASH, path], cwd=repo)
+    assert crash.returncode == 1
+    assert StateStore(path).get_intervals("m", "v") == []
+    began = time.monotonic()
+    StateStore(path).add_interval("m", "v", 5, 6)  # a held lock would wait 60 s
+    assert time.monotonic() - began < 5
+    assert StateStore(path).get_intervals("m", "v") == [(5, 6)]
 
 
 def test_state_store_bulk_put_snapshots(tmp_path):

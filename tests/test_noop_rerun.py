@@ -92,11 +92,11 @@ def test_noop_rerun_runs_no_ddl_jobs_or_renders(spark, ctx, calls):
     # so it can list the fixture's last jobs late.
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     jobs_before = dag.numTotalJobs()
-    intervals_before = ctx.state._read("intervals")
+    intervals_before = ctx.state.export_state()["tables"].get("intervals")
     assert ctx.run(ENV, START, END) == {"nr.stg": 0, "nr.daily": 0, "nr.total": 0}
     assert not calls, dict(calls)
     assert dag.numTotalJobs() == jobs_before
-    assert ctx.state._read("intervals") == intervals_before
+    assert ctx.state.export_state()["tables"].get("intervals") == intervals_before
 
 
 def test_first_build_creates_each_schema_once(calls, ctx):

@@ -147,17 +147,44 @@ def test_table_layout_is_decided_in_one_function():
     )
 
 
-# The state store's private file access: every other module goes through
-# its public methods, and every mutation through its one locked
-# read-modify-write (StateStore._update).
+# The state store's one database connection: every other module goes
+# through StateStore's public methods, and inside core/state.py every
+# SELECT takes _read and every mutation _write, the one BEGIN IMMEDIATE
+# transaction.
 STATE_MODULE = "sqlmesh_spark/core/state.py"
-STATE_FILE_IO = ("_read", "_write")
+STATE_PRIVATE = ("_read", "_write", "_db")
+STATE_DB_USERS = {
+    f"{STATE_MODULE}:StateStore.{fn}" for fn in ("__init__", "_read", "_write")
+}
 
 
 def _touches(names):
     """Matches any use of an attribute in ``names``: a call, or a
     reference taken to patch or pass it on."""
     return lambda node: isinstance(node, ast.Attribute) and node.attr in names
+
+
+def _imports_sqlite3(node: ast.AST) -> bool:
+    if isinstance(node, ast.Import):
+        return any(alias.name.split(".")[0] == "sqlite3" for alias in node.names)
+    return isinstance(node, ast.ImportFrom) and (node.module or "").startswith("sqlite3")
+
+
+def _uses_own_db(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Attribute)
+        and node.attr == "_db"
+        and isinstance(node.value, ast.Name)
+        and node.value.id == "self"
+    )
+
+
+def _begins(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and node.value.lstrip().upper().startswith("BEGIN")
+    )
 
 
 def test_state_is_written_through_one_locked_path():
@@ -167,18 +194,22 @@ def test_state_is_written_through_one_locked_path():
         module = str(path.relative_to(root))
         if module != STATE_MODULE:
             tree = ast.parse(path.read_text(), filename=str(path))
-            _sites(tree, module, _touches(STATE_FILE_IO), outside)
-    writers: set[str] = set()
-    state = root / STATE_MODULE
-    _sites(ast.parse(state.read_text(), filename=str(state)), STATE_MODULE,
-           _touches(("_write",)), writers)
-    assert not outside and len(writers) == 1, (
-        "ROADMAP aim 2 keeps one path per decision: state files are read "
-        "and written only inside core/state.py (found outside: "
+            _sites(tree, module, _touches(STATE_PRIVATE), outside)
+            _sites(tree, module, _imports_sqlite3, outside)
+    state = ast.parse((root / STATE_MODULE).read_text(), filename=STATE_MODULE)
+    db_users: set[str] = set()
+    _sites(state, STATE_MODULE, _uses_own_db, db_users)
+    begins: set[str] = set()
+    _sites(state, STATE_MODULE, _begins, begins)
+    assert not outside and db_users <= STATE_DB_USERS and len(begins) == 1, (
+        "ROADMAP aim 2 keeps one path per decision: the state database is "
+        "opened, read and written only inside core/state.py (sqlite3 or "
+        "StateStore._read/_write/_db outside it: "
         + (", ".join(sorted(outside)) or "none")
-        + "), and every mutation takes the one locked read-modify-write, "
-        "the only caller of StateStore._write (callers: "
-        + ", ".join(sorted(writers)) + ")"
+        + "); there self._db is used only by __init__, _read and _write "
+        "(also by: " + (", ".join(sorted(db_users - STATE_DB_USERS)) or "none")
+        + "), and one function opens a transaction (BEGIN in: "
+        + ", ".join(sorted(begins)) + ")"
     )
 
 

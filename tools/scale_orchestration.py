@@ -3,7 +3,8 @@ N-model DAG, 1× vs 10× model count (r12 verdict #7 / carried r11 #8).
 
 What it measures — the ORCHESTRATION plane, not the data plane: model
 parsing, fingerprinting/snapshot building, plan categorization, state
-store traffic (the StateStore's own file read/write/byte counters),
+store traffic (the StateStore's own counters: SELECTs, committed write
+transactions and JSON value bytes written),
 DAG scheduling, and the per-model DDL the virtual layer needs. Models
 are trivial (layer-0 SELECTs of literals; upper layers reference 1-2
 parents) so the engine work per model is a catalog op, not a job.
@@ -143,7 +144,8 @@ def main() -> None:
         "what": (
             "orchestration plane at scale: plan->apply->run over a "
             "synthetic layered VIEW DAG; wall per phase + state-store op "
-            "counts (the StateStore's file reads, writes and bytes written)"
+            "counts (the StateStore's SELECTs, write transactions and JSON "
+            "value bytes written)"
         ),
         "sizes": results,
     }
