@@ -45,25 +45,14 @@ class StateStore:
     def __init__(self, path: str):
         self.path = path
         os.makedirs(path, exist_ok=True)
-        db_file = os.path.join(path, "state.db")
+        self._db_file = os.path.join(path, "state.db")
         # A directory written before the SQLite store: one JSON file per table.
-        legacy = [] if os.path.exists(db_file) else sorted(Path(path).glob("_*.json"))
-        # One connection behind one lock (re-entrant: a write may _read), so
-        # no thread sees or ends another's transaction; a writer waits up to
-        # 60 s for another process's transaction to commit.
+        legacy = [] if os.path.exists(self._db_file) else sorted(Path(path).glob("_*.json"))
+        # One connection, opened by the first _read or _write (a store never
+        # used creates no file), behind one lock (re-entrant: a write may
+        # _read), so no thread sees or ends another's transaction.
         self._lock = threading.RLock()
-        self._db = sqlite3.connect(
-            db_file, timeout=60, isolation_level=None, check_same_thread=False
-        )
-        # WAL is a property of the file: when two first opens of a directory
-        # collide on the switch (SQLite refuses one at once), one switch holds.
-        self._db.execute("PRAGMA synchronous=NORMAL")
-        with contextlib.suppress(sqlite3.OperationalError):
-            self._db.execute("PRAGMA journal_mode=WAL")
-        self.writes = 0
-        with self._write() as db:  # waits out another first open's schema
-            for ddl in _SCHEMA:
-                db.execute(ddl)
+        self._db: Optional[sqlite3.Connection] = None
         # Statement traffic since open: _read calls, committed _write
         # transactions and the JSON value bytes written.
         self.reads = self.writes = self.bytes_written = 0
@@ -76,16 +65,33 @@ class StateStore:
     def _read(self, sql: str, *params) -> list[tuple]:
         """The one read path: every SELECT."""
         with self._lock:
+            if self._db is None:
+                with self._write():  # opens the file and creates the schema
+                    pass
             self.reads += 1
             return self._db.execute(sql, params).fetchall()
 
     @contextlib.contextmanager
     def _write(self) -> Iterator[sqlite3.Connection]:
         """The one write path: one BEGIN IMMEDIATE transaction, committed
-        when the caller's block returns and rolled back if it raises."""
+        when the caller's block returns and rolled back if it raises. The
+        first opens the connection; until one commits (``writes`` is 0),
+        each creates the schema, waiting out another process's first open."""
         with self._lock:
+            if self._db is None:  # a writer waits 60 s for another's commit
+                self._db = sqlite3.connect(
+                    self._db_file, timeout=60, isolation_level=None, check_same_thread=False
+                )
+                # WAL is a property of the file: when two first opens collide
+                # on the switch (SQLite refuses one at once), one switch holds.
+                self._db.execute("PRAGMA synchronous=NORMAL")
+                with contextlib.suppress(sqlite3.OperationalError):
+                    self._db.execute("PRAGMA journal_mode=WAL")
             self._db.execute("BEGIN IMMEDIATE")
             try:
+                if not self.writes:
+                    for ddl in _SCHEMA:
+                        self._db.execute(ddl)
                 yield self._db
                 self._db.execute("COMMIT")
             except BaseException:

@@ -329,8 +329,8 @@ import os, sys
 from sqlmesh_spark.core.state import StateStore
 store = StateStore(sys.argv[1])
 with store._write() as db:
-    db.execute("INSERT INTO intervals VALUES ('m@v', 0, 1)")
-    os._exit(1)
+    db.execute("INSERT INTO intervals VALUES ('m@v', 1, 0, 1)")
+    os._exit(3)
 """
 
 
@@ -347,7 +347,7 @@ def test_state_store_crash_inside_a_transaction_leaves_no_row_or_lock(tmp_path):
     path = str(tmp_path / "state")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     crash = subprocess.run([sys.executable, "-c", _STATE_CRASH, path], cwd=repo)
-    assert crash.returncode == 1
+    assert crash.returncode == 3  # died inside the transaction, after the INSERT
     assert StateStore(path).get_intervals("m", "v") == []
     began = time.monotonic()
     StateStore(path).add_interval("m", "v", 5, 6)  # a held lock would wait 60 s
@@ -358,10 +358,11 @@ def test_state_store_crash_inside_a_transaction_leaves_no_row_or_lock(tmp_path):
 def test_state_store_bulk_put_snapshots(tmp_path):
     """put_snapshots (the one-write bulk form plan application uses)
     round-trips its payloads, merges over existing entries, and an empty
-    put writes nothing."""
+    put writes nothing. The store creates its file on first use."""
     from sqlmesh_spark.core.state import StateStore
 
     store = StateStore(str(tmp_path / "state"))
+    assert not (tmp_path / "state" / "state.db").exists()  # opened on first use
     store.put_snapshots({("pre", "v0"): {"kind": "VIEW"}})
     entries = {(f"m{i}", "v1"): {"kind": "FULL", "i": i} for i in range(20)}
     store.put_snapshots(entries)
