@@ -23,9 +23,9 @@ parquet-backed managed tables:
   staging to a temp table and renaming — the same immutable-table+pointer
   discipline the reference uses for its virtual layer.
 - A table is created in a ``TableLayout`` (format, partitions, buckets,
-  engine-managed columns), and every rewrite keeps the table's whole
-  layout, read once per write. Creation reclaims files a crash left at
-  the new table's location.
+  engine-managed columns). Every rewrite, clone or stage of it takes that
+  layout from its caller (``Model.layout`` for a snapshot table), never
+  from the catalog. Creation reclaims files a crash left there.
 
 All DDL goes through ``spark.sql`` so the catalog (in-memory here,
 Hive/Glue/Unity in production) stays the source of truth.
@@ -33,7 +33,6 @@ Hive/Glue/Unity in production) stays the source of truth.
 
 from __future__ import annotations
 
-import re
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field
@@ -75,8 +74,7 @@ class TableLayout:
     """A table's physical layout (base.py:619 create_table arguments):
     what creating the table fixes and every rewrite of it keeps.
     ``managed_columns`` (name → type) are the engine-managed columns a
-    created table carries beyond its query's output; a layout read back
-    from the catalog leaves them empty."""
+    created table carries beyond its query's output."""
 
     partitioned_by: tuple[str, ...] = ()
     clustered_by: tuple[str, ...] = ()
@@ -217,11 +215,11 @@ class SparkAdapter:
     def rename_table(self, old: str, new: str) -> None:
         self.spark.sql(f"ALTER TABLE {old} RENAME TO {new}")
 
-    def clone_table(self, target: str, source: str) -> None:
+    def clone_table(self, target: str, source: str, layout: TableLayout) -> None:
         """base.py:1059 — dev-preview clone. Dispatches through the format
         backend: parquet emulation copies (CTAS), DeltaBackend runs
         SHALLOW CLONE (zero-copy)."""
-        self.backend.clone(target, source)
+        self.backend.clone(target, source, layout)
 
     def alter_table(self, table: str, alter_expressions: Iterable[str]) -> None:
         """Apply SchemaDiffer operations (base.py:1183)."""
@@ -270,6 +268,7 @@ class SparkAdapter:
         time_column: str,
         start: str,
         end: str,
+        layout: TableLayout,
     ) -> None:
         """base.py:1580 — THE incremental op: replace exactly the rows of
         [start, end) in time_column; an interval whose batch is empty
@@ -292,7 +291,6 @@ class SparkAdapter:
             F.col(time_column) < F.lit(end).cast("timestamp")
         )
         df = self._df(query_or_df).filter(in_interval)
-        layout = self.table_layout(table)
         if "_ds" in layout.partitioned_by:
             days, aligned = _touched_days(start, end)
             if not aligned:
@@ -313,28 +311,6 @@ class SparkAdapter:
             self._atomic_rewrite(
                 table, kept.unionByName(self._project_to_table(df, table)), layout
             )
-
-    def table_layout(self, table: str) -> TableLayout:
-        """The existing table's layout, read once per write by whatever
-        rewrites the table. DESCRIBE TABLE, deliberately NOT
-        spark.catalog.listColumns: the PySpark catalog API re-analyzes the
-        table per call and measured 107-182 ms vs 22-47 ms for the
-        DESCRIBE command (20-rep min/median, both in one Spark session)."""
-        rows = self.spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-        names = [r.col_name for r in rows]
-        info = dict(zip(names, (r.data_type for r in rows)))
-        partitioned_by: list[str] = []
-        if "# Partition Information" in info:
-            # the section header, a "# col_name" row, then the columns up
-            # to the blank row before "# Detailed Table Information"
-            partitioned_by = names[names.index("# Partition Information") + 2 :]
-            partitioned_by = partitioned_by[: partitioned_by.index("")]
-        return TableLayout(
-            partitioned_by=tuple(partitioned_by),
-            clustered_by=tuple(re.findall(r"`([^`]*)`", info.get("Bucket Columns", ""))),
-            buckets=int(info.get("Num Buckets", 0)),
-            storage_format=info.get("Provider", "parquet").lower(),
-        )
 
     def insert_overwrite_by_partition(self, table: str, query_or_df: QueryOrDF) -> None:
         """base.py:1551 — INCREMENTAL_BY_PARTITION: replace whole partitions
@@ -370,26 +346,29 @@ class SparkAdapter:
                 )
             )
 
-    def delete_from(self, table: str, where: str) -> None:
+    def delete_from(self, table: str, where: str, layout: TableLayout) -> None:
         """base.py:1497 — parquet path: rewrite keeping the complement."""
         kept = self.spark.table(table).filter(f"NOT ({where})")
-        self._atomic_rewrite(table, kept)
+        self._atomic_rewrite(table, kept, layout)
 
-    def update_table(self, table: str, set_exprs: Mapping[str, str], where: str) -> None:
+    def update_table(
+        self, table: str, set_exprs: Mapping[str, str], where: str, layout: TableLayout
+    ) -> None:
         """base.py:1715 — parquet path: CASE-projection rewrite."""
         cols = []
-        for c in self.columns(table):
+        for c in self.spark.table(table).columns:
             if c in set_exprs:
                 cols.append(F.expr(f"CASE WHEN {where} THEN {set_exprs[c]} ELSE {c} END").alias(c))
             else:
                 cols.append(F.col(c))
-        self._atomic_rewrite(table, self.spark.table(table).select(*cols))
+        self._atomic_rewrite(table, self.spark.table(table).select(*cols), layout)
 
     def merge(
         self,
         target: str,
         source: QueryOrDF,
         unique_key: Sequence[str],
+        layout: TableLayout,
         merge_filter: Optional[str] = None,
     ) -> None:
         """base.py:2203 upsert via the logical-merge fallback the reference
@@ -411,35 +390,31 @@ class SparkAdapter:
         partitions holding a matched key or receiving a row — see
         backends.py), DeltaBackend/IcebergBackend run native MERGE INTO.
         """
-        self.backend.merge(target, self._df(source), unique_key, merge_filter)
+        self.backend.merge(target, self._df(source), unique_key, layout, merge_filter)
 
     def replace_query(
         self,
         table: str,
         query_or_df: QueryOrDF,
-        layout: Optional[TableLayout] = None,
+        layout: TableLayout = PARQUET,
     ) -> None:
         """base.py:459 — atomic full refresh (CREATE OR REPLACE TABLE) in
-        ``layout``; without one, an existing table keeps its own."""
+        ``layout``."""
         df = self._df(query_or_df)
         if self.table_exists(table):
             self._atomic_rewrite(table, df, layout)
         else:
-            self.ctas(table, df, layout or PARQUET)
+            self.ctas(table, df, layout)
 
-    def _atomic_rewrite(
-        self, table: str, df: DataFrame, layout: Optional[TableLayout] = None
-    ) -> None:
+    def _atomic_rewrite(self, table: str, df: DataFrame, layout: TableLayout) -> None:
         """Stage to a temp table, then swap via rename — the no-transaction
         atomicity discipline (immutable tables + pointer swap) the
         reference's virtual layer uses (plan/stages.py:165).
 
-        The rewrite keeps the table's whole layout — read here unless the
-        caller already holds it — so delete_from / update_table /
-        optimize / merge never silently flatten a partitioned, bucketed or
-        non-parquet table (a lost partition would lock every later
-        interval write into full-table rewrites)."""
-        layout = layout or self.table_layout(table)
+        The rewrite keeps the whole ``layout`` its caller passes, so no
+        rewrite silently flattens a partitioned, bucketed or non-parquet
+        table (a lost partition would lock every later interval write into
+        full-table rewrites)."""
         tmp = self._tmp_name(table)
         self._writer(df, layout).saveAsTable(tmp)
         self._swap(table, tmp, layout)
@@ -456,7 +431,7 @@ class SparkAdapter:
             self.spark.sql(f"MSCK REPAIR TABLE {table}")
 
     def optimize_compact(
-        self, table: str, sort_by: list[str], target_files: int
+        self, table: str, sort_by: list[str], target_files: int, layout: TableLayout
     ) -> None:
         """Table-maintenance rewrite: compact into ``target_files``
         range-partitioned files sorted within each on ``sort_by`` — the
@@ -471,22 +446,22 @@ class SparkAdapter:
             .repartitionByRange(target_files, *[F.col(c) for c in sort_by])
             .sortWithinPartitions(*sort_by)
         )
-        self._atomic_rewrite(table, df)
+        self._atomic_rewrite(table, df, layout)
 
     # -- write-audit-publish (base.py:2452-2492; Iceberg impl
     # -- spark.py:492-534 uses branches + cherrypick) -----------------------
 
-    def wap_prepare(self, table: str) -> str:
+    def wap_prepare(self, table: str, layout: TableLayout) -> str:
         """Open a WAP 'branch'. Backend seam: IcebergBackend issues
         ALTER TABLE ... CREATE BRANCH (spark.py:492-534); the parquet
         emulation stages to a physical clone with the same contract —
         audit before publish, publish is atomic."""
-        return self.backend.wap_prepare(table)
+        return self.backend.wap_prepare(table, layout)
 
-    def wap_publish(self, table: str, staging: str) -> None:
+    def wap_publish(self, table: str, staging: str, layout: TableLayout) -> None:
         """Atomically promote the audited staging state (Iceberg:
         system.cherrypick_snapshot; parquet: drop + rename swap)."""
-        self.backend.wap_publish(table, staging)
+        self.backend.wap_publish(table, staging, layout)
 
     # -- seeds (model/seed.py:91, evaluator.py:2421) -----------------------
 

@@ -76,6 +76,7 @@ class TableFormatBackend:
         target: str,
         source: DataFrame,
         unique_key: Sequence[str],
+        layout: "TableLayout",
         merge_filter: Optional[str] = None,
     ) -> None:
         """Upsert. Partitioned targets take the copy-on-write path:
@@ -96,7 +97,6 @@ class TableFormatBackend:
         keys = list(unique_key)
         src = source.dropDuplicates(keys)
         tgt = self.spark.table(target)
-        layout = adapter.table_layout(target)
         part_cols = layout.partitioned_by
         if not part_cols:
             self._merge_full_rewrite(target, src, keys, merge_filter, layout)
@@ -204,25 +204,24 @@ class TableFormatBackend:
 
     # -- clone (base.py:1059; Delta SHALLOW CLONE) --------------------------
 
-    def clone(self, target: str, source: str) -> None:
+    def clone(self, target: str, source: str, layout: "TableLayout") -> None:
         """Parquet has no zero-copy clone; a CTAS copy in the source's
-        layout preserves the semantics (isolated writable copy) at the
+        ``layout`` preserves the semantics (isolated writable copy) at the
         cost of a data copy."""
-        self.adapter.ctas(target, self.spark.table(source), self.adapter.table_layout(source))
+        self.adapter.ctas(target, self.spark.table(source), layout)
 
     # -- write-audit-publish (base.py:2452-2492; spark.py:492-534) ----------
 
-    def wap_prepare(self, table: str) -> str:
+    def wap_prepare(self, table: str, layout: "TableLayout") -> str:
         """Open a WAP 'branch': a physical staging table writers target —
         same contract as an Iceberg branch (audit before publish, publish
         atomic), emulated with a clone."""
         staging = self.adapter._tmp_name(f"{table}__wap")
-        layout = self.adapter.table_layout(table)
         self.adapter.ctas(staging, self.spark.table(table), layout)
         return staging
 
-    def wap_publish(self, table: str, staging: str) -> None:
-        self.adapter._swap(table, staging, self.adapter.table_layout(staging))
+    def wap_publish(self, table: str, staging: str, layout: "TableLayout") -> None:
+        self.adapter._swap(table, staging, layout)
 
     # -- SCD2 copy-on-write tail (kills the O(table) replace) --------------
 
@@ -309,6 +308,7 @@ class DeltaBackend(TableFormatBackend):
         target: str,
         source: DataFrame,
         unique_key: Sequence[str],
+        layout: "TableLayout",
         merge_filter: Optional[str] = None,
     ) -> None:
         with self.adapter.temp_view(source.dropDuplicates(list(unique_key)), "merge_src") as v:
@@ -318,7 +318,7 @@ class DeltaBackend(TableFormatBackend):
             self._require(stmt)
             self.spark.sql(stmt)
 
-    def clone(self, target: str, source: str) -> None:
+    def clone(self, target: str, source: str, layout: "TableLayout") -> None:
         stmt = f"CREATE TABLE {target} SHALLOW CLONE {source}"
         self._require(stmt)
         self.spark.sql(stmt)
@@ -387,7 +387,7 @@ class IcebergBackend(TableFormatBackend):
             f"ALTER TABLE {fqn} DROP BRANCH {self.wap_branch_name(wap_id)}",
         ]
 
-    def wap_prepare(self, table: str) -> str:
+    def wap_prepare(self, table: str, layout: "TableLayout") -> str:
         wap_id = self.adapter._tmp_name("b").split("_")[-1]
         stmt = self.wap_prepare_statement(table, wap_id)
         self._require(stmt)
@@ -396,7 +396,7 @@ class IcebergBackend(TableFormatBackend):
         self.spark.conf.set("spark.wap.branch", self.wap_branch_name(wap_id))
         return self.wap_branch_name(wap_id)
 
-    def wap_publish(self, table: str, staging: str) -> None:
+    def wap_publish(self, table: str, staging: str, layout: "TableLayout") -> None:
         wap_id = staging.removeprefix("wap_")
         query = self.wap_snapshot_query(table, wap_id)
         self._require(query)
@@ -412,17 +412,7 @@ class IcebergBackend(TableFormatBackend):
         for stmt in self.wap_publish_statements(table, wap_id, rows[0][0]):
             self.spark.sql(stmt)
 
-    def merge(
-        self,
-        target: str,
-        source: DataFrame,
-        unique_key: Sequence[str],
-        merge_filter: Optional[str] = None,
-    ) -> None:
-        delta_like = DeltaBackend(self.adapter)
-        with self.adapter.temp_view(source.dropDuplicates(list(unique_key)), "merge_src") as v:
-            stmt = delta_like.merge_statement(
-                target, v, unique_key, source.columns, merge_filter
-            )
-            self._require(stmt)
-            self.spark.sql(stmt)
+    # Native MERGE INTO: Delta's statement and merge, under Iceberg's _require.
+    TARGET_ALIAS, SOURCE_ALIAS = DeltaBackend.TARGET_ALIAS, DeltaBackend.SOURCE_ALIAS
+    merge_statement = DeltaBackend.merge_statement
+    merge = DeltaBackend.merge

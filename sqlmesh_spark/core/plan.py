@@ -14,13 +14,14 @@ build_plan_stages (plan/stages.py:698). Stages here:
 
 from __future__ import annotations
 
+import dataclasses
 import re
 from dataclasses import dataclass, field
 from typing import Mapping, Optional, Sequence
 
 from pyspark.sql import SparkSession
 
-from sqlmesh_spark.adapter import SparkAdapter
+from sqlmesh_spark.adapter import SparkAdapter, TableLayout
 from sqlmesh_spark.core.model import Model
 from sqlmesh_spark.core.scheduler import (
     MAX_WORKERS,
@@ -43,6 +44,17 @@ from sqlmesh_spark.core.state import StateStore
 
 class PlanError(Exception):
     """A plan cannot be applied as requested (policy violation)."""
+
+
+def _ident(name: str) -> str:
+    """A column name quoted for Spark DDL."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _layout_record(layout: TableLayout) -> dict:
+    """A layout as it is kept in a snapshot's state record (JSON)."""
+    fields = dataclasses.asdict(layout).items()
+    return {k: list(v) if isinstance(v, tuple) else v for k, v in fields}
 
 
 @dataclass
@@ -394,11 +406,10 @@ class PlanEvaluator:
         node_selector): only SELECTED models' changes enter the plan;
         unselected modified models are replaced by their stored (applied)
         definitions — deferring their change to a later full plan — and
-        unselected brand-new models are excluded entirely. `*` wildcards
-        match like fnmatch. Returns the effective models map; fingerprinting
-        runs AFTER this, so child versions embed the deferred parent's old
-        fingerprint (see plan())."""
-        import dataclasses
+        unselected brand-new models are excluded entirely (a change outside
+        the stored query text cannot be deferred). `*` wildcards match like
+        fnmatch. Returns the effective models map; fingerprinting runs AFTER
+        this, so child versions embed the deferred parent's old fingerprint."""
         import fnmatch
 
         selected = {
@@ -441,6 +452,8 @@ class PlanEvaluator:
                 )
             if old_query != model.query:
                 out[name] = dataclasses.replace(model, query=old_query)
+            if old.get("own_fingerprint") not in (None, fingerprint_model(out[name])):
+                raise PlanError(f"cannot defer {name}: it changed outside its query text")
         return out
 
     def _categorize_and_revert(
@@ -452,8 +465,8 @@ class PlanEvaluator:
         """Change categorization (snapshot/categorizer.py:10): a directly
         modified model whose change only ADDS projections (same FROM/WHERE
         tail, projection superset) is NON_BREAKING — its children's data
-        cannot change, so children whose own text is unchanged keep their
-        existing version/physical table and are only virtual-updated.
+        cannot change, so children whose own definition is unchanged keep
+        their existing version/physical table and are only virtual-updated.
         BREAKING changes taint every descendant, which rebuilds as usual.
         """
         taint: dict[str, bool] = {}
@@ -464,7 +477,7 @@ class PlanEvaluator:
                 continue
             old = self.state.get_snapshot(name, env_state[name]) or {}
             old_query = old.get("query")
-            own_changed = old_query is None or old_query != snap.model.query
+            own_changed = old.get("own_fingerprint") != fingerprint_model(snap.model)
             parent_taint = any(taint.get(p, False) for p in snap.parents)
             if own_changed:
                 breaking = _categorize(old_query, snap.model.query, snap.model.dialect) == "BREAKING"
@@ -510,6 +523,16 @@ class PlanEvaluator:
             old_version = env_state[name]
             new = snapshots[name]
             pinned = Snapshot(model=new.model, version=old_version, parents=new.parents)
+            # The pinned table keeps its layout; only WHOLESALE_KINDS rebuild it.
+            # A record written before layouts were recorded has none to check.
+            recorded = (self.state.get_snapshot(name, old_version) or {}).get("layout")
+            layout = _layout_record(new.model.layout)
+            changed = [k for k in layout if recorded and recorded.get(k) != layout[k]]
+            if changed and new.model.kind not in WHOLESALE_KINDS:
+                raise PlanError(
+                    f"forward-only plan for {name} changes the layout of its pinned "
+                    f"table ({', '.join(changed)}); plan it without forward_only"
+                )
             if self.adapter.table_exists(pinned.table_name):
                 current_cols = self.adapter.columns(pinned.table_name)
                 target_cols = self._query_schema(
@@ -558,7 +581,8 @@ class PlanEvaluator:
                             "forward-only additive change(s) on %s: %s", name, additive,
                         )
                     stmts = [
-                        f"ALTER TABLE {pinned.table_name} ADD COLUMN {d.column} {d.new_type}"
+                        f"ALTER TABLE {pinned.table_name} "
+                        f"ADD COLUMN {_ident(d.column)} {d.new_type}"
                         for d in deltas
                         if d.op == "add"
                     ]
@@ -726,9 +750,12 @@ class PlanEvaluator:
                 (name, snap.version): {
                     "kind": snap.model.kind.value,
                     "parents": list(snap.parents),
-                    # Raw query text backs change categorization on the
-                    # next plan (categorizer.py:10 compares old vs new).
+                    # What the next plan compares: the raw query text
+                    # (categorizer.py:10) and own fingerprint in
+                    # _categorize_and_revert, the layout in _pin_forward_only.
                     "query": snap.model.query,
+                    "own_fingerprint": fingerprint_model(snap.model),
+                    "layout": _layout_record(snap.model.layout),
                 }
                 for name, snap in plan.snapshots.items()
             }
@@ -844,51 +871,23 @@ class PlanEvaluator:
                 # no physical data yet; leave the env view where it was
                 # (possibly absent) rather than pointing at nothing.
                 return None
-            # Comment registration (reference base.py COMMENT creation;
-            # spark.py:545-554 ALTER COLUMN ... COMMENT) happens HERE in
-            # the apply stage — once per model per apply, not per backfill
-            # batch, and it lands even when no batch ran (a
-            # description-only edit is metadata-only by design: no new
-            # version, no data work, but the comment still updates).
-            model = snap.model
-            if model.kind.value != "VIEW" and (
-                model.description or model.column_descriptions
-            ):
-                tbl = snap.table_name
-                if model.description:
-                    c = model.description.replace("'", "''")
-                    self.spark.sql(
-                        f"ALTER TABLE {tbl} SET TBLPROPERTIES ('comment' = '{c}')"
-                    )
-                existing = set(self.adapter.columns(tbl))
-                for col, desc in sorted(model.column_descriptions.items()):
-                    if col not in existing:
-                        continue
-                    c = desc.replace("'", "''")
-                    self.spark.sql(
-                        f"ALTER TABLE {tbl} ALTER COLUMN {col} COMMENT '{c}'"
-                    )
+            self._register_comments(snap)
             env_view = f"{views}.{snap.model.view_name}"
-            # The virtual layer exposes the MODEL's schema exactly: the
-            # engine-managed columns the layout partitions on (the derived
-            # `_ds` time partition, the SCD2-COW `_is_current` partition)
-            # stay behind the view, matching the reference where
-            # Iceberg/Delta partitioning is table metadata, not columns.
+            # The view exposes the MODEL's schema: the engine-managed columns
+            # the layout partitions on (`_ds`, the SCD2-COW `_is_current`) stay
+            # behind it, as the reference's Iceberg/Delta partitioning is table
+            # metadata. The layout names them, so no column list is read.
             layout = snap.model.layout
-            hidden = set(layout.managed_columns) & set(layout.partitioned_by)
-            cols = [c for c in self.adapter.columns(snap.table_name) if c not in hidden]
-            self.adapter.create_view(
-                env_view, f"SELECT {', '.join(cols)} FROM {snap.table_name}"
-            )
+            hidden = [c for c in layout.partitioned_by if c in layout.managed_columns]
+            select = f"* EXCEPT ({', '.join(map(_ident, hidden))})" if hidden else "*"
+            self.adapter.create_view(env_view, f"SELECT {select} FROM {snap.table_name}")
             return env_view
 
-        # Promotion is per-model independent (each snapshot repoints its
-        # own env view; ordering only matters versus stage 2, which is
-        # complete) — run it on a pool as wide as the scheduler's, so the N×
-        # (table_exists + schema read + CREATE VIEW) catalog round-trips
-        # overlap instead of serializing (measured: the serial loop was
-        # ~40% of a 1,000-model apply, tools/scale_orchestration.py).
-        # Exceptions propagate on iteration, same as the sequential loop.
+        # Promotion is per-model independent (stage 2 is complete), so the
+        # N× (table_exists + CREATE VIEW) catalog round-trips overlap on a
+        # pool as wide as the scheduler's (the serial loop was ~40% of a
+        # 1,000-model apply, tools/scale_orchestration.py). Exceptions
+        # propagate on iteration.
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=MAX_WORKERS) as pool:
@@ -923,3 +922,20 @@ class PlanEvaluator:
                 plan.environment, unpromoted=still_unpromoted
             )
         return executed
+
+    def _register_comments(self, snap: Snapshot) -> None:
+        """Comment registration (reference base.py COMMENT creation;
+        spark.py:545-554 ALTER COLUMN ... COMMENT), once per model per
+        promotion — it lands even when no batch ran (a description-only
+        edit is metadata-only: no new version, but the comment updates)."""
+        model, tbl = snap.model, snap.table_name
+        if model.kind.value == "VIEW":
+            return
+        if model.description:
+            c = model.description.replace("'", "''")
+            self.spark.sql(f"ALTER TABLE {tbl} SET TBLPROPERTIES ('comment' = '{c}')")
+        existing = set(self.adapter.columns(tbl)) if model.column_descriptions else ()
+        for col, desc in sorted(model.column_descriptions.items()):
+            if col in existing:  # a description of a column the table lacks is skipped
+                c = desc.replace("'", "''")
+                self.spark.sql(f"ALTER TABLE {tbl} ALTER COLUMN {_ident(col)} COMMENT '{c}'")

@@ -363,12 +363,14 @@ class SnapshotEvaluator:
                 # The derived day column the layout partitions on, so
                 # interval overwrites prune to exactly the touched partitions.
                 df = df.withColumn("_ds", F.date_format(F.col(time_col), "yyyy-MM-dd"))
-            adapter.insert_overwrite_by_time_partition(table, df, time_col, start, end)
+            adapter.insert_overwrite_by_time_partition(
+                table, df, time_col, start, end, model.layout
+            )
         elif model.kind == ModelKind.INCREMENTAL_BY_UNIQUE_KEY:
             if first:
                 adapter.insert_append(table, df)
             else:
-                adapter.merge(table, df, unique_key=model.unique_key)
+                adapter.merge(table, df, model.unique_key, model.layout)
         elif model.kind == ModelKind.INCREMENTAL_BY_PARTITION:
             adapter.insert_overwrite_by_partition(table, df)
         elif model.kind == ModelKind.INCREMENTAL_UNMANAGED:

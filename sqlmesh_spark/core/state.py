@@ -119,9 +119,12 @@ class StateStore:
     # -- snapshots (state_sync/db/snapshot.py:59) ---------------------------
 
     def put_snapshots(self, entries: dict[tuple[str, str], dict]) -> None:
-        """ONE transaction for a whole plan's snapshot records, merged over
-        the existing ones; the reference's DB-backed state sync likewise
-        batches snapshot pushes."""
+        """ONE transaction for a whole plan's snapshot records, each
+        replacing its (name, version)'s record; the reference's DB-backed
+        state sync likewise batches snapshot pushes. Apply records kind,
+        parents, query, own_fingerprint (the model's fingerprint without
+        its parents: whether the model itself changed) and layout (the
+        TableLayout fields a forward-only pin must keep)."""
         if not entries:
             return
         rows = [(f"{n}@{v}", e) for (n, v), e in entries.items()]

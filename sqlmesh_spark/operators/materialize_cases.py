@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sqlmesh_spark.adapter import SparkAdapter, TableLayout
+from sqlmesh_spark.adapter import PARQUET, SparkAdapter, TableLayout
 from sqlmesh_spark.registry import register
 from sqlmesh_spark.sources.tables import load_table, register_views
 
@@ -73,7 +73,8 @@ def mat_insert_overwrite_by_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     initial = project(orders.filter(F.col("o_orderdate") < "1997-01-01"), 1).repartition(
         n_part, "ds"
     )
-    adapter.ctas(table, initial, TableLayout(partitioned_by=("ds",)))
+    layout = TableLayout(partitioned_by=("ds",))
+    adapter.ctas(table, initial, layout)
 
     batch = project(
         orders.filter(
@@ -82,7 +83,7 @@ def mat_insert_overwrite_by_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         2,
     )
     adapter.insert_overwrite_by_time_partition(
-        table, batch, time_column="event_ts", start="1995-03-01", end="1995-04-01"
+        table, batch, "event_ts", "1995-03-01", "1995-04-01", layout
     )
     return spark.table(table).select("o_orderkey", "o_custkey", "price_cents", "ds")
 
@@ -147,7 +148,7 @@ def mat_merge_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     source = project(
         customer.filter((F.col("c_custkey") >= 500) & (F.col("c_custkey") <= 1500)), 1000
     )
-    adapter.merge(table, source, unique_key=("c_custkey",))
+    adapter.merge(table, source, ("c_custkey",), PARQUET)
     return spark.table(table)
 
 
@@ -235,8 +236,8 @@ def mat_delete_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_suppkey", "s_nationkey", "s_acctbal"
     )
     adapter.ctas(table, supplier)
-    adapter.delete_from(table, "s_acctbal < 0")
-    adapter.update_table(table, {"s_acctbal": "0.0"}, "s_nationkey = 3")
+    adapter.delete_from(table, "s_acctbal < 0", PARQUET)
+    adapter.update_table(table, {"s_acctbal": "0.0"}, "s_nationkey = 3", PARQUET)
     return spark.table(table).select(
         "s_suppkey",
         F.round(F.col("s_acctbal") * 100).cast("bigint").alias("bal_cents"),
@@ -281,8 +282,8 @@ def mat_table_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     adapter.insert_append(table, region)
     adapter.alter_table(table, [f"ALTER TABLE {table} ADD COLUMN tag STRING"])
-    adapter.update_table(table, {"tag": "'x'"}, "TRUE")
-    adapter.clone_table(clone, table)
+    adapter.update_table(table, {"tag": "'x'"}, "TRUE", PARQUET)
+    adapter.clone_table(clone, table, PARQUET)
     assert adapter.table_exists(clone)
     assert set(adapter.columns(clone)) == {"id", "name", "tag"}
     return spark.table(clone)
@@ -319,7 +320,7 @@ def mat_optimize_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(64)
     )
     adapter.ctas(f"{db}.fact", src)
-    adapter.optimize_compact(f"{db}.fact", sort_by=["ship_ds", "l_orderkey"], target_files=8)
+    adapter.optimize_compact(f"{db}.fact", ["ship_ds", "l_orderkey"], 8, PARQUET)
     return spark.table(f"{db}.fact")
 
 
@@ -351,7 +352,7 @@ def mat_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_nationkey", "n_name", F.lit("existing").alias("origin")
         ),
     )
-    staging = adapter.wap_prepare(f"{db}.dim")
+    staging = adapter.wap_prepare(f"{db}.dim", PARQUET)
     adapter.insert_append(
         staging,
         n.filter(F.col("n_nationkey") < 10).select(
@@ -364,7 +365,7 @@ def mat_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"UNION ALL SELECT n_nationkey FROM {staging} GROUP BY n_nationkey HAVING COUNT(*) > 1"
     ).count()
     assert bad == 0, "WAP audit failed; branch must be abandoned"
-    adapter.wap_publish(f"{db}.dim", staging)
+    adapter.wap_publish(f"{db}.dim", staging, PARQUET)
     return spark.table(f"{db}.dim")
 
 
@@ -382,10 +383,10 @@ def mat_clone_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     db = _scratch_db(spark, "clone")
     adapter = SparkAdapter(spark)
     adapter.ctas(f"{db}.src", load_table(spark, sf_dir, "region"))
-    adapter.clone_table(f"{db}.dev", f"{db}.src")
-    adapter.delete_from(f"{db}.dev", "r_regionkey >= 0")  # trash the preview
+    adapter.clone_table(f"{db}.dev", f"{db}.src", PARQUET)
+    adapter.delete_from(f"{db}.dev", "r_regionkey >= 0", PARQUET)  # trash the preview
     assert spark.table(f"{db}.dev").count() == 0
-    adapter.clone_table(f"{db}.dev2", f"{db}.src")  # source unharmed
+    adapter.clone_table(f"{db}.dev2", f"{db}.src", PARQUET)  # source unharmed
     return spark.table(f"{db}.dev2").select(
         "r_regionkey", "r_name", F.lit("clone").alias("via")
     )
@@ -428,5 +429,5 @@ def merge_scale_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     adapter.ctas(table, project(orders, 0))
     source = project(orders.filter(F.col("o_orderkey") % 2 == 0), 10)
-    adapter.merge(table, source, unique_key=("o_orderkey",))
+    adapter.merge(table, source, ("o_orderkey",), PARQUET)
     return spark.table(table)

@@ -1390,7 +1390,9 @@ def framework_custom_materialization(spark: SparkSession, sf_dir: str) -> DataFr
     def ranked_replace(evaluator, snapshot, df, start, end):
         w = Window.partitionBy("n_regionkey").orderBy("n_nationkey")
         evaluator.adapter.replace_query(
-            snapshot.table_name, df.withColumn("rank_in_region", F.row_number().over(w))
+            snapshot.table_name,
+            df.withColumn("rank_in_region", F.row_number().over(w)),
+            snapshot.model.layout,
         )
 
     register_custom_materialization("ranked_replace", ranked_replace)

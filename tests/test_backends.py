@@ -14,13 +14,17 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from sqlmesh_spark.adapter import SparkAdapter, TableLayout
+from catalog_layout import read_layout
+from sqlmesh_spark.adapter import PARQUET, SparkAdapter, TableLayout
 from sqlmesh_spark.backends import (
     DeltaBackend,
     IcebergBackend,
     TableFormatBackend,
     UnsupportedTableFormatError,
 )
+
+
+BY_DS = TableLayout(partitioned_by=("ds",))
 
 
 def _tbl() -> str:
@@ -56,20 +60,28 @@ class TestSeamDispatch:
         t = _tbl()
         src = spark.createDataFrame([(1, "x")], "id int, v string")
         with pytest.raises(UnsupportedTableFormatError) as ei:
-            a.merge(t, src, unique_key=("id",))
+            a.merge(t, src, unique_key=("id",), layout=PARQUET)
         assert "MERGE INTO" in ei.value.statement
         assert "WHEN MATCHED THEN UPDATE" in ei.value.statement
+
+    def test_iceberg_merge_raises_with_statement(self, spark):
+        """Iceberg runs Delta's MERGE INTO under its own format check."""
+        a = SparkAdapter(spark, backend_cls=IcebergBackend)
+        src = spark.createDataFrame([(1, "x")], "id int, v string")
+        with pytest.raises(UnsupportedTableFormatError, match="Iceberg") as ei:
+            a.merge(_tbl(), src, unique_key=("id",), layout=PARQUET)
+        assert "MERGE INTO" in ei.value.statement
 
     def test_delta_clone_raises_with_statement(self, spark):
         a = SparkAdapter(spark, backend_cls=DeltaBackend)
         with pytest.raises(UnsupportedTableFormatError) as ei:
-            a.clone_table("default.tgt", "default.src")
+            a.clone_table("default.tgt", "default.src", PARQUET)
         assert "SHALLOW CLONE" in ei.value.statement
 
     def test_iceberg_wap_raises_with_branch_ddl(self, spark):
         a = SparkAdapter(spark, backend_cls=IcebergBackend)
         with pytest.raises(UnsupportedTableFormatError) as ei:
-            a.wap_prepare("default.t")
+            a.wap_prepare("default.t", PARQUET)
         assert "CREATE BRANCH" in ei.value.statement
 
     def test_create_catalog_unsupported(self, spark):
@@ -119,7 +131,7 @@ class TestCopyOnWriteMerge:
         }
         # source touches only the 2024-01-02 partition (update key 3)
         src = spark.createDataFrame([(3, "C2", "2024-01-02")], "id int, v string, ds string")
-        a.merge(t, src, unique_key=("id",))
+        a.merge(t, src, unique_key=("id",), layout=BY_DS)
         after = _files(loc)
         for p, m in untouched.items():
             assert p in after and after[p] == m, f"untouched partition file rewritten: {p}"
@@ -137,7 +149,7 @@ class TestCopyOnWriteMerge:
         # key 4 moves from ds=2024-01-03 to ds=2024-01-05; its old partition
         # empties out and must be dropped, not left stale.
         src = spark.createDataFrame([(4, "D2", "2024-01-05")], "id int, v string, ds string")
-        a.merge(t, src, unique_key=("id",))
+        a.merge(t, src, unique_key=("id",), layout=BY_DS)
         rows = {r.id: (r.v, r.ds) for r in spark.table(t).collect()}
         assert rows[4] == ("D2", "2024-01-05")
         assert len(rows) == 5
@@ -154,7 +166,7 @@ class TestCopyOnWriteMerge:
             [(1, "X", "2024-01-01"), (2, "B2", "2024-01-01")],
             "id int, v string, ds string",
         )
-        a.merge(t, src, unique_key=("id",), merge_filter="id >= 2")
+        a.merge(t, src, unique_key=("id",), layout=BY_DS, merge_filter="id >= 2")
         rows = {r.id: r.v for r in spark.table(t).collect()}
         # frozen key 1 keeps its target row; the incoming (1, X) still
         # appends per the logical-merge contract (target row not eligible),
@@ -167,7 +179,7 @@ class TestCopyOnWriteMerge:
         t = _tbl()
         a.ctas(t, spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string"))
         src = spark.createDataFrame([(2, "B"), (3, "c")], "id int, v string")
-        a.merge(t, src, unique_key=("id",))
+        a.merge(t, src, unique_key=("id",), layout=PARQUET)
         rows = {r.id: r.v for r in spark.table(t).collect()}
         assert rows == {1: "a", 2: "B", 3: "c"}
         a.drop_table(t)
@@ -326,7 +338,7 @@ def test_cow_merge_null_partition_value(spark):
     )
     a.ctas(t, df, TableLayout(partitioned_by=("ds",)))
     src = spark.createDataFrame([(2, "B2", None)], "id int, v string, ds string")
-    a.merge(t, src, unique_key=("id",))
+    a.merge(t, src, unique_key=("id",), layout=BY_DS)
     rows = {r.id: (r.v, r.ds) for r in spark.table(t).collect()}
     assert rows == {1: ("a", "2024-01-01"), 2: ("B2", None), 3: ("c", "2024-01-02")}
     a.drop_table(t)
@@ -354,7 +366,7 @@ def test_merge_partition_cap_falls_back_to_full_rewrite(spark, monkeypatch, capl
         "id int, v string, ds string",
     )
     with caplog.at_level(logging.WARNING, logger="sqlmesh_spark.backends"):
-        a.merge(t, src, unique_key=("id",))
+        a.merge(t, src, unique_key=("id",), layout=BY_DS)
     assert any("full logical rewrite" in r.message for r in caplog.records)
     rows = {r.id: r.v for r in spark.table(t).collect()}
     assert rows == {0: "u0", 1: "u1", 2: "u2", 3: "u3"}
@@ -406,7 +418,7 @@ SELECT 1 AS id, 'a' AS v, CAST('2024-01-01' AS TIMESTAMP) AS updated_at
     adapter = SparkAdapter(spark)
     snaps = build_snapshots(ctx.models)
     for name in ("warnme.keys_part", "warnme.scd_part"):
-        assert adapter.table_layout(snaps[name].table_name).partitioned_by == ("v",)
+        assert read_layout(spark, snaps[name].table_name).partitioned_by == ("v",)
 
 
 def test_plan_warns_when_a_declared_partitioned_by_is_dropped(spark, caplog):
@@ -499,7 +511,7 @@ class TestGoldenStatements:
 
         a = SparkAdapter(spark, backend_cls=DeltaBackend)
         with pytest.raises(UnsupportedTableFormatError) as ei:
-            a.clone_table("db.tgt", "db.src")
+            a.clone_table("db.tgt", "db.src", PARQUET)
         assert ei.value.statement == "CREATE TABLE db.tgt SHALLOW CLONE db.src"
 
     def test_wap_statement_forms_golden(self, spark):
@@ -543,7 +555,7 @@ def test_merge_filter_alias_accepted_by_parquet_path(spark):
         [(1, "A", "2024-01-01"), (2, "B", "2024-01-02")],
         "id int, v string, ds string",
     )
-    a.merge(t, src, unique_key=("id",),
+    a.merge(t, src, unique_key=("id",), layout=BY_DS,
             merge_filter="__MERGE_TARGET__.ds >= '2024-01-02'")
     # the eligible row (ds within the filter) took the update
     rows = {r.id: r.v for r in spark.table(t).filter("ds = '2024-01-02'").collect()}
@@ -585,7 +597,7 @@ def test_cow_writes_read_the_partitions_they_produced_from_the_write(spark):
     src = spark.createDataFrame(
         [(4, "D2", "2024-01-05"), (2, "B", "2024-01-02")], "id int, v string, ds string"
     )
-    assert _jobs(spark, lambda: a.merge(t, src, unique_key=("id",))) == 3
+    assert _jobs(spark, lambda: a.merge(t, src, unique_key=("id",), layout=BY_DS)) == 3
     assert sorted(spark.table(t).collect()) == [
         (1, "a", "2024-01-01"), (2, "B", "2024-01-02"), (4, "D2", "2024-01-05"),
     ]

@@ -2321,9 +2321,10 @@ def test_whole_table_rewrites_leave_no_staging_table(spark, tmp_path):
     assert spark.table(snaps["tmpchk.dim"].table_name).count() == 2
     adapter = SparkAdapter(spark)
     keyed = snaps["tmpchk.keyed"].table_name
-    staging = adapter.wap_prepare(keyed)
+    layout = snaps["tmpchk.keyed"].model.layout
+    staging = adapter.wap_prepare(keyed, layout)
     adapter.insert_append(staging, spark.createDataFrame([(2, "x")], "id int, v string"))
-    adapter.wap_publish(keyed, staging)
+    adapter.wap_publish(keyed, staging, layout)
     assert spark.table(keyed).count() == 2
     leaked = [
         f"{db}.{t.name}"

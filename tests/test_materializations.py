@@ -7,7 +7,8 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from sqlmesh_spark.adapter import SparkAdapter
+from catalog_layout import read_layout
+from sqlmesh_spark.adapter import PARQUET, SparkAdapter, TableLayout
 from sqlmesh_spark.operators.scd2 import empty_target_sql, scd_type_2_query
 from sqlmesh_spark.parity import compare_case
 from sqlmesh_spark.registry import load_all
@@ -103,7 +104,7 @@ def test_adapter_merge_dedups_source(spark):
     adapter.ctas("default.t_merge_dedup",
                  spark.createDataFrame([(1, "old")], "id int, v string"))
     src = spark.createDataFrame([(1, "n1"), (1, "n1"), (2, "n2")], "id int, v string")
-    adapter.merge("default.t_merge_dedup", src, unique_key=("id",))
+    adapter.merge("default.t_merge_dedup", src, unique_key=("id",), layout=PARQUET)
     got = {r.id: r.v for r in spark.table("default.t_merge_dedup").collect()}
     assert got == {1: "n1", 2: "n2"}
     adapter.drop_table("default.t_merge_dedup")
@@ -147,8 +148,6 @@ def test_delete_from_preserves_partition_layout(spark):
     """delete_from (and every _atomic_rewrite caller) must keep the
     table's partition columns — flattening would lock later interval
     writes into full-table rewrites."""
-    from sqlmesh_spark.adapter import SparkAdapter, TableLayout
-
     a = SparkAdapter(spark)
     t = "default.part_preserve_test"
     a.drop_table(t)
@@ -156,8 +155,8 @@ def test_delete_from_preserves_partition_layout(spark):
         [(1, "2024-01-01"), (2, "2024-01-02")], "id int, ds string"
     )
     a.ctas(t, df, TableLayout(partitioned_by=("ds",)))
-    a.delete_from(t, "id = 1")
-    part_cols = a.table_layout(t).partitioned_by
+    a.delete_from(t, "id = 1", TableLayout(partitioned_by=("ds",)))
+    part_cols = read_layout(spark, t).partitioned_by
     assert part_cols == ("ds",), part_cols
     assert {r.id for r in spark.table(t).collect()} == {2}
     a.drop_table(t)
@@ -230,13 +229,6 @@ WHERE o_orderdate >= CAST(@start_ts AS TIMESTAMP)
     assert spark.table(snap.table_name).count() == n1
 
 
-def _describe(spark, table: str) -> dict[str, str]:
-    return {
-        r.col_name.strip(): (r.data_type or "").strip()
-        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-    }
-
-
 # Every table-building kind: (kind clause, extra header, partition columns
 # the snapshot table must carry). Each model also declares orc storage and
 # 4 buckets on k, which every table must keep through every write.
@@ -263,16 +255,26 @@ LAYOUT_KINDS = {
 
 
 def _assert_layout(spark, table: str, partitions: list[str]) -> None:
-    desc = _describe(spark, table)
-    assert desc["Provider"].lower() == "orc", desc
-    assert desc["Num Buckets"] == "4", desc
-    assert desc["Bucket Columns"] == "[`k`]", desc
-    rows = spark.sql(f"DESCRIBE TABLE {table}").collect()
-    names = [r.col_name for r in rows]
-    got = []
-    if "# Partition Information" in names:
-        got = [n for n in names[names.index("# Partition Information") + 2 :] if n]
-    assert got == partitions, rows
+    assert read_layout(spark, table) == TableLayout(tuple(partitions), ("k",), 4, "orc")
+
+
+def _layout_context(spark, case: str):
+    """A fresh project holding the one LAYOUT_KINDS model ``case``."""
+    import tempfile
+
+    from sqlmesh_spark.core.context import Context
+
+    kind, extra, _ = LAYOUT_KINDS[case]
+    for db in ("sqlmesh__demo_lay", "env_lay_views", "dev_lay_views"):
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    ctx = Context(spark, state_dir=tempfile.mkdtemp(prefix="sqlmesh_state_"))
+    ctx.add_model(
+        f"MODEL (name demo_lay.{case}, kind {kind}, cron '@daily',"
+        f" storage_format orc, clustered_by (k), buckets 4{extra});\n"
+        "SELECT 1 AS k, 'x' AS v, CAST(@start_ds AS TIMESTAMP) AS ts",
+        seed_csv="k,v\n1,x\n" if kind == "SEED" else None,
+    )
+    return ctx
 
 
 @pytest.mark.parametrize("case", list(LAYOUT_KINDS))
@@ -280,26 +282,8 @@ def test_model_keeps_its_declared_layout(spark, case):
     """Every kind builds the table its model declares (format, buckets and
     partitions, all in the fingerprint) on the first build, keeps it on a
     later write, and empty_backfill builds the same table."""
-    import tempfile
-
-    from sqlmesh_spark.core.context import Context
-
-    kind, extra, partitions = LAYOUT_KINDS[case]
-    text = (
-        f"MODEL (name demo_lay.{case}, kind {kind}, cron '@daily',"
-        f" storage_format orc, clustered_by (k), buckets 4{extra});\n"
-        "SELECT 1 AS k, 'x' AS v, CAST(@start_ds AS TIMESTAMP) AS ts"
-    )
-    seed_csv = "k,v\n1,x\n" if kind == "SEED" else None
-
-    def context() -> Context:
-        for db in ("sqlmesh__demo_lay", "env_lay_views"):
-            spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-        ctx = Context(spark, state_dir=tempfile.mkdtemp(prefix="sqlmesh_state_"))
-        ctx.add_model(text, seed_csv=seed_csv)
-        return ctx
-
-    ctx = context()
+    kind, _, partitions = LAYOUT_KINDS[case]
+    ctx = _layout_context(spark, case)
     table = ctx.plan(skip_tests=True).snapshots[f"demo_lay.{case}"].table_name
     for end in ("1995-01-02", "1995-01-03"):  # first build, then a later write
         ctx.run(environment="env_lay", start="1995-01-01", end=end)
@@ -307,10 +291,47 @@ def test_model_keeps_its_declared_layout(spark, case):
     assert spark.table(f"env_lay_views.{case}").collect()[0].k == 1
     if kind.startswith("SCD") or kind == "SEED":
         return  # empty_backfill refuses SCD2 and skips seeds
-    ctx = context()
+    ctx = _layout_context(spark, case)
     ctx.apply(ctx.plan(environment="env_lay", start="1995-01-01",
                        end="1995-01-02", empty_backfill=True))
     _assert_layout(spark, table, partitions)
+
+
+@pytest.mark.parametrize("case", list(LAYOUT_KINDS))
+def test_lifecycle_reads_no_layout_or_columns_back(spark, monkeypatch, case):
+    """plan → apply → run → dev plan → restate takes every table's layout
+    from its model: no DESCRIBE statement and no SparkAdapter.columns call,
+    and the table still has its declared layout."""
+    from pyspark.sql import SparkSession
+
+    ctx = _layout_context(spark, case)
+    statements: list[str] = []
+    columns_calls: list[str] = []
+    sql = SparkSession.sql
+
+    def spy_sql(self, query, *args, **kwargs):
+        statements.append(query)
+        return sql(self, query, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "sql", spy_sql)
+    columns = SparkAdapter.columns
+    monkeypatch.setattr(
+        SparkAdapter, "columns", lambda self, t: columns_calls.append(t) or columns(self, t)
+    )
+    window = {"start": "1995-01-01", "end": "1995-01-02", "skip_tests": True}
+    plan = ctx.plan(environment="env_lay", **window)
+    ctx.apply(plan)
+    ctx.run(environment="env_lay", start="1995-01-01", end="1995-01-03")
+    ctx.apply(ctx.plan(environment="dev_lay", **window))
+    ctx.restate([f"demo_lay.{case}"], "1995-01-01", "1995-01-02", environment="env_lay")
+    monkeypatch.undo()
+
+    assert statements, "the spy saw no statement"
+    assert [q for q in statements if q.lstrip().upper().startswith("DESCRIBE")] == []
+    assert columns_calls == []
+    _assert_layout(spark, plan.snapshots[f"demo_lay.{case}"].table_name, LAYOUT_KINDS[case][2])
+    for env in ("env_lay", "dev_lay"):
+        assert spark.table(f"{env}_views.{case}").collect()[0].k == 1
 
 
 def test_discovered_seed_loads_string_columns_as_text(spark):

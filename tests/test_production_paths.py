@@ -147,6 +147,56 @@ def test_table_layout_is_decided_in_one_function():
     )
 
 
+# A table's layout comes from its model (Model.layout), passed down to
+# every write, and never back from the catalog: no DESCRIBE statement in
+# the package. In core/ a table's column list is read only where the
+# table itself is the question: the forward-only schema diff and comment
+# registration, which skips columns the table lacks.
+COLUMN_READERS = {
+    "sqlmesh_spark/core/plan.py:PlanEvaluator._pin_forward_only",
+    "sqlmesh_spark/core/plan.py:PlanEvaluator._register_comments",
+}
+_DESCRIBE = re.compile(r"\bDESCRIBE\b")
+
+
+def _describes(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and bool(_DESCRIBE.search(node.value))
+    )
+
+
+def _calls_columns(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "columns"
+    )
+
+
+def test_no_layout_or_column_list_is_read_back_from_the_catalog():
+    describes: set[str] = set()
+    readers: set[str] = set()
+    for path in sorted(PACKAGE.rglob("*.py")):
+        module = str(path.relative_to(PACKAGE.parent))
+        tree = ast.parse(path.read_text(), filename=str(path))
+        _sites(tree, module, _describes, describes)
+        if path.is_relative_to(PACKAGE / "core"):
+            _sites(tree, module, _calls_columns, readers)
+    assert not describes, (
+        "a table's layout is passed down from Model.layout, not parsed "
+        "from DESCRIBE; found a DESCRIBE string in: " + ", ".join(sorted(describes))
+    )
+    stray = sorted(readers - COLUMN_READERS)
+    assert not stray, (
+        "core/ reads a table's column list only in "
+        + ", ".join(sorted(COLUMN_READERS))
+        + "; also read in: "
+        + ", ".join(stray)
+    )
+
+
 # The state store's one database connection: every other module goes
 # through StateStore's public methods, and inside core/state.py every
 # SELECT takes _read and every mutation _write, the one BEGIN IMMEDIATE

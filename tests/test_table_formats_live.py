@@ -73,7 +73,7 @@ builder = (
     .config("spark.sql.warehouse.dir", {warehouse!r})
 )
 spark = configure_spark_with_delta_pip(builder).getOrCreate()
-from sqlmesh_spark.adapter import SparkAdapter
+from sqlmesh_spark.adapter import PARQUET, SparkAdapter
 from sqlmesh_spark.backends import DeltaBackend
 
 adapter = SparkAdapter(spark)
@@ -82,11 +82,11 @@ spark.sql("INSERT INTO t_delta VALUES (1, 'a'), (2, 'b')")
 backend = DeltaBackend(adapter)
 
 src = spark.createDataFrame([(2, 'B'), (3, 'c')], "id int, v string")
-backend.merge("t_delta", src, ["id"])
+backend.merge("t_delta", src, ["id"], PARQUET)
 rows = {{(r.id, r.v) for r in spark.table("t_delta").collect()}}
 assert rows == {{(1, 'a'), (2, 'B'), (3, 'c')}}, rows
 
-backend.clone("t_delta_clone", "t_delta")
+backend.clone("t_delta_clone", "t_delta", PARQUET)
 assert spark.table("t_delta_clone").count() == 3
 print("delta live OK")
 """
@@ -115,7 +115,7 @@ spark = (
     .config("spark.sql.catalog.local.warehouse", {warehouse!r})
     .getOrCreate()
 )
-from sqlmesh_spark.adapter import SparkAdapter
+from sqlmesh_spark.adapter import PARQUET, SparkAdapter
 from sqlmesh_spark.backends import IcebergBackend
 
 adapter = SparkAdapter(spark)
@@ -123,10 +123,10 @@ spark.sql("CREATE TABLE local.db.t_ice (id INT, v STRING) USING iceberg")
 spark.sql("INSERT INTO local.db.t_ice VALUES (1, 'a')")
 backend = IcebergBackend(adapter)
 
-staging = backend.wap_prepare("local.db.t_ice")
+staging = backend.wap_prepare("local.db.t_ice", PARQUET)
 spark.sql(f"INSERT INTO {{staging}} VALUES (2, 'b')")
 assert spark.table("local.db.t_ice").count() == 1  # main untouched
-backend.wap_publish("local.db.t_ice", staging)
+backend.wap_publish("local.db.t_ice", staging, PARQUET)
 assert spark.table("local.db.t_ice").count() == 2
 print("iceberg live OK")
 """
@@ -137,12 +137,12 @@ def test_backends_raise_with_statement_attached(spark):
     """In THIS sandbox the backends must refuse loudly, attaching the exact
     statement they would have run — the golden contract that keeps the
     skip-gated tests honest (same statement text, never executed)."""
-    from sqlmesh_spark.adapter import SparkAdapter
+    from sqlmesh_spark.adapter import PARQUET, SparkAdapter
     from sqlmesh_spark.backends import DeltaBackend, UnsupportedTableFormatError
 
     adapter = SparkAdapter(spark)
     backend = DeltaBackend(adapter)
     src = spark.createDataFrame([(1, "a")], "id int, v string")
     with pytest.raises(UnsupportedTableFormatError) as exc_info:
-        backend.merge("default.t_never_exists", src, ["id"])
+        backend.merge("default.t_never_exists", src, ["id"], PARQUET)
     assert "MERGE INTO default.t_never_exists" in exc_info.value.statement

@@ -7,7 +7,8 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from sqlmesh_spark.adapter import SparkAdapter
+from catalog_layout import read_layout
+from sqlmesh_spark.adapter import PARQUET, SparkAdapter
 from sqlmesh_spark import audits
 
 
@@ -16,12 +17,12 @@ def test_wap_write_audit_publish(spark):
     spark.sql("DROP TABLE IF EXISTS default.t_wap")
     adapter.ctas("default.t_wap", spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string"))
 
-    staging = adapter.wap_prepare("default.t_wap")
+    staging = adapter.wap_prepare("default.t_wap", PARQUET)
     adapter.insert_append(staging, spark.createDataFrame([(3, "c")], "id int, v string"))
     # Audit the staging branch BEFORE publish; main is untouched meanwhile.
     assert spark.sql(audits.not_null(staging, ["id", "v"])).count() == 0
     assert spark.table("default.t_wap").count() == 2
-    adapter.wap_publish("default.t_wap", staging)
+    adapter.wap_publish("default.t_wap", staging, PARQUET)
     assert spark.table("default.t_wap").count() == 3
     adapter.drop_table("default.t_wap")
 
@@ -41,12 +42,12 @@ def test_wap_and_clone_keep_the_table_layout(spark):
         spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string"),
         layout,
     )
-    staging = adapter.wap_prepare("default.t_wap_layout")
+    staging = adapter.wap_prepare("default.t_wap_layout", layout)
     adapter.insert_append(staging, spark.createDataFrame([(3, "c")], "id int, v string"))
-    adapter.wap_publish("default.t_wap_layout", staging)
-    adapter.clone_table("default.t_wap_layout_clone", "default.t_wap_layout")
+    adapter.wap_publish("default.t_wap_layout", staging, layout)
+    adapter.clone_table("default.t_wap_layout_clone", "default.t_wap_layout", layout)
     for t in ("default.t_wap_layout", "default.t_wap_layout_clone"):
-        assert adapter.table_layout(t) == layout
+        assert read_layout(spark, t) == layout
         assert sorted(r.id for r in spark.table(t).collect()) == [1, 2, 3]
         adapter.drop_table(t)
 
@@ -55,7 +56,7 @@ def test_wap_abandon_on_audit_failure(spark):
     adapter = SparkAdapter(spark)
     spark.sql("DROP TABLE IF EXISTS default.t_wap2")
     adapter.ctas("default.t_wap2", spark.createDataFrame([(1, "a")], "id int, v string"))
-    staging = adapter.wap_prepare("default.t_wap2")
+    staging = adapter.wap_prepare("default.t_wap2", PARQUET)
     adapter.insert_append(staging, spark.createDataFrame([(None, "bad")], "id int, v string"))
     assert spark.sql(audits.not_null(staging, ["id"])).count() > 0
     # Don't publish — drop the branch; main unchanged.
@@ -101,8 +102,9 @@ def test_insert_overwrite_by_time_leaves_exactly_the_interval_batch(spark, parti
         return df.withColumn("_ds", F.date_format("ts", "yyyy-MM-dd")) if partitioned else df
 
     base = [(1, "2024-01-01 00:00:00"), (2, "2024-01-02 00:00:00"), (3, "2024-01-03 00:00:00")]
-    adapter.ctas(table, frame(base), TableLayout(("_ds",) if partitioned else ()))
-    adapter.insert_overwrite_by_time_partition(table, frame(rows), "ts", start, end)
+    layout = TableLayout(("_ds",) if partitioned else ())
+    adapter.ctas(table, frame(base), layout)
+    adapter.insert_overwrite_by_time_partition(table, frame(rows), "ts", start, end, layout)
     assert sorted(r.id for r in spark.table(table).collect()) == expected
     adapter.drop_table(table)
 
