@@ -356,7 +356,7 @@ class SparkAdapter:
     ) -> None:
         """base.py:1715 — parquet path: CASE-projection rewrite."""
         cols = []
-        for c in self.spark.table(table).columns:
+        for c in self.columns(table):
             if c in set_exprs:
                 cols.append(F.expr(f"CASE WHEN {where} THEN {set_exprs[c]} ELSE {c} END").alias(c))
             else:
@@ -396,7 +396,7 @@ class SparkAdapter:
         self,
         table: str,
         query_or_df: QueryOrDF,
-        layout: TableLayout = PARQUET,
+        layout: TableLayout,
     ) -> None:
         """base.py:459 — atomic full refresh (CREATE OR REPLACE TABLE) in
         ``layout``."""

@@ -57,6 +57,31 @@ def _layout_record(layout: TableLayout) -> dict:
     return {k: list(v) if isinstance(v, tuple) else v for k, v in fields}
 
 
+# Kind args that only choose the table's layout (Model.layout).
+_LAYOUT_KIND_ARGS = ("partition_by_time_column", "partition_by_current")
+
+
+def _own_record(model: Model) -> dict:
+    """What a snapshot record keeps of the model itself: its query text, its
+    layout and the fingerprint of the rest (kind, kind args, variables,
+    statements, stamp, ...; no parents)."""
+    args = {k: v for k, v in model.kind_args.items() if k not in _LAYOUT_KIND_ARGS}
+    rest = dataclasses.replace(model, query="", partitioned_by=(), clustered_by=(), buckets=0,
+                               storage_format="parquet", kind_args=args)
+    return {"query": model.query, "rest_fingerprint": fingerprint_model(rest),
+            "layout": _layout_record(model.layout)}
+
+
+def _own_changes(old: dict, model: Model) -> tuple[bool, bool]:
+    """Whether ``model`` changed, against its stored record, outside its
+    query text and layout, and whether its layout changed. A record stored
+    before the rest fingerprint reports neither."""
+    if "rest_fingerprint" not in old:
+        return False, False
+    new = _own_record(model)
+    return old["rest_fingerprint"] != new["rest_fingerprint"], old["layout"] != new["layout"]
+
+
 @dataclass
 class ContextDiff:
     """context_diff.py:42 — local project vs environment state."""
@@ -452,7 +477,7 @@ class PlanEvaluator:
                 )
             if old_query != model.query:
                 out[name] = dataclasses.replace(model, query=old_query)
-            if old.get("own_fingerprint") not in (None, fingerprint_model(out[name])):
+            if any(_own_changes(old, model)):
                 raise PlanError(f"cannot defer {name}: it changed outside its query text")
         return out
 
@@ -464,10 +489,11 @@ class PlanEvaluator:
     ) -> None:
         """Change categorization (snapshot/categorizer.py:10): a directly
         modified model whose change only ADDS projections (same FROM/WHERE
-        tail, projection superset) is NON_BREAKING — its children's data
-        cannot change, so children whose own definition is unchanged keep
-        their existing version/physical table and are only virtual-updated.
-        BREAKING changes taint every descendant, which rebuilds as usual.
+        tail, projection superset) or only its layout is NON_BREAKING — its
+        children's data cannot change, so children whose own definition is
+        unchanged keep their existing version/physical table and are only
+        virtual-updated. BREAKING changes (any other) taint every
+        descendant, which rebuilds as usual.
         """
         taint: dict[str, bool] = {}
         for name in snapshots_to_dag(snapshots):
@@ -477,10 +503,20 @@ class PlanEvaluator:
                 continue
             old = self.state.get_snapshot(name, env_state[name]) or {}
             old_query = old.get("query")
-            own_changed = old.get("own_fingerprint") != fingerprint_model(snap.model)
+            rest_changed, layout_changed = _own_changes(old, snap.model)
+            if "rest_fingerprint" not in old:
+                # A record stored before the rest fingerprint: the model is
+                # unchanged in itself if it still hashes, over its parents'
+                # current versions, to its stored version. Otherwise its table
+                # may predate its layout, so it rebuilds.
+                parents = [env_state.get(p, "") for p in snap.parents]
+                layout_changed = fingerprint_model(snap.model, parents) != env_state[name]
+            query_changed = old_query is None or old_query != snap.model.query
             parent_taint = any(taint.get(p, False) for p in snap.parents)
-            if own_changed:
-                breaking = _categorize(old_query, snap.model.query, snap.model.dialect) == "BREAKING"
+            if query_changed or rest_changed or layout_changed:
+                breaking = rest_changed or query_changed and (
+                    _categorize(old_query, snap.model.query, snap.model.dialect) == "BREAKING"
+                )
                 taint[name] = breaking or parent_taint
             elif not parent_taint:
                 # Modified only via a NON_BREAKING ancestor: revert to the
@@ -524,14 +560,14 @@ class PlanEvaluator:
             new = snapshots[name]
             pinned = Snapshot(model=new.model, version=old_version, parents=new.parents)
             # The pinned table keeps its layout; only WHOLESALE_KINDS rebuild it.
-            # A record written before layouts were recorded has none to check.
-            recorded = (self.state.get_snapshot(name, old_version) or {}).get("layout")
+            # A record stored before layouts were has none: every field differs.
+            recorded = (self.state.get_snapshot(name, old_version) or {}).get("layout", {})
             layout = _layout_record(new.model.layout)
-            changed = [k for k in layout if recorded and recorded.get(k) != layout[k]]
+            changed = [k for k in layout if recorded.get(k) != layout[k]]
             if changed and new.model.kind not in WHOLESALE_KINDS:
                 raise PlanError(
-                    f"forward-only plan for {name} changes the layout of its pinned "
-                    f"table ({', '.join(changed)}); plan it without forward_only"
+                    f"forward-only plan for {name} changes the recorded layout of its "
+                    f"pinned table ({', '.join(changed)}); plan it without forward_only"
                 )
             if self.adapter.table_exists(pinned.table_name):
                 current_cols = self.adapter.columns(pinned.table_name)
@@ -750,12 +786,9 @@ class PlanEvaluator:
                 (name, snap.version): {
                     "kind": snap.model.kind.value,
                     "parents": list(snap.parents),
-                    # What the next plan compares: the raw query text
-                    # (categorizer.py:10) and own fingerprint in
-                    # _categorize_and_revert, the layout in _pin_forward_only.
-                    "query": snap.model.query,
-                    "own_fingerprint": fingerprint_model(snap.model),
-                    "layout": _layout_record(snap.model.layout),
+                    # What the next plan compares in _categorize_and_revert
+                    # and _pin_forward_only.
+                    **_own_record(snap.model),
                 }
                 for name, snap in plan.snapshots.items()
             }

@@ -122,9 +122,10 @@ class StateStore:
         """ONE transaction for a whole plan's snapshot records, each
         replacing its (name, version)'s record; the reference's DB-backed
         state sync likewise batches snapshot pushes. Apply records kind,
-        parents, query, own_fingerprint (the model's fingerprint without
-        its parents: whether the model itself changed) and layout (the
-        TableLayout fields a forward-only pin must keep)."""
+        parents, query, rest_fingerprint (the model's own fingerprint with
+        its query text and layout taken out: a change there is BREAKING)
+        and layout (the TableLayout fields; a forward-only pin must keep
+        them)."""
         if not entries:
             return
         rows = [(f"{n}@{v}", e) for (n, v), e in entries.items()]

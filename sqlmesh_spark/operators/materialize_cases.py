@@ -170,11 +170,12 @@ def mat_full_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     db = _scratch_db(spark, "full")
     table = f"{db}.cust_by_nation"
     register_views(spark, sf_dir, ("customer", "nation"))
-    adapter.replace_query(table, "SELECT 'stale' AS n_name, CAST(0 AS BIGINT) AS n")
+    adapter.replace_query(table, "SELECT 'stale' AS n_name, CAST(0 AS BIGINT) AS n", PARQUET)
     adapter.replace_query(
         table,
         "SELECT n_name, COUNT(*) AS n FROM customer JOIN nation ON c_nationkey = n_nationkey "
         "GROUP BY n_name",
+        PARQUET,
     )
     return spark.table(table)
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sqlmesh_spark.adapter import SparkAdapter, TableLayout
+from sqlmesh_spark.adapter import PARQUET, SparkAdapter, TableLayout
 from sqlmesh_spark.operators.materialize_cases import _scratch_db
 from sqlmesh_spark.operators.scd2 import empty_target_sql, scd_type_2_query
 from sqlmesh_spark.registry import register
@@ -83,8 +83,8 @@ def scd_type_2_by_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     table = f"{db}.dim_customer"
 
     q1, q2 = _by_time_queries(EMPTY_BY_TIME, f"SELECT * FROM {table}")
-    adapter.replace_query(table, spark.sql(q1))
-    adapter.replace_query(table, spark.sql(q2))
+    adapter.replace_query(table, spark.sql(q1), PARQUET)
+    adapter.replace_query(table, spark.sql(q2), PARQUET)
     return spark.table(table)
 
 
@@ -122,8 +122,8 @@ def scd_type_2_by_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     table = f"{db}.dim_customer"
 
     q1, q2 = _by_column_queries(EMPTY_BY_COL, f"SELECT * FROM {table}")
-    adapter.replace_query(table, spark.sql(q1))
-    adapter.replace_query(table, spark.sql(q2))
+    adapter.replace_query(table, spark.sql(q1), PARQUET)
+    adapter.replace_query(table, spark.sql(q2), PARQUET)
     return spark.table(table)
 
 
@@ -234,6 +234,6 @@ def scd2_scale_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     table = f"{db}.dim_orders"
 
     q1, q2 = _scale_by_time_queries(EMPTY_BY_TIME, f"SELECT * FROM {table}")
-    adapter.replace_query(table, spark.sql(q1))
-    adapter.replace_query(table, spark.sql(q2))
+    adapter.replace_query(table, spark.sql(q1), PARQUET)
+    adapter.replace_query(table, spark.sql(q2), PARQUET)
     return spark.table(table)

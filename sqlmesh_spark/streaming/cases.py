@@ -158,7 +158,7 @@ def streaming_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.window import Window as W
 
-    from sqlmesh_spark.adapter import SparkAdapter
+    from sqlmesh_spark.adapter import PARQUET, SparkAdapter
     from sqlmesh_spark.sources.tables import load_table
 
     adapter = SparkAdapter(spark)
@@ -201,7 +201,7 @@ def streaming_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .filter(F.col("rn") == 1)
                 .drop("rn")
             )
-        adapter.replace_query(target, latest)
+        adapter.replace_query(target, latest, PARQUET)
 
     q = (
         spark.readStream.schema(events.schema)

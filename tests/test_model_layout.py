@@ -1,5 +1,6 @@
 """A snapshot table has the layout its model declares: a change outside
-the query text gets a new version, a forward-only pin cannot take a new
+the query text gets a new version (its children keep theirs only when
+the change is to the layout alone), a forward-only pin cannot take a new
 layout, and the virtual layer needs no column list read back."""
 
 from __future__ import annotations
@@ -70,6 +71,18 @@ def test_layout_change_outside_the_query_text_gets_a_new_version(spark, tmp_path
     assert [r.k for r in spark.table("env_lo_views.child").collect()] == [1]
 
 
+def test_layout_change_keeps_the_child_of_a_query_categorization_cannot_split(spark, tmp_path):
+    """With the query text unchanged, the query is not categorized at all."""
+    parent = "MODEL (name demo_lo.parent, kind {kind}, cron '@daily');\nSELECT 1 AS k, 'x' AS v"
+    ctx = _context(spark, tmp_path, parent.format(kind="FULL"), CHILD)
+    first = ctx.plan(environment="env_lo", skip_tests=True, **WINDOW)
+    ctx.apply(first)
+    ctx.add_model(parent.format(kind="FULL, partitioned_by (v)"))
+    second = ctx.plan(environment="env_lo", skip_tests=True, **WINDOW)
+    assert "demo_lo.parent" in second.diff.modified
+    assert second.snapshots["demo_lo.child"].version == first.snapshots["demo_lo.child"].version
+
+
 def test_forward_only_layout_change_on_an_incremental_model_is_refused(spark, tmp_path):
     kind = "INCREMENTAL_BY_UNIQUE_KEY (unique_key k)"
     ctx = _context(spark, tmp_path, _parent(kind))
@@ -129,3 +142,112 @@ def test_column_names_that_need_quoting_survive_the_lifecycle(spark, tmp_path):
     assert [tuple(r) for r in view.collect()] == [(1, 2, 3)]
     comments = {f.name: f.metadata.get("comment") for f in spark.table(table).schema}
     assert comments["my col"] == "the first"
+
+
+# A parent change with the query text unchanged that is not a layout change
+# can change the parent's rows, so the child rebuilds too.
+BREAKING_CHANGES = {
+    "kind": ("FULL", "INCREMENTAL_BY_UNIQUE_KEY (unique_key k)"),
+    "kind_args": (
+        "INCREMENTAL_BY_UNIQUE_KEY (unique_key k)",
+        "INCREMENTAL_BY_UNIQUE_KEY (unique_key (k, v))",
+    ),
+    "stamp": ("FULL", "FULL, stamp 'v2'"),
+}
+
+
+@pytest.mark.parametrize("change", list(BREAKING_CHANGES))
+def test_change_outside_the_query_text_and_layout_rebuilds_the_child(spark, tmp_path, change):
+    before, after = BREAKING_CHANGES[change]
+    ctx = _context(spark, tmp_path, _parent(before), CHILD)
+    first = ctx.plan(environment="env_lo", skip_tests=True, **WINDOW)
+    ctx.apply(first)
+    ctx.add_model(_parent(after))
+    second = ctx.plan(environment="env_lo", skip_tests=True, **WINDOW)
+    assert {"demo_lo.parent", "demo_lo.child"} <= set(second.diff.modified)
+    assert second.snapshots["demo_lo.child"].version != first.snapshots["demo_lo.child"].version
+    ctx.apply(second)
+    assert [r.k for r in spark.table("env_lo_views.child").collect()] == [1]
+
+
+def test_blueprint_variable_change_rebuilds_the_child(spark, tmp_path):
+    parent = (
+        "MODEL (name demo_lo.parent, kind FULL, cron '@daily', blueprints ((lo = {lo})));\n"
+        "SELECT one AS k, 'x' AS v FROM (SELECT 1 AS one) WHERE one >= @lo"
+    )
+    ctx = _context(spark, tmp_path, parent.format(lo=1), CHILD)
+    first = ctx.plan(environment="env_lo", skip_tests=True, **WINDOW)
+    ctx.apply(first)
+    assert [r.k for r in spark.table("env_lo_views.child").collect()] == [1]
+    ctx.add_model(parent.format(lo=2))
+    second = ctx.plan(environment="env_lo", skip_tests=True, **WINDOW)
+    assert second.snapshots["demo_lo.child"].version != first.snapshots["demo_lo.child"].version
+    ctx.apply(second)
+    assert spark.table("env_lo_views.child").collect() == []
+
+
+def _strip_records(ctx: Context, plan) -> None:
+    """Rewrite the plan's snapshot records as they were stored before the
+    rest fingerprint and the layout were: kind, parents and query."""
+    ctx.state.put_snapshots(
+        {
+            (name, snap.version): {
+                k: v
+                for k, v in ctx.state.get_snapshot(name, snap.version).items()
+                if k in ("kind", "parents", "query")
+            }
+            for name, snap in plan.snapshots.items()
+        }
+    )
+
+
+def test_record_without_layout_refuses_a_forward_only_pin(spark, tmp_path):
+    kind = "INCREMENTAL_BY_UNIQUE_KEY (unique_key k)"
+    ctx = _context(spark, tmp_path, _parent(kind))
+    first = ctx.plan(environment="env_lo", skip_tests=True, **WINDOW)
+    ctx.apply(first)
+    _strip_records(ctx, first)
+    records = ctx.state.get_snapshots()
+    ctx.add_model(_parent(f"{kind}, partitioned_by (v)"))
+    with pytest.raises(PlanError, match="storage_format.*without forward_only"):
+        ctx.plan(environment="env_lo", forward_only=True, skip_tests=True, **WINDOW)
+    assert ctx.state.get_snapshots() == records
+    # One plan without forward_only rebuilds the table in the declared layout.
+    plan = ctx.plan(environment="env_lo", skip_tests=True, **WINDOW)
+    ctx.apply(plan)
+    table = plan.snapshots["demo_lo.parent"].table_name
+    assert read_layout(spark, table) == _declared(ctx, "demo_lo.parent")
+
+
+def test_record_without_rest_fingerprint_is_judged_by_its_query_text(spark, tmp_path):
+    """A child whose stored record predates the rest fingerprint keeps its
+    version under an additive parent change, as it did then."""
+    ctx = _context(spark, tmp_path, _parent("FULL"), CHILD)
+    first = ctx.plan(environment="env_lo", skip_tests=True, **WINDOW)
+    ctx.apply(first)
+    _strip_records(ctx, first)
+    ctx.add_model(
+        "MODEL (name demo_lo.parent, kind FULL, cron '@daily');\n"
+        + QUERY.replace("AS ts", "AS ts, 2 AS extra")
+    )
+    second = ctx.plan(environment="env_lo", skip_tests=True, **WINDOW)
+    assert "demo_lo.parent" in second.diff.modified
+    assert second.snapshots["demo_lo.child"].version == first.snapshots["demo_lo.child"].version
+    assert "demo_lo.child" in second.diff.indirectly_modified
+
+
+def test_record_without_rest_fingerprint_rebuilds_a_layout_change(spark, tmp_path):
+    """A layout change with the query text unchanged is not reverted onto a
+    table whose stored record cannot tell its layout."""
+    kind = "INCREMENTAL_BY_UNIQUE_KEY (unique_key k)"
+    ctx = _context(spark, tmp_path, _parent(kind), CHILD)
+    first = ctx.plan(environment="env_lo", skip_tests=True, **WINDOW)
+    ctx.apply(first)
+    _strip_records(ctx, first)
+    ctx.add_model(_parent(f"{kind}, partitioned_by (v)"))
+    second = ctx.plan(environment="env_lo", skip_tests=True, **WINDOW)
+    parent = second.snapshots["demo_lo.parent"]
+    assert parent.version != first.snapshots["demo_lo.parent"].version
+    assert second.snapshots["demo_lo.child"].version == first.snapshots["demo_lo.child"].version
+    ctx.apply(second)
+    assert read_layout(spark, parent.table_name) == _declared(ctx, "demo_lo.parent")

@@ -90,7 +90,7 @@ def test_custom_materialization(spark, sf_dir):
         from pyspark.sql import functions as F
 
         tagged = df.withColumn("mat", F.lit("custom"))
-        evaluator.adapter.replace_query(snapshot.table_name, tagged)
+        evaluator.adapter.replace_query(snapshot.table_name, tagged, snapshot.model.layout)
 
     register_custom_materialization("tagging", append_with_tag)
 
@@ -141,11 +141,11 @@ def test_generate_test_round_trips(spark, sf_dir):
     )
     # src.nation resolves via a real catalog table (adapter handles orphan
     # warehouse locations from prior sessions).
-    from sqlmesh_spark.adapter import SparkAdapter
+    from sqlmesh_spark.adapter import PARQUET, SparkAdapter
 
     adapter = SparkAdapter(spark)
     adapter.create_schema("src")
-    adapter.replace_query("src.nation", spark.read.parquet(f"{sf_dir}/nation.parquet"))
+    adapter.replace_query("src.nation", spark.read.parquet(f"{sf_dir}/nation.parquet"), PARQUET)
 
     spec = ctx.generate_test("gen.regions")
     body = spec["test_regions"]

@@ -63,7 +63,7 @@ for name, note in PICK:
 # ---------------------------------------------------------------------------
 from pyspark.sql import functions as F  # noqa: E402
 
-from sqlmesh_spark.adapter import SparkAdapter  # noqa: E402
+from sqlmesh_spark.adapter import PARQUET, SparkAdapter  # noqa: E402
 from sqlmesh_spark.operators import scd2_cases  # noqa: E402
 from sqlmesh_spark.operators.materialize_cases import _scratch_db  # noqa: E402
 from sqlmesh_spark.sources.tables import load_table, register_views  # noqa: E402
@@ -79,7 +79,7 @@ _scd_table = f"{_db}.dim_customer"
 _q1, _q2 = scd2_cases._by_time_queries(
     scd2_cases.EMPTY_BY_TIME, f"SELECT * FROM {_scd_table}"
 )
-adapter.replace_query(_scd_table, spark.sql(_q1))
+adapter.replace_query(_scd_table, spark.sql(_q1), PARQUET)
 write_section(
     "scd_type_2_by_time (pre-write maintenance frame)",
     "One-statement SCD2 maintenance, a UNION of three branches: (1) "

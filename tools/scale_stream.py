@@ -125,7 +125,7 @@ def run_sessionize(spark: SparkSession, sf_dir: str, tag: str) -> dict:
 def run_upsert(spark: SparkSession, sf_dir: str, tag: str) -> dict:
     from pyspark.sql.window import Window as W
 
-    from sqlmesh_spark.adapter import SparkAdapter
+    from sqlmesh_spark.adapter import PARQUET, SparkAdapter
 
     adapter = SparkAdapter(spark)
     adapter.create_schema("scale_stream")
@@ -152,7 +152,7 @@ def run_upsert(spark: SparkSession, sf_dir: str, tag: str) -> dict:
                 .filter(F.col("rn") == 1)
                 .drop("rn")
             )
-        adapter.replace_query(target, latest)
+        adapter.replace_query(target, latest, PARQUET)
 
     t0 = time.perf_counter()
     q = (
