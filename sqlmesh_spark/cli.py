@@ -36,7 +36,7 @@ import sys
 from typing import Optional
 
 
-def _build_spark(cpus: int):
+def _build_spark(cpus: Optional[int]):
     from sqlmesh_spark.session import build_session
 
     return build_session(cpus=cpus)
@@ -189,13 +189,18 @@ def cmd_environments(args) -> int:
     return 0
 
 
+def _served_snapshots(ctx, *window: str):
+    """The snapshots a prod plan over ``window`` (start, end; the plan's
+    default window when omitted) serves: after categorization reverts, a
+    child of a NON_BREAKING change keeps the version prod points at."""
+    return ctx.plan("prod", *window, skip_tests=True, skip_linter=True).snapshots
+
+
 def cmd_table_name(args) -> int:
     """Print the physical snapshot table backing a model — reference
     `sqlmesh table_name`."""
-    from sqlmesh_spark.core.plan import build_snapshots
-
     ctx = _context(args)
-    snaps = build_snapshots(ctx.models)
+    snaps = _served_snapshots(ctx)
     name = args.model.lower()
     if name not in snaps:
         print(f"error: unknown model {args.model!r}", file=sys.stderr)
@@ -227,11 +232,10 @@ def cmd_lint(args) -> int:
 def cmd_audit(args) -> int:
     """Run a model's attached audits against its physical table —
     reference `sqlmesh audit`. Exit 1 on blocking failures."""
-    from sqlmesh_spark.core.plan import build_snapshots
     from sqlmesh_spark.core.scheduler import SnapshotEvaluator
 
     ctx = _context(args)
-    snaps = build_snapshots(ctx.models)
+    snaps = _served_snapshots(ctx)
     ev = SnapshotEvaluator(ctx.spark)
     ev.custom_audits = ctx.custom_audits
     names = [args.model.lower()] if args.model else [
@@ -265,7 +269,7 @@ def cmd_check_intervals(args) -> int:
         return dt.datetime.fromtimestamp(ts, dt.timezone.utc).strftime("%Y-%m-%d %H:%M")
 
     ctx = _context(args)
-    snaps = ctx.plan("prod", args.start, args.end, skip_tests=True, skip_linter=True).snapshots
+    snaps = _served_snapshots(ctx, args.start, args.end)
     any_missing = False
     for name in sorted(snaps):
         snap = snaps[name]
@@ -679,7 +683,12 @@ def build_parser() -> argparse.ArgumentParser:
         description="PySpark-native sqlmesh-class transformation framework",
     )
     p.add_argument("-p", "--project", required=True, help="project directory")
-    p.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    p.add_argument(
+        "--cpus",
+        type=int,
+        default=None,
+        help="local Spark cores (default: SPARK_GRAFT_CPUS, else the usable cores)",
+    )
     p.add_argument(
         "--gateway",
         default=None,

@@ -1,8 +1,7 @@
 """Linter rules over model definitions (reference linter/rules/builtin.py).
 
-Rules are pure checks over parsed models (+ optional Spark analysis for
-column validation); violations are returned, never raised — policy lives
-with the caller.
+Rules are pure checks over parsed models; violations are returned, never
+raised — policy lives with the caller.
 """
 
 from __future__ import annotations
@@ -10,8 +9,6 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 from typing import Mapping, Optional
-
-from pyspark.sql import SparkSession
 
 from sqlmesh_spark.core.model import Model, ModelKind
 
@@ -67,21 +64,6 @@ def invalid_select_star_expansion(model: Model, known: set[str]) -> Optional[str
             "(declare them as models or external sources)"
         )
     return None
-
-
-def ambiguous_or_invalid_column(
-    model: Model, spark: Optional[SparkSession], rendered_sql: Optional[str]
-) -> Optional[str]:
-    """builtin.py:98: let the analyzer decide — plan the rendered query
-    without executing; analysis exceptions surface invalid/ambiguous
-    references."""
-    if spark is None or rendered_sql is None:
-        return None
-    try:
-        spark.sql(rendered_sql).schema
-        return None
-    except Exception as e:  # AnalysisException and friends
-        return f"analysis failed: {str(e).splitlines()[0][:160]}"
 
 
 def undeclared_read_dialect(model: Model) -> Optional[str]:
@@ -142,11 +124,7 @@ def register_lint_rule(name: str, fn) -> None:
     CUSTOM_RULES[name.lower()] = fn
 
 
-def lint_models(
-    models: Mapping[str, Model],
-    spark: Optional[SparkSession] = None,
-    rendered: Optional[Mapping[str, str]] = None,
-) -> list[LintViolation]:
+def lint_models(models: Mapping[str, Model]) -> list[LintViolation]:
     known = set(models)
     out: list[LintViolation] = []
     for name, model in models.items():
@@ -159,12 +137,6 @@ def lint_models(
             (
                 "invalid_select_star_expansion",
                 invalid_select_star_expansion(model, known),
-            ),
-            (
-                "ambiguous_or_invalid_column",
-                ambiguous_or_invalid_column(
-                    model, spark, (rendered or {}).get(name)
-                ),
             ),
         ):
             if msg:

@@ -40,15 +40,11 @@ from sqlmesh_spark.core.snapshot import (
     subtract_intervals,
 )
 from sqlmesh_spark.core.state import StateStore
+from sqlmesh_spark.diff import SchemaChangeRefused, SchemaDiffer, quote_ident
 
 
 class PlanError(Exception):
     """A plan cannot be applied as requested (policy violation)."""
-
-
-def _ident(name: str) -> str:
-    """A column name quoted for Spark DDL."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _layout_record(layout: TableLayout) -> dict:
@@ -549,11 +545,6 @@ class PlanEvaluator:
         rejects the plan before any mutation; warn/allow proceed with the
         column RETAINED on disk (parquet cannot DROP COLUMN) — history
         keeps its values and new intervals null-fill it."""
-        import logging
-
-        from sqlmesh_spark.diff import SchemaDiffer
-
-        differ = SchemaDiffer()
         pending: dict[str, list[str]] = {}
         for name in diff.modified:
             old_version = env_state[name]
@@ -576,52 +567,23 @@ class PlanEvaluator:
                 )
                 if target_cols is not None:
                     target_cols.update(new.model.layout.managed_columns)
-                    deltas = differ.compare(current_cols, target_cols)
-                    destructive = [d for d in deltas if differ.is_destructive(d)]
-                    additive = [d for d in deltas if d.op == "add"]
-                    policy = new.model.on_destructive_change
-                    if name in (allow_destructive or set()):
-                        # plan-level override (reference plan arg
-                        # allow_destructive_models): the operator accepts
-                        # the destructive change for THIS plan only.
-                        policy = "allow"
-                    if destructive and policy == "error":
-                        detail = ", ".join(
-                            f"{d.op} {d.column} ({d.current_type} -> {d.new_type})"
-                            for d in destructive
+                    # Plan-level overrides (reference plan args
+                    # allow_destructive_models / allow_additive_models)
+                    # accept the change for THIS plan only.
+                    differ = SchemaDiffer(
+                        on_destructive_change="allow"
+                        if name in (allow_destructive or set())
+                        else new.model.on_destructive_change,
+                        on_additive_change="allow"
+                        if name in (allow_additive or set())
+                        else new.model.on_additive_change,
+                    )
+                    try:
+                        stmts = differ.alter_statements(
+                            pinned.table_name, current_cols, target_cols
                         )
-                        raise PlanError(
-                            f"forward-only plan for {name} requires destructive "
-                            f"change(s) [{detail}] but on_destructive_change=error"
-                        )
-                    if destructive and policy == "warn":
-                        logging.getLogger("sqlmesh_spark").warning(
-                            "forward-only destructive change(s) on %s: %s",
-                            name,
-                            destructive,
-                        )
-                    # on_additive_change (kind.py:195-226): same ladder for
-                    # column ADDs — teams that version schemas externally
-                    # set error to force an explicit (breaking) migration.
-                    add_policy = new.model.on_additive_change
-                    if name in (allow_additive or set()):
-                        add_policy = "allow"
-                    if additive and add_policy == "error":
-                        detail = ", ".join(f"add {d.column} {d.new_type}" for d in additive)
-                        raise PlanError(
-                            f"forward-only plan for {name} requires additive "
-                            f"change(s) [{detail}] but on_additive_change=error"
-                        )
-                    if additive and add_policy == "warn":
-                        logging.getLogger("sqlmesh_spark").warning(
-                            "forward-only additive change(s) on %s: %s", name, additive,
-                        )
-                    stmts = [
-                        f"ALTER TABLE {pinned.table_name} "
-                        f"ADD COLUMN {_ident(d.column)} {d.new_type}"
-                        for d in deltas
-                        if d.op == "add"
-                    ]
+                    except SchemaChangeRefused as e:
+                        raise PlanError(f"forward-only plan for {name} {e}") from None
                     if stmts:
                         # Collected, not executed: plan() is read-only —
                         # apply() runs these (a dry-run must never alter
@@ -912,7 +874,7 @@ class PlanEvaluator:
             # metadata. The layout names them, so no column list is read.
             layout = snap.model.layout
             hidden = [c for c in layout.partitioned_by if c in layout.managed_columns]
-            select = f"* EXCEPT ({', '.join(map(_ident, hidden))})" if hidden else "*"
+            select = f"* EXCEPT ({', '.join(map(quote_ident, hidden))})" if hidden else "*"
             self.adapter.create_view(env_view, f"SELECT {select} FROM {snap.table_name}")
             return env_view
 
@@ -971,4 +933,4 @@ class PlanEvaluator:
         for col, desc in sorted(model.column_descriptions.items()):
             if col in existing:  # a description of a column the table lacks is skipped
                 c = desc.replace("'", "''")
-                self.spark.sql(f"ALTER TABLE {tbl} ALTER COLUMN {_ident(col)} COMMENT '{c}'")
+                self.spark.sql(f"ALTER TABLE {tbl} ALTER COLUMN {quote_ident(col)} COMMENT '{c}'")

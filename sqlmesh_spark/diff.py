@@ -38,6 +38,10 @@ _SAFE_WIDENINGS = {
 }
 
 
+class SchemaChangeRefused(ValueError):
+    """A column change the table's 'error' policy forbids."""
+
+
 class SchemaDiffer:
     """Compute ALTER operations between two column->type mappings
     (schema_diff.py:723 _get_operations), governed by destructive/additive
@@ -77,44 +81,49 @@ class SchemaDiffer:
     def alter_statements(
         self, table: str, current: Mapping[str, str], new: Mapping[str, str]
     ) -> list[str]:
-        """ALTER TABLE plan, governed by BOTH policies: 'error' raises,
-        'warn' logs, 'allow' proceeds silently (model/kind.py:195-226) —
-        for destructive AND additive changes alike."""
+        """ALTER TABLE plan for a table migrated in place, governed by BOTH
+        policies (model/kind.py:195-226) for destructive and additive
+        changes alike: 'error' raises SchemaChangeRefused, 'warn' logs,
+        'allow' proceeds silently. Only column ADDs are emitted: a dropped or
+        retyped column is RETAINED on disk (parquet cannot drop or retype
+        a column in place) — history keeps its values and new rows
+        null-fill it."""
         import logging
 
-        log = logging.getLogger("sqlmesh_spark.diff")
-        stmts = []
-        for d in self.compare(current, new):
-            if self.is_destructive(d):
-                if self.on_destructive_change == "error":
-                    raise ValueError(
-                        f"destructive change on {table}.{d.column}: {d.op} "
-                        f"{d.current_type} -> {d.new_type} (on_destructive_change=error)"
-                    )
-                if self.on_destructive_change == "warn":
-                    log.warning(
-                        "destructive change on %s.%s: %s %s -> %s",
-                        table, d.column, d.op, d.current_type, d.new_type,
-                    )
-            elif d.op == "add":
-                if self.on_additive_change == "error":
-                    raise ValueError(
-                        f"additive change on {table}.{d.column}: add "
-                        f"{d.new_type} (on_additive_change=error)"
-                    )
-                if self.on_additive_change == "warn":
-                    log.warning(
-                        "additive change on %s.%s: add %s", table, d.column, d.new_type
-                    )
-            if d.op == "add":
-                stmts.append(f"ALTER TABLE {table} ADD COLUMN {d.column} {d.new_type}")
-            elif d.op == "drop":
-                stmts.append(f"ALTER TABLE {table} DROP COLUMN {d.column}")
-            else:
-                stmts.append(
-                    f"ALTER TABLE {table} ALTER COLUMN {d.column} TYPE {d.new_type}"
+        deltas = self.compare(current, new)
+        additive = [d for d in deltas if d.op == "add"]
+        for kind, found, policy, detail in (
+            (
+                "destructive",
+                [d for d in deltas if self.is_destructive(d)],
+                self.on_destructive_change,
+                lambda d: f"{d.op} {d.column} ({d.current_type} -> {d.new_type})",
+            ),
+            (
+                "additive",
+                additive,
+                self.on_additive_change,
+                lambda d: f"add {d.column} {d.new_type}",
+            ),
+        ):
+            if found and policy == "error":
+                raise SchemaChangeRefused(
+                    f"requires {kind} change(s) [{', '.join(map(detail, found))}] "
+                    f"but on_{kind}_change=error"
                 )
-        return stmts
+            if found and policy == "warn":
+                logging.getLogger("sqlmesh_spark").warning(
+                    "forward-only %s change(s) on %s: %s", kind, table, found
+                )
+        return [
+            f"ALTER TABLE {table} ADD COLUMN {quote_ident(d.column)} {d.new_type}"
+            for d in additive
+        ]
+
+
+def quote_ident(name: str) -> str:
+    """A column name quoted for Spark DDL."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 # ---------------------------------------------------------------------------

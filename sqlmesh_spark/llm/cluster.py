@@ -25,12 +25,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sqlmesh_spark.llm.dedup import (
+    _minhash_case,
     embedding_lsh_pairs_sql,
     minhash_lsh_sql,
-    minhash_lsh_wide_sql,
+    sign_lsh_pairs,
 )
 from sqlmesh_spark.registry import register
-from sqlmesh_spark.sources.tables import register_views
 
 
 def connected_components(
@@ -129,16 +129,9 @@ SELECT u AS doc_id, MIN(v) AS component FROM reach GROUP BY u
 @register("dedup_cluster_components", oracle=CLUSTER_ORACLE, tags=("llm", "dedup"))
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Components over the MinHash-LSH near-dup pairs: the full
-    shingle→LSH→verify→transitive-closure dedup pipeline as one case."""
-    from sqlmesh_spark.llm.dedup import docset_sql, spread_scan
-
-    register_views(spark, sf_dir, ("documents",))
-    docs = spread_scan(spark, "documents", "cc_docs")
-    n_part = max(spark.sparkContext.defaultParallelism, 8)
-    ds = spark.sql(docset_sql(docs, 5)).repartition(n_part, "doc_id")
-    ds.cache().createOrReplaceTempView("cc_docsets")
-    pairs = spark.sql(minhash_lsh_wide_sql(docs, docsets_relation="cc_docsets"))
-    return connected_components(pairs)
+    shingle→LSH→verify→transitive-closure dedup pipeline as one case.
+    The pairs are dedup_minhash_lsh's (cached docsets + cached bands)."""
+    return connected_components(_minhash_case(spark, sf_dir))
 
 
 EMB_CLUSTER_ORACLE = (
@@ -170,20 +163,6 @@ def dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_cluster_components: what a pipeline actually runs to drop
     semantic near-duplicates at corpus scale — pairs alone under-dedupe
     chains (A~B, B~C must collapse together)."""
-    from sqlmesh_spark.llm.dedup import (
-        embedding_lsh_bands_sql,
-        embedding_lsh_wide_sql,
-        spread_scan,
-    )
-
-    register_views(spark, sf_dir, ("embeddings",))
-    corpus = spread_scan(spark, "embeddings", "embcl_corpus")
-    bands = spark.sql(embedding_lsh_bands_sql(corpus))
-    bands.cache().createOrReplaceTempView("embcl_bands")
-    pairs = spark.sql(
-        embedding_lsh_wide_sql(
-            corpus, bands_relation="embcl_bands", threshold=0.42
-        )
-    ).selectExpr("v1 AS d1", "v2 AS d2")
-    out = connected_components(pairs)
+    pairs = sign_lsh_pairs(spark, sf_dir, "embcl", threshold=0.42)
+    out = connected_components(pairs, src="v1", dst="v2")
     return out.selectExpr("doc_id AS vec_id", "component")

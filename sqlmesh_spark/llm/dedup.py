@@ -2,7 +2,8 @@
 embedding-cosine — the standard near-dup ladder for pre-training corpora.
 
 Everything is built from set-oriented Spark SQL (shuffle-friendly,
-no driver loops, no Python UDFs):
+no driver loops, no row-at-a-time Python UDFs) except the sign-LSH band
+producer, one vectorized int64 matmul per Arrow batch:
 
 - Shingling explodes positions with sequence(); at 100 TB you shingle
   per-partition at scan speed and the only shuffles are the group-bys.
@@ -12,6 +13,10 @@ no driver loops, no Python UDFs):
 - Hashes are md5-derived 60-bit ints (CONV on Spark, '0x..'::BIGINT on
   DuckDB) so every case has a true value-level oracle. Production would
   swap in xxhash64 (same shape, JVM-native, no hex detour).
+
+A signature family with a Spark fast path (MinHash, SimHash, sign-LSH)
+keeps exactly two forms: the oracle builder, which also runs under
+DuckDB, and one Spark pipeline over cached relations.
 
 Reference tie-in: the reference's own dedup surface is @deduplicate
 (macros.py:1241) — exact key dedup; the fuzzy ladder here is the
@@ -168,7 +173,6 @@ def minhash_lsh_sql(
     band_size: int = 4,
     threshold: float = 0.6,
     dialect: str = "spark",
-    shingles_relation: str | None = None,
 ) -> str:
     """Candidate pairs from banded minhash signatures, then exact-Jaccard
     verification on candidates only.
@@ -192,16 +196,10 @@ def minhash_lsh_sql(
     # Shingles hash to int64 BEFORE the DISTINCT: every downstream shuffle
     # (dedup, sizes, sig agg, verify join) then moves 8-byte ints, not
     # strings — the dominant cost at scale is shuffle bytes, not md5.
-    # Spark recomputes inline CTEs (referenced 4×), so the runtime case
-    # materializes this relation once (cache + temp view) and passes its
-    # name; DuckDB auto-materializes multiply-referenced CTEs.
-    sh_body = (
-        f"SELECT * FROM {shingles_relation}"
-        if shingles_relation
-        else shingle_hashes_sql(table, k, dialect)
-    )
+    # DuckDB auto-materializes the multiply-referenced CTE; the Spark
+    # runtime path is minhash_lsh_wide_sql over cached relations.
     return f"""
-WITH sh AS ({sh_body}),
+WITH sh AS ({shingle_hashes_sql(table, k, dialect)}),
 hf AS (
   SELECT i, ({ha} % 1073741823) + 1 AS a, {hb} % 4294967296 AS b
   FROM {_seq("0", str(num_hashes - 1), "i", dialect, lateral=False)}
@@ -300,13 +298,9 @@ FROM (SELECT doc_id, {", ".join(bkeys)}
 
 
 def minhash_lsh_wide_sql(
-    table: str,
-    k: int = 5,
-    num_hashes: int = 32,
-    band_size: int = 4,
+    docsets_relation: str,
+    bands_relation: str,
     threshold: float = 0.6,
-    docsets_relation: str | None = None,
-    bands_relation: str | None = None,
 ) -> str:
     """Spark fast path for minhash_lsh_sql, value-identical to the narrow
     oracle formulation but with a fundamentally lighter shuffle profile:
@@ -314,40 +308,28 @@ def minhash_lsh_wide_sql(
     - narrow (oracle) form: shingle DISTINCT shuffle, |shingles|·num_hashes
       rows through the signature group-by, a second band group-by, and a
       verify JOIN carrying |candidates|·|shingles/doc| rows.
-    - this form: ONE shuffle (COLLECT_SET of shingle hashes per doc).
-      Signatures are ARRAY_MIN(TRANSFORM(hs, …)) projections over the doc
-      array — no exchange; band keys are XORs of the mins — no exchange;
+    - this form: the per-doc shingle-hash arrays (docset_sql) and their
+      band keys (minhash_bands_sql) are projections — no exchange; the
+      candidate self-join on band keys is the first shuffle, and
       verification is SIZE(ARRAY_INTERSECT(hs, hs)) on candidate pairs —
       array ops against two broadcast-joined doc arrays instead of a
       multi-million-row shuffle join.
 
     At 100 TB the per-doc array is bounded by document length (shingles of
-    one doc always fit one executor), so every stage after the single
-    group-by scales with |docs| + |candidate pairs|, not |shingles|².
+    one doc always fit one executor), so every stage scales with
+    |docs| + |candidate pairs|, not |shingles|².
 
     Hash constants aᵢ/bᵢ are md5-derived exactly as the oracle derives
     them in SQL, inlined as literals, so results hash-match the DuckDB
     oracle bit-for-bit (verified by test_minhash_wide_matches_narrow).
 
-    When ``docsets_relation`` names a cached temp view it is referenced
+    Both relations name cached temp views (the candidate self-join reads
+    the bands twice, the verify join the docsets twice), referenced
     DIRECTLY, never via a ``WITH x AS (SELECT * FROM …)`` alias: Spark's
     cache lookup misses through a CTE reference (CTERelationRef
     canonicalizes differently than the cached plan), silently recomputing
     the relation once per reference.
     """
-    if docsets_relation:
-        ds, with_ds = docsets_relation, ""
-    else:
-        ds = "docsets"
-        with_ds = f"docsets AS ({docset_sql(table, k)}),\n"
-    if bands_relation:
-        # Reference the cached view DIRECTLY in both join legs — routing it
-        # through a `WITH bands AS (SELECT * FROM v)` alias would hit the
-        # same CTERelationRef cache-miss pitfall the docsets note describes.
-        bands_rel, with_bands = bands_relation, ""
-    else:
-        bands_rel = "bands"
-        with_bands = f"bands AS ({minhash_bands_sql(ds, num_hashes, band_size)}),\n"
     # The threshold predicate as EXACT integers referencing `common` once:
     # c/(s-c) > num/den  ⟺  c·(den+num) > num·s. The float form
     # c/(n1+n2-c) > t mentions c twice, and Catalyst substitutes the full
@@ -359,9 +341,9 @@ def minhash_lsh_wide_sql(
     frac = Fraction(str(threshold))
     num, den = frac.numerator, frac.denominator
     return f"""
-WITH {with_ds}{with_bands}candidates AS (
+WITH candidates AS (
   SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-  FROM {bands_rel} a JOIN {bands_rel} b
+  FROM {bands_relation} a JOIN {bands_relation} b
     ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
 ),
 verified AS (
@@ -369,8 +351,8 @@ verified AS (
          SIZE(ARRAY_INTERSECT(s1.hs, s2.hs)) AS common,
          SIZE(s1.hs) AS n1, SIZE(s2.hs) AS n2
   FROM candidates c
-  JOIN {ds} s1 ON s1.doc_id = c.d1
-  JOIN {ds} s2 ON s2.doc_id = c.d2
+  JOIN {docsets_relation} s1 ON s1.doc_id = c.d1
+  JOIN {docsets_relation} s2 ON s2.doc_id = c.d2
 )
 SELECT d1, d2,
        ROUND(CAST(common AS DOUBLE) / (n1 + n2 - common), 4) AS jaccard
@@ -523,11 +505,7 @@ def _minhash_case(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.70/1.93 s min/median, OPTIMIZATION_r12.md).
     bands = spark.sql(minhash_bands_sql("mh_docsets"))
     bands.cache().createOrReplaceTempView("mh_bands")
-    return spark.sql(
-        minhash_lsh_wide_sql(
-            docs, docsets_relation="mh_docsets", bands_relation="mh_bands"
-        )
-    )
+    return spark.sql(minhash_lsh_wide_sql("mh_docsets", "mh_bands"))
 
 
 register(
@@ -566,12 +544,12 @@ FROM (SELECT doc_id, simhash, {bands} FROM
 
 
 def simhash_banded_sql(
-    table: str,
+    bands_relation: str,
     max_hamming: int = 3,
     n_bands: int = 4,
-    bands_relation: str | None = None,
 ) -> str:
-    """Spark fast path for simhash_sql, value-identical output.
+    """Spark fast path for simhash_sql, value-identical output, over the
+    cached simhash_bands_sql relation named by ``bands_relation``.
 
     The narrow oracle form compares all O(n²) signature pairs. Here the
     60-bit signature splits into ``n_bands`` 15-bit bands; by pigeonhole,
@@ -585,17 +563,12 @@ def simhash_banded_sql(
     interpreted fold per bit instead of a |words|·60-row exchange.
     """
     assert max_hamming < n_bands, "pigeonhole recall requires max_hamming < n_bands"
-    if bands_relation:
-        bands_rel, with_bands = bands_relation, ""
-    else:
-        bands_rel = "bands"
-        with_bands = f"WITH bands AS ({simhash_bands_sql(table, n_bands)})\n"
     return f"""
-{with_bands}SELECT d1, d2, bit_count(s1 ^ s2) AS hamming
+SELECT d1, d2, bit_count(s1 ^ s2) AS hamming
 FROM (
   SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
          a.simhash AS s1, b.simhash AS s2
-  FROM {bands_rel} a JOIN {bands_rel} b
+  FROM {bands_relation} a JOIN {bands_relation} b
     ON a.band = b.band AND a.bval = b.bval AND a.doc_id < b.doc_id
 ) candidates
 WHERE bit_count(s1 ^ s2) <= {max_hamming}
@@ -607,7 +580,7 @@ def _simhash_case(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread_scan(spark, "documents", "sh_docs")
     bands = spark.sql(simhash_bands_sql(docs))
     bands.cache().createOrReplaceTempView("sh_bands")
-    return spark.sql(simhash_banded_sql(docs, bands_relation="sh_bands"))
+    return spark.sql(simhash_banded_sql("sh_bands"))
 
 
 register(
@@ -669,6 +642,56 @@ def _plane_sgn_sql(p_expr: str, ord_expr: str, dialect: str) -> str:
     return f"(CASE WHEN ({h}) % 2 = 0 THEN 1 ELSE -1 END)"
 
 
+def embedding_lsh_sig_sql(
+    table: str,
+    n_planes: int = 16,
+    band_size: int = 4,
+    dialect: str = "spark",
+) -> str:
+    """The sign-LSH band derivation of embedding_lsh_pairs_sql as a CTE
+    list (no leading WITH): ``elems`` (one row per vector element),
+    ``planes`` (md5-derived ±1 weights), ``projs`` (scaled-int
+    projections) and ``sig`` — (vec_id, band, bkey), the band rows the
+    candidate self-join probes. The oracle builds on it, and the Arrow
+    producer (embedding_lsh_bands_arrow) is checked against its ``sig``."""
+    if dialect == "duckdb":
+        elems = f"""
+  SELECT vec_id, CAST(i AS INT) AS ord, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS val
+  FROM {table}, unnest(generate_series(1, len(embedding))) AS _i(i)
+"""
+        planes = f"""
+  SELECT CAST(p AS INT) AS p, CAST(o AS INT) AS ord,
+         {_plane_sgn_sql("p", "o", "duckdb")} AS sgn
+  FROM unnest(generate_series(0, {n_planes - 1})) AS _p(p),
+       unnest(generate_series(1, (SELECT MAX(len(embedding)) FROM {table}))) AS _o(o)
+"""
+    else:
+        elems = f"""
+  SELECT vec_id, pos + 1 AS ord, CAST(val AS DOUBLE) AS val
+  FROM {table} LATERAL VIEW posexplode(embedding) AS pos, val
+"""
+        planes = f"""
+  SELECT CAST(p AS INT) AS p, CAST(o AS INT) AS ord,
+         {_plane_sgn_sql("p", "o", "spark")} AS sgn
+  FROM (SELECT explode(sequence(0, {n_planes - 1})) AS p)
+  LATERAL VIEW explode(sequence(1, (SELECT MAX(SIZE(embedding)) FROM {table}))) AS o
+"""
+    return f"""elems AS ({elems}),
+planes AS ({planes}),
+projs AS (
+  SELECT e.vec_id, pl.p,
+         SUM(CAST(ROUND(e.val * 1000000) AS BIGINT) * pl.sgn) AS proj
+  FROM elems e JOIN planes pl ON e.ord = pl.ord
+  GROUP BY e.vec_id, pl.p
+),
+sig AS (
+  SELECT vec_id, CAST(FLOOR(p / {band_size}) AS INT) AS band,
+         SUM(CASE WHEN proj > 0 THEN CAST(POWER(2, p % {band_size}) AS BIGINT) ELSE 0 END) AS bkey
+  FROM projs
+  GROUP BY vec_id, CAST(FLOOR(p / {band_size}) AS INT)
+)"""
+
+
 def embedding_lsh_pairs_sql(
     table: str,
     n_planes: int = 16,
@@ -699,44 +722,8 @@ def embedding_lsh_pairs_sql(
     of random pairs while keeping near-dups, and the pruning sharpens
     exponentially as corpora develop real duplicate mass.
     """
-    n_bands = n_planes // band_size
-    if dialect == "duckdb":
-        elems = f"""
-  SELECT vec_id, CAST(i AS INT) AS ord, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS val
-  FROM {table}, unnest(generate_series(1, len(embedding))) AS _i(i)
-"""
-        planes = f"""
-  SELECT CAST(p AS INT) AS p, CAST(o AS INT) AS ord,
-         {_plane_sgn_sql("p", "o", "duckdb")} AS sgn
-  FROM unnest(generate_series(0, {n_planes - 1})) AS _p(p),
-       unnest(generate_series(1, (SELECT MAX(len(embedding)) FROM {table}))) AS _o(o)
-"""
-    else:
-        elems = f"""
-  SELECT vec_id, pos + 1 AS ord, CAST(val AS DOUBLE) AS val
-  FROM {table} LATERAL VIEW posexplode(embedding) AS pos, val
-"""
-        planes = f"""
-  SELECT CAST(p AS INT) AS p, CAST(o AS INT) AS ord,
-         {_plane_sgn_sql("p", "o", "spark")} AS sgn
-  FROM (SELECT explode(sequence(0, {n_planes - 1})) AS p)
-  LATERAL VIEW explode(sequence(1, (SELECT MAX(SIZE(embedding)) FROM {table}))) AS o
-"""
     return f"""
-WITH elems AS ({elems}),
-planes AS ({planes}),
-projs AS (
-  SELECT e.vec_id, pl.p,
-         SUM(CAST(ROUND(e.val * 1000000) AS BIGINT) * pl.sgn) AS proj
-  FROM elems e JOIN planes pl ON e.ord = pl.ord
-  GROUP BY e.vec_id, pl.p
-),
-sig AS (
-  SELECT vec_id, CAST(FLOOR(p / {band_size}) AS INT) AS band,
-         SUM(CASE WHEN proj > 0 THEN CAST(POWER(2, p % {band_size}) AS BIGINT) ELSE 0 END) AS bkey
-  FROM projs
-  GROUP BY vec_id, CAST(FLOOR(p / {band_size}) AS INT)
-),
+WITH {embedding_lsh_sig_sql(table, n_planes, band_size, dialect)},
 candidates AS (
   SELECT DISTINCT a.vec_id AS v1, b.vec_id AS v2
   FROM sig a JOIN sig b
@@ -761,41 +748,6 @@ FROM dots d JOIN norms n1 ON d.v1 = n1.vec_id JOIN norms n2 ON d.v2 = n2.vec_id
 """
 
 
-def embedding_lsh_bands_sql(
-    table: str,
-    dim: int = 64,
-    n_planes: int = 16,
-    band_size: int = 4,
-) -> str:
-    """(vec_id, band, bkey) sign-LSH band rows — split out for runtime
-    caching (the candidate self-join reads it twice; Spark inlines CTEs)."""
-    n_bands = n_planes // band_size
-
-    def sgns(p: int) -> str:
-        return ", ".join(
-            "1" if _hash60_py(f"pl{p}_{o}") % 2 == 0 else "-1"
-            for o in range(1, dim + 1)
-        )
-
-    bits = []
-    for p in range(n_planes):
-        fold = (
-            f"AGGREGATE(ZIP_WITH(embedding, ARRAY({sgns(p)}), "
-            "(x, s) -> CAST(ROUND(CAST(x AS DOUBLE) * 1000000) AS BIGINT) * s), "
-            "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        )
-        bits.append(f"IF({fold} > 0, CAST({2 ** (p % band_size)} AS BIGINT), 0L) AS bit{p}")
-    bkeys = ", ".join(
-        "(" + " + ".join(f"bit{p}" for p in range(b * band_size, (b + 1) * band_size)) + f") AS bkey{b}"
-        for b in range(n_bands)
-    )
-    stack_args = ", ".join(f"{b}, bkey{b}" for b in range(n_bands))
-    return f"""
-SELECT vec_id, STACK({n_bands}, {stack_args}) AS (band, bkey)
-FROM (SELECT vec_id, {bkeys} FROM (SELECT vec_id, {", ".join(bits)} FROM {table}))
-"""
-
-
 def embedding_lsh_bands_arrow(
     spark: "SparkSession",
     table: str,
@@ -804,18 +756,19 @@ def embedding_lsh_bands_arrow(
     band_size: int = 4,
 ):
     """(vec_id, band, bkey) sign-LSH band rows via an Arrow-batched
-    int64 matmul — bit-identical to embedding_lsh_bands_sql (and the
-    duckdb oracle) but vectorized: the SQL fold runs n_planes×dim
-    interpreted lambda evaluations PER ROW (measured as the wall-clock
-    ceiling of the 100× scale run), the numpy form one (rows × dim) @
-    (dim × planes) integer matmul per Arrow batch.
+    int64 matmul — bit-identical to the oracle's ``sig`` relation
+    (embedding_lsh_sig_sql) but vectorized: one (rows × dim) @
+    (dim × planes) integer matmul per Arrow batch. The SQL ZIP_WITH fold
+    it replaced ran n_planes×dim interpreted lambda evaluations PER ROW;
+    at 100× (200k vectors) that ran past 15 minutes and out of an 8 GiB
+    heap, where this form took 8.8 s (SCALE.md).
 
     Exactness argument: each element is scaled to an int64
     (ROUND(x·1e6), half away from zero — numpy's round is half-EVEN,
     so the sign·floor(|x|+0.5) form is used), the ±1 plane weights come
     from the same md5 derivation (_hash60_py == _hash60 SQL), and
     int64 sums are order-insensitive — so every projection, sign bit,
-    and band key matches the SQL/duckdb formulation exactly, batch
+    and band key matches the oracle's formulation exactly, batch
     order notwithstanding. Zero shuffles: a pure mapInPandas
     projection; the band-key bucket join downstream is the first
     exchange.
@@ -843,9 +796,9 @@ def embedding_lsh_bands_arrow(
             if not len(pdf):
                 continue
             emb = _np.stack(pdf["embedding"].to_numpy()).astype(_np.float64)
-            # interior NULL elements arrive as NaN through Arrow — the
-            # SQL fold's band key is NULL for those rows (never joins),
-            # so drop them with one vectorized mask
+            # interior NULL elements arrive as NaN through Arrow; such
+            # a vector has no exact projection, so drop it with one
+            # vectorized mask
             ok = ~_np.isnan(emb).any(axis=1)
             if not ok.all():
                 emb = emb[ok]
@@ -871,14 +824,11 @@ def embedding_lsh_bands_arrow(
                 }
             )
 
-    # NULL / ragged / null-element embeddings: the SQL fold yields NULL
-    # bits → NULL band keys there — rows no bkey equality can join, so
-    # drop them; the relation matches the SQL form minus its
-    # never-joinable NULL-bkey rows. NULL/ragged rows go via an O(1)
-    # SQL guard (an interpreted per-element filter() here cost ~4×
-    # wall on the 100× scale run); interior NULL elements arrive as
-    # NaN through Arrow and are dropped by the vectorized isnan mask
-    # in the worker — numpy speed, same semantics.
+    # NULL / ragged / null-element embeddings get no band rows, so they
+    # never become candidates. NULL/ragged rows go via an O(1) SQL guard
+    # (an interpreted per-element filter() here cost ~4× wall on the
+    # 100× scale run); interior NULL elements arrive as NaN through
+    # Arrow and are dropped by the vectorized isnan mask in the worker.
     fed = spark.table(table).select("vec_id", "embedding").where(
         f"embedding IS NOT NULL AND size(embedding) = {dim}"
     )
@@ -889,22 +839,16 @@ def embedding_lsh_bands_arrow(
 
 def embedding_lsh_wide_sql(
     table: str,
-    dim: int = 64,
-    n_planes: int = 16,
-    band_size: int = 4,
+    bands_relation: str,
     top_n: int = 20,
-    bands_relation: str | None = None,
     threshold: float | None = None,
 ) -> str:
     """Spark fast path for embedding_lsh_pairs_sql, value-identical output
-    with NO element explosion: plane weights inline as ±1 literal arrays
-    (md5-derived exactly as the oracle derives them in SQL), each sign bit
-    is one ZIP_WITH/AGGREGATE fold over the embedding array, and band keys
-    STACK into rows for the bucket self-join. The only shuffles are the
-    band-key join and the final top-N — signature computation is a pure
-    projection inside whole-stage codegen. Candidate verification is a
-    ZIP_WITH cosine against the two broadcast-joined embedding arrays —
-    |candidates| folds, not an |elems|² join.
+    with NO element explosion: the band rows come from the cached
+    embedding_lsh_bands_arrow relation named by ``bands_relation``, so the
+    only shuffles are the band-key join and the final top-N. Candidate
+    verification is a ZIP_WITH cosine against the two broadcast-joined
+    embedding arrays — |candidates| folds, not an |elems|² join.
     """
     # casts hoisted out of the candidate loop (ann_topk_zipwith_sql note)
     dot = (
@@ -917,16 +861,11 @@ def embedding_lsh_wide_sql(
         "x -> CAST(ROUND(x * x * 1000000) AS BIGINT)), "
         "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
     )
-    if bands_relation:
-        bands_rel, with_bands = bands_relation, ""
-    else:
-        bands_rel = "bands"
-        with_bands = f"bands AS ({embedding_lsh_bands_sql(table, dim, n_planes, band_size)}),\n"
     return f"""
 WITH vecs AS (SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS emb, {norm} AS nrm FROM {table}),
-{with_bands}candidates AS (
+candidates AS (
   SELECT DISTINCT a.vec_id AS v1, b.vec_id AS v2
-  FROM {bands_rel} a JOIN {bands_rel} b
+  FROM {bands_relation} a JOIN {bands_relation} b
     ON a.band = b.band AND a.bkey = b.bkey AND a.vec_id < b.vec_id
 ),
 verified AS (
@@ -941,17 +880,31 @@ SELECT v1, v2, cosine FROM verified
 """
 
 
-def _emb_lsh_case(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sign_lsh_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+    view: str,
+    n_planes: int = 16,
+    band_size: int = 4,
+    threshold: float | None = None,
+) -> DataFrame:
+    """The one sign-LSH embedding pipeline: spread scan → cached Arrow
+    bands → embedding_lsh_wide_sql. Top-20 pairs by cosine, or every
+    pair at or above ``threshold``. ``view`` prefixes the temp views it
+    registers (``<view>_corpus``, ``<view>_bands``)."""
     register_views(spark, sf_dir, ("embeddings",))
-    corpus = spread_scan(spark, "embeddings", "emb_lsh_corpus")
-    # Arrow matmul bands (bit-identical to embedding_lsh_bands_sql —
-    # pinned by tests/test_llm_ops.py); the SQL fold's interpreted
-    # lambdas were the wall-clock ceiling of the 100× scale run
-    bands = embedding_lsh_bands_arrow(spark, corpus)
-    bands.cache().createOrReplaceTempView("emb_lsh_bands")
-    return spark.sql(
-        embedding_lsh_wide_sql(corpus, bands_relation="emb_lsh_bands")
+    corpus = spread_scan(spark, "embeddings", f"{view}_corpus")
+    bands = embedding_lsh_bands_arrow(
+        spark, corpus, n_planes=n_planes, band_size=band_size
     )
+    bands.cache().createOrReplaceTempView(f"{view}_bands")
+    return spark.sql(
+        embedding_lsh_wide_sql(corpus, f"{view}_bands", threshold=threshold)
+    )
+
+
+def _emb_lsh_case(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return sign_lsh_pairs(spark, sf_dir, "emb_lsh")
 
 
 register(
@@ -976,18 +929,7 @@ def _emb_lsh_wide_case(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact-cosine verify rung keeps precision exact. Same Arrow
     int64-matmul signatures; the DuckDB oracle runs the identical
     64-plane pipeline, so the hash match proves the whole path."""
-    register_views(spark, sf_dir, ("embeddings",))
-    corpus = spread_scan(spark, "embeddings", "emb_lshw_corpus")
-    bands = embedding_lsh_bands_arrow(
-        spark, corpus, n_planes=64, band_size=16
-    )
-    bands.cache().createOrReplaceTempView("emb_lshw_bands")
-    return spark.sql(
-        embedding_lsh_wide_sql(
-            corpus, n_planes=64, band_size=16,
-            bands_relation="emb_lshw_bands",
-        )
-    )
+    return sign_lsh_pairs(spark, sf_dir, "emb_lshw", n_planes=64, band_size=16)
 
 
 register(

@@ -225,9 +225,7 @@ register(
 )(_case(hashed_classifier_sql))
 
 
-def training_pipeline_sql(
-    table: str, dialect: str = "spark", kept_relation: str | None = None
-) -> str:
+def training_pipeline_sql(table: str, dialect: str = "spark") -> str:
     """The end-to-end pre-training data pipeline as ONE statement:
     quality-filter (C4/Gopher-style) → language filter (en) → exact dedup
     on normalized text (keep min doc_id) → deterministic train/valid split
@@ -235,41 +233,23 @@ def training_pipeline_sql(
     projection (at 100 TB this runs at scan speed; the only shuffle is the
     fingerprint group-by), with the split hash portable across engines.
 
-    The ``kept`` relation feeds BOTH the dedup group-by and the final
-    join; Spark inlines CTEs, so uncached that runs the multi-regex scan
-    twice — the runtime case passes a cached ``kept_relation`` (DuckDB
-    auto-materializes multiply-referenced CTEs, so the oracle form is
-    already single-scan).
+    This is the oracle form: the ``kept`` relation feeds both the dedup
+    group-by and the final join, which DuckDB materializes once. The
+    Spark runtime reads the fused scan once instead, through
+    training_pipeline_kept_sql + training_pipeline_window_sql.
     """
     from sqlmesh_spark.llm.dedup import _hash60
 
-    n_words = _rx_count("text", "[^ ]+", dialect)
-    n_punct = _rx_count("text", "[.,!?;:]", dialect)
-    bpe = _rx_count("text", "[A-Za-z]+|[0-9]|[^A-Za-z0-9 ]", dialect)
-    en = _rx_count("lower(text)", _LANG_PROFILES["en"], dialect)
-    others = [
-        _rx_count("lower(text)", pat, dialect)
-        for lang, pat in _LANG_PROFILES.items()
-        if lang != "en"
-    ]
-    norm = _norm("text", dialect)
     split_hash = _hash60("CAST(doc_id AS STRING)", dialect)
-    if kept_relation:
-        kept_rel, with_kept = kept_relation, ""
-    else:
-        kept_rel = "kept"
-        with_kept = f"""WITH signals AS ({training_pipeline_kept_sql(table, dialect, signals_only=True)}),
-kept AS (SELECT * FROM signals WHERE keep = 1 AND is_en = 1),
-"""
-    dedup_cte = (
-        f"dedup AS (\n  SELECT fingerprint, MIN(doc_id) AS keeper FROM {kept_rel} GROUP BY fingerprint\n)"
-    )
-    prefix = with_kept + dedup_cte if with_kept else "WITH " + dedup_cte
     return f"""
-{prefix}
+WITH signals AS ({training_pipeline_kept_sql(table, dialect, signals_only=True)}),
+kept AS (SELECT * FROM signals WHERE keep = 1 AND is_en = 1),
+dedup AS (
+  SELECT fingerprint, MIN(doc_id) AS keeper FROM kept GROUP BY fingerprint
+)
 SELECT k.doc_id, k.bpe_tokens,
        CASE WHEN {split_hash} % 10 < 9 THEN 'train' ELSE 'valid' END AS split
-FROM {kept_rel} k JOIN dedup d ON k.doc_id = d.keeper
+FROM kept k JOIN dedup d ON k.doc_id = d.keeper
 """
 
 

@@ -13,9 +13,6 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-
 def build_session(
     app_name: str = "sqlmesh_spark",
     cpus: str | int | None = None,
@@ -33,8 +30,13 @@ def build_session(
     - Dynamic partition overwrite — INSERT OVERWRITE replaces only the
       partitions present in the incoming data, which is the core
       incremental-by-time materialization primitive.
+
+    ``cpus`` defaults to SPARK_GRAFT_CPUS, else the cores this process may
+    run on.
     """
-    cpus = str(cpus or _DEFAULT_CPUS)
+    cpus = str(
+        cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     shuffle = str(shuffle_partitions or max(int(cpus) if cpus.isdigit() else 32, 8))
     prefer_smj = os.environ.get("SPARK_GRAFT_PREFER_SMJ") == "1"
     builder = (

@@ -247,6 +247,47 @@ def test_cli_audit_skips_unmaterialized(project, capsys):
     assert "SKIP" in out or "PASS" in out
 
 
+def test_cli_table_name_and_audit_read_the_served_version(project, capsys):
+    """A NON_BREAKING parent change keeps the child at the version prod
+    serves (categorization revert). table_name and audit must name that
+    version's table, not the child's fresh fingerprint, whose table was
+    never built."""
+    proj, schema = project
+    models = os.path.join(proj, "models")
+    monthly = os.path.join(models, "monthly.sql")
+    with open(monthly) as f:
+        text = f.read()
+    with open(monthly, "w") as f:
+        f.write(text.replace("kind FULL", "kind FULL, audits (not_null(columns = (month)))"))
+    assert main(["-p", proj, "plan"]) == 0
+    capsys.readouterr()
+    assert main(["-p", proj, "table_name", f"{schema}.monthly"]) == 0
+    served = capsys.readouterr().out.strip()
+
+    # added projection only: NON_BREAKING, so monthly keeps its version
+    daily = os.path.join(models, "daily.sql")
+    with open(daily) as f:
+        text = f.read()
+    with open(daily, "w") as f:
+        f.write(text.replace("SELECT * FROM", "SELECT *, 1 AS extra FROM"))
+    assert main(["-p", proj, "plan"]) == 0
+    capsys.readouterr()
+
+    assert main(["-p", proj, "table_name", f"{schema}.monthly"]) == 0
+    assert capsys.readouterr().out.strip() == served
+    assert main(["-p", proj, "audit", f"{schema}.monthly"]) == 0
+    assert f"PASS {schema}.monthly" in capsys.readouterr().out
+
+
+def test_cli_cpus_defaults_to_the_session_default():
+    """--cpus is unset unless given: build_session alone picks the core
+    count (SPARK_GRAFT_CPUS, else the usable cores)."""
+    from sqlmesh_spark.cli import build_parser
+
+    assert build_parser().parse_args(["-p", "x", "dag"]).cpus is None
+    assert build_parser().parse_args(["-p", "x", "--cpus", "3", "dag"]).cpus == 3
+
+
 def test_cli_init_scaffold_runs_end_to_end(tmp_path, capsys, spark):
     proj = str(tmp_path / "newproj")
     os.makedirs(proj)

@@ -131,20 +131,16 @@ def test_connected_components_nonconvergence_raises(spark):
 
 
 def test_embedding_lsh_wide_matches_narrow(spark, sf_dir):
-    """The inlined-constant ZIP_WITH fast path must be value-identical to
-    the explode-based narrow formulation (same planes, same scaled-int
-    folds) — the same guarantee test_minhash upholds for the text ladder."""
-    from sqlmesh_spark.llm.dedup import embedding_lsh_pairs_sql, embedding_lsh_wide_sql
-    from sqlmesh_spark.sources.tables import register_views
+    """The production sign-LSH pipeline (Arrow bands, ZIP_WITH verify) must
+    be value-identical to the explode-based narrow formulation (same
+    planes, same scaled-int sums) — the same guarantee test_minhash
+    upholds for the text ladder."""
+    from sqlmesh_spark.llm.dedup import embedding_lsh_pairs_sql, sign_lsh_pairs
 
-    register_views(spark, sf_dir, ("embeddings",))
+    wide = [tuple(r) for r in sign_lsh_pairs(spark, sf_dir, "t_emb").collect()]
     narrow = [
         tuple(r)
         for r in spark.sql(embedding_lsh_pairs_sql("embeddings", dialect="spark")).collect()
-    ]
-    wide = [
-        tuple(r)
-        for r in spark.sql(embedding_lsh_wide_sql("embeddings")).collect()
     ]
     assert narrow == wide
     assert len(wide) == 20
@@ -154,15 +150,13 @@ def test_embedding_lsh_subset_of_exact(spark, sf_dir):
     """Every LSH candidate pair's cosine is exact, so the LSH top-N must be
     a subset of the exact all-pairs ranking's ordering: any pair the LSH
     form surfaces must score identically in the exact form."""
-    from sqlmesh_spark.llm.dedup import embedding_lsh_wide_sql, embedding_topn_zipwith_sql
-    from sqlmesh_spark.sources.tables import register_views
+    from sqlmesh_spark.llm.dedup import embedding_topn_zipwith_sql, sign_lsh_pairs
 
-    register_views(spark, sf_dir, ("embeddings",))
+    lsh = sign_lsh_pairs(spark, sf_dir, "t_emb").collect()
     exact = {
         (r.v1, r.v2): r.cosine
         for r in spark.sql(embedding_topn_zipwith_sql("embeddings", top_n=500)).collect()
     }
-    lsh = spark.sql(embedding_lsh_wide_sql("embeddings")).collect()
     for r in lsh:
         if (r.v1, r.v2) in exact:
             assert exact[(r.v1, r.v2)] == r.cosine
@@ -211,20 +205,33 @@ def test_duckdb_oracles_use_global_regex_flag():
 
 
 def test_embedding_lsh_arrow_bands_bit_identical(spark, sf_dir):
-    """The Arrow int64-matmul bands producer must emit EXACTLY the rows
-    of the SQL zip_with fold formulation (same scaled-int rounding,
-    same md5-derived ±1 planes, int64 sums order-insensitive) — the
-    oracle parity of dedup_embedding_lsh rests on identical band
-    keys."""
-    from sqlmesh_spark.llm.dedup import (
-        embedding_lsh_bands_arrow,
-        embedding_lsh_bands_sql,
-    )
+    """The Arrow int64-matmul bands producer must emit EXACTLY the
+    ``sig`` rows the oracle derives (same scaled-int rounding, same
+    md5-derived ±1 planes, int64 sums order-insensitive) — the oracle
+    parity of every sign-LSH case rests on identical band keys. The
+    corpus is extended with vectors whose scaled elements sit exactly
+    on .5 (0.0078125·1e6 = 7812.5) and cancel to a projection of ±1, so
+    a half-even rounding flips their sign bits."""
+    from sqlmesh_spark.llm.dedup import embedding_lsh_bands_arrow, embedding_lsh_sig_sql
     from sqlmesh_spark.sources.tables import register_views
 
     register_views(spark, sf_dir, ("embeddings",))
-    sql_b = spark.sql(embedding_lsh_bands_sql("embeddings"))
-    arrow_b = embedding_lsh_bands_arrow(spark, "embeddings")
-    assert sql_b.exceptAll(arrow_b).count() == 0
-    assert arrow_b.exceptAll(sql_b).count() == 0
-    assert arrow_b.count() == sql_b.count() > 0
+    half, near = 0.0078125, -0.007812
+    ties = [
+        (10_000_000 + j, [0.0] * j + [half, near] + [0.0] * (62 - j))
+        for j in range(63)
+    ]
+    spark.createDataFrame(ties, "vec_id bigint, embedding array<float>").unionByName(
+        spark.table("embeddings").select("vec_id", "embedding")
+    ).createOrReplaceTempView("bands_corpus")
+    for n_planes, band_size in ((16, 4), (64, 16)):
+        ref = spark.sql(
+            f"WITH {embedding_lsh_sig_sql('bands_corpus', n_planes, band_size)}\n"
+            "SELECT vec_id, band, bkey FROM sig"
+        )
+        arrow_b = embedding_lsh_bands_arrow(
+            spark, "bands_corpus", n_planes=n_planes, band_size=band_size
+        )
+        assert ref.exceptAll(arrow_b).count() == 0
+        assert arrow_b.exceptAll(ref).count() == 0
+        assert arrow_b.count() == ref.count() > 0

@@ -160,7 +160,12 @@ def test_minhash_wide_matches_narrow(spark_global, texts):
     signatures + ARRAY_INTERSECT verify) must emit exactly the pairs the
     narrow explode-based formulation emits — including duplicate texts,
     texts shorter than the shingle width, and whitespace-only docs."""
-    from sqlmesh_spark.llm.dedup import docset_sql, minhash_lsh_sql, minhash_lsh_wide_sql
+    from sqlmesh_spark.llm.dedup import (
+        docset_sql,
+        minhash_bands_sql,
+        minhash_lsh_sql,
+        minhash_lsh_wide_sql,
+    )
 
     spark = spark_global
     rows = [(i, t) for i, t in enumerate(texts)]
@@ -172,11 +177,10 @@ def test_minhash_wide_matches_narrow(spark_global, texts):
         for r in spark.sql(minhash_lsh_sql("prop_docs", dialect="spark")).collect()
     }
     spark.sql(docset_sql("prop_docs", 5)).createOrReplaceTempView("prop_docsets")
+    spark.sql(minhash_bands_sql("prop_docsets")).createOrReplaceTempView("prop_bands")
     wide = {
         (r.d1, r.d2, r.jaccard)
-        for r in spark.sql(
-            minhash_lsh_wide_sql("prop_docs", docsets_relation="prop_docsets")
-        ).collect()
+        for r in spark.sql(minhash_lsh_wide_sql("prop_docsets", "prop_bands")).collect()
     }
     assert wide == narrow
 
@@ -224,32 +228,43 @@ _COLS = st.dictionaries(
 @given(_COLS, _COLS)
 def test_schema_differ_statements_reach_target(current, target):
     """SchemaDiffer algebra: simulating its ALTER plan against `current`
-    must yield exactly `target` (under the permissive policy), and the
-    'error' policy must refuse IFF a destructive delta exists."""
-    from sqlmesh_spark.diff import SchemaDiffer
+    must yield `target`'s columns with every `current` column RETAINED
+    (dropped and retyped columns stay on disk at their current type), each
+    statement a quoted ADD COLUMN; each 'error' policy must refuse IFF a
+    change of its kind exists."""
+    import pytest
 
+    from sqlmesh_spark.diff import SchemaChangeRefused, SchemaDiffer
+
+    cur = {c.lower(): t.lower() for c, t in current.items()}
+    tgt = {c.lower(): t.lower() for c, t in target.items()}
     differ = SchemaDiffer(on_destructive_change="allow")
     stmts = differ.alter_statements("t", current, target)
-    state = {c.lower(): t.lower() for c, t in current.items()}
+    state = dict(cur)
     for s in stmts:
-        parts = s.split()
-        if "ADD COLUMN" in s:
-            state[parts[-2]] = parts[-1]
-        elif "DROP COLUMN" in s:
-            state.pop(parts[-1])
-        else:  # ALTER COLUMN c TYPE t
-            state[parts[-3]] = parts[-1]
-    assert state == {c.lower(): t.lower() for c, t in target.items()}
+        prefix, col, typ = s.rsplit(" ", 2)
+        assert prefix == "ALTER TABLE t ADD COLUMN"
+        assert col.startswith("`") and col.endswith("`")
+        state[col.strip("`")] = typ
+    assert state == {**tgt, **cur}
 
-    strict = SchemaDiffer(on_destructive_change="error")
-    destructive = any(strict.is_destructive(d) for d in strict.compare(current, target))
-    if destructive:
-        import pytest
-
-        with pytest.raises(ValueError):
-            strict.alter_statements("t", current, target)
-    else:
-        assert strict.alter_statements("t", current, target) == stmts
+    deltas = differ.compare(current, target)
+    for policy, found in (
+        (
+            {"on_destructive_change": "error"},
+            any(differ.is_destructive(d) for d in deltas),
+        ),
+        (
+            {"on_destructive_change": "allow", "on_additive_change": "error"},
+            any(d.op == "add" for d in deltas),
+        ),
+    ):
+        strict = SchemaDiffer(**policy)
+        if found:
+            with pytest.raises(SchemaChangeRefused):
+                strict.alter_statements("t", current, target)
+        else:
+            assert strict.alter_statements("t", current, target) == stmts
 
 
 _IDENT = st.from_regex(r"[a-z][a-z0-9_]{0,11}", fullmatch=True)
